@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.GraftSession
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every declared query at SPARK_GRAFT_SF_DIR and
@@ -74,12 +75,11 @@ object Bench {
   private[graft] def detailPath(cpus: String): String =
     if (cpus == "32") "BENCH_DETAIL.json" else s"BENCH_DETAIL_c$cpus.json"
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // measured at sf0.1 on local[32]: 4 threads 26s, 6 → 17s, 8 → 22s,
-    // 16 → 64s (scheduler+GC contention) — 6 is the sweet spot
-    val threads = sys.env.getOrElse("SPARK_GRAFT_BENCH_THREADS", "6").toInt
+  /** One pass's session: the [[GraftSession]] defaults plus FAIR
+    * scheduling, shuffle compression and the spill dir. [[BenchOne]] times
+    * its queries in the isolated-pass session (`compress = false, tmpfs =
+    * true`). */
+  private[graft] def buildSession(cpus: Int, compress: Boolean, tmpfs: Boolean): SparkSession = {
     // Local-mode shuffle config (measured A/B, BenchOne min-of-2 sessions,
     // sf0.1): shuffle compression OFF + tmpfs local dir cut the graph/agg
     // family 8-38% (g03 3.64→2.26, g06 2.76→2.02, t24 2.33→1.99). In
@@ -102,27 +102,27 @@ object Bench {
     // only for controlled A/Bs; the defaults ARE the committed config.
     // Cluster caveat unchanged: a real network-bound cluster keeps
     // compression on everywhere.
-    def buildSession(compress: Boolean, tmpfs: Boolean): SparkSession = {
-      val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-        if (tmpfs && new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-bench"
-        else System.getProperty("java.io.tmpdir"))
-      val c = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", compress.toString)
-      val sess = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.scheduler.mode", "FAIR")
-        .config("spark.shuffle.compress", c)
-        .config("spark.shuffle.spill.compress", c)
-        .config("spark.local.dir", localDir)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      sess.sparkContext.setLogLevel("WARN")
-      sess
-    }
-    var spark = buildSession(compress = false, tmpfs = true)
+    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
+      if (tmpfs && new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-bench"
+      else System.getProperty("java.io.tmpdir"))
+    val c = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", compress.toString)
+    val sess = GraftSession.builder("graft-bench", cpus)
+      .config("spark.scheduler.mode", "FAIR")
+      .config("spark.shuffle.compress", c)
+      .config("spark.shuffle.spill.compress", c)
+      .config("spark.local.dir", localDir)
+      .getOrCreate()
+    sess.sparkContext.setLogLevel("WARN")
+    sess
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // measured at sf0.1 on local[32]: 4 threads 26s, 6 → 17s, 8 → 22s,
+    // 16 → 64s (scheduler+GC contention) — 6 is the sweet spot
+    val threads = sys.env.getOrElse("SPARK_GRAFT_BENCH_THREADS", "6").toInt
+    var spark = buildSession(cpus.toInt, compress = false, tmpfs = true)
 
     // The recorded measurement conditions come from the LIVE session conf
     // (not re-derived defaults): env overrides like SPARK_GRAFT_LOCAL_DIR
@@ -366,7 +366,7 @@ object Bench {
     // re-run inside the measured walls and must not retain thunk scope
     graft.core.ArtifactRegistry.recordThunks = false
     try spark.stop() catch { case _: Throwable => () }
-    spark = buildSession(compress = true, tmpfs = false)
+    spark = buildSession(cpus.toInt, compress = true, tmpfs = false)
     val configConcurrent = liveConfJson(spark)
     // warm the sentinel's plan on the fresh session BEFORE the measured
     // walls so the between/end points never pay the one-time compile

@@ -1,56 +1,31 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 
-/** Targeted per-query timing for local iteration: same session config and
-  * noop-sink discipline as [[Bench]], but only the named queries, printed
-  * as one line each. Usage:
+/** Targeted per-query timing for local iteration: [[Bench]]'s isolated-pass
+  * session and noop-sink discipline, but only the named queries, printed
+  * as one line each with the jobs and stages one run schedules. Usage:
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.BenchOne q01_scan_project ..."
   * The driver never invokes this; BENCH_r{N}.json comes from [[Bench]]. */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Experiment knobs (A/B harness for session-config floor work; Bench
-    // hardcodes whatever wins a measured A/B here). Defaults mirror
-    // Bench's committed local-mode config: shuffle compression OFF +
-    // tmpfs local dir (won 8-38% on the graph/agg family, min-of-2
-    // sessions at sf0.1 — see Bench.scala for the rationale and the
-    // cluster caveat).
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val shuffleCompress = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false")
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-bench"
-      else System.getProperty("java.io.tmpdir"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.shuffle.compress", shuffleCompress)
-      .config("spark.shuffle.spill.compress", shuffleCompress)
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Bench.buildSession(cpus, compress = false, tmpfs = true)
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-    // SPARK_GRAFT_JOBS=true adds a scheduling-unit count per timed run —
-    // at local[32] the per-job floor (~0.05-0.1 s each) predicts wall
+    // At local[32] the per-job floor (~0.05-0.1 s each) predicts wall
     // better than data volume (NOTES round-10 lesson), so "how many jobs
     // does this query schedule" is the first diagnostic for a floor-bound
     // query.
-    val countJobs = sys.env.getOrElse("SPARK_GRAFT_JOBS", "false").toBoolean
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stages = new java.util.concurrent.atomic.AtomicInteger
-    if (countJobs) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-        override def onStageSubmitted(st: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-          stages.incrementAndGet()
-      })
+    val jobs = new AtomicInteger
+    val stages = new AtomicInteger
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageSubmitted(st: SparkListenerStageSubmitted): Unit =
+        stages.incrementAndGet()
+    })
     args.foreach { name =>
       run(name) // warm-up
       val j0 = jobs.get; val s0 = stages.get
@@ -60,11 +35,10 @@ object BenchOne {
         run(name)
         (System.nanoTime() - t0) / 1e9
       }
-      val jtail = if (countJobs) {
-        Thread.sleep(200)
-        f"  jobs=${(jobs.get - j0) / 2}  stages=${(stages.get - s0) / 2}"
-      } else ""
-      println(f"BENCHONE $name%-28s min2=${times.min}%.3f  runs=${times.map(t => f"$t%.3f").mkString(",")}$jtail")
+      Thread.sleep(200) // listener events are delivered asynchronously
+      println(f"BENCHONE $name%-28s min2=${times.min}%.3f  " +
+        f"runs=${times.map(t => f"$t%.3f").mkString(",")}  " +
+        f"jobs=${(jobs.get - j0) / 2}  stages=${(stages.get - s0) / 2}")
     }
     spark.stop()
   }

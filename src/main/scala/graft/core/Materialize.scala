@@ -1,6 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.classic.Dataset
 import org.apache.spark.sql.functions.col
 
 /** Partitioning-retaining materialization for iterative consumers.
@@ -17,19 +19,16 @@ import org.apache.spark.sql.functions.col
   * outputPartitioning is concrete, and Spark's LogicalRDD carries it —
   * so a consumer join or aggregate keyed on (a subset-compatible set of)
   * the same columns satisfies its ClusteredDistribution straight from the
-  * checkpoint scan and inserts NO exchange (plan-verified in Probe: the
-  * per-round LPA join reads `Scan ExistingRDD` with no Exchange above it).
+  * checkpoint scan and inserts NO exchange (plan-pinned in MaterializeSpec:
+  * a keyed agg over the checkpoint reads `Scan ExistingRDD` with no
+  * Exchange above it).
   * This is the Spark-native analog of writing a bucketed index artifact:
   * shuffle the graph/edge table ONCE at build time, then every iteration
   * reads it in place.
   *
-  * The AQE toggle is session-wide for the duration of the (synchronous,
-  * eager) checkpoint job — the same bounded-conf-toggle pattern
-  * ShortestPaths.weightedDistances already uses for constraint
-  * propagation. A concurrently *planning* query in the same session would
-  * plan that one run without AQE (still correct, possibly less optimal) —
-  * the correctness gate runs queries sequentially, and the bench's
-  * concurrent pass tolerates it.
+  * The AQE-off plan comes from [[staticCheckpoint]], which never writes
+  * the session conf: a query planning concurrently on another thread in
+  * the same session still plans adaptively.
   *
   * Scale note: at 100 TB this materialization is the persisted-index step
   * of an iterative job (PageRank/LPA/k-core all re-read the edge frame
@@ -39,30 +38,44 @@ import org.apache.spark.sql.functions.col
   */
 object Materialize {
 
+  /** Checkpoint `df` — eagerly, or lazily so the consumer's job runs it —
+    * from a STATIC (non-adaptive) physical plan, with `overrides` applied
+    * to the planning conf; the result is bound to `df`'s own session.
+    *
+    * Spark's adaptive-insertion rule reads the conf of the session that
+    * owns the query, not the thread's `SQLConf.get`, so neither a
+    * thread-local conf nor a toggle on the shared session can switch AQE
+    * off for one query only (a toggle also switches it off for every
+    * query planning on another thread meanwhile). The frame is therefore
+    * planned in a sibling session — same SparkContext, shared state and
+    * extensions — carrying a copy of the caller's SQL conf plus the
+    * overrides. The shared session's conf is never written. */
+  def staticCheckpoint(df: DataFrame, eager: Boolean,
+      overrides: (String, String)*): DataFrame = {
+    val spark = castToImpl(df.sparkSession)
+    val sibling = spark.newSession()
+    val conf = sibling.sessionState.conf
+    spark.sessionState.conf.getAllConfs.foreach { case (k, v) => conf.setConfString(k, v) }
+    (("spark.sql.adaptive.enabled" -> "false") +: overrides).foreach {
+      case (k, v) => conf.setConfString(k, v)
+    }
+    val ck = new Dataset[Row](sibling, df.queryExecution.analyzed, df.encoder)
+      .localCheckpoint(eager)
+    new Dataset[Row](spark, ck.queryExecution.analyzed, ck.encoder)
+  }
+
   /** Hash-repartition `df` on `keys` and eagerly checkpoint it so the
     * result's HashPartitioning(keys, shufflePartitions) is retained. */
-  def partitionedCheckpoint(df: DataFrame, keys: String*): DataFrame = {
-    val spark = df.sparkSession
-    val conf = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(conf, "true")
-    spark.conf.set(conf, "false")
-    try df.repartition(keys.map(col): _*).localCheckpoint(true)
-    finally spark.conf.set(conf, prev)
-  }
+  def partitionedCheckpoint(df: DataFrame, keys: String*): DataFrame =
+    staticCheckpoint(df.repartition(keys.map(col): _*), eager = true)
 
   /** Eager checkpoint retaining whatever partitioning `df`'s plan already
     * has (no extra repartition) — for frames that are ALREADY clustered,
     * e.g. an aggregate computed over a partitioned checkpoint: the agg
     * output inherits HashPartitioning(group keys) and a repartition on
     * top would insert a pointless exchange. */
-  def checkpointRetainingPartitioning(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val conf = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(conf, "true")
-    spark.conf.set(conf, "false")
-    try df.localCheckpoint(true)
-    finally spark.conf.set(conf, prev)
-  }
+  def checkpointRetainingPartitioning(df: DataFrame): DataFrame =
+    staticCheckpoint(df, eager = true)
 
   /** Like [[partitionedCheckpoint]] but with `dropDuplicates(dedupeKeys)`
     * fused AFTER the repartition: HashPartitioning(keys) satisfies the
@@ -74,12 +87,6 @@ object Materialize {
     require(keys.forall(dedupeKeys.contains),
       s"partition keys $keys must be a subset of dedupe keys $dedupeKeys " +
         "or the dedupe aggregate inserts its own exchange")
-    val spark = df.sparkSession
-    val conf = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(conf, "true")
-    spark.conf.set(conf, "false")
-    try df.repartition(keys.map(col): _*).dropDuplicates(dedupeKeys)
-      .localCheckpoint(true)
-    finally spark.conf.set(conf, prev)
+    staticCheckpoint(df.repartition(keys.map(col): _*).dropDuplicates(dedupeKeys), eager = true)
   }
 }

@@ -42,7 +42,7 @@ object Tables {
     * fact-table key). For those plans the fan-out exchange is pure waste:
     * the shuffle right after it re-distributes everything anyway, and the
     * pre-shuffle work is a narrow projection a single core finishes in
-    * tens of milliseconds at fixture scale (measured in Probe, round 10:
+    * tens of milliseconds at fixture scale (measured in round 10:
     * the co-purchase pair join costs 0.7 s from a raw scan vs 1.6 s
     * through the fan-out). Keep [[table]] for consumers with heavy
     * narrow work (hashing, explode, vector math) before the first
@@ -80,20 +80,25 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }
 
-/** SparkSession factory with the engine's scale-oriented defaults.
+/** The engine's one SparkSession factory: tests, Verify, Explain, Bench,
+  * BenchOne and the benchmark harness all build their sessions here, so
+  * every entry point plans with the same config.
   *
-  * The defaults assume the local[32] test harness but are chosen to
-  * generalize: AQE on (runtime coalesce + skew-join), broadcast threshold
-  * left at Spark's default so dimension tables broadcast, shuffle
-  * partitions sized to the harness core count.
+  * Defaults: `local[cpus]` with shuffle partitions sized to `cpus`
+  * (`SPARK_GRAFT_CPUS`, else 32), AQE on (runtime coalesce + skew-join),
+  * Spark's default broadcast threshold so dimension tables broadcast, UTC,
+  * and [[graft.plans.GraftExtensions]] always registered. Callers add
+  * mode-specific settings on the returned builder. Static (non-adaptive)
+  * planning is per frame through [[Materialize.staticCheckpoint]], never a
+  * session setting.
   */
 object GraftSession {
-  def builder(appName: String = "graft"): SparkSession.Builder = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  def builder(appName: String = "graft",
+      cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -103,5 +108,4 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-  }
 }

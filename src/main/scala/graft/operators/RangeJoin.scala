@@ -41,7 +41,6 @@ object RangeJoin {
       time: String, lookback: Long, rightPayload: Seq[String],
       aggs: Seq[Column]): DataFrame = {
     require(lookback > 0, s"lookback must be positive, got $lookback")
-    graft.plans.RangeJoinExec.ensureRegistered(left.sparkSession)
     val leftCols = left.columns.toSeq
     val probes = left.withColumn("__lt", col(time).cast("long"))
     val r = right.select(

@@ -131,59 +131,47 @@ object ShortestPaths {
     * frame — round 12, same sharing rationale as [[hopsOnDoubled]]; a
     * narrow weight projection over the shared artifact retains its
     * clustering. */
-  def weightedDistancesOnDoubled(dirIn: DataFrame, seeds: DataFrame,
+  def weightedDistancesOnDoubled(dir: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    // Constraint propagation is disabled around the relaxation loop: the
+    // Constraint propagation is disabled when planning the rounds: the
     // (checkpoint → join → self-union → re-checkpoint) shape trips a
     // Catalyst union-constraint rewrite ("key not found: <attr>" from
     // UnionBase.rewriteConstraints) once the edge lineage carries
     // generator-derived constraints. Constraints only drive optional
     // filter inference — never results — so turning them off for the
-    // in-loop actions is semantically free; the conf is restored in
-    // `finally`, and the returned frame is a checkpoint-rooted LogicalRDD
-    // whose (empty) constraint snapshot is already taken.
-    val spark = dirIn.sparkSession
-    val key = "spark.sql.constraintPropagation.enabled"
-    val prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try {
-      val dir = dirIn
-
-      // The whole fixpoint is planned STATICALLY (AQE off — the
-      // [[graft.core.Materialize]] posture, applied to a loop): every
-      // round's min-agg emits HashPartitioning(node), the rename makes it
-      // HashPartitioning(u), and the shuffle-hash hint joins it against
-      // the identically u-clustered edge checkpoint with ZERO exchange;
-      // the relaxation rows and the carry-forward rows then meet in ONE
-      // union-keyed min-agg whose exchange (map-side combined) is the
-      // round's only shuffle. Per-round lazy localCheckpoints cut lineage
-      // and let the round's two readers of `dist` (join side + carry
-      // side) share one materialization WITHOUT splitting the action:
-      // RDD dependencies flow through a lazy LogicalRDD, so the final
-      // action still runs the r rounds as one job with r stages. Under
-      // AQE the same plan ran as 13 scheduled jobs (one per stage
-      // materialization + a per-round broadcast estimate of the
-      // vertex-sized table) — measured 13 → 4 at sf0.1; at 100 TB the
-      // static co-partitioned plan is exactly the cluster shape (a
-      // vertex-sized table never broadcasts — the g04 rule).
-      val aqeKey = "spark.sql.adaptive.enabled"
-      val aqePrev = spark.conf.get(aqeKey, "true")
-      spark.conf.set(aqeKey, "false")
-      try {
-        var dist = seeds.select(col("node")).distinct()
-          .withColumn("dist", lit(0L)).localCheckpoint(false)
-        var r = 0
-        while (r < rounds) {
-          r += 1
-          dist = dist.hint("shuffle_hash").join(dir, dist("node") === dir("u"))
-            .select(dir("v").as("node"), (dist("dist") + dir("w")).as("dist"))
-            .union(dist.select(col("node"), col("dist")))
-            .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-            .localCheckpoint(false)
-        }
-        dist
-      } finally spark.conf.set(aqeKey, aqePrev)
-    } finally spark.conf.set(key, prev)
+    // in-loop checkpoints is semantically free, and the returned frame is a
+    // checkpoint-rooted LogicalRDD whose (empty) constraint snapshot is
+    // already taken.
+    //
+    // The whole fixpoint is planned STATICALLY (AQE off — the
+    // [[graft.core.Materialize]] posture, applied to a loop): every
+    // round's min-agg emits HashPartitioning(node), the rename makes it
+    // HashPartitioning(u), and the shuffle-hash hint joins it against
+    // the identically u-clustered edge checkpoint with ZERO exchange;
+    // the relaxation rows and the carry-forward rows then meet in ONE
+    // union-keyed min-agg whose exchange (map-side combined) is the
+    // round's only shuffle. Per-round lazy localCheckpoints cut lineage
+    // and let the round's two readers of `dist` (join side + carry
+    // side) share one materialization WITHOUT splitting the action:
+    // RDD dependencies flow through a lazy LogicalRDD, so the final
+    // action still runs the r rounds as one job with r stages. Under
+    // AQE the same plan ran as 13 scheduled jobs (one per stage
+    // materialization + a per-round broadcast estimate of the
+    // vertex-sized table) — measured 13 → 4 at sf0.1; at 100 TB the
+    // static co-partitioned plan is exactly the cluster shape (a
+    // vertex-sized table never broadcasts — the g04 rule).
+    def pin(df: DataFrame): DataFrame = graft.core.Materialize.staticCheckpoint(df,
+      eager = false, "spark.sql.constraintPropagation.enabled" -> "false")
+    var dist = pin(seeds.select(col("node")).distinct().withColumn("dist", lit(0L)))
+    var r = 0
+    while (r < rounds) {
+      r += 1
+      dist = pin(dist.hint("shuffle_hash").join(dir, dist("node") === dir("u"))
+        .select(dir("v").as("node"), (dist("dist") + dir("w")).as("dist"))
+        .union(dist.select(col("node"), col("dist")))
+        .groupBy(col("node")).agg(min(col("dist")).as("dist")))
+    }
+    dist
   }
 }

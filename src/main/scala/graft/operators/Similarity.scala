@@ -400,7 +400,7 @@ object Similarity {
       "src")
     // the corpus bucket table (entry-point probes) is part of the index
     // artifact too — fp/v pruned, one narrow build job.
-    // Round-14 rejected redesign (build-ledger hunt, ProbeS06 min-of-2 at
+    // Round-14 rejected redesign (build-ledger hunt, min-of-2 at
     // sf0.1): materializing ONE (tbl, bucket)-clustered (id, fp) frame up
     // front — zero-exchange self-join + this bucket table as a free
     // projection — measured WORSE, build 2.05 → 2.68 s (warm control

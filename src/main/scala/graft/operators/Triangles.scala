@@ -51,7 +51,7 @@ object Triangles {
     * assumeNormalized) with eager partitioning-retaining checkpoints.
     *
     * Round-14 rejected redesign (the build-ledger hunt, measured at
-    * sf0.1 with ProbeTri): deriving the build from the shared doubled
+    * sf0.1): deriving the build from the shared doubled
     * artifacts — deg as an exchange-free agg over dbl_u, the dv
     * annotation riding dbl_v's clustering, orientation as a filter over
     * the doubled rows — measured WORSE: triangle_core 3.16 → 4.28 s

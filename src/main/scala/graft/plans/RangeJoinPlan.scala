@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.LeftOuter
@@ -15,9 +14,8 @@ import org.apache.spark.sql.types.{DataType, DateType, LongType, NumericType, St
 /** Whole-operator Catalyst extension for the banded interval join
   * ([[graft.operators.RangeJoin]]): logical node + optimizer rule +
   * planner strategy + physical exec — the (c)-tier custom-operator path
-  * from SURVEY §7.4, registered via [[GraftExtensions]] (and at runtime
-  * through `spark.experimental` for sessions built without the extension
-  * config, e.g. the driver's Verify session).
+  * from SURVEY §7.4, registered via [[GraftExtensions]], which every
+  * [[graft.core.GraftSession]] session carries.
   *
   * WHY a physical operator where a DataFrame formulation exists: the
   * banded-equi-join formulation pays a 2× probe explode plus a shuffle on
@@ -215,17 +213,4 @@ case class RangeJoinExec(
 
 object RangeJoinExec {
   private[plans] final class BufferedRow(val t: Long, val row: InternalRow)
-
-  /** Idempotent runtime registration for sessions built without
-    * `spark.sql.extensions=graft.plans.GraftExtensions` (the driver's
-    * Verify/Bench sessions). `spark.experimental` is the public
-    * runtime-mutable extension surface. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(RangeJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ RangeJoinStrategy
-    if (!spark.experimental.extraOptimizations.contains(RangeJoinRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RangeJoinRewrite
-  }
 }

@@ -146,11 +146,6 @@ object MiningQueries {
         lpaAssignBuild(s, d))
     }
 
-  /** Probe access to the un-memoized build (ProbeLpa3 plan dump only —
-    * production consumers go through [[lpaAssign]]'s memoization). */
-  private[graft] def lpaAssignBuildForProbe(s: SparkSession, d: String): DataFrame =
-    lpaAssignBuild(s, d)
-
   private def lpaAssignBuild(s: SparkSession, d: String): DataFrame = {
     // partitioned on v — the per-round join key (e.v = lab.vertex); the
     // fused builder dedupes and clusters in the same shuffle (round 10)
@@ -181,17 +176,17 @@ object MiningQueries {
       // hint. The old "hint-free beats a forced SHJ" measurement predates
       // the r12 memoization, when this fixpoint ran inline under AQE
       // (which broadcast the 4 MB label frame at bench scale); since r12
-      // the build executes inside checkpointRetainingPartitioning's
-      // AQE-OFF window, where hint-free STATIC planning picks
+      // the build is planned by checkpointRetainingPartitioning's static
+      // (AQE-off) checkpoint, where hint-free STATIC planning picks
       // SortMergeJoin and re-sorts the edge-sized stream every round
       // (probe plan: plans/r19/lpa3_build_before.txt, SMJ + Sort(v) over
       // the edge checkpoint in both rounds). The hinted SHJ reads both
       // sides co-partitioned — e is hashpartitioning(v), lab arrives
       // hashpartitioning(u→vertex) from the previous round's agg — with
       // zero exchange and NO sorts; the label frame is vertex-sized,
-      // never broadcast (the g04/g11 scale rule). Honest A/B (ProbeLpa3
-      // clean probes, sf0.1): build 2.448 s SMJ vs 2.467 s SHJ — a WASH
-      // at this SF (the edge sorts are ~60k rows); kept on the plan
+      // never broadcast (the g04/g11 scale rule). Honest A/B (clean
+      // single-build runs, sf0.1): build 2.448 s SMJ vs 2.467 s SHJ — a
+      // WASH at this SF (the edge sorts are ~60k rows); kept on the plan
       // evidence (plans/r19/lpa3_build_{before,after}.txt: 2 SMJ + 2
       // edge-stream sorts → 2 SHJ, 28 → 25 nodes) because the removed
       // work is O(E log E) per round vs an O(V) per-partition hash build
@@ -351,35 +346,30 @@ object MiningQueries {
     val p0 = S / n // integral: S div N, identical to the oracle's `//`
     // r19 (the r18 verdict's item-1 extension of the g05/g07 static-
     // fixpoint pattern): the whole 3-round loop is planned STATICALLY —
-    // AQE off at plan-construction time, the existing shuffle_hash hints
-    // pin the vertex-sized rank/degree sides as SHJ build sides against
-    // the u-clustered edge checkpoint (zero join exchange; the only
-    // shuffle per round stays the map-side-combined dst-sum), and the
-    // final lazy localCheckpoint forces toRdd INSIDE the AQE-off window
-    // so the conf restore cannot leak adaptive re-planning back into the
-    // loop. Under AQE the same plan ran as a fan of per-stage scheduled
-    // jobs; statically the fixpoint executes as ONE job (the g07
+    // the final lazy checkpoint plans it with AQE off, the existing
+    // shuffle_hash hints pin the vertex-sized rank/degree sides as SHJ
+    // build sides against the u-clustered edge checkpoint (zero join
+    // exchange; the only shuffle per round stays the map-side-combined
+    // dst-sum), and the presentation sort above it cannot re-plan the
+    // loop adaptively. Under AQE the same plan ran as a fan of per-stage
+    // scheduled jobs; statically the fixpoint executes as ONE job (the g07
     // weightedDistances posture — its in-loop note measured 13 → 4 jobs
     // for the same shape). Plan-only change: operators and integers are
     // untouched, hash-verified at sf0.001/0.01/0.1.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prev = s.conf.get(aqeKey, "true")
-    s.conf.set(aqeKey, "false")
-    val fin = try {
-      var p = deg.select(col("u").as("v"), lit(p0).as("p"))
-      for (_ <- 1 to 3) {
-        val contrib = e
-          .join(p.withColumnRenamed("v", "u").hint("shuffle_hash"), Seq("u"))
-          .join(deg.hint("shuffle_hash"), Seq("u"))
-          .select(col("v"), expr("p div deg").as("c"))
-          .groupBy(col("v")).agg(sum(col("c")).as("s"))
-        p = contrib
-          .select(col("v"),
-            (lit((15L * p0) / 100) + expr("(85 * s) div 100")).as("p"))
-      }
-      p.localCheckpoint(false) // lazy: pins the static plan, cuts the
-      // presentation sort's range-sampling re-execution (the d25 lesson)
-    } finally s.conf.set(aqeKey, prev)
+    var p = deg.select(col("u").as("v"), lit(p0).as("p"))
+    for (_ <- 1 to 3) {
+      val contrib = e
+        .join(p.withColumnRenamed("v", "u").hint("shuffle_hash"), Seq("u"))
+        .join(deg.hint("shuffle_hash"), Seq("u"))
+        .select(col("v"), expr("p div deg").as("c"))
+        .groupBy(col("v")).agg(sum(col("c")).as("s"))
+      p = contrib
+        .select(col("v"),
+          (lit((15L * p0) / 100) + expr("(85 * s) div 100")).as("p"))
+    }
+    // lazy: pins the static plan, cuts the presentation sort's
+    // range-sampling re-execution (the d25 lesson)
+    val fin = graft.core.Materialize.staticCheckpoint(p, eager = false)
     fin.orderBy(col("v")).select(col("v"), col("p").as("rank_scaled"))
   }
 
@@ -425,34 +415,28 @@ object MiningQueries {
     // sum over nulls is null → coalesce 0, exactly the old full-outer's
     // missing-contrib case.
     // r19 (the r18 verdict's item-1 static-unroll extension, g04's twin):
-    // AQE off at plan-construction time so the 3 rounds — SHJ-hinted
-    // zero-exchange joins + one union-keyed contribution agg each — run
-    // as ONE statically planned job instead of a fan of adaptive
-    // stage-jobs; the lazy checkpoint of the final (vertex-bounded) rank
-    // frame pins the plan inside the window and feeds the TakeOrdered
-    // tail. Plan-only; hash-verified at sf0.001/0.01/0.1.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prev = s.conf.get(aqeKey, "true")
-    s.conf.set(aqeKey, "false")
-    val fin = try {
-      var p = seeds.select(col("v"), lit(p0).as("p"))
-      for (_ <- 1 to 3) {
-        val contribRows = e
-          .join(p.withColumnRenamed("v", "u").hint("shuffle_hash"), Seq("u"))
-          .join(deg.hint("shuffle_hash"), Seq("u"))
-          .select(col("v"), expr("p div deg").as("c"), lit(0).as("is_seed"))
-        p = contribRows
-          .unionByName(seeds.select(col("v"),
-            lit(null).cast("long").as("c"), lit(1).as("is_seed")))
-          .groupBy(col("v"))
-          .agg(coalesce(sum(col("c")), lit(0L)).as("sm"),
-            max(col("is_seed")).as("isd"))
-          .select(col("v"),
-            (when(col("isd") === 1, lit(tele)).otherwise(lit(0L)) +
-              expr("(85 * sm) div 100")).as("p"))
-      }
-      p.localCheckpoint(false)
-    } finally s.conf.set(aqeKey, prev)
+    // the lazy static checkpoint of the final (vertex-bounded) rank frame
+    // plans the 3 rounds — SHJ-hinted zero-exchange joins + one
+    // union-keyed contribution agg each — with AQE off, so they run as
+    // ONE statically planned job instead of a fan of adaptive
+    // stage-jobs, and feeds the TakeOrdered tail. Plan-only; hash-verified at sf0.001/0.01/0.1.
+    var p = seeds.select(col("v"), lit(p0).as("p"))
+    for (_ <- 1 to 3) {
+      val contribRows = e
+        .join(p.withColumnRenamed("v", "u").hint("shuffle_hash"), Seq("u"))
+        .join(deg.hint("shuffle_hash"), Seq("u"))
+        .select(col("v"), expr("p div deg").as("c"), lit(0).as("is_seed"))
+      p = contribRows
+        .unionByName(seeds.select(col("v"),
+          lit(null).cast("long").as("c"), lit(1).as("is_seed")))
+        .groupBy(col("v"))
+        .agg(coalesce(sum(col("c")), lit(0L)).as("sm"),
+          max(col("is_seed")).as("isd"))
+        .select(col("v"),
+          (when(col("isd") === 1, lit(tele)).otherwise(lit(0L)) +
+            expr("(85 * sm) div 100")).as("p"))
+    }
+    val fin = graft.core.Materialize.staticCheckpoint(p, eager = false)
     fin.orderBy(col("p").desc, col("v")).limit(25)
       .select(col("v"), col("p").as("rank_scaled"))
   }
@@ -495,25 +479,20 @@ object MiningQueries {
     * number — the per-execution doubledEdges eager ckpt job is gone). */
   private[queries] def g05KcoreStatic(s: SparkSession, d: String): DataFrame = {
     val k = 3
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prev = s.conf.get(aqeKey, "true")
-    s.conf.set(aqeKey, "false")
-    try {
-      var e = doubledEdgesFused(s, d, "u")
-      for (_ <- 1 to 3) {
-        val surv = e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= k).select(col("u"))
-          .localCheckpoint(false) // two consumers (both semi-join sides)
-        e = e.join(surv.hint("shuffle_hash"), Seq("u"))
+    var e = doubledEdgesFused(s, d, "u")
+    for (_ <- 1 to 3) {
+      val surv = graft.core.Materialize.staticCheckpoint( // two consumers
+        e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= k).select(col("u")), eager = false)
+      e = graft.core.Materialize.staticCheckpoint(
+        e.join(surv.hint("shuffle_hash"), Seq("u"))
           .select(col("v").as("u"), col("u").as("v"))
           .join(surv.hint("shuffle_hash"), Seq("u"))
-          .select(col("u"), col("v"))
-          .localCheckpoint(false)
-      }
-      e.groupBy(col("u")).agg(count(lit(1)).as("deg_in_core"))
-        .select(col("u").as("vertex"), col("deg_in_core"))
-        .orderBy(col("vertex"))
-    } finally s.conf.set(aqeKey, prev)
+          .select(col("u"), col("v")), eager = false)
+    }
+    e.groupBy(col("u")).agg(count(lit(1)).as("deg_in_core"))
+      .select(col("u").as("vertex"), col("deg_in_core"))
+      .orderBy(col("vertex"))
   }
 
   /** r18 session-2 re-measurement (the interrupted session's 1.42 s claim
@@ -539,10 +518,10 @@ object MiningQueries {
     * appear in the same order.
     *
     * INVARIANT (load-bearing downstream): vertex ids are part keys and
-    * therefore NON-NEGATIVE. Three argmax sites (lpaAssign here, plus the
-    * Probe/PlanCheck test-scope mirrors) encode "(count DESC, label ASC)"
-    * as `max(struct(c, -label))`, which silently flips the tie-break for
-    * negative labels (and overflows at Long.MinValue). The invariant is
+    * therefore NON-NEGATIVE. The argmax in lpaAssign encodes
+    * "(count DESC, label ASC)" as `max(struct(c, -label))`, which
+    * silently flips the tie-break for negative labels (and overflows at
+    * Long.MinValue). The invariant is
     * asserted in OpsQueriesSpec ("co-purchase vertex ids are non-negative")
     * — any future graph source with signed ids must fix the argmax
     * encoding, not just the source.
@@ -617,7 +596,7 @@ object MiningQueries {
     // tableRaw, not lineitem(): the first operation is the ok-shuffle of
     // the self-join, so Tables.parallelize's round-robin fan-out would be
     // a pure extra pass over the fact table (measured 1.6 -> 0.7 s for
-    // this build at sf0.1, Probe round 10)
+    // this build at sf0.1, round 10)
     val li = tableRaw(s, d, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
     val a = li.select(col("ok"), col("pk").as("u"))
@@ -646,8 +625,9 @@ object MiningQueries {
     *    join/agg keyed on it reads the checkpoint blocks in place with NO
     *    exchange — the r9 shape repartitioned before an AQE checkpoint,
     *    which only balanced the blocks (partitioning was lost) and each
-    *    round still re-shuffled the graph side. Plan-verified in Probe:
-    *    the round join is `Scan ExistingRDD` with no Exchange above it. */
+    *    round still re-shuffled the graph side. Plan-pinned in
+    *    MaterializeSpec: a keyed consumer reads `Scan ExistingRDD` with no
+    *    Exchange above it. */
   private[queries] def doubledEdges(und: DataFrame, key: String): DataFrame =
     graft.core.Materialize.partitionedCheckpoint(
       und.select(explode(array(
@@ -1005,7 +985,7 @@ object MiningQueries {
       // fan-out would be a wasted pass (the tableRaw contract); (b) the
       // two INDEPENDENT table writes run concurrently — FAIR scheduling
       // overlaps the small orders write entirely inside the lineitem one.
-      // Measured at sf0.1 (ProbeQ43, same window): build 2.76 → 0.97 s
+      // Measured at sf0.1 (same window): build 2.76 → 0.97 s
       // (warm query unchanged, 0.53/0.51 s).
       def writeLi(): Unit = Sinks.writeBucketed(
         tableRaw(s, d, "lineitem")

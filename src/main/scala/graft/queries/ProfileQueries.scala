@@ -329,19 +329,13 @@ object ProfileQueries {
       .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
       .distinct()
     // r19 static fixpoint (r18 verdict item 4; the g05/g04/g11 pattern):
-    // AQE off at plan-construction time — the 3 simultaneous rounds (one
-    // co-partitioned SHJ + one union-keyed agg each, see simultaneousHits)
-    // plan as ONE static job instead of a fan of per-stage adaptive jobs;
-    // the lazy checkpoint of the vertex-sized score frame forces toRdd
-    // inside the window (pinning the static plans) and feeds both per-side
+    // the lazy static checkpoint of the vertex-sized score frame plans the
+    // 3 simultaneous rounds (one co-partitioned SHJ + one union-keyed agg
+    // each, see simultaneousHits) with AQE off — ONE static job instead of
+    // a fan of per-stage adaptive jobs — and feeds both per-side
     // TakeOrdereds. Plan-only: operators and integers untouched.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prev = s.conf.get(aqeKey, "true")
-    s.conf.set(aqeKey, "false")
-    val fin = try {
-      simultaneousHits(e, rounds = 3)
-        .localCheckpoint(false) // both per-side TakeOrdereds read it
-    } finally s.conf.set(aqeKey, prev)
+    val fin = graft.core.Materialize.staticCheckpoint(
+      simultaneousHits(e, rounds = 3), eager = false)
     // per-side max folded into TakeOrdered (round 12): score = s·10⁶ div
     // max(s) is monotone in s, so the top-20 by raw s already contains
     // the max as its first row; normalization is a 40-row window.
@@ -594,10 +588,6 @@ object ProfileQueries {
   def m09PhashPairs(s: SparkSession, d: String): DataFrame = {
     import graft.functions.ImageCodec
     import graft.operators.Multimodal
-    // NOTE (ADVICE r18): ProbeM09 (src/test) copies the mk/dh UDF bodies
-    // and the join/distinct tail VERBATIM for its stage decomposition —
-    // if the synthesis or tail here changes, update the probe in the same
-    // commit or its floors attribution silently measures a stale shape.
     val mk = udf { (docId: Long) =>
       val w = 18; val h = 16
       val base = docId / 8; val pert = docId % 8

@@ -25,9 +25,6 @@ object SketchQueries {
   private def md5Word2(c: org.apache.spark.sql.Column) =
     conv(substring(md5(c), 9, 8), 16, 10).cast("long")
 
-  /** md5Word2 for test-scope probes (ProbeHll) — same expression. */
-  private[queries] def probeMd5Word2(c: org.apache.spark.sql.Column) = md5Word2(c)
-
   /** D11 — HyperLogLog cardinality of the order-key stream, fully
     * deterministic.
     *

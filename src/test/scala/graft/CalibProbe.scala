@@ -8,10 +8,8 @@ import graft.core.Calib
   * Run: `sbt "Test/runMain graft.CalibProbe"` at load-average ~0. */
 object CalibProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = graft.core.GraftSession.builder("graft-calib")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // the measured points must be fully warm (Bench takes its first point

@@ -4,13 +4,13 @@
 # the round's committed evidence; a loaded host poisons it).
 #
 #   tools/round_battery.sh            # everything including the bench
-#   tools/round_battery.sh --no-bench # correctness-only (fast, ~15 min)
+#   tools/round_battery.sh --no-bench # correctness-only (~40 min on 4 vCPUs)
 #
 # Steps (each fails the script):
 #   1. sbt compile + full ScalaTest suite
-#   2. full Verify at sf0.01 + DuckDB compare (the compare tool's
-#      "ALL MATCH" line over the whole declared catalog — no hardcoded
-#      count here; the catalog grows)
+#   2. full Verify at sf0.01 AND sf0.1 + DuckDB compare at each (the
+#      compare tool's "ALL MATCH" line over the whole declared catalog —
+#      no hardcoded count here; the catalog grows)
 #   3. tools/check_anchors.py (SURVEY file:line anchors)
 #   4. [unless --no-bench] full Bench at sf0.1 -> BENCH_DETAIL.json
 #   5. tools/perf_weak.py report (informational; read the count)
@@ -28,10 +28,12 @@ OUT=${OUT:-/tmp/round_battery_verify}
 echo "=== 1/5 compile + full test suite ==="
 sbt -batch "compile; test"
 
-echo "=== 2/5 Verify @ sf0.01 + DuckDB compare ==="
-rm -rf "$OUT"
-sbt -batch "runMain graft.Verify $SF001 $OUT"
-python3 tools/compare.py "$SF001" "$OUT"
+for SF in "$SF001" "$SF01"; do
+  echo "=== 2/5 Verify @ $(basename "$SF") + DuckDB compare ==="
+  rm -rf "$OUT"
+  sbt -batch "runMain graft.Verify $SF $OUT"
+  python3 tools/compare.py "$SF" "$OUT"
+done
 
 echo "=== 3/5 SURVEY anchors ==="
 python3 tools/check_anchors.py
