@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.GraftSession
+import graft.core.{ArtifactRegistry, GraftSession}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every declared query at SPARK_GRAFT_SF_DIR and
@@ -9,107 +9,66 @@ import org.apache.spark.sql.SparkSession
   * being measured). One warm-up pass primes the JVM/codegen caches so the
   * numbers measure the engine, not JIT warm-up.
   *
-  * Two totals are reported: `queries`/`total_isolated_sec` are sequential
-  * per-query min-of-2 timings (comparable across rounds), while the
-  * headline `value` is the SUITE WALL-CLOCK with the queries scheduled
-  * concurrently on the shared session (FAIR scheduler). Sequential
-  * one-at-a-time execution leaves most of the 32 cores idle between jobs —
-  * ~0.4 s of scheduling/AQE floor per query × 50+ queries dominates the
-  * sum. A platform runs a workload, not a queue of isolated queries;
-  * concurrent scheduling is how this engine is deployed, so wall-clock
-  * under concurrency is the honest throughput number. Both are printed.
+  * Two totals are reported: `queries`/`isolated_sec` are sequential
+  * per-query min-of-2 timings, while the headline `value` is the SUITE
+  * WALL-CLOCK with the queries scheduled concurrently on one session (FAIR
+  * scheduler). One-at-a-time execution leaves most cores idle between
+  * jobs; concurrent scheduling is how this engine is deployed.
   */
 object Bench {
 
-  /** The structural-floors ledger embedded in every BENCH_DETAIL artifact
-    * (see the comment at its use site in [[main]]). Object-level and
-    * `private[graft]` so BenchFloorsSpec can PARSE it: these entries are
-    * hand-edited prose strings, and a malformed edit (an unescaped quote,
-    * a dropped comma) would corrupt the committed artifact silently at
-    * round close — the spec pins well-formed JSON, the [baseline Nx]
-    * recheck token contract, and that every query-keyed floor still names
-    * a declared query. */
-  private[graft] val FloorsJson: String =
-    """{"g09_hits":"fused simultaneous HITS (r13): e-build+doubled ckpt ~1.2s + 3 union-keyed rounds ~1.1s + 2 TakeOrdered ~0.2s (ProbeG09b); single-consumer bipartite frame deliberately NOT memoized; r19 attempt (the verdict's item 4): static fixpoint + shuffle_hash score-side hint SHIPPED (zero-exchange co-partitioned rounds, no per-round sorts - plans/r19); on CONTENDED r19 windows (steal 1.7-3.2 pct) the wall read flat (2.27-2.71s) but the round's one QUIET window (steal 0.04 pct) reads 1.655s = 8.3x raw vs the old shape's 2.3-2.6s quiet band - a real ~1.4x; the remaining cost is the e-build+ckpt+TakeOrdered job structure [baseline 15.8x]",""" +
-      """"g08_link_prediction":"seed-bounded link prediction (r15 floor per the r13 watch rule; three measured redesigns at ProfileQueries.scala: r9 one-exchange doubled-edge reuse, r12 broadcast-hint removal to AQE runtime sizing, r13 anti-join folded into the wedge aggregate): remaining cost is 9 jobs on a 0.66s oracle - deg agg + deg-carry join + seed-hop ckpt + wedge equi-join + union-keyed cn/ra/adjacency agg + WindowGroupLimit + sort; builder min-of-2 1.22/1.25s (r15 BenchOne), driver windows read 1.75/2.4 under full-suite context [baseline 1.9x] [loaded 4.5x] (r17 driver window: 2.89s raw = 4.4x with isolated-segment load 1.274; quiet rechecks held 2.0-2.1x both times the flag fired)",""" +
-      """"t24_bloom_decontaminate":"Bloom decontamination gate (r15 floor per the r14 verdict's own instruction after two rewrites: r13 projection-barrier REJECTED - Catalyst re-inlines project aliases into pushed predicates; r14 digest-in-generator DELIVERED one md5 per (doc,shingle), 0.91->0.70 control-normalized): remaining cost is 6 jobs on a 0.31s oracle - m-bit Bloom build agg + broadcast probe filter + t13 exact-confirm shingle join + report agg; builder windows 0.66-0.87 across r14/r15, driver read 1.53/1.49 (host delta recorded in NOTES); r17 quiet recheck 0.84-0.91s = 2.7-2.9x raw / 2.6x calibrated on the committed window - baseline holds [baseline 2.8x] [loaded 5.0x] (two consecutive loaded driver windows read 4.1x/5.0x while the quiet baseline held both times - the recorded loaded-window band, r17 verdict item 3)",""" +
-      """"artifact:d05a":"near-dup cluster-assignment BUILD (r15, ProbeD05a clean probes 2.4-2.8s): cost = symmetrize+init over the jp08 artifact + 2-3 hash-min CC rounds (join+agg+sig-materialize each, job-floor-bound on a sub-MB pair graph) + doc-sized assignment join + cluster-window sizes + eager ckpt; r15 lever folded the sizes groupBy+re-join into ONE cluster-partitioned window count (2.80 -> 2.41-2.80, modest win, one less exchange); driver-window 5.5s reading includes warm-up-context inflation (the triangle_core pattern)",""" +
-      """"q27_cube":"CUBE distinct-agg (r14 retirement per the two recorded rejections at AnalyticsQueries.scala: r12 pre-agg 1.56-1.78s, r13 hierarchical rollup 1.80-2.01s/13 jobs vs shipped 1.55-1.82s/7): remaining cost is the Expand x two-phase countDistinct exchange + 7-job floor at sf0.1; trade flips at scale only if the distinct exchange spills, which AQE coalescing absorbs without a shape change [baseline 5.3x]",""" +
-      """"s19_gate_quality":"LSH-gate sweep (SelectionQueriesSpec r13, tablesXplanes -> candFrac/top20 retention): isotropic 4x3 .42/9 8x3 .66/17 8x4 .42/10; clustered 4x3 .65/19 8x3 .81/20 8x4 .63/20 - shipped 4x3, 8x3 is the quality knob",""" +
-      """"t41_dsir_weights":"DSIR scoring (r16 floor per the r15 watch rule, THREE measured shapes at SelectionQueries.scala: r12 (doc,bucket)-first exchange rejected; r13 256-row ckpt + broadcast weight join; r16 the verdict's own lever DELIVERED - bucket model collected to a 256-entry array literal, join and both checkpoints gone, and the A/B showed re-tokenizing both passes beats materializing the feature frame: old 2.57/1.52s 9 jobs, literal+ckpt 2.09/1.34s 6 jobs, literal+recompute 1.35/1.28s 7 jobs shipped): remaining cost is 7 jobs = two full tokenize+md5 passes (model agg + collect, score agg + TakeOrdered) on a 0.35s/5000-doc/1.5MB oracle where DuckDB pays ~5ms overhead total - pure job floor at local[32]; recheck r16 quiet 1.28-1.37s (3.7x), r17 committed window 1.25s = 3.6x raw / 3.3x calibrated; r19 re-pin (the r18 verdict's item 7 after two manual adjudications): quietest r19 window (load 1.024, steal 1.7 pct) reads 1.30s = 3.59x calibrated - the baseline HOLDS as pinned; quiet band across r16-r19 is 3.4-4.3x, and the r18 flags were a fast-window calibrated hair-trigger (5.6x vs the 5.55x gate) and the clobbered 8-core detail (8.7x - now refused by perf_weak's cpus guard) [baseline 3.7x]",""" +
-      """"artifact:triangle_core":"census BUILD floor (r14, two rejections recorded at Triangles.scala): r13 explicit-lazy-ckpt no-win 3.26 vs 3.12s; r14 derivation from the doubled edge artifacts 3.16->4.28s (every doubled path re-keys 2m annotated rows where this build moves m + a vertex-sized combined degree shuffle) - remaining cost IS the wedge-intersection agg; clean-probe build 3.3s at sf0.1 (ProbeTri)"}"""
-  /** Which load-sentinel segment normalizes which contract ratio (r17
-    * verdict item 1). Every term of `ratio_aggregate`'s and
-    * `ratio_aggregate_with_builds`' numerators — the per-query isolated
-    * min-of-2 timings and the pass-1 build ledger — is measured inside
-    * the ISOLATED segment (between the start and middle calib points), so
-    * the segment-calibrated contract fields divide by
-    * `load_factor_isolated`, the factor of the segment that produced the
-    * numerator. The global min-of-medians `load_factor` under-corrects
-    * exactly when load is confined to one segment (the r17 driver window:
-    * global 1.075 while the isolated segment read 1.274 — the primary
-    * metric breached raw with the explanation stranded in a side-channel
-    * field); the globally-calibrated fields stay published for
-    * continuity, and raw stays the number of record. Spec-pinned in
-    * BenchCalibSegmentSpec. */
-  private[graft] val RatioSegments: Map[String, String] = Map(
-    "ratio_aggregate_seg_calibrated" -> "isolated",
-    "ratio_with_builds_seg_calibrated" -> "isolated")
+  // measured at sf0.1 on local[32]: 4 threads 26s, 6 → 17s, 8 → 22s,
+  // 16 → 64s (scheduler+GC contention)
+  private val Threads = 6
 
-  /** Segment calibration: raw ratio divided by its segment's load factor.
-    * Sentinel semantics match [[graft.core.Calib]]'s global calibration —
-    * a missing/invalid input propagates -1, and a segment factor < 1 (host
-    * FASTER than reference) makes the calibrated number WORSE than raw. */
-  private[graft] def segCalibrated(raw: Double, segLoad: Double): Double =
-    if (raw < 0 || segLoad <= 0) -1.0 else raw / segLoad
+  /** Sidecar path for the full-precision detail artifact. 32 cores keeps
+    * the name of the committed artifact; any other core count gets a
+    * suffixed file, so a low-core scaling run never overwrites it. */
+  private[graft] def detailPath(cpus: Int): String =
+    if (cpus == 32) "BENCH_DETAIL.json" else s"BENCH_DETAIL_c$cpus.json"
 
-  /** Sidecar path for the full-precision detail artifact. The driver runs
-    * the bench TWICE per round (32-core, then a low-core scaling pass); a
-    * fixed path made the second run clobber the first's evidence — the r18
-    * 8-core pass overwrote the 32-core detail, and any floor recheck on
-    * the working tree afterwards adjudicated against the WRONG window
-    * (q27/t41 read as 9.8×/7.4× "drift" on the c8 detail — pure core-count
-    * artifacts, r18 verdict item 5). 32 cores keeps the historical name
-    * (the committed artifact of record); any other core count gets a
-    * suffixed file so both windows survive a driver round on disk. */
-  private[graft] def detailPath(cpus: String): String =
-    if (cpus == "32") "BENCH_DETAIL.json" else s"BENCH_DETAIL_c$cpus.json"
+  /** Cumulative (stealJiffies, totalJiffies) from the aggregate `cpu`
+    * line of /proc/stat. Total sums the first 8 fields (user..steal) —
+    * guest/guest_nice are already included in user and would double-count.
+    * (-1, -1) when unreadable (non-Linux): sentinel, never a throw. */
+  private[graft] def stealStat(): (Long, Long) = try {
+    val src = scala.io.Source.fromFile("/proc/stat")
+    val line = try src.getLines().find(_.startsWith("cpu ")).getOrElse("")
+    finally src.close()
+    val f = line.trim.split("\\s+").drop(1).map(_.toLong)
+    if (f.length < 8) (-1L, -1L) else (f(7), f.take(8).sum)
+  } catch { case _: Throwable => (-1L, -1L) }
+
+  /** Percentage of all CPU time the host stole from this VM between two
+    * [[stealStat]] samples; -1 on sentinel inputs or an empty interval.
+    * It is the run's context field: nonzero steal means the shared host
+    * could not back every vCPU, which inflates wall-clock with no code
+    * change. */
+  private[graft] def stealPct(before: (Long, Long), after: (Long, Long)): Double =
+    if (before._1 < 0 || after._1 < 0 || after._2 <= before._2) -1.0
+    else 100.0 * (after._1 - before._1) / (after._2 - before._2)
 
   /** One pass's session: the [[GraftSession]] defaults plus FAIR
     * scheduling, shuffle compression and the spill dir. [[BenchOne]] times
     * its queries in the isolated-pass session (`compress = false, tmpfs =
     * true`). */
   private[graft] def buildSession(cpus: Int, compress: Boolean, tmpfs: Boolean): SparkSession = {
-    // Local-mode shuffle config (measured A/B, BenchOne min-of-2 sessions,
-    // sf0.1): shuffle compression OFF + tmpfs local dir cut the graph/agg
-    // family 8-38% (g03 3.64→2.26, g06 2.76→2.02, t24 2.33→1.99). In
-    // local[32] every shuffle read is a LOCAL file read through the page
-    // cache, so LZ4 framing per tiny block is pure CPU on the job-floor
-    // critical path and the spill dir never needs durability. This is a
-    // HARNESS choice for single-node benching only: a real cluster keeps
-    // compression ON (network-bound shuffles) and local.dir on real disks.
-    // Per-MODE session config (both directions measured, full-suite A/B in
-    // the same host window, round 11):
-    //   isolated pass — shuffle compression OFF + tmpfs spill: one query
-    //     at a time leaves cores idle, per-block LZ4 framing is pure CPU
-    //     on the job-floor critical path (262.2 -> 228.2 s isolated sum);
+    // Per-mode shuffle config, both directions measured (full-suite A/B):
+    //   isolated pass — compression OFF + tmpfs spill: in local mode every
+    //     shuffle read is a local page-cache read, so per-block LZ4 framing
+    //     is pure CPU on the job-floor critical path (262.2 -> 228.2 s);
     //   concurrent pass — compression ON + disk spill: six queries'
     //     uncompressed shuffles at once saturate memory bandwidth and the
-    //     wall REGRESSES under the isolated-pass config (99.4 s vs 134.3).
-    // Each metric is measured under the config a deployment of that mode
-    // would actually choose; the session restart between passes is ~10 s
-    // and the JVM-wide codegen cache survives it. Env overrides exist
-    // only for controlled A/Bs; the defaults ARE the committed config.
-    // Cluster caveat unchanged: a real network-bound cluster keeps
-    // compression on everywhere.
+    //     wall regresses under the isolated config (99.4 s vs 134.3 s).
+    // This is a single-node harness choice; a network-bound cluster keeps
+    // compression on and local.dir on real disks.
     val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
       if (tmpfs && new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-bench"
       else System.getProperty("java.io.tmpdir"))
-    val c = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", compress.toString)
     val sess = GraftSession.builder("graft-bench", cpus)
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.shuffle.compress", c)
-      .config("spark.shuffle.spill.compress", c)
+      .config("spark.shuffle.compress", compress.toString)
+      .config("spark.shuffle.spill.compress", compress.toString)
       .config("spark.local.dir", localDir)
       .getOrCreate()
     sess.sparkContext.setLogLevel("WARN")
@@ -118,21 +77,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // measured at sf0.1 on local[32]: 4 threads 26s, 6 → 17s, 8 → 22s,
-    // 16 → 64s (scheduler+GC contention) — 6 is the sweet spot
-    val threads = sys.env.getOrElse("SPARK_GRAFT_BENCH_THREADS", "6").toInt
-    var spark = buildSession(cpus.toInt, compress = false, tmpfs = true)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    var spark = buildSession(cpus, compress = false, tmpfs = true)
 
-    // The recorded measurement conditions come from the LIVE session conf
-    // (not re-derived defaults): env overrides like SPARK_GRAFT_LOCAL_DIR
-    // are honored by buildSession, and an audit field that can disagree
-    // with the session it describes is worse than none.
+    // Recorded from the LIVE session conf, not re-derived defaults, so the
+    // audit field cannot disagree with the session it describes. A missing
+    // key falls back to the JSON literal null: the numeric/boolean values
+    // interpolate unquoted.
     def liveConfJson(sess: SparkSession): String = {
-      // fallback is the JSON literal null, NOT a bareword: shuffle_
-      // partitions/compress/aqe interpolate unquoted (they are numeric/
-      // boolean), so a missing key must still leave the artifact
-      // parseable (ADVICE r13)
       def g(k: String) = sess.conf.getOption(k).getOrElse("null")
       s"""{"master":"${sess.sparkContext.master}",""" +
         s""""shuffle_partitions":${g("spark.sql.shuffle.partitions")},""" +
@@ -145,35 +97,15 @@ object Bench {
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
 
-    // Warm-up: JIT, codegen cache, parquet footers — and every memoized
-    // build artifact (signature tables, kmFit, graph/PQ indexes) gets
-    // built HERE, before the clock starts. That is the intended
-    // production posture (build once, amortize across the session), but
-    // it means the per-query isolated numbers are MARGINAL costs; the
-    // build side of the ledger is captured by ArtifactRegistry and
-    // published below as artifact:<tag> line items so the amortization
-    // is auditable instead of invisible (round-12 verdict, item 1).
-    // ---- JVM/page-cache priming (PUBLISHED as prime_sec, see below) ----
-    // Symmetry rule: every number that enters a ratio is measured WARM on
-    // both engines. tools/time_oracle.py runs a full untimed warm-up pass
-    // before its min-of-2, and the per-query isolated numbers follow the
-    // warm-up loop below — the artifact ledger was the ONE ratio input
-    // still charged cold: whichever build ran first in the fresh JVM
-    // absorbed the one-time page-cache fill, parquet-footer reads, and
-    // shuffle/write-path class loading + codegen. Measured consequence:
-    // per-tag numbers swung 6× across windows with NO code change (docsh3
-    // 0.55 s in the r13 driver window vs 3.19 s in an r14 builder window;
-    // dbl_u 1.78 vs 2.91), because attribution followed map iteration
-    // order — cost that appears in no production amortization story (a
-    // service builds its artifacts long after its JVM is warm). Priming
-    // is: one noop scan per base parquet table (page cache + footers —
-    // the exact state the oracle and every timed query run under) and one
-    // 64-row parquet round-trip in a temp dir (write-path JIT; q43's
-    // bucketed build is otherwise the first parquet WRITE of the JVM and
-    // pays committer/writer class loading). Nothing query- or artifact-
-    // shaped is computed here, and the cost is NOT hidden: it ships in
-    // BENCH_DETAIL as prime_sec, so the full decomposition the judge
-    // reads is prime (one-time JVM+cache) + builds (ledger) + queries.
+    // ---- priming (published as prime_sec) ------------------------------
+    // Every number that enters a ratio is measured WARM on both engines
+    // (tools/time_oracle.py runs an untimed warm-up pass before its
+    // min-of-2). Without priming, whichever artifact build ran first in the
+    // fresh JVM absorbed the page-cache fill, parquet-footer reads and
+    // write-path class loading. Priming is one noop scan per base table,
+    // one 64-row parquet round-trip, and one 1k-row generate→shuffle→agg
+    // so the first whole-stage compile's janino warm-up lands here.
+    // Nothing query- or artifact-shaped is computed.
     val tPrime0 = System.nanoTime()
     Option(new java.io.File(sfDir).listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
@@ -190,75 +122,35 @@ object Bench {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
         .foreach(p => try java.nio.file.Files.delete(p) catch { case _: Throwable => () })
-      // codegen-framework JIT: the first whole-stage compile in a JVM pays
-      // janino/classloader warm-up that otherwise lands inside whichever
-      // build runs first (docsh3 read 3.2 s as the first generate+agg of
-      // the JVM vs 0.6 s later in the same warm-up order). One 1k-row
-      // generate→shuffle→agg pipeline compiles those shared paths; the
-      // per-PLAN generated classes of real queries are still compiled
-      // (and charged) where they run.
       spark.range(1000)
         .selectExpr("explode(split(repeat(concat('w', cast(id % 7 as string), ' '), 3), ' ')) AS w")
         .filter("length(w) > 0").groupBy("w").count()
         .write.format("noop").mode("overwrite").save()
     } catch { case _: Throwable => () }
     val primeSec = (System.nanoTime() - tPrime0) / 1e9
+    val stealStart = stealStat()
 
-    // ---- load sentinel (r15 verdict item 1) ---------------------------
-    // Three consecutive rounds needed hand forensics to tell "code got
-    // slower" from "host was loaded during the window"; the artifact now
-    // carries the evidence itself. Two fixed probes (single-thread CPU
-    // kernel + a tiny fixed Spark job — graft.core.Calib), each point a
-    // median-of-3, taken at window START (here, everything warm), MIDDLE
-    // (after the isolated pass), BETWEEN the two concurrent walls
-    // (ADVICE r16 — so the wall-of-record segment has its own interior
-    // sample) and END (after the concurrent passes). Published raw, plus
-    // load factors vs the committed quiet-host reference constants —
-    // global AND per-segment (isolated = start/middle, concurrent =
-    // middle/between/end) — and calibration-normalized ratios alongside
-    // the raw ones (raw stays the number of record; the calibrated pair
-    // makes a loaded window mechanically adjudicable).
-    graft.core.Calib.warmSparkJob(spark)
-    graft.core.Calib.cpuOnce() // kernel JIT
-    val calibStart = graft.core.Calib.point(spark)
-    val stealStart = graft.core.Calib.stealStat()
-
-    graft.core.ArtifactRegistry.resetTimings()
-    // Ledger GC hygiene (see ArtifactRegistry.gcBeforeBuild): builds run
-    // lazily inside this warm-up loop, so without the timed passes'
+    // Warm-up: every memoized artifact is built here, before the clock
+    // starts, so the per-query isolated numbers are MARGINAL costs. The
+    // build side is the ArtifactRegistry ledger, published as
+    // artifact:<tag> items and charged by the with-builds ratio.
+    ArtifactRegistry.resetTimings()
+    // Builds run lazily inside this loop; without the timed passes'
     // System.gc() discipline a prior query's major collection lands in
-    // whichever build runs next (triangle_core: 10.6 s in-warm-up vs
-    // 3.3 s clean probe, same window). Isolated pass only — turned back
-    // off before the concurrent pass, where a stop-the-world gc under 6
-    // live queries would distort the wall itself.
-    graft.core.ArtifactRegistry.gcBeforeBuild = true
-    // record build thunks so the ledger can be charged min-of-2 below
-    // (opt-in: production callers must not pin build closures)
-    graft.core.ArtifactRegistry.recordThunks = true
-    // Deterministic (sorted) warm-up order: artifact builds trigger from
-    // the first query that needs them, so an arbitrary Map-hash order made
-    // per-tag ledger numbers window-dependent even on one host. Sorted
-    // order pins which query triggers which build across rounds/hosts.
+    // whichever build runs next (see ArtifactRegistry.gcBeforeBuild).
+    ArtifactRegistry.gcBeforeBuild = true
+    // Sorted order pins which query triggers which build, so per-tag
+    // ledger numbers do not depend on map-hash order.
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
       try run(fn) catch { case _: Throwable => () }
     }
-    // Ledger min-of-2 (r15 verdict item 1): every build re-runs once and
-    // is charged min(first, rebuild) — the discipline the timed queries
-    // already get. A build whose first run absorbed a warm-up GC or
-    // page-cache fill (d05a read 6.5 s on the r15 driver window vs its
-    // 2.4-2.8 s clean probe) no longer carries that context into the
-    // marginal-cost ledger. Pass 2 runs strictly warmer than any first
-    // build (sibling artifacts + page cache resident), so the CONTRACT
-    // ratio (ratio_aggregate_with_builds) charges the PASS-1 ledger
-    // (ADVICE r16 — the warm-biased min must not be the number of
-    // record); the min ledger ships alongside as the marginal-cost view
-    // (artifact_builds / ratio_with_builds_minledger).
-    val buildsPass1 = graft.core.ArtifactRegistry.rebuildMinOf2()
+    // First-build ledger: self time per tag, nested builds not double-counted.
+    val artifactBuilds = ArtifactRegistry.buildSeconds
+    val buildTotal = artifactBuilds.values.sum
+    ArtifactRegistry.resetTimings()
 
-    // Two timed passes, min per query: a single pass is hostage to GC
-    // pauses from whatever ran before (observed 1s queries spiking to 60s
-    // once per run at random). min-of-2 with a GC breather measures the
-    // engine, not the previous query's garbage.
+    // Min-of-2 per query with a GC breather: a single pass is hostage to
+    // GC pauses from whatever ran before.
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       System.gc()
       val t0 = System.nanoTime()
@@ -273,27 +165,14 @@ object Bench {
       if (sec > 2.0) { val c = timeOnce(fn); if (c >= 0) sec = math.min(sec, c) }
       name -> sec
     }
-    val calibMiddle = graft.core.Calib.point(spark)
-    val stealMiddle = graft.core.Calib.stealStat()
     val total = results.map(_._2).filter(_ >= 0).sum
-    // Build-cost snapshot for the isolated session: everything the warm-up
-    // (or a first timed run) paid to materialize memoized artifacts. Self
-    // time per tag — nested builds are not double-counted.
-    val artifactBuilds = graft.core.ArtifactRegistry.buildSeconds
-    val buildTotal = artifactBuilds.values.sum
-    graft.core.ArtifactRegistry.resetTimings() // concurrent session re-pays its own
 
-    // ---- DuckDB-oracle denominator (round-10 judge task) --------------
-    // tools/time_oracle.py writes ORACLE_TIMES.json (min-of-2 DuckDB
-    // seconds per oracle query at the same SF, committed at the repo
-    // root). The ratio the judges have re-derived by hand for three
-    // rounds ships in the artifact instead: ratio_aggregate over every
-    // query timed on both engines, and ratio_heavy_subset over the
-    // queries where the oracle itself does >= 0.5 s of work (the
-    // aggregate is dominated by per-query scheduling floor x catalog
-    // size; the heavy subset measures plan quality). Flat-JSON regex
-    // parse — no JSON library on the engine classpath, and the file
-    // format is ours.
+    // ---- DuckDB-oracle denominator -------------------------------------
+    // ORACLE_TIMES.json (tools/time_oracle.py): min-of-2 DuckDB seconds per
+    // query at the same SF. ratio_aggregate covers every query timed on
+    // both engines; ratio_heavy_subset the queries where the oracle does
+    // >= 0.5 s of work (plan quality, not scheduling floor). Flat-JSON
+    // regex parse: no JSON library on the engine classpath.
     val oracleTimes: Map[String, Double] =
       try {
         val txt = new String(java.nio.file.Files.readAllBytes(
@@ -306,48 +185,30 @@ object Bench {
       } catch { case _: Throwable => Map.empty }
     val sparkByName = results.toMap
     val both = oracleTimes.keys.filter(k => sparkByName.getOrElse(k, -1.0) >= 0).toSeq
-    def ratio(keys: Seq[String]): Double =
-      if (keys.isEmpty) -1.0
-      else {
-        val o = keys.map(oracleTimes).sum
-        if (o <= 0) -1.0 else keys.map(sparkByName).sum / o
-      }
+    def ratio(keys: Seq[String], builds: Double = 0.0): Double = {
+      val o = keys.map(oracleTimes).sum
+      if (keys.isEmpty || o <= 0) -1.0 else (keys.map(sparkByName).sum + builds) / o
+    }
     val ratioAgg = ratio(both)
     val heavy = both.filter(oracleTimes(_) >= 0.5)
     val ratioHeavy = ratio(heavy)
-    // The with-builds ratio charges every artifact build to the numerator:
-    // (Σ isolated + Σ builds) / Σ oracle. The DuckDB denominator pays full
-    // recompute per query, so THIS is the apples-to-apples aggregate; the
-    // 2× contract must hold on it too. The CONTRACT input is the PASS-1
-    // (cold-in-context) ledger (ADVICE r16: pass 2 runs strictly warmer
-    // than any first build — sibling artifacts + page cache resident — so
-    // a min-of-2 ledger as the contract input would let the favorable
-    // warm side become the number of record); the min-ledger ratio is
-    // published alongside as the marginal-cost view.
+    // (Σ isolated + Σ first builds) / Σ oracle: DuckDB recomputes per
+    // query, so this is the apples-to-apples aggregate and the 2× contract
+    // holds on it too.
+    val ratioAggWithBuilds = ratio(both, buildTotal)
     val oracleSumBoth = both.map(oracleTimes).sum
-    val buildTotalPass1 = buildsPass1.values.sum
-    def withBuilds(b: Double): Double =
-      if (both.isEmpty || oracleSumBoth <= 0) -1.0
-      else (both.map(sparkByName).sum + b) / oracleSumBoth
-    val ratioAggWithBuilds = withBuilds(buildTotalPass1) // number of record
-    val ratioWithBuildsMinLedger = withBuilds(buildTotal)
 
-    // Concurrent suite pass: all queries submitted to a fixed pool on the
-    // shared session; FAIR scheduling interleaves their jobs so scheduling
-    // gaps overlap with other queries' compute. min-of-2 walls, same
-    // host-noise rationale as above.
-    // Longest-first (LPT) submission order, from the isolated timings just
-    // measured: with a fixed pool, a 3-second streaming query landing LAST
-    // extends the makespan by its whole runtime; landing first it overlaps
-    // everything else. Alphabetical submission was measured 2× worse on
-    // walls once the suite grew multi-second long poles.
+    // ---- concurrent suite pass -----------------------------------------
+    // Longest-first (LPT) submission from the isolated timings: with a
+    // fixed pool, a long pole landing last extends the makespan by its
+    // whole runtime (alphabetical order measured 2× worse).
     val lptOrder = results.sortBy { case (_, sec) => -sec }.map(_._1)
 
     // Returns (wall, failedCount): a wall with failures did NOT do the full
     // suite's work, so it must never be reported as a fast "success".
     def suiteWallOnce(): (Double, Int) = {
       System.gc()
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(Threads)
       val t0 = System.nanoTime()
       val futures = lptOrder.map(SparkEntry.queries).map { fn =>
         pool.submit(new java.util.concurrent.Callable[Unit] {
@@ -359,66 +220,25 @@ object Bench {
       pool.shutdown()
       ((System.nanoTime() - t0) / 1e9, failed)
     }
-    // swap to the concurrent-mode session (see the config note above);
-    // codegen caches are JVM-wide and survive, so the walls stay warm
-    graft.core.ArtifactRegistry.gcBeforeBuild = false
-    // stop pinning build closures too: the concurrent session's builds
-    // re-run inside the measured walls and must not retain thunk scope
-    graft.core.ArtifactRegistry.recordThunks = false
+    // A stop-the-world gc under 6 live queries would distort the wall.
+    ArtifactRegistry.gcBeforeBuild = false
+    // Swap to the concurrent-mode session; codegen caches are JVM-wide.
     try spark.stop() catch { case _: Throwable => () }
-    spark = buildSession(cpus.toInt, compress = true, tmpfs = false)
+    spark = buildSession(cpus, compress = true, tmpfs = false)
     val configConcurrent = liveConfJson(spark)
-    // warm the sentinel's plan on the fresh session BEFORE the measured
-    // walls so the between/end points never pay the one-time compile
-    graft.core.Calib.warmSparkJob(spark)
-    val pass1Wall = suiteWallOnce()
-    // between-walls sentinel point (ADVICE r16): with only start/middle/
-    // end points, load confined to the concurrent passes — the wall of
-    // record — was sampled by at most one of three points and outvoted by
-    // the median; this point sits inside the concurrent segment so that
-    // segment has its own bracketing majority (middle, between, end).
-    val calibBetween = graft.core.Calib.point(spark)
-    val pass2Wall = suiteWallOnce()
-    val passes = Seq(pass1Wall, pass2Wall)
+    val passes = Seq(suiteWallOnce(), suiteWallOnce())
     val clean = passes.filter(_._2 == 0).map(_._1)
     // -1 sentinel (like the isolated pass) when no pass completed cleanly
     val wall = if (clean.nonEmpty) clean.min else -1.0
     val failedMax = passes.map(_._2).max
-    val calibEnd = graft.core.Calib.point(spark)
-    val stealEnd = graft.core.Calib.stealStat()
+    val stealPctRun = stealPct(stealStart, stealStat())
 
-    // Load factors vs the committed quiet-host constants; the calibrated
-    // ratios divide by min(load_cpu, load_spark) — only the drift BOTH
-    // probes agree on, so normalization can understate load but never
-    // manufacture a pass (and a faster-than-reference host makes the
-    // calibrated number WORSE than raw, honest in that direction too).
-    val calibPts = Seq(calibStart, calibMiddle, calibBetween, calibEnd)
-    def loadOf(pts: Seq[(Double, Double)]): (Double, Double, Double) = {
-      val lc = graft.core.Calib.median(pts.map(_._1)) / graft.core.Calib.RefCpuSec
-      val ls = graft.core.Calib.median(pts.map(_._2)) / graft.core.Calib.RefSparkSec
-      (lc, ls, math.min(lc, ls))
-    }
-    val (loadCpu, loadSpark, loadFactor) = loadOf(calibPts)
-    // Per-segment factors (published, adjudication evidence — the global
-    // min-of-medians stays the normalizer of record): the ISOLATED pass
-    // runs between the start and middle points; the CONCURRENT walls run
-    // between middle and end with the between point interior to them.
-    val loadFactorIsolated = loadOf(Seq(calibStart, calibMiddle))._3
-    val loadFactorConcurrent = loadOf(Seq(calibMiddle, calibBetween, calibEnd))._3
-    def calibrated(r: Double): Double =
-      if (r < 0 || loadFactor <= 0) -1.0 else r / loadFactor
-
-    // ---- output ------------------------------------------------------
-    // The harness records only the LAST ~2000 chars of stdout and JSON-
-    // parses a line out of that tail; sbt prints a ~75-char "[success]"
-    // line AFTER us. Rounds 1-4 printed full-precision values for every
-    // query: the line grew past the window, its head was cut off, and the
-    // bench was recorded as unparseable all four rounds. So: full
-    // precision goes on a prefixed detail line (never mistakable for the
-    // result, visible in complete logs), and THE json line is compact —
-    // 2-decimal values, trailing zeros trimmed — with a hard length cap
-    // that drops the fastest queries first ("omitted":n) if the suite
-    // ever outgrows the window again.
+    // ---- output --------------------------------------------------------
+    // A consumer may keep only the last ~2000 chars of stdout, and sbt
+    // prints a trailer after us. So full precision goes on a prefixed
+    // detail line and a sidecar file, and THE json line is compact: 2
+    // decimals, trailing zeros trimmed, and a hard length cap that drops
+    // the fastest queries first ("omitted":n).
     def fmt(v: Double): String = {
       if (v < 0) "-1"
       else {
@@ -433,94 +253,21 @@ object Bench {
     val ratioFields =
       s""""ratio_aggregate":${fmt3(ratioAgg)},"ratio_heavy_subset":${fmt3(ratioHeavy)},""" +
         s""""oracle_n":${both.size},"oracle_heavy_n":${heavy.size},""" +
-        s""""oracle_sec":${fmt3(both.map(oracleTimes).sum)},""" +
+        s""""oracle_sec":${fmt3(oracleSumBoth)},""" +
         s""""oracle_heavy_sec":${fmt3(heavy.map(oracleTimes).sum)},""" +
         s""""spark_heavy_sec":${fmt3(heavy.map(sparkByName).sum)}"""
-    // Per-mode session config, recorded from the LIVE sessions (the
-    // DuckDB denominator is measured once under tools/time_oracle.py's
-    // fixed config; the two Spark passes deliberately differ — see the
-    // config note at the top).
-    val configFields =
-      s""""config_isolated":$configIsolated,"config_concurrent":$configConcurrent"""
-    // artifact:<tag> line items — the build side of the memoization
-    // ledger. `build_total_sec` is what the isolated session paid during
-    // warm-up to materialize every shared artifact; the with-builds ratio
-    // adds it to the aggregate numerator.
-    def ledgerJson(m: Map[String, Double]): String = m.toSeq.sortBy(-_._2)
+    val buildsJson = artifactBuilds.toSeq.sortBy(-_._2)
       .map { case (t, v) => "\"artifact:" + t + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
-    val buildsJson = ledgerJson(artifactBuilds)
-    val buildsPass1Json = ledgerJson(buildsPass1)
-    // ratio_aggregate_with_builds charges the PASS-1 ledger (the contract
-    // number of record — ADVICE r16); ratio_with_builds_minledger is the
-    // marginal-cost view over the min-of-2 ledger, published alongside.
     val buildFields =
       s""""artifact_builds":$buildsJson,"build_total_sec":${fmt3(buildTotal)},""" +
-        s""""artifact_builds_pass1":$buildsPass1Json,""" +
-        s""""build_total_pass1_sec":${fmt3(buildTotalPass1)},""" +
         s""""prime_sec":${fmt3(primeSec)},""" +
-        s""""ratio_aggregate_with_builds":${fmt3(ratioAggWithBuilds)},""" +
-        s""""ratio_with_builds_minledger":${fmt3(ratioWithBuildsMinLedger)}"""
-    // The load sentinel's raw evidence + the normalized ratios. Raw
-    // ratio_aggregate/ratio_aggregate_with_builds stay the numbers of
-    // record; these fields exist so a loaded window is adjudicable from
-    // the artifact alone (r15 verdict item 1).
-    def calibArr(sel: ((Double, Double)) => Double): String =
-      calibPts.map(p => fmt3(sel(p))).mkString("[", ",", "]")
-    val calibFields =
-      s""""calib":{"cpu_sec":${calibArr(_._1)},"spark_job_sec":${calibArr(_._2)},""" +
-        s""""ref_cpu_sec":${fmt3(graft.core.Calib.RefCpuSec)},""" +
-        s""""ref_spark_job_sec":${fmt3(graft.core.Calib.RefSparkSec)},""" +
-        s""""load_cpu":${fmt3(loadCpu)},"load_spark":${fmt3(loadSpark)},""" +
-        s""""load_factor":${fmt3(loadFactor)},""" +
-        s""""load_factor_isolated":${fmt3(loadFactorIsolated)},""" +
-        s""""load_factor_concurrent":${fmt3(loadFactorConcurrent)},""" +
-        // steal-time sentinel (r18 verdict item 2 — the "context
-        // sentinel"): % of all guest CPU time the HOST stole from this VM
-        // per segment, from /proc/stat. The probes above miss host vCPU
-        // oversubscription (a single-thread kernel on an idle guest gets
-        // a full core while the 32-way suite loses a slice of every busy
-        // core); nonzero steal on a window whose load factors read < 1 is
-        // that mechanism, recorded. -1 = /proc/stat unreadable.
-        s""""steal_pct_isolated":${fmt3(graft.core.Calib.stealPct(stealStart, stealMiddle))},""" +
-        s""""steal_pct_concurrent":${fmt3(graft.core.Calib.stealPct(stealMiddle, stealEnd))},""" +
-        s""""steal_pct":${fmt3(graft.core.Calib.stealPct(stealStart, stealEnd))}},""" +
-        s""""ratio_aggregate_calibrated":${fmt3(calibrated(ratioAgg))},""" +
-        s""""ratio_with_builds_calibrated":${fmt3(calibrated(ratioAggWithBuilds))},""" +
-        // segment-calibrated contract fields (see RatioSegments): the
-        // aggregate ratios' numerators ran entirely in the isolated
-        // segment, so they carry that segment's own factor in the
-        // headline calibrated fields, not min() across segments
-        s""""ratio_aggregate_seg_calibrated":${fmt3(segCalibrated(ratioAgg, loadFactorIsolated))},""" +
-        s""""ratio_with_builds_seg_calibrated":${fmt3(segCalibrated(ratioAggWithBuilds, loadFactorIsolated))}"""
-    // Documented structural floors for queries that have been redesigned
-    // to their measured decomposition (probe mains in src/test): the
-    // remaining cost is stage-count floor at local[32], not plan shape.
-    // Committed here per the r12 verdict so the artifact, not a NOTES
-    // archaeology, carries the floor.
-    // Floors are EXCLUDED from the perf-weak rule by definition: a query
-    // lands here only after >=2 redesigns were measured and rejected with
-    // numbers at the site, i.e. the remaining cost is decomposed stage/
-    // job floor, not plan shape. Excluded from the COUNT, not from
-    // scrutiny (ADVICE r15): tools/perf_weak.py re-prints every floored
-    // query's CURRENT window ratio on every run (floor-recheck lines), so
-    // a floor whose premise drifts is visible the round it happens
-    // instead of self-certified forever.
-    val floorsJson = FloorsJson
-    // cpus ships INSIDE the detail artifact so tooling (perf_weak floor
-    // rechecks) can refuse a non-32-core window instead of adjudicating
-    // 32-core floor baselines against it (r18 verdict item 5); quoted
-    // fallback keeps the artifact parseable if the env var is non-numeric.
-    val cpusJson = if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus
-      else "\"" + cpus + "\""
+        s""""ratio_aggregate_with_builds":${fmt3(ratioAggWithBuilds)}"""
+    val configFields =
+      s""""config_isolated":$configIsolated,"config_concurrent":$configConcurrent"""
     val detailJson =
-      s"""{"wall":$wall,"threads":$threads,"cpus":$cpusJson,"failed":$failedMax,"isolated_sec":$total,$ratioFields,$buildFields,$calibFields,"floors":$floorsJson,$configFields,"sf":"$sfDir","queries":$detail}"""
+      s"""{"wall":$wall,"threads":$Threads,"cpus":$cpus,"failed":$failedMax,"isolated_sec":$total,"steal_pct":${fmt3(stealPctRun)},$ratioFields,$buildFields,$configFields,"sf":"$sfDir","queries":$detail}"""
     println(s"BENCH_DETAIL $detailJson")
-    // Sidecar with FULL per-query precision: the stdout line keeps only the
-    // slowest queries (the 2000-char recording window), so the durable
-    // artifact for the whole suite is this file — committed per round as
-    // BENCH_DETAIL.json so `omitted` on the line never loses information.
-    // Non-32-core runs write a cpu-suffixed sidecar (see detailPath).
     val detailFile = detailPath(cpus)
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(detailFile), detailJson + "\n")
@@ -532,22 +279,18 @@ object Bench {
         .mkString("{", ",", "}")
       val omit = results.size - keep.size
       val omitField = if (omit > 0) s""","omitted":$omit""" else ""
-      s"""{"metric":"suite_wall_concurrent","value":${fmt(wall)},"unit":"sec","failed":$failedMax,"isolated_sec":${fmt(total)},"ratio_aggregate":${fmt3(ratioAgg)},"ratio_with_builds":${fmt3(ratioAggWithBuilds)},"ratio_calibrated":${fmt3(calibrated(ratioAgg))},"load_factor":${fmt3(loadFactor)},"build_total_sec":${fmt(buildTotal)},"build_total_pass1_sec":${fmt(buildTotalPass1)},"ratio_heavy_subset":${fmt3(ratioHeavy)},"oracle_sec":${fmt(both.map(oracleTimes).sum)},"detail_file":"$detailFile"$omitField,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"suite_wall_concurrent","value":${fmt(wall)},"unit":"sec","failed":$failedMax,"isolated_sec":${fmt(total)},"ratio_aggregate":${fmt3(ratioAgg)},"ratio_with_builds":${fmt3(ratioAggWithBuilds)},"steal_pct":${fmt3(stealPctRun)},"build_total_sec":${fmt(buildTotal)},"ratio_heavy_subset":${fmt3(ratioHeavy)},"oracle_sec":${fmt(oracleSumBoth)},"detail_file":"$detailFile"$omitField,"queries":$qs,"sf":"$sfDir"}"""
     }
-    // the line carries the slowest 20 (what a bench reader needs at a
-    // glance — per-query floors and outliers); the sidecar has everything
+    // the line carries the slowest 20; the sidecar has everything
     var keep = results.sortBy(-_._2).take(20)
     var line = jsonLine(keep)
     while (line.length > maxLine && keep.nonEmpty) {
       keep = keep.dropRight(1)
       line = jsonLine(keep)
     }
-    // stop Spark BEFORE printing: the executor/UI shutdown logs otherwise
-    // race the result line, and the json line must be the process's last
-    // stdout write (build.sbt forks run with StdoutOutput so no "[info] "
-    // prefix is added — rounds 1-5 were recorded parsed:null because the
-    // sbt logger prefix made the line non-JSON). A throwing stop() must
-    // not take the already-computed result down with it.
+    // Stop Spark BEFORE printing: shutdown logs would otherwise race the
+    // result line, which must be the process's last stdout write. A
+    // throwing stop() must not take the computed result down with it.
     try spark.stop() catch { case _: Throwable => () }
     System.out.flush()
     println(line)

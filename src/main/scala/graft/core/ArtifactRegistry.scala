@@ -4,42 +4,38 @@ import java.util.concurrent.ConcurrentHashMap
 
 /** Session-scoped memoization of build artifacts (persisted signature
   * tables, fitted clusterings, graph edge materializations, PQ codes …)
-  * with per-build wall-clock accounting.
+  * with per-tag build-time accounting.
   *
-  * Replaces the per-file `ConcurrentHashMap.computeIfAbsent` caches of
-  * rounds 11-12, for two reasons:
+  * Two contracts:
   *
-  * 1. **The CHM contract.** Several builds depend on other cached
+  * 1. **Nested builds are legal.** Several builds depend on other cached
   *    artifacts (d05's clusters read the 0.8-Jaccard pair table, LPA
   *    reads the doubled-edge frame, the sketch register table reads the
-  *    month-key base). `computeIfAbsent`'s mapping function must not
-  *    update the same map — a nested absent key hashing into the outer
-  *    key's bin throws IllegalStateException("Recursive update"). The
-  *    old code only avoided this because each dependency pair happened
-  *    to live in different maps or bins; with per-run applicationId in
-  *    every key, bin placement is luck. Here the pattern is
-  *    get → per-key lock → re-check → build: the store itself is only
-  *    touched by plain get/put, so a build may freely request other
-  *    artifacts (dependencies are acyclic — jp08→d05a, und→lpa3,
-  *    mkbase→mkregs — so the per-key locks cannot deadlock).
+  *    month-key base). `ConcurrentHashMap.computeIfAbsent`'s mapping
+  *    function must not update the same map — a nested absent key hashing
+  *    into the outer key's bin throws IllegalStateException("Recursive
+  *    update"). Here the pattern is get → per-key lock → re-check →
+  *    build: the store itself is only touched by plain get/put, so a
+  *    build may freely request other artifacts (dependencies are acyclic
+  *    — jp08→d05a, und→lpa3, mkbase→mkregs — so the per-key locks cannot
+  *    deadlock). A build that throws stores nothing; the next request
+  *    for its key builds again.
   *
   * 2. **Auditable amortization.** "First query in a session pays the
   *    build" is the production posture, but a benchmark that warms up
-  *    on the same session hides every build from every measured number
-  *    (round-12 verdict, item 1). Each build's wall-clock is recorded
-  *    per tag — SELF time only: a parent build's number excludes time
-  *    spent inside nested `cached` builds, so the per-tag seconds sum
-  *    to total build cost without double counting. [[graft.Bench]]
-  *    snapshots [[buildSeconds]] after the isolated pass and publishes
-  *    `artifact:<tag>` line items, `build_total_sec`, and
+  *    on the same session hides every build from every measured number.
+  *    Each build's wall-clock is recorded per tag — SELF time only: a
+  *    parent build's number excludes time spent inside nested `cached`
+  *    builds, so the per-tag seconds sum to total build cost without
+  *    double counting. [[graft.Bench]] snapshots [[buildSeconds]] after
+  *    its warm-up pass and publishes the first-build ledger as
+  *    `artifact:<tag>` items, `build_total_sec`, and
   *    `ratio_aggregate_with_builds` in BENCH_DETAIL.
   *
   * Lifetime: entries are keyed by applicationId (callers include it in
-  * `key`), so a stopped session's frames become unreachable dead weight
-  * rather than wrong answers — and since round 14 not even dead weight:
-  * the first build in a session installs a listener that EVICTS every
-  * entry (and its lock) mentioning that applicationId when the
-  * application ends, so a long-lived multi-session service can reuse
+  * `key`), and the first build in a session installs a listener that
+  * EVICTS every entry (and its lock) mentioning that applicationId when
+  * the application ends, so a long-lived multi-session service can reuse
   * this as-is.
   */
 object ArtifactRegistry {
@@ -51,12 +47,6 @@ object ArtifactRegistry {
   // store key, not here: Bench resets timings at session start, so the
   // snapshot it reads is exactly the builds its own session paid for)
   private val buildSelf = new ConcurrentHashMap[String, java.lang.Double]()
-  // full key -> that build's self-seconds. Exists so [[rebuildMinOf2]]'s
-  // repair path can replace exactly the repaired KEY's truncated pass-1
-  // partial with its rebuild time while keeping the tag's healthy keys at
-  // their own pass-1 charges (ADVICE r16: a tag with a 5 s healthy key
-  // and a 2 s repair must charge ~7 s, not max(5, 2) = 5).
-  private val buildSelfByKey = new ConcurrentHashMap[Any, java.lang.Double]()
   // Measurement hygiene, opt-in ([[graft.Bench]] isolated pass only): a
   // build's recorded wall must measure the BUILD, not the previous
   // queries' garbage. Bench System.gc()s before every timed query, but
@@ -73,18 +63,6 @@ object ArtifactRegistry {
   private val childTime = new ThreadLocal[java.util.ArrayDeque[Array[Double]]] {
     override def initialValue() = new java.util.ArrayDeque[Array[Double]]()
   }
-  // build thunks, kept so [[rebuildMinOf2]] can re-run a build for a
-  // second timing sample (queries get min-of-2; until r16 each build was
-  // charged its single cold-in-context number, which is how a warm-up
-  // GC/page-cache hiccup landed on whichever tag built next — d05a read
-  // 6.5 s on a driver window whose clean probe of the same build is
-  // 2.4-2.8 s). Recording is OPT-IN (the gcBeforeBuild pattern): a
-  // production service must not pin every build closure — and whatever
-  // session/frame scope it captures — for the application lifetime to
-  // serve a bench-only feature. Entries evict with the application like
-  // the store itself.
-  @volatile var recordThunks: Boolean = false
-  private val thunks = new ConcurrentHashMap[Any, () => AnyRef]()
 
   /** Memoized `build` under `key`; `tag` names the artifact in the bench
     * accounting (stable across runs — no appId/dir in the tag). */
@@ -104,15 +82,14 @@ object ArtifactRegistry {
           // wall to the calling build's child accumulator so a parent's
           // SELF time excludes it — otherwise the same interval lands on
           // both tags and build_total_sec double-counts under the
-          // concurrent pass (ADVICE r13). (A wait that ends WITHOUT the
-          // value present — the builder failed — stays on the parent:
-          // rare, and conservative in the right direction.)
+          // concurrent pass. (A wait that ends WITHOUT the value present
+          // — the builder failed — stays on the parent: rare, and
+          // conservative in the right direction.)
           val parent = childTime.get().peek()
           if (parent != null) parent(0) += (System.nanoTime() - w0) / 1e9
           again.asInstanceOf[V]
         } else {
           autoRegisterEviction()
-          if (recordThunks) thunks.put(k, () => build)
           // outside the timed window, and only for a genuine build
           if (gcBeforeBuild) System.gc()
           val stack = childTime.get()
@@ -125,10 +102,6 @@ object ArtifactRegistry {
               val nested = stack.pop()(0)
               val self = Double.box(math.max(0.0, elapsed - nested))
               buildSelf.merge(tag, self, (a, b) => Double.box(a + b))
-              // per-key record too (a throwing build's partial included —
-              // this finally runs on the throw path, which is exactly the
-              // partial the repair accounting must be able to subtract)
-              buildSelfByKey.merge(k, self, (a, b) => Double.box(a + b))
               val parent = stack.peek()
               if (parent != null) parent(0) += elapsed
             }
@@ -172,124 +145,7 @@ object ArtifactRegistry {
     }
     val dead = new java.util.ArrayList[Any]()
     store.keySet.forEach { k => if (mentions(k)) { dead.add(k); () } }
-    dead.forEach { k =>
-      store.remove(k); locks.remove(k); thunks.remove(k)
-      // per-key build charges are keyed the same way (keys embed the
-      // applicationId), so a long-lived multi-session service would
-      // otherwise grow this map without bound (ADVICE r17)
-      buildSelfByKey.remove(k)
-      ()
-    }
-  }
-
-  /** Re-runs every recorded build ONCE as a pure TIMING SAMPLE and
-    * charges each tag min(first build, rebuild) — the same min-of-2
-    * discipline the timed queries get, applied to the ledger (r15
-    * verdict item 1: build charges must not carry one-shot warm-up noise
-    * the queries are already protected from).
-    *
-    * The rebuilt VALUE is discarded and the store is never touched.
-    * This is load-bearing, not laziness: several call sites key their
-    * cache entry by an upstream frame's `semanticHash()`, and an
-    * upstream artifact REPLACED by a rebuild gets a fresh localCheckpoint
-    * (new RDD id → new hash), silently invalidating every downstream
-    * key — the first version of this method did replace values, and the
-    * downstream rebuild then happened INSIDE a timed query, double-
-    * charging the tag (triangle_core read 7.4 s = 3.7 min + a 3.7 re-key
-    * miss) and inflating that query's time. Timing the thunk against the
-    * intact store gives the same self-time scope as pass 1 (nested
-    * dependencies are cache hits in both passes).
-    *
-    * Caller contract: single-threaded, between the warm-up loop and the
-    * timed passes, on the same live session the builds ran on; requires
-    * [[recordThunks]] to have been true while the builds ran. Rebuilds
-    * run in sorted key order (deterministic), every build site is
-    * rebuild-idempotent (DROP TABLE IF EXISTS / fresh scratch dirs), and
-    * a rebuild that throws keeps the pass-1 charge — never shrink the
-    * ledger on an error (when a TAG spans several keys, one key's failed
-    * rebuild poisons the whole tag's pass-2 sum, so the tag keeps its
-    * pass-1 charge: a partial pass-2 sum compared against a full pass-1
-    * sum would shrink the ledger on exactly the error path). One exception to
-    * store-untouched: a key whose pass-1 build FAILED has no stored
-    * value (its thunk was recorded before the throw), so the rebuild's
-    * value IS stored — nothing downstream can hold a key derived from a
-    * value that never existed, and without the repair the first timed
-    * run of the dependent query pays the build inside its measured
-    * window. A repaired tag's charge sums the tag's HEALTHY keys at
-    * their per-key pass-1 charges with the repaired key's rebuild time
-    * (the per-key record exists for exactly this — ADVICE r16: the old
-    * max(pass-1 sum, repair) under-reported a tag with both a healthy
-    * key and a repaired key; the repaired key's pass-1 partial is a
-    * truncated build, so it is REPLACED, not compared). Returns the PASS-1
-    * (first-build) charges so the caller can publish both sides: pass 2
-    * runs in a strictly warmer context than any first build, so the min
-    * is a marginal-cost number and must stay auditable against the
-    * cold-in-context one. */
-  def rebuildMinOf2(): Map[String, Double] = {
-    val pass1 = buildSeconds
-    val keys = {
-      val b = Seq.newBuilder[Any]
-      thunks.keySet.forEach(k => b += k)
-      b.result().sortBy(_.toString)
-    }
-    val pass2 = new java.util.HashMap[String, java.lang.Double]()
-    val failedTags = scala.collection.mutable.Set[String]()
-    val repairedTags = new java.util.HashMap[String, java.lang.Double]()
-    // per-tag sum of the repaired keys' pass-1 TRUNCATED partials — the
-    // amount the charge below subtracts from the tag's pass-1 sum before
-    // adding the rebuild times (ADVICE r16)
-    val repairedPartials = new java.util.HashMap[String, java.lang.Double]()
-    keys.foreach { k =>
-      val thunk = thunks.get(k)
-      if (thunk != null) k match {
-        case (tag: String, _) =>
-          if (gcBeforeBuild) System.gc()
-          val repair = !store.containsKey(k) // pass-1 build threw
-          val t0 = System.nanoTime()
-          try {
-            val v = thunk() // result discarded unless repairing; store untouched
-            val el = (System.nanoTime() - t0) / 1e9
-            if (repair) {
-              store.put(k, v)
-              repairedTags.merge(tag, Double.box(el), (a, b) => Double.box(a + b))
-              val partial = buildSelfByKey.get(k)
-              if (partial != null)
-                repairedPartials.merge(tag, partial, (a, b) => Double.box(a + b))
-            } else pass2.merge(tag, Double.box(el), (a, b) => Double.box(a + b))
-            ()
-          } catch { case _: Throwable => failedTags += tag; () }
-        case _ => ()
-      }
-    }
-    buildSelf.clear()
-    pass1.foreach { case (tag, v1) =>
-      val charge =
-        if (failedTags.contains(tag)) v1 // poisoned pass 2: keep pass 1
-        else if (repairedTags.containsKey(tag)) {
-          // healthy keys keep their pass-1 charges; each repaired key's
-          // truncated partial is REPLACED by its rebuild time (per-key
-          // pass-1 record makes the subtraction exact — ADVICE r16:
-          // healthy 5 s + repair 2 s must charge 7 s, not max = 5 s)
-          val partial = Option(repairedPartials.get(tag)).fold(0.0)(_.doubleValue())
-          math.max(0.0, v1 - partial) + repairedTags.get(tag).doubleValue()
-        }
-        else Option(pass2.get(tag)).fold(v1)(v2 => math.min(v1, v2.doubleValue()))
-      buildSelf.put(tag, Double.box(charge))
-    }
-    // a repaired tag whose pass-1 charge never landed (throw before any
-    // accounting) must still appear in the ledger
-    repairedTags.forEach { (tag, el) =>
-      if (!pass1.contains(tag)) buildSelf.put(tag, el)
-    }
-    // the per-key record served its purpose (the subtraction above);
-    // clear it so a later snapshot never mixes sessions
-    buildSelfByKey.clear()
-    // The discarded rebuild values hold freshly persisted localCheckpoint
-    // blocks until the async ContextCleaner processes their weak refs; a
-    // synchronous gc here lets that happen before the timed passes start
-    // instead of under the first timed queries' storage pressure.
-    if (gcBeforeBuild) System.gc()
-    pass1
+    dead.forEach { k => store.remove(k); locks.remove(k); () }
   }
 
   /** Per-tag build self-seconds accumulated since the last
@@ -300,5 +156,5 @@ object ArtifactRegistry {
     b.result()
   }
 
-  def resetTimings(): Unit = { buildSelf.clear(); buildSelfByKey.clear() }
+  def resetTimings(): Unit = buildSelf.clear()
 }

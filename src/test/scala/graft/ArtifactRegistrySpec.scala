@@ -3,10 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.ArtifactRegistry
 
-/** Pins the two contracts the round-13 registry exists for: nested builds
-  * are legal (the r12 advisory's computeIfAbsent recursion hazard), and
-  * per-tag build accounting is SELF time (a parent's number excludes the
-  * child build it triggered, so tags sum to total cost).
+/** Pins the two contracts the registry exists for: nested builds are
+  * legal (the computeIfAbsent recursion hazard), and per-tag build
+  * accounting is SELF time (a parent's number excludes the child build it
+  * triggered, so tags sum to total cost). Also pins memoization under
+  * races, eviction, and that a failed build leaves no entry behind.
   */
 class ArtifactRegistrySpec extends AnyFunSuite {
 
@@ -106,120 +107,27 @@ class ArtifactRegistrySpec extends AnyFunSuite {
     assert(n.get() == 1)
   }
 
-  test("rebuildMinOf2 charges min(first, rebuild) and keeps pass-1 on a failed rebuild") {
+  test("a throwing build caches nothing; the next request builds, returns and charges") {
     ArtifactRegistry.resetTimings()
-    ArtifactRegistry.recordThunks = true // bench-only opt-in (see below)
-    try {
-    var okBuilds = 0
-    var badBuilds = 0
-    // first build slow (a warm-up GC landing on the tag), rebuild fast:
-    // the ledger must charge ~the rebuild, but the STORE must keep the
-    // pass-1 value — a replaced value would invalidate every downstream
-    // cache key derived from its identity (semanticHash keys)
-    def ok: String = ArtifactRegistry.cached(("arsMin2", "ok"), "spec_min2_ok") {
-      okBuilds += 1; Thread.sleep(if (okBuilds == 1) 250 else 10); s"V$okBuilds"
-    }
-    // rebuild THROWS: the pass-1 charge must survive (never shrink the
-    // ledger on an error) and the pass-1 value must still be served
-    def bad: String = ArtifactRegistry.cached(("arsMin2", "bad"), "spec_min2_bad") {
-      badBuilds += 1
-      if (badBuilds > 1) throw new RuntimeException("flaky rebuild")
-      Thread.sleep(120); "B1"
-    }
-    assert(ok == "V1" && bad == "B1")
-    val pass1 = ArtifactRegistry.rebuildMinOf2()
-    assert(okBuilds == 2 && badBuilds == 2)
-    // pass-1 (cold-in-context) charges are returned for publication
-    assert(pass1("spec_min2_ok") >= 0.2, s"pass-1 charge returned: $pass1")
-    val t = ArtifactRegistry.buildSeconds
-    assert(t("spec_min2_ok") < 0.15, s"min-of-2 must drop the slow first build: $t")
-    assert(t("spec_min2_bad") >= 0.10, s"failed rebuild keeps the pass-1 charge: $t")
-    assert(ok == "V1", "rebuild is a timing sample — the stored value is untouched")
-    assert(okBuilds == 2)
-    assert(bad == "B1", "failed rebuild must not evict the pass-1 value")
-    assert(badBuilds == 2)
-    } finally {
-      // restore globals even when a timing assert flakes — a leaked
-      // recordThunks=true or leftover arsMin2 thunks would cascade a
-      // single failure into the next test
-      ArtifactRegistry.recordThunks = false
-      ArtifactRegistry.evictApplication("arsMin2")
-      ArtifactRegistry.resetTimings()
-    }
-  }
-
-  test("rebuildMinOf2 repairs an artifact whose pass-1 build failed") {
-    ArtifactRegistry.resetTimings()
-    ArtifactRegistry.recordThunks = true
-    try {
-      var builds = 0
-      def v: String = ArtifactRegistry.cached(("arsRepair", "x"), "spec_repair") {
-        builds += 1
-        if (builds == 1) { Thread.sleep(20); throw new RuntimeException("cold failure") }
-        Thread.sleep(80); "OK"
-      }
-      intercept[RuntimeException](v)
-      ArtifactRegistry.rebuildMinOf2()
-      assert(builds == 2, "rebuild repaired the missing artifact")
-      // the repaired value is stored: the dependent query must NOT pay a
-      // third build inside its timed window
-      assert(v == "OK" && builds == 2)
-      // charged the successful rebuild, not the truncated pass-1 partial
-      assert(ArtifactRegistry.buildSeconds("spec_repair") >= 0.06,
-        s"repaired tag carries the full rebuild charge: ${ArtifactRegistry.buildSeconds}")
-    } finally {
-      ArtifactRegistry.recordThunks = false
-      ArtifactRegistry.evictApplication("arsRepair")
-      ArtifactRegistry.resetTimings()
-    }
-  }
-
-  test("repair accounting: healthy keys' pass-1 charges SUM with the repaired key's rebuild") {
-    // ADVICE r16: a tag spanning a healthy key (pass-1 ~150 ms) and a
-    // repaired key (rebuild ~60 ms) must charge their SUM (~210 ms), not
-    // the old max(pass-1 sum, repair) = ~160 ms — the per-key pass-1
-    // record replaces exactly the repaired key's truncated partial.
-    ArtifactRegistry.resetTimings()
-    ArtifactRegistry.recordThunks = true
-    try {
-      var healthy = 0
-      var flaky = 0
-      def h: String = ArtifactRegistry.cached(("arsRepair2", "healthy"), "spec_repair2") {
-        healthy += 1; Thread.sleep(150); "H"
-      }
-      def f: String = ArtifactRegistry.cached(("arsRepair2", "flaky"), "spec_repair2") {
-        flaky += 1
-        if (flaky == 1) { Thread.sleep(10); throw new RuntimeException("cold failure") }
-        Thread.sleep(60); "F"
-      }
-      assert(h == "H")
-      intercept[RuntimeException](f)
-      ArtifactRegistry.rebuildMinOf2()
-      assert(healthy == 2 && flaky == 2)
-      val t = ArtifactRegistry.buildSeconds
-      assert(t("spec_repair2") >= 0.18,
-        s"healthy pass-1 (~0.15) + rebuild (~0.06) must sum, not max(): $t")
-      assert(f == "F" && flaky == 2, "repaired value stored — no third build")
-    } finally {
-      ArtifactRegistry.recordThunks = false
-      ArtifactRegistry.evictApplication("arsRepair2")
-      ArtifactRegistry.resetTimings()
-    }
-  }
-
-  test("thunk recording is opt-in: without it rebuildMinOf2 leaves charges alone") {
-    ArtifactRegistry.resetTimings()
-    assert(!ArtifactRegistry.recordThunks,
-      "recordThunks must default false — production callers must not pin build closures")
     var builds = 0
-    ArtifactRegistry.cached(("arsNoRec", "x"), "spec_norec") {
-      builds += 1; Thread.sleep(60); "X"
+    def v: String = ArtifactRegistry.cached(("arsThrow", "x"), "spec_throw") {
+      builds += 1
+      if (builds == 1) throw new RuntimeException("cold failure")
+      Thread.sleep(80); "OK"
     }
-    ArtifactRegistry.rebuildMinOf2()
-    assert(builds == 1, "no thunk recorded, so nothing rebuilds")
-    assert(ArtifactRegistry.buildSeconds("spec_norec") >= 0.04,
-      "original charge survives a no-op rebuild pass")
-    ArtifactRegistry.resetTimings()
+    try {
+      intercept[RuntimeException](v)
+      assert(builds == 1)
+      // nothing was stored: the next request runs the build again
+      assert(v == "OK" && builds == 2)
+      assert(ArtifactRegistry.buildSeconds("spec_throw") >= 0.06,
+        s"the successful build is charged to its tag: ${ArtifactRegistry.buildSeconds}")
+      // and now it is memoized
+      assert(v == "OK" && builds == 2)
+    } finally {
+      ArtifactRegistry.evictApplication("arsThrow")
+      ArtifactRegistry.resetTimings()
+    }
   }
 
   test("gc-before-build hygiene is OFF unless a bench opts in") {

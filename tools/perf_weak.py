@@ -1,168 +1,53 @@
 #!/usr/bin/env python3
 """Derive the perf-weak list from the committed bench artifacts.
 
-The driver/judge rule, applied mechanically (the same derivation the
-round-13/14 verdicts did by hand): a query is perf-weak iff
+A query is perf-weak iff
   - its DuckDB oracle does real work   (oracle >= 0.3 s), and
-  - the Spark side is not floor-noise  (spark  >= 1.4 s; was 1.5 until
-    r14, when t24 escaped the gate by 10 ms — a threshold should not do
-    the arguing, per the r14 verdict), and
+  - the Spark side is not floor-noise  (spark  >= 1.4 s), and
   - the ratio exceeds the contract     (spark / oracle > 2), and
   - it is not a streaming-parity query (micro-batch start/stop floors
-    are excluded by the rule), and
-  - it is not a recorded structural floor (BENCH_DETAIL.floors — a
-    query lands there only after >= 2 redesigns were measured and
-    rejected with numbers at the site).
+    are excluded by the rule).
 
-Since r16 the gate runs on BOTH the raw spark time and the
-load-calibrated one: the oracle denominator is a committed quiet-host
-measurement, so a loaded window inflates every raw ratio with no code
-change, and a faster-than-reference window deflates them. A query
-failing EITHER side prints, annotated with which side it fails; the raw
-count stays the count of record.
-
-Since r18 the calibration factor for PER-QUERY ratios is the ISOLATED
-segment's load factor (calib.load_factor_isolated, falling back to the
-global load_factor on older artifacts): every per-query number in
-BENCH_DETAIL.queries is measured in the isolated pass, so the honest
-normalizer is that segment's own sentinel, not the global min-of-medians
-(which under-corrects exactly when load is confined to one segment —
-the r17 driver window read global 1.075 vs isolated 1.274, and both
-floor-drift flags that fired were loaded-window artifacts).
+The ratio is the raw one: both numbers come straight from the artifacts.
+The detail file's `steal_pct`, when present, is printed as context.
 
 Usage:
   python3 tools/perf_weak.py [BENCH_DETAIL.json] [ORACLE_TIMES.json]
 
-Exit status 0 always (this is a report, not a gate); prints one line
-per offender plus a summary, so `wc -l` over the output is NOT the
-count — read the "perf-weak: N raw" line.
+Exit status 0 always (this is a report, not a gate); prints one line per
+offender plus a summary line, "perf-weak: N raw".
 """
-import re, sys, json
+import json
+import sys
 
 STREAMING = {
     "q26_stream_window", "q34_stream_dedupe", "q36_stream_sessions",
     "q42_stream_static_join", "q52_stream_stream_join", "q67_stream_cdc_merge",
 }
 
-# Each floors entry in BENCH_DETAIL carries a machine-readable
-# "[baseline N.Nx]" token — the recorded quiet-window ratio pinned at the
-# round the floor was (re)justified. The recheck below flags a floored
-# query only when its CALIBRATED window ratio drifts past
-# FLOOR_BASELINE_RATIO times that baseline: a floor's premise is
-# "ratio >2x is structural", so the actionable signal is drift from its
-# own recorded level, not the level itself. Declaring the baseline inside
-# the floors entry keeps the provenance prose and the number the gate
-# uses in ONE place.
-BASELINE_RE = re.compile(r"\[baseline ([0-9.]+)x\]")
-FLOOR_BASELINE_RATIO = 1.5
-
-# A floors entry MAY additionally record the band its ratio reads under a
-# LOADED driver window ("[loaded N.Nx]" — r17 verdict item 3: t24 tripped
-# the drift flag on two consecutive loaded driver windows while its quiet
-# baseline held both times). When the window's isolated segment is loaded
-# past LOADED_SEGMENT and the calibrated ratio still sits inside the
-# recorded loaded band, the recheck reports "loaded band holds" instead of
-# crying drift — the quiet baseline stays the number the flag defends.
-LOADED_RE = re.compile(r"\[loaded ([0-9.]+)x\]")
-LOADED_SEGMENT = 1.15
-
 
 def main():
     bench_path = sys.argv[1] if len(sys.argv) > 1 else "BENCH_DETAIL.json"
     oracle_path = sys.argv[2] if len(sys.argv) > 2 else "ORACLE_TIMES.json"
-    bench = json.load(open(bench_path))
-    oracle = {k: v for k, v in json.load(open(oracle_path)).items()
-              if not k.startswith("_") and v >= 0}
-    # floors may be keyed by query name or "artifact:<tag>"; only the
-    # query-name entries exclude queries
-    floors = {k for k in bench.get("floors", {}) if not k.startswith("artifact:")}
+    with open(bench_path) as f:
+        bench = json.load(f)
+    with open(oracle_path) as f:
+        oracle = {k: v for k, v in json.load(f).items()
+                  if not k.startswith("_") and v >= 0}
 
-    # Floor [baseline Nx] tokens are 32-CORE quiet-window measurements; a
-    # detail artifact from the driver's low-core scaling pass (r18: the c8
-    # run clobbered the 32-core detail and q27/t41 read as 9.8x/7.4x
-    # "drift" — pure core-count artifacts) must not be adjudicated against
-    # them. Since r19 the bench records its core count in the artifact and
-    # writes non-32 details to a suffixed path; this guard names the window
-    # and skips the drift flags when it is not a 32-core one.
-    cpus = bench.get("cpus")
-    non32 = cpus is not None and cpus != 32
-
-    calib = bench.get("calib", {})
-    # per-query timings are measured in the ISOLATED pass, so calibrate
-    # them by that segment's own factor (r18; global min as the fallback
-    # for pre-r17 artifacts without per-segment sentinels)
-    load = calib.get("load_factor_isolated", calib.get("load_factor", 1.0))
-    if not isinstance(load, (int, float)) or load <= 0:
-        load = 1.0
-
-    def gate(sec, ot):
-        return sec >= 1.4 and sec / ot > 2.0
-
-    weak = []          # (name, spark, oracle, raw_fails, cal_fails)
-    for name, spark in sorted(bench["queries"].items()):
-        if name in STREAMING or name in floors or spark < 0:
-            continue
+    weak = []
+    for name, spark in bench["queries"].items():
         ot = oracle.get(name)
-        if ot is None or ot < 0.3:
+        if name in STREAMING or spark < 0 or ot is None or ot < 0.3:
             continue
-        raw_f, cal_f = gate(spark, ot), gate(spark / load, ot)
-        if raw_f or cal_f:
-            weak.append((name, spark, ot, raw_f, cal_f))
+        if spark >= 1.4 and spark / ot > 2.0:
+            weak.append((name, spark, ot))
 
-    n_raw = sum(1 for w in weak if w[3])
-    n_cal = sum(1 for w in weak if w[4])
-    for name, sp, ot, raw_f, cal_f in sorted(weak, key=lambda x: -x[1] / x[2]):
-        cal = sp / load
-        side = ("raw+calibrated" if raw_f and cal_f
-                else "raw only (inside gate at this window load)" if raw_f
-                else "calibrated only (raw escapes on this fast window)")
-        print(f"{name:30s} spark={sp:6.2f}s  oracle={ot:6.2f}s  "
-              f"ratio={sp / ot:4.1f}x  calibrated={cal:5.2f}s/{cal / ot:4.1f}x  [{side}]")
-    window = f"window: cpus={cpus if cpus is not None else 'unrecorded (pre-r19 artifact)'}"
-    print(f"perf-weak: {n_raw} raw, {n_cal} calibrated (load_factor={load:.3f}; {window}; "
-          f"streaming excluded: {len(STREAMING)}, floors excluded: {sorted(floors)})")
-    if non32:
-        print(f"floor-recheck SKIPPED: this detail window ran at cpus={cpus}, "
-              f"floor baselines are 32-core quiet-window measurements "
-              f"(readings below are informational, no drift flags)")
-    # Floors are excluded from the count, never from scrutiny (ADVICE r15):
-    # every floored query's CURRENT window ratio prints each run, and the
-    # recheck flags CALIBRATED drift past FLOOR_BASELINE_RATIO times the
-    # floor's recorded baseline — visible the round the premise stops
-    # holding, without re-flagging the structural >2x the floor documents.
-    for name in sorted(floors):
-        sp, ot = bench["queries"].get(name), oracle.get(name)
-        if sp is None or sp < 0 or ot is None or ot <= 0:
-            print(f"floor-recheck {name:28s} (no timing pair in artifacts)")
-            continue
-        cal_ratio = (sp / load) / ot
-        entry = bench["floors"].get(name, "")
-        m = BASELINE_RE.search(entry)
-        base = float(m.group(1)) if m else None
-        ml = LOADED_RE.search(entry)
-        loaded_band = float(ml.group(1)) if ml else None
-        if non32:
-            flag = f"  (cpus={cpus} window: 32-core baseline {base}x not adjudicated)"
-        elif base is None:
-            flag = "  <-- no [baseline Nx] token in this floors entry: record one"
-        elif cal_ratio > FLOOR_BASELINE_RATIO * base:
-            if load > LOADED_SEGMENT and loaded_band is not None \
-                    and cal_ratio <= loaded_band:
-                flag = (f"  (loaded window seg={load:.2f}: inside the recorded"
-                        f" [loaded {loaded_band}x] band; quiet baseline {base}x"
-                        f" adjudicates)")
-            elif load > LOADED_SEGMENT:
-                flag = (f"  <-- calibrated {cal_ratio:.1f}x past {FLOOR_BASELINE_RATIO}x"
-                        f" the {base}x baseline on a LOADED segment ({load:.2f});"
-                        f" re-run on a quiet host before re-justifying")
-            else:
-                flag = (f"  <-- calibrated {cal_ratio:.1f}x drifted past"
-                        f" {FLOOR_BASELINE_RATIO}x the"
-                        f" recorded {base}x baseline: re-justify or redesign")
-        else:
-            flag = f"  (baseline {base}x holds)"
-        print(f"floor-recheck {name:28s} spark={sp:6.2f}s  oracle={ot:6.2f}s  "
-              f"ratio={sp / ot:4.1f}x  calibrated={cal_ratio:4.1f}x{flag}")
+    for name, sp, ot in sorted(weak, key=lambda w: -w[1] / w[2]):
+        print(f"{name:30s} spark={sp:6.2f}s  oracle={ot:6.2f}s  ratio={sp / ot:4.1f}x")
+    steal = bench.get("steal_pct", bench.get("calib", {}).get("steal_pct"))
+    print(f"perf-weak: {len(weak)} raw (cpus={bench.get('cpus')}, steal_pct={steal}; "
+          f"streaming excluded: {len(STREAMING)})")
 
 
 if __name__ == "__main__":

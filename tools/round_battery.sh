@@ -12,8 +12,10 @@
 #      compare tool's "ALL MATCH" line over the whole declared catalog —
 #      no hardcoded count here; the catalog grows)
 #   3. tools/check_anchors.py (SURVEY file:line anchors)
-#   4. [unless --no-bench] full Bench at sf0.1 -> BENCH_DETAIL.json
-#   5. tools/perf_weak.py report (informational; read the count)
+#   4. [unless --no-bench] full Bench at sf0.1 -> BENCH_DETAIL.json;
+#      fails unless the result line reports failed == 0
+#   5. tools/perf_weak.py raw-ratio report (informational; read the
+#      "perf-weak: N raw" line)
 #
 # NOT automated here: ORACLE_TIMES.json regeneration (only when an
 # oracle changes — tools/time_oracle.py, quiet host, ~10 min) and the
@@ -40,12 +42,16 @@ python3 tools/check_anchors.py
 
 if [[ "${1:-}" != "--no-bench" ]]; then
   echo "=== 4/5 Bench @ sf0.1 (quiet host!) ==="
-  SPARK_GRAFT_SF_DIR="$SF01" sbt -batch "runMain graft.Bench" | grep -o '{"metric".*' | tail -1
+  line=$(SPARK_GRAFT_SF_DIR="$SF01" sbt -batch "runMain graft.Bench" | grep -o '{"metric".*' | tail -1)
+  echo "$line"
+  python3 -c 'import json, sys
+r = json.loads(sys.argv[1])
+sys.exit(0 if r["failed"] == 0 else "bench: %s queries failed" % r["failed"])' "$line"
 else
   echo "=== 4/5 bench SKIPPED (--no-bench) ==="
 fi
 
-echo "=== 5/5 perf-weak report ==="
+echo "=== 5/5 perf-weak raw report ==="
 python3 tools/perf_weak.py
 
 echo "ROUND BATTERY GREEN"
