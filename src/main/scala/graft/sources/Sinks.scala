@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 
 /** Parquet sink helpers (SURVEY S2/S18/S19) with the layouts that matter at
   * 100 TB:
@@ -12,10 +13,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *    the same key join WITHOUT a shuffle (SortMergeJoin with no Exchange),
   *    the co-located-join strategy for repeated large joins.
   *  - [[writeVectorTable]]: the FAISS/LanceDB-sink analog — (id, vector)
-  *    parquet ordered by id; exact search is a scan (W3/W4), ANN is the
-  *    LSH path (s02). Index params from the reference
-  *    (create_lancedb_index.py:138-148) become table properties in the
-  *    file layout (bucket count ≙ num_partitions).
+  *    parquet bucketed by id and sorted by id within each bucket; exact
+  *    search is a scan (W3/W4), ANN is the LSH path (s02). Index params
+  *    from the reference (create_lancedb_index.py:138-148) become table
+  *    properties in the file layout (bucket count ≙ num_partitions).
   */
 object Sinks {
 
@@ -39,18 +40,13 @@ object Sinks {
       if (warehouse.startsWith("file:")) new java.net.URI(warehouse).getPath
       else warehouse, name)
     if (dir.exists()) graft.core.Fs.rmTree(dir)
-    // Round-14 (build-ledger item): pre-shuffle the input to EXACTLY the
-    // bucket layout. repartition(n, col) and the bucket-id function are
-    // the same Murmur3-pmod hash, so each write task holds exactly one
-    // bucket and emits ONE file — without this, every input task writes
-    // a file per bucket it touches (32 round-robin tasks × 8 buckets =
-    // 256 files here) and the per-task (bucketId, sortCol) sort degrades
-    // to interleaved runs. The exchange is not extra work: "pay the
-    // shuffle once at write time" IS this shuffle. nBuckets stays the
-    // caller's scale knob (a cluster picks buckets ≫ cores; the fixture
-    // picks 8).
-    val aligned = df.repartition(nBuckets,
-      org.apache.spark.sql.functions.col(byCol))
+    // Each bucket lives in one task, written as one file sorted by sortCol:
+    // rows go to task (bucket id mod k), k = min(buckets, cores). This uses
+    // repartitionById, not repartition(k, col): the planner drops that as
+    // redundant over input already hashed k ways, scattering the buckets.
+    val bucketId = pmod(hash(col(byCol)), lit(nBuckets))
+    val aligned = df.repartitionById(
+      math.min(nBuckets, spark.sparkContext.defaultParallelism), bucketId)
     val w = aligned.write.mode(SaveMode.Overwrite).format("parquet")
       .bucketBy(nBuckets, byCol)
     sortCol.fold(w)(c => w.sortBy(c)).saveAsTable(name)

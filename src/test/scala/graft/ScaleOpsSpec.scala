@@ -219,6 +219,16 @@ class ScaleOpsSpec extends SparkSpec {
     val b = (1 to 1000).map(i => (i.toLong, s"b$i")).toDF("k", "vb")
     Sinks.writeBucketed(a, "graft_bucket_a", "k", 8, Some("k"))
     Sinks.writeBucketed(b, "graft_bucket_b", "k", 8, Some("k"))
+    // one file per bucket: 8 part files carrying the 8 bucket suffixes
+    for (t <- Seq("graft_bucket_a", "graft_bucket_b")) {
+      val files = spark.table(t).inputFiles.toSeq
+        .map(f => f.substring(f.lastIndexOf('/') + 1))
+      assert(files.size == 8 && files.forall(_.startsWith("part-")),
+        s"$t: expected 8 part files, got ${files.mkString(", ")}")
+      val suffixes = files.map(f => """_(\d{5})\.c\d{3}""".r.findFirstMatchIn(f).map(_.group(1)))
+      assert(suffixes.flatten.distinct.size == 8,
+        s"$t: expected 8 distinct bucket suffixes, got ${files.mkString(", ")}")
+    }
     val joined = spark.table("graft_bucket_a")
       .join(spark.table("graft_bucket_b"), "k")
       .withColumn("j", col("va") === col("vb"))

@@ -12,9 +12,12 @@
 #      compare tool's "ALL MATCH" line over the whole declared catalog —
 #      no hardcoded count here; the catalog grows)
 #   3. tools/check_anchors.py (SURVEY file:line anchors)
-#   4. [unless --no-bench] full Bench at sf0.1 -> BENCH_DETAIL.json;
+#   4. perfbench pipeline workload, seed 1: raw files through every stage
+#      to the bucketed vector table (Sinks.writeVectorTable) end to end;
+#      fails unless the result line has correct == true and failed == 0
+#   5. [unless --no-bench] full Bench at sf0.1 -> BENCH_DETAIL.json;
 #      fails unless the result line reports failed == 0
-#   5. tools/perf_weak.py raw-ratio report (informational; read the
+#   6. tools/perf_weak.py raw-ratio report (informational; read the
 #      "perf-weak: N raw" line)
 #
 # NOT automated here: ORACLE_TIMES.json regeneration (only when an
@@ -27,31 +30,39 @@ SF001=${SF001:-/root/testdata/sf0.01}
 SF01=${SF01:-/root/testdata/sf0.1}
 OUT=${OUT:-/tmp/round_battery_verify}
 
-echo "=== 1/5 compile + full test suite ==="
+echo "=== 1/6 compile + full test suite ==="
 sbt -batch "compile; test"
 
 for SF in "$SF001" "$SF01"; do
-  echo "=== 2/5 Verify @ $(basename "$SF") + DuckDB compare ==="
+  echo "=== 2/6 Verify @ $(basename "$SF") + DuckDB compare ==="
   rm -rf "$OUT"
   sbt -batch "runMain graft.Verify $SF $OUT"
   python3 tools/compare.py "$SF" "$OUT"
 done
 
-echo "=== 3/5 SURVEY anchors ==="
+echo "=== 3/6 SURVEY anchors ==="
 python3 tools/check_anchors.py
 
+echo "=== 4/6 perfbench pipeline (vector table end to end) ==="
+line=$(python3 perfbench/run.py --workload pipeline --seed 1 --seconds 10 --trace 0 | tail -1)
+echo "$line"
+python3 -c 'import json, sys
+r = json.loads(sys.argv[1])
+ok = r["correct"] is True and r["failed"] == 0
+sys.exit(0 if ok else "pipeline: correct=%s failed=%s" % (r["correct"], r["failed"]))' "$line"
+
 if [[ "${1:-}" != "--no-bench" ]]; then
-  echo "=== 4/5 Bench @ sf0.1 (quiet host!) ==="
+  echo "=== 5/6 Bench @ sf0.1 (quiet host!) ==="
   line=$(SPARK_GRAFT_SF_DIR="$SF01" sbt -batch "runMain graft.Bench" | grep -o '{"metric".*' | tail -1)
   echo "$line"
   python3 -c 'import json, sys
 r = json.loads(sys.argv[1])
 sys.exit(0 if r["failed"] == 0 else "bench: %s queries failed" % r["failed"])' "$line"
 else
-  echo "=== 4/5 bench SKIPPED (--no-bench) ==="
+  echo "=== 5/6 bench SKIPPED (--no-bench) ==="
 fi
 
-echo "=== 5/5 perf-weak raw report ==="
+echo "=== 6/6 perf-weak raw report ==="
 python3 tools/perf_weak.py
 
 echo "ROUND BATTERY GREEN"
