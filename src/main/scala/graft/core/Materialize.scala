@@ -47,18 +47,13 @@ object Materialize {
     * thread-local conf nor a toggle on the shared session can switch AQE
     * off for one query only (a toggle also switches it off for every
     * query planning on another thread meanwhile). The frame is therefore
-    * planned in a sibling session — same SparkContext, shared state and
-    * extensions — carrying a copy of the caller's SQL conf plus the
+    * planned in a [[GraftSession.sibling]] session carrying the
     * overrides. The shared session's conf is never written. */
   def staticCheckpoint(df: DataFrame, eager: Boolean,
       overrides: (String, String)*): DataFrame = {
     val spark = castToImpl(df.sparkSession)
-    val sibling = spark.newSession()
-    val conf = sibling.sessionState.conf
-    spark.sessionState.conf.getAllConfs.foreach { case (k, v) => conf.setConfString(k, v) }
-    (("spark.sql.adaptive.enabled" -> "false") +: overrides).foreach {
-      case (k, v) => conf.setConfString(k, v)
-    }
+    val sibling = GraftSession.sibling(spark,
+      ("spark.sql.adaptive.enabled" -> "false") +: overrides: _*)
     val ck = new Dataset[Row](sibling, df.queryExecution.analyzed, df.encoder)
       .localCheckpoint(eager)
     new Dataset[Row](spark, ck.queryExecution.analyzed, ck.encoder)

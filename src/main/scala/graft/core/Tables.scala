@@ -93,6 +93,24 @@ object Tables {
   * session setting.
   */
 object GraftSession {
+  /** A session that plans with `spark`'s SQL conf plus `overrides`,
+    * without writing `spark`'s conf: `newSession()` (same SparkContext,
+    * shared state and extensions) carrying a copy of the caller's runtime
+    * SQL conf with the overrides applied on top. Bench's concurrent pass
+    * runs every query on one shared session, so a set/restore on it would
+    * leak into queries planning on other threads meanwhile, and two
+    * overlapping callers could race the restore. */
+  def sibling(spark: SparkSession,
+      overrides: (String, String)*): org.apache.spark.sql.classic.SparkSession = {
+    val caller = org.apache.spark.sql.classic.ClassicConversions.castToImpl(spark)
+    val sib = caller.newSession()
+    val conf = sib.sessionState.conf
+    (caller.sessionState.conf.getAllConfs ++ overrides).foreach {
+      case (k, v) => conf.setConfString(k, v)
+    }
+    sib
+  }
+
   def builder(appName: String = "graft",
       cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt): SparkSession.Builder =
     SparkSession.builder()

@@ -130,9 +130,9 @@ object Dedupe {
     * shingles (the dominant md5/lane work also shrinks with the dedup). */
   def minhashSignaturesFromShingles(shingled: DataFrame, id: Column,
       gs: Column, k: Int = 16): DataFrame = {
-    val key = Seq(shingled.sparkSession.sparkContext.applicationId,
+    val key = (shingled.sparkSession.sparkContext.applicationId,
       shingled.queryExecution.analyzed.semanticHash(),
-      id.toString, gs.toString, k).mkString("#")
+      id.toString, gs.toString, k)
     graft.core.ArtifactRegistry.cached(key, "minhash_sig") {
       val fam = hashFamily(k)
       val exploded = shingled

@@ -342,9 +342,9 @@ object Similarity {
     * buckets(tbl, bucket, id)). */
   def graphAnnIndex(corpus: DataFrame, id: Column, vec: Column,
       dim: Int, nPlanes: Int, nTables: Int, m: Int): (DataFrame, DataFrame) = {
-    val key = Seq(corpus.sparkSession.sparkContext.applicationId,
+    val key = (corpus.sparkSession.sparkContext.applicationId,
       corpus.queryExecution.analyzed.semanticHash(),
-      id.toString, vec.toString, dim, nPlanes, nTables, m).mkString("#")
+      id.toString, vec.toString, dim, nPlanes, nTables, m)
     graft.core.ArtifactRegistry.cached(key, "graph_ann_index")(
       buildGraphAnnIndex(corpus, id, vec, dim, nPlanes, nTables, m))
   }
@@ -534,11 +534,11 @@ object Similarity {
     * of each re-running the subspace argmin per query. */
   def pqDecodedCorpus(corpus: DataFrame, id: Column, vec: Column,
       codebook: DataFrame, m: Int): DataFrame = {
-    val key = Seq(
+    val key = (
       corpus.sparkSession.sparkContext.applicationId,
       corpus.queryExecution.analyzed.semanticHash(),
       codebook.queryExecution.analyzed.semanticHash(),
-      id.toString, vec.toString, m).mkString("#")
+      id.toString, vec.toString, m)
     graft.core.ArtifactRegistry.cached(key, "pq_codes") {
       val base = corpus.select(id.as("id"), vec.as("v"))
       val cb = codebook

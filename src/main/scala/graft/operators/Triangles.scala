@@ -64,9 +64,8 @@ object Triangles {
     * note below), which no edge-frame re-sourcing touches. */
   private def coreShared(edges: DataFrame,
       assumeNormalized: Boolean): (DataFrame, DataFrame) = {
-    val key = Seq(edges.sparkSession.sparkContext.applicationId,
+    val key = (edges.sparkSession.sparkContext.applicationId,
       edges.queryExecution.analyzed.semanticHash(), assumeNormalized)
-      .mkString("#")
     graft.core.ArtifactRegistry.cached(key, "triangle_core") {
       val (_, deg, closers) = core(edges, assumeNormalized)
       (graft.core.Materialize.checkpointRetainingPartitioning(deg),

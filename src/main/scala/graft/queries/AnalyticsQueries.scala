@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.core.Tables._
+import Shared.dec
 import graft.operators.{Multimodal, RangeJoin}
 
 /** Round-4 analytics surface: grouping-sets/cube profiling, interval join,
@@ -14,8 +15,6 @@ import graft.operators.{Multimodal, RangeJoin}
   */
 object AnalyticsQueries {
   type Q = (SparkSession, String) => DataFrame
-
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(9, 2))
 
   /** Q27 — CUBE + grouping_id: all four grouping sets of
     * (returnflag, linestatus) in one pass (SURVEY A9 completed beyond

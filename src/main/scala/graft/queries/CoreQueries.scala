@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.core.Tables._
+import Shared.dec
 import graft.functions.TextFunctions
 
 /** SURVEY §2.9 declared queries Q1–Q12 and Q16–Q20: the relational core.
@@ -95,11 +96,8 @@ object CoreQueries {
       .orderBy(col("key"))
   }
 
-  /** TPC-H money/quantity values fit decimal(9,2) and rates decimal(3,2);
-    * narrow precisions keep Spark's Long-backed Decimal fast path (products
-    * stay <= precision 18 — no BigDecimal per row; measured 2x on q11) while
-    * decimal addition stays exact and associative for oracle parity. */
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(9, 2))
+  /** Rates fit decimal(3,2) — the narrow-precision argument of
+    * [[Shared.dec]]. */
   private def rate(c: org.apache.spark.sql.Column) = c.cast(DecimalType(3, 2))
 
   /** Q6 — multi-way equi-join revenue rollup by nation (SURVEY J4).

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables._
+import Shared.cosSql
 import graft.operators.Dedupe
 import graft.functions.VectorFunctions.cosineSimilarity
 
@@ -652,10 +653,6 @@ object CurationQueries {
   private val wordsSql =
     """list_filter(regexp_split_to_array(trim(lower(text)), '\s+'), w -> length(w) > 0)"""
 
-  private def normSql(v: String) =
-    s"sqrt(list_reduce(list_transform($v, e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE)), (x, y) -> x + y))"
-  private def cosSql(a: String, b: String) =
-    s"(list_reduce(list_transform(list_zip($a, $b), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (x, y) -> x + y) / (${normSql(a)} * ${normSql(b)}))"
 
   val oracle: Map[String, String] = Map(
     "m13_silence_vad" ->

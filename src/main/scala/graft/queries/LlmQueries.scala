@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables._
+import Shared.{cachedFrame, normSql, cosSql}
 import graft.operators.{ConnectedComponents, Dedupe, GlobalRank, Multimodal, Similarity, TextAnalysis}
 
 /** Training-data-pipeline operators beyond the reference's own surface
@@ -53,11 +54,6 @@ object LlmQueries {
     * kmFit/doubledEdgesFused lifecycle. d25 deliberately does NOT share
     * it: its point is that a different algorithm (prefix filtering)
     * reaches the identical pair set. */
-  private def cachedFrame(s: SparkSession, d: String, tag: String)(
-      build: => DataFrame): DataFrame =
-    graft.core.ArtifactRegistry.cached(
-      (s.sparkContext.applicationId, d), tag)(build)
-
   private[queries] def jaccardPairs08(s: SparkSession, d: String): DataFrame =
     cachedFrame(s, d, "jp08") {
       graft.core.Materialize.checkpointRetainingPartitioning(
@@ -1217,10 +1213,6 @@ object LlmQueries {
 
   private val dotVV =
     "list_reduce(list_transform(list_zip(a.v, b.v), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (x, y) -> x + y)"
-  private def normSql(v: String) =
-    s"sqrt(list_reduce(list_transform($v, e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE)), (x, y) -> x + y))"
-  private def cosSql(a: String, b: String) =
-    s"(list_reduce(list_transform(list_zip($a, $b), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (x, y) -> x + y) / (${normSql(a)} * ${normSql(b)}))"
 
   /** DuckDB sign-LSH bucket over SQL vector expr `v`: the same seeded
     * hyperplanes as Similarity.lshBucket, embedded as double literals, with

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.core.Tables._
+import Shared.{cachedFrame, cosSql}
 import graft.operators.{Dedupe, GlobalRank, Hierarchy, RangeJoin, Sampling, ShortestPaths, Similarity, Triangles}
 
 /** Round-6 mining surface: event-funnel analysis, exact global deciles via
@@ -513,46 +514,6 @@ object MiningQueries {
   def g05Kcore(s: SparkSession, d: String): DataFrame =
     g05KcoreStatic(s, d)
 
-  /** The g01–g07 input graph — ONE definition so the queries can never
-    * silently analyze different graphs: parts are linked when they
-    * appear in the same order.
-    *
-    * INVARIANT (load-bearing downstream): vertex ids are part keys and
-    * therefore NON-NEGATIVE. The argmax in lpaAssign encodes
-    * "(count DESC, label ASC)" as `max(struct(c, -label))`, which
-    * silently flips the tie-break for negative labels (and overflows at
-    * Long.MinValue). The invariant is
-    * asserted in OpsQueriesSpec ("co-purchase vertex ids are non-negative")
-    * — any future graph source with signed ids must fix the argmax
-    * encoding, not just the source.
-    *
-    * Shape note (measured, kept as the record of a rejected rewrite): a
-    * basket-explode variant — groupBy(order) → sort_array(collect_set) →
-    * per-array pair generation — produces the identical edge set with one
-    * fewer exchange and won in isolation (1.4 s vs 2.0 s at sf0.1), but
-    * LOST end-to-end across g01–g07 (+5 s family-wide, two A/B runs):
-    * AQE coalesces the small basket aggregate to ~1 partition, so the
-    * combination explode and the dedupe's map side run single-threaded,
-    * and the union-of-both-directions consumers get no exchange reuse
-    * across children for the generator shape. The self-join keeps the
-    * pair generation spread across the join's full partition set. At
-    * 100 TB the basket aggregate would NOT coalesce (output is
-    * data-sized) and the explode variant becomes the right shape — this
-    * is a bench-scale physical choice, not a semantic one. */
-  /** Round-12 (the r11 verdict's graph-floor item): the co-purchase graph
-    * is ONE persisted artifact shared by the whole g-family — the scaladoc
-    * below already says "ONE definition so the queries can never silently
-    * analyze different graphs"; this makes the MATERIALIZATION one too.
-    * Memoized per (SparkContext application, sf dir, shape tag), exactly
-    * the kmFit/s03-index lifecycle: a production graph job materializes
-    * the edge table once (the reference's own Dagster design persists
-    * every asset) and each analysis query reads it, instead of each query
-    * re-running the fact-table self-join + distinct. */
-  private def cachedFrame(s: SparkSession, d: String, tag: String)(
-      build: => DataFrame): DataFrame =
-    graft.core.ArtifactRegistry.cached(
-      (s.sparkContext.applicationId, d), tag)(build)
-
   /** The per-document DISTINCT word-trigram shingle table (doc_id,
     * gs array<string>) — the ONE tokenization the dedupe/decontamination
     * family reads (d16's posture), memoized per (application, sf dir)
@@ -586,6 +547,41 @@ object MiningQueries {
     graft.operators.Dedupe.minhashSignaturesFromShingles(
       docShingles(s, d), col("doc_id"), col("gs"))
 
+  /** The g01–g07 input graph — ONE definition so the queries can never
+    * silently analyze different graphs: parts are linked when they
+    * appear in the same order.
+    *
+    * INVARIANT (load-bearing downstream): vertex ids are part keys and
+    * therefore NON-NEGATIVE. The argmax in lpaAssign encodes
+    * "(count DESC, label ASC)" as `max(struct(c, -label))`, which
+    * silently flips the tie-break for negative labels (and overflows at
+    * Long.MinValue). The invariant is
+    * asserted in OpsQueriesSpec ("co-purchase vertex ids are non-negative")
+    * — any future graph source with signed ids must fix the argmax
+    * encoding, not just the source.
+    *
+    * Shape note (measured, kept as the record of a rejected rewrite): a
+    * basket-explode variant — groupBy(order) → sort_array(collect_set) →
+    * per-array pair generation — produces the identical edge set with one
+    * fewer exchange and won in isolation (1.4 s vs 2.0 s at sf0.1), but
+    * LOST end-to-end across g01–g07 (+5 s family-wide, two A/B runs):
+    * AQE coalesces the small basket aggregate to ~1 partition, so the
+    * combination explode and the dedupe's map side run single-threaded,
+    * and the union-of-both-directions consumers get no exchange reuse
+    * across children for the generator shape. The self-join keeps the
+    * pair generation spread across the join's full partition set. At
+    * 100 TB the basket aggregate would NOT coalesce (output is
+    * data-sized) and the explode variant becomes the right shape — this
+    * is a bench-scale physical choice, not a semantic one. */
+  /** Round-12 (the r11 verdict's graph-floor item): the co-purchase graph
+    * is ONE persisted artifact shared by the whole g-family — the scaladoc
+    * above already says "ONE definition so the queries can never silently
+    * analyze different graphs"; this makes the MATERIALIZATION one too.
+    * Memoized per (SparkContext application, sf dir, shape tag), exactly
+    * the kmFit/s03-index lifecycle: a production graph job materializes
+    * the edge table once (the reference's own Dagster design persists
+    * every asset) and each analysis query reads it, instead of each query
+    * re-running the fact-table self-join + distinct. */
   private[queries] def coPurchaseEdges(s: SparkSession, d: String): DataFrame =
     cachedFrame(s, d, "und") {
       graft.core.Materialize.checkpointRetainingPartitioning(
@@ -1135,13 +1131,6 @@ object MiningQueries {
     "d08_semdedup" -> d08SemDedup)
 
   // ----------------------------------------------------------- oracle SQL
-
-  /** Same double-fold macros as the d04/s0x oracles: element-order dot and
-    * norms so DuckDB adds the exact doubles Spark's codegen kernel adds. */
-  private def normSql(v: String) =
-    s"sqrt(list_reduce(list_transform($v, e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE)), (x, y) -> x + y))"
-  private def cosSql(a: String, b: String) =
-    s"(list_reduce(list_transform(list_zip($a, $b), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (x, y) -> x + y) / (${normSql(a)} * ${normSql(b)}))"
 
   /** d09 oracle: the same 16-lane (a,b) hash family as
     * `Dedupe.hashFamily(16)` (shared seed), banded candidates WITHOUT the

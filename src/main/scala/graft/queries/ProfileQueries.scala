@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables._
+import Shared.normSql
 import graft.operators.Dedupe
 import graft.functions.VectorFunctions.cosineSimilarity
 
@@ -823,8 +824,6 @@ object ProfileQueries {
   // ----------------------------------------------------------- oracle SQL
 
   private val wordsSql = """regexp_split_to_array(trim(lower(text)), '\s+')"""
-  private val normSql = (v: String) =>
-    s"sqrt(list_reduce(list_transform($v, e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE)), (x, y) -> x + y))"
 
   val oracle: Map[String, String] = Map(
     "m18_audio_fingerprint" ->

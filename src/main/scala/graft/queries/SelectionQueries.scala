@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables._
+import Shared.cosSql
 import graft.operators.{Dedupe, GlobalRank}
 import graft.plans.SampledGramHashes
 import graft.plans.VectorExpressions.dotProduct
@@ -1064,10 +1065,6 @@ object SelectionQueries {
          ELSE 'http://' || source || '.example.com:80/doc/' || CAST(doc_id // 7 AS VARCHAR) || '?utm_medium=rss&id=' || CAST(doc_id % 3 AS VARCHAR)
        END"""
 
-  private def normSql(v: String) =
-    s"sqrt(list_reduce(list_transform($v, e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE)), (x, y) -> x + y))"
-  private def cosSql(a: String, b: String) =
-    s"(list_reduce(list_transform(list_zip($a, $b), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (x, y) -> x + y) / (${normSql(a)} * ${normSql(b)}))"
 
   /** The s19 candidate gate's per-table sign bucket in DuckDB SQL — the
     * SAME seeded plane family as s02 (dim 64, 3 planes/table, seeds 42+t,

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables._
+import Shared.cachedFrame
 import graft.operators.Dedupe
 
 /** Round-7 sketch surface: streaming-friendly approximate aggregates with
@@ -460,11 +461,6 @@ object SketchQueries {
     * sf dir), the kmFit lifecycle; duplicates within a month change
     * neither a max-rho register nor a min-month, so the dedupe is free
     * semantics and md5 runs once per distinct pair. */
-  private def cachedFrame(s: SparkSession, d: String, tag: String)(
-      build: => DataFrame): DataFrame =
-    graft.core.ArtifactRegistry.cached(
-      (s.sparkContext.applicationId, d), tag)(build)
-
   private def monthKeyBase(s: SparkSession, d: String): DataFrame =
     cachedFrame(s, d, "mkbase") {
       graft.core.Materialize.dedupedPartitionedCheckpoint(

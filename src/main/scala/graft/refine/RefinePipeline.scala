@@ -39,13 +39,19 @@ object RefinePipeline {
 
   /** Stage 2 — format gate + record enrichment (SURVEY P2, A6, A7, F3, F14). */
   def enrich(df: DataFrame, text: Column, lang: Column, license: Column): DataFrame =
+    gateAndIdentify(df, text)
+      .withColumn("license", TextFunctions.licenseNormalize(license))
+      .withColumn("lang_final",
+        coalesce(when(length(lang) === 0, lit(null)).otherwise(lang), lit("en")))
+
+  /** The length gate plus the identifier, word_count and token_count
+    * columns — the stateless part of [[enrich]] that the file stream
+    * ([[graft.streaming.FileStreamRefine.run]]) applies too. */
+  def gateAndIdentify(df: DataFrame, text: Column): DataFrame =
     df.filter(length(text) >= MinTextLength)
       .withColumn("identifier", sha2(text, 256))
       .withColumn("word_count", TextFunctions.wordCount(text))
       .withColumn("token_count", TextAnalysis.tokenCount(text))
-      .withColumn("license", TextFunctions.licenseNormalize(license))
-      .withColumn("lang_final",
-        coalesce(when(length(lang) === 0, lit(null)).otherwise(lang), lit("en")))
 
   /** Stage 4 — prediction merge-back (SURVEY J1): left join on the key,
     * coalesce predictions with existing tags. `preds(key, pred)` is expected

@@ -1,11 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
-import graft.functions.TextFunctions
-import graft.operators.TextAnalysis
 
 /** Structured-Streaming incrementality (SURVEY §7.5).
   *
@@ -23,24 +21,18 @@ import graft.operators.TextAnalysis
   */
 object FileStreamRefine {
 
-  /** The refine enrichment as a stateless streaming transform. */
-  def enrich(df: DataFrame): DataFrame =
-    df.filter(length(col("text")) >= 200)
-      .withColumn("identifier", sha2(col("text"), 256))
-      .withColumn("word_count", TextFunctions.wordCount(col("text")))
-      .withColumn("token_count", TextAnalysis.tokenCount(col("text")))
-
   /** Start an AvailableNow run: landing dir → enriched parquet sink.
     * Returns the query; callers `awaitTermination()` — the trigger stops it
     * after draining the backlog. Re-invoking resumes from the checkpoint and
     * processes only new files (the skip-if-exists semantics). */
   def run(spark: SparkSession, landingDir: String, schema: StructType,
       outDir: String, checkpointDir: String): StreamingQuery =
-    enrich(
+    graft.refine.RefinePipeline.gateAndIdentify(
       spark.readStream
         .schema(schema)
         .option("maxFilesPerTrigger", 1000) // reference BATCH_SIZE analog
-        .parquet(landingDir))
+        .parquet(landingDir),
+      col("text"))
       .writeStream
       .format("parquet")
       .option("path", outDir)

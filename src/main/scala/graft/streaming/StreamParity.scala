@@ -3,10 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import java.nio.file.Files
 
 /** Batch-parity streaming run helpers — see object doc below. */
-private[streaming] object TempDirs {
+private[graft] object TempDirs {
   /** Defer recursive deletion to JVM exit. The returned DataFrames are
     * `localCheckpoint(eager)`-materialized, but localCheckpoint blocks live
     * in NON-reliable block-manager storage: if one were evicted under
@@ -35,14 +34,13 @@ private[streaming] object TempDirs {
     * planning + 32 state tasks × 2 batches × N stateful ops + query
     * start/stop), not checkpoint I/O. Kept for principle (and for hosts
     * where /tmp is slow), with the floor attribution corrected. */
-  private val tmpfsRoot = {
+  val root: java.nio.file.Path = {
     val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) Some(shm.toPath) else None
+    if (shm.isDirectory && shm.canWrite) shm.toPath
+    else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
   }
-  def scratchDir(prefix: String): java.nio.file.Path = tmpfsRoot match {
-    case Some(root) => java.nio.file.Files.createTempDirectory(root, prefix)
-    case None => java.nio.file.Files.createTempDirectory(prefix)
-  }
+  def scratchDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(root, prefix)
 }
 
 /** Batch-parity streaming run: one `Trigger.AvailableNow` pass of the
@@ -66,48 +64,80 @@ private[streaming] object TempDirs {
   */
 object StreamParity {
 
-  /** Run `body` on an ISOLATED child session (`spark.newSession()` — own
-    * SQLConf, shared SparkContext/catalog/codegen caches) carrying the
-    * run-to-completion streaming conf: these parity queries start, drain
-    * one AvailableNow pass and stop, so checkpoint RETENTION work is pure
-    * overhead — keep one batch of metadata (minBatchesToRetain=1) and
+  /** The run-to-completion streaming conf: these parity queries start,
+    * drain one AvailableNow pass and stop, so checkpoint RETENTION work is
+    * pure overhead — keep one batch of metadata (minBatchesToRetain=1) and
     * push the state-store maintenance thread past the query's lifetime.
     * MEASURED at sf0.1: −0.2–0.3 s on the windowed-agg/session queries,
     * nothing on the stream-stream join (its floor is 2-sides × N state
     * tasks × 2 batches of microbatch orchestration, not retention I/O —
-    * see TempDirs doc).
-    *
-    * Why a child session and not a set/restore on the caller's (round 14,
-    * ADVICE): Bench's concurrent pass runs every query on one shared
-    * session, so a session-wide shuffle-partitions override (a) leaked
-    * into BATCH queries planned while a parity query was in flight, and
-    * (b) two overlapping parity queries raced the capture/restore and
-    * could leave the shared session stuck at 4 partitions — an
-    * interleaving-dependent wall in a repo whose committed artifact is
-    * the ratio. The child session's conf is invisible to every other
-    * query, needs no restore, and inherits all builder-time config
-    * (SparkConf) including the parquet nanos flag. */
-  private def withRunToCompletionConf[T](spark: SparkSession)(body: SparkSession => T): T = {
-    val tuned = Seq(
-      "spark.sql.streaming.minBatchesToRetain" -> "1",
-      "spark.sql.streaming.stateStore.maintenanceInterval" -> "600s",
-      // State-store parallelism = shuffle partitions, FIXED at checkpoint
-      // creation: every stateful operator opens/commits one store per
-      // partition per micro-batch, so 32 partitions × 2 batches × N ops
-      // is the orchestration floor the TempDirs doc attributes. Stateful
-      // jobs size this to STATE VOLUME, not core count (the standard
-      // Structured Streaming sizing rule — the setting is per-checkpoint
-      // forever, so production picks it deliberately); these parity
-      // queries hold thousands of keys, where 4 stores per op is plenty.
-      // MEASURED at sf0.1 (BenchOne min-of-2): 32 -> 4 cut q52 6.3->2.5 s
-      // (two sources x two stateful sides), q26 2.9->2.0, q36 2.9->2.2,
-      // q42 3.0->2.2, q34 1.7->1.2; 2 partitions measured WORSE on q52
-      // (3.0 — too little batch parallelism), so 4 is the measured knee.
-      "spark.sql.shuffle.partitions" -> "4")
-    val sess = spark.newSession()
-    tuned.foreach { case (k, v) => sess.conf.set(k, v) }
-    body(sess)
+    * see TempDirs doc). Applied on a [[graft.core.GraftSession.sibling]]
+    * session, never on the caller's: a session-wide shuffle-partitions
+    * override would leak into batch queries planned concurrently on the
+    * shared session. */
+  private val RunToCompletion = Seq(
+    "spark.sql.streaming.minBatchesToRetain" -> "1",
+    "spark.sql.streaming.stateStore.maintenanceInterval" -> "600s",
+    // State-store parallelism = shuffle partitions, FIXED at checkpoint
+    // creation: every stateful operator opens/commits one store per
+    // partition per micro-batch, so 32 partitions × 2 batches × N ops
+    // is the orchestration floor the TempDirs doc attributes. Stateful
+    // jobs size this to STATE VOLUME, not core count (the standard
+    // Structured Streaming sizing rule — the setting is per-checkpoint
+    // forever, so production picks it deliberately); these parity
+    // queries hold thousands of keys, where 4 stores per op is plenty.
+    // MEASURED at sf0.1 (BenchOne min-of-2): 32 -> 4 cut q52 6.3->2.5 s
+    // (two sources x two stateful sides), q26 2.9->2.0, q36 2.9->2.2,
+    // q42 3.0->2.2, q34 1.7->1.2; 2 partitions measured WORSE on q52
+    // (3.0 — too little batch parallelism), so 4 is the measured knee.
+    "spark.sql.shuffle.partitions" -> "4")
+
+  /** Run `body` on a run-to-completion sibling session with a fresh
+    * scratch dir; afterwards the streaming checkpoint under `ckpt` is
+    * dropped (state store — dead after the run) and the rest of the dir
+    * is kept until JVM exit (TempDirs: it backs the returned frame). */
+  private def runToCompletion[T](spark: SparkSession)(
+      body: (SparkSession, java.nio.file.Path) => T): T = {
+    val sess = graft.core.GraftSession.sibling(spark, RunToCompletion: _*)
+    val tmp = TempDirs.scratchDir("graft-streamparity")
+    try body(sess, tmp)
+    finally {
+      TempDirs.dropNow(tmp.resolve("ckpt").toFile)
+      TempDirs.deleteOnExit(tmp.toFile)
+    }
   }
+
+  /** Drain the stream `query` builds over the parquet at `path` with one
+    * AvailableNow pass into an append-mode parquet sink, and return the
+    * emitted rows as an eagerly checkpointed batch frame. `query` gets the
+    * run session and a source factory (q52 opens two streams). */
+  private def drain(spark: SparkSession, path: String)(
+      query: (SparkSession, () => DataFrame) => DataFrame): DataFrame =
+    runToCompletion(spark) { (sess, tmp) =>
+      val out = tmp.resolve("out").toString
+      val schema = sess.read.parquet(path).schema
+      // the file source requires a directory (a bare file path throws
+      // "basePath must be a directory"): stream the parent dir with a
+      // pathGlobFilter on the EXACT filename, so unintended siblings
+      // (events.parquet.bak, ...) can never leak into the batch
+      val f = new java.io.File(path)
+      val source = () => {
+        val reader = sess.readStream.schema(schema)
+        if (f.isFile) reader.option("pathGlobFilter", f.getName).parquet(f.getParent)
+        else reader.parquet(path)
+      }
+      query(sess, source)
+        .writeStream
+        .outputMode("append") // FINAL rows only — aggregations need a watermark
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", tmp.resolve("ckpt").toString)
+        .format("parquet")
+        .start(out)
+        .awaitTermination()
+      // eager localCheckpoint materializes the result; the backing dir is
+      // kept until JVM exit (TempDirs) so evicted blocks can recompute
+      sess.read.parquet(out).localCheckpoint(true)
+    }
 
   /** Hour-windowed per-type counts + min/max over `eventsPath`, 30-minute
     * watermark, only FINAL windows. `ts` is normalized to BIGINT nanos at
@@ -116,43 +146,15 @@ object StreamParity {
     * Spark and oracle sides agree bit-for-bit (see q23). */
   def finalWindowCounts(spark: SparkSession, eventsPath: String,
       windowDur: String = "1 hour",
-      lateness: String = "30 minutes"): DataFrame = withRunToCompletionConf(spark) { spark =>
-    val tmp = TempDirs.scratchDir("graft-streamparity")
-    val out = tmp.resolve("out").toString
-    val ckpt = tmp.resolve("ckpt").toString
-    try {
-      val schema = spark.read.parquet(eventsPath).schema
-      // the file source requires a directory (a bare file path throws
-      // "basePath must be a directory"): stream the parent dir with a
-      // pathGlobFilter on the EXACT filename, so unintended siblings
-      // (events.parquet.bak, ...) can never leak into the batch
-      val f = new java.io.File(eventsPath)
-      val reader = spark.readStream.schema(schema)
-      val source =
-        if (f.isFile) reader.option("pathGlobFilter", f.getName).parquet(f.getParent)
-        else reader.parquet(eventsPath)
-      graft.core.Tables.tsNanos(source)
-        .withColumn("event_time", timestamp_micros(expr("ts DIV 1000")))
-        .withWatermark("event_time", lateness)
-        .groupBy(window(col("event_time"), windowDur), col("event_type"))
-        .agg(count(lit(1)).as("cnt"),
-          min(col("value")).as("min_value"), max(col("value")).as("max_value"))
-        .select(unix_micros(col("window.start")).as("window_start_us"),
-          col("event_type"), col("cnt"), col("min_value"), col("max_value"))
-        .writeStream
-        .outputMode("append") // FINAL windows only — requires the watermark
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .format("parquet")
-        .start(out)
-        .awaitTermination()
-      // eager localCheckpoint materializes the result; the backing dir is
-      // kept until JVM exit (TempDirs) so evicted blocks can recompute
-      spark.read.parquet(out).localCheckpoint(true)
-    } finally {
-      TempDirs.dropNow(new java.io.File(ckpt)) // state store — dead after the run
-      TempDirs.deleteOnExit(tmp.toFile)
-    }
+      lateness: String = "30 minutes"): DataFrame = drain(spark, eventsPath) { (_, source) =>
+    graft.core.Tables.tsNanos(source())
+      .withColumn("event_time", timestamp_micros(expr("ts DIV 1000")))
+      .withWatermark("event_time", lateness)
+      .groupBy(window(col("event_time"), windowDur), col("event_type"))
+      .agg(count(lit(1)).as("cnt"),
+        min(col("value")).as("min_value"), max(col("value")).as("max_value"))
+      .select(unix_micros(col("window.start")).as("window_start_us"),
+        col("event_type"), col("cnt"), col("min_value"), col("max_value"))
   }
 
   /** Native session windows streamed to completion: `session_window`
@@ -168,42 +170,20 @@ object StreamParity {
     * 1000` — the oracle must truncate the same way or boundary sessions
     * flip. Sessions still open at the final watermark stay in (discarded)
     * state, exactly as a live pipeline would hold them. */
-  def finalSessions(spark: SparkSession, eventsPath: String): DataFrame = withRunToCompletionConf(spark) { spark =>
+  def finalSessions(spark: SparkSession, eventsPath: String): DataFrame = drain(spark, eventsPath) { (_, source) =>
     val gap = "30 minutes"; val lateness = "30 minutes" // fixed: the
     // duration projection below subtracts the gap as a literal
-    val tmp = TempDirs.scratchDir("graft-streamsessions")
-    val out = tmp.resolve("out").toString
-    val ckpt = tmp.resolve("ckpt").toString
-    try {
-      val schema = spark.read.parquet(eventsPath).schema
-      val f = new java.io.File(eventsPath)
-      val reader = spark.readStream.schema(schema)
-      val source =
-        if (f.isFile) reader.option("pathGlobFilter", f.getName).parquet(f.getParent)
-        else reader.parquet(eventsPath)
-      graft.core.Tables.tsNanos(source)
-        .withColumn("event_time", timestamp_micros(expr("ts DIV 1000")))
-        .withWatermark("event_time", lateness)
-        .groupBy(col("user_id"), session_window(col("event_time"), gap))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"),
-          unix_micros(col("session_window.start")).as("session_start_us"),
-          (unix_micros(col("session_window.end")) -
-            unix_micros(col("session_window.start")) -
-            lit(30L * 60 * 1000 * 1000)).as("duration_us"),
-          col("n_events"))
-        .writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .format("parquet")
-        .start(out)
-        .awaitTermination()
-      spark.read.parquet(out).localCheckpoint(true)
-    } finally {
-      TempDirs.dropNow(new java.io.File(ckpt)) // state store — dead after the run
-      TempDirs.deleteOnExit(tmp.toFile)
-    }
+    graft.core.Tables.tsNanos(source())
+      .withColumn("event_time", timestamp_micros(expr("ts DIV 1000")))
+      .withWatermark("event_time", lateness)
+      .groupBy(col("user_id"), session_window(col("event_time"), gap))
+      .agg(count(lit(1)).as("n_events"))
+      .select(col("user_id"),
+        unix_micros(col("session_window.start")).as("session_start_us"),
+        (unix_micros(col("session_window.end")) -
+          unix_micros(col("session_window.start")) -
+          lit(30L * 60 * 1000 * 1000)).as("duration_us"),
+        col("n_events"))
   }
 
   /** Stream-STATIC join parity: the streaming event source equi-joined to
@@ -220,40 +200,18 @@ object StreamParity {
     * Scale: stream-static joins are how a 100 TB/day event stream enriches
     * against slowly-changing dimensions without stream-stream state; the
     * dim side broadcasts when small and the stream never buffers. */
-  def staticJoinWindowCounts(spark: SparkSession, eventsPath: String): DataFrame = withRunToCompletionConf(spark) { spark =>
-    val tmp = TempDirs.scratchDir("graft-streamstatic")
-    val out = tmp.resolve("out").toString
-    val ckpt = tmp.resolve("ckpt").toString
-    try {
-      val schema = spark.read.parquet(eventsPath).schema
-      val f = new java.io.File(eventsPath)
-      val reader = spark.readStream.schema(schema)
-      val source =
-        if (f.isFile) reader.option("pathGlobFilter", f.getName).parquet(f.getParent)
-        else reader.parquet(eventsPath)
-      val dim = graft.core.Tables.tsNanos(spark.read.parquet(eventsPath))
-        .groupBy(col("user_id")).agg(min(col("ts")).as("first_ts"))
-      graft.core.Tables.tsNanos(source)
-        .withColumn("event_time", timestamp_micros(expr("ts DIV 1000")))
-        .withWatermark("event_time", "30 minutes")
-        .join(dim, Seq("user_id"))
-        .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(when(col("ts") > col("first_ts"), 1L).otherwise(0L)).as("n_after_first"))
-        .select(unix_micros(col("window.start")).as("window_start_us"),
-          col("event_type"), col("cnt"), col("n_after_first"))
-        .writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .format("parquet")
-        .start(out)
-        .awaitTermination()
-      spark.read.parquet(out).localCheckpoint(true)
-    } finally {
-      TempDirs.dropNow(new java.io.File(ckpt)) // state store — dead after the run
-      TempDirs.deleteOnExit(tmp.toFile)
-    }
+  def staticJoinWindowCounts(spark: SparkSession, eventsPath: String): DataFrame = drain(spark, eventsPath) { (spark, source) =>
+    val dim = graft.core.Tables.tsNanos(spark.read.parquet(eventsPath))
+      .groupBy(col("user_id")).agg(min(col("ts")).as("first_ts"))
+    graft.core.Tables.tsNanos(source())
+      .withColumn("event_time", timestamp_micros(expr("ts DIV 1000")))
+      .withWatermark("event_time", "30 minutes")
+      .join(dim, Seq("user_id"))
+      .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"),
+        sum(when(col("ts") > col("first_ts"), 1L).otherwise(0L)).as("n_after_first"))
+      .select(unix_micros(col("window.start")).as("window_start_us"),
+        col("event_type"), col("cnt"), col("n_after_first"))
   }
 
   /** Stream-STREAM interval join parity: views and clicks each arrive as
@@ -272,44 +230,21 @@ object StreamParity {
     * production scale the identical plan runs with a real trigger: state
     * is bounded by the 30-minute range + watermark, so neither side
     * buffers unboundedly. */
-  def streamStreamIntervalJoin(spark: SparkSession, eventsPath: String): DataFrame = withRunToCompletionConf(spark) { spark =>
-    val tmp = TempDirs.scratchDir("graft-streamstream")
-    val out = tmp.resolve("out").toString
-    val ckpt = tmp.resolve("ckpt").toString
-    try {
-      val schema = spark.read.parquet(eventsPath).schema
-      val f = new java.io.File(eventsPath)
-      def source() = graft.core.Tables.tsNanos {
-        val reader = spark.readStream.schema(schema)
-        if (f.isFile) reader.option("pathGlobFilter", f.getName).parquet(f.getParent)
-        else reader.parquet(eventsPath)
-      }
-      val views = source().filter(col("event_type") === "view")
-        .select(col("event_id").as("view_id"), col("user_id"),
-          timestamp_micros(expr("ts DIV 1000")).as("v_time"))
-        .withWatermark("v_time", "30 minutes")
-      val clicks = source().filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-          timestamp_micros(expr("ts DIV 1000")).as("c_time"))
-        .withWatermark("c_time", "30 minutes")
-      views.join(clicks, expr(
-          """user_id = c_user AND
-            |c_time >= v_time AND c_time <= v_time + interval 30 minutes""".stripMargin))
-        .select(col("view_id"), col("click_id"), col("user_id"),
-          unix_micros(col("v_time")).as("view_us"),
-          unix_micros(col("c_time")).as("click_us"))
-        .writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .format("parquet")
-        .start(out)
-        .awaitTermination()
-      spark.read.parquet(out).localCheckpoint(true)
-    } finally {
-      TempDirs.dropNow(new java.io.File(ckpt)) // state store — dead after the run
-      TempDirs.deleteOnExit(tmp.toFile)
-    }
+  def streamStreamIntervalJoin(spark: SparkSession, eventsPath: String): DataFrame = drain(spark, eventsPath) { (_, source) =>
+    val views = graft.core.Tables.tsNanos(source()).filter(col("event_type") === "view")
+      .select(col("event_id").as("view_id"), col("user_id"),
+        timestamp_micros(expr("ts DIV 1000")).as("v_time"))
+      .withWatermark("v_time", "30 minutes")
+    val clicks = graft.core.Tables.tsNanos(source()).filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
+        timestamp_micros(expr("ts DIV 1000")).as("c_time"))
+      .withWatermark("c_time", "30 minutes")
+    views.join(clicks, expr(
+        """user_id = c_user AND
+          |c_time >= v_time AND c_time <= v_time + interval 30 minutes""".stripMargin))
+      .select(col("view_id"), col("click_id"), col("user_id"),
+        unix_micros(col("v_time")).as("view_us"),
+        unix_micros(col("c_time")).as("click_us"))
   }
 
   /** Streaming dedupe-with-accounting run to completion over a static
@@ -324,35 +259,12 @@ object StreamParity {
     * invocation, which sorts arrivals by id — the emitted
     * (first_seen, dups_so_far) sequence is then exactly the batch
     * row_number over (hash ORDER BY id), which is what the oracle pins. */
-  def dedupeWithCounts(spark: SparkSession, docsPath: String): DataFrame = withRunToCompletionConf(spark) { spark =>
+  def dedupeWithCounts(spark: SparkSession, docsPath: String): DataFrame = drain(spark, docsPath) { (spark, source) =>
     import spark.implicits._
-    val tmp = TempDirs.scratchDir("graft-streamdedupe")
-    val out = tmp.resolve("out").toString
-    val ckpt = tmp.resolve("ckpt").toString
-    try {
-      val schema = spark.read.parquet(docsPath).schema
-      val f = new java.io.File(docsPath)
-      val reader = spark.readStream.schema(schema)
-      val source =
-        if (f.isFile) reader.option("pathGlobFilter", f.getName).parquet(f.getParent)
-        else reader.parquet(docsPath)
-      val pairs = source.select(
-        graft.operators.TextAnalysis.fingerprint(col("text")).as("_1"),
-        col("doc_id").as("_2")).as[(String, Long)]
-      StreamingDedupe.withDuplicateCounts(spark, pairs)
-        .toDF()
-        .writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .format("parquet")
-        .start(out)
-        .awaitTermination()
-      spark.read.parquet(out).localCheckpoint(true)
-    } finally {
-      TempDirs.dropNow(new java.io.File(ckpt)) // state store — dead after the run
-      TempDirs.deleteOnExit(tmp.toFile)
-    }
+    val pairs = source().select(
+      graft.operators.TextAnalysis.fingerprint(col("text")).as("_1"),
+      col("doc_id").as("_2")).as[(String, Long)]
+    StreamingDedupe.withDuplicateCounts(spark, pairs).toDF()
   }
 
   /** foreachBatch INCREMENTAL UPSERT — the sixth streaming class: the
@@ -374,9 +286,7 @@ object StreamParity {
     * target table is bucketed on the merge key so this join is
     * co-located and exchange-free (q43's layout argument). */
   def cdcMergeUpserts(spark: SparkSession, eventsPath: String,
-      nFiles: Int = 4): DataFrame = withRunToCompletionConf(spark) { spark =>
-    val tmp = TempDirs.scratchDir("graft-streamcdc")
-    val ckpt = tmp.resolve("ckpt").toString
+      nFiles: Int = 4): DataFrame = runToCompletion(spark) { (spark, tmp) =>
     // The nFiles-way range split IS the source layout: a production
     // changelog arrives as files, it is not re-sharded per consumer.
     // Memoized per (application, path, nFiles) through ArtifactRegistry
@@ -392,46 +302,41 @@ object StreamParity {
       TempDirs.deleteOnExit(new java.io.File(dir))
       dir
     }
-    try {
-      val schema = spark.read.parquet(src).schema
-      var target: Option[DataFrame] = None
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val upd = batch
-            .select(col("user_id"), col("ts"), col("event_id"),
-              col("event_type"), col("value"))
-            .groupBy(col("user_id"))
-            .agg(count(lit(1)).as("n_ops"),
-              max(struct(col("ts"), col("event_id"), col("event_type"),
-                col("value"))).as("m"))
-          val merged = target match {
-            case None => upd
-            case Some(t) =>
-              t.select(col("user_id"), col("n_ops").as("t_n"), col("m").as("t_m"))
-                .join(upd.select(col("user_id"), col("n_ops").as("u_n"),
-                  col("m").as("u_m")), Seq("user_id"), "full_outer")
-                .select(col("user_id"),
-                  (coalesce(col("t_n"), lit(0L)) + coalesce(col("u_n"), lit(0L)))
-                    .as("n_ops"),
-                  when(col("u_m").isNull, col("t_m"))
-                    .when(col("t_m").isNull, col("u_m"))
-                    .otherwise(greatest(col("t_m"), col("u_m"))).as("m"))
-          }
-          // materialize the new target version before the old one is dropped
-          target = Some(merged.localCheckpoint(true))
-          ()
+    val schema = spark.read.parquet(src).schema
+    var target: Option[DataFrame] = None
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+      .parquet(src)
+      .writeStream
+      .outputMode("update")
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", tmp.resolve("ckpt").toString)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val upd = batch
+          .select(col("user_id"), col("ts"), col("event_id"),
+            col("event_type"), col("value"))
+          .groupBy(col("user_id"))
+          .agg(count(lit(1)).as("n_ops"),
+            max(struct(col("ts"), col("event_id"), col("event_type"),
+              col("value"))).as("m"))
+        val merged = target match {
+          case None => upd
+          case Some(t) =>
+            t.select(col("user_id"), col("n_ops").as("t_n"), col("m").as("t_m"))
+              .join(upd.select(col("user_id"), col("n_ops").as("u_n"),
+                col("m").as("u_m")), Seq("user_id"), "full_outer")
+              .select(col("user_id"),
+                (coalesce(col("t_n"), lit(0L)) + coalesce(col("u_n"), lit(0L)))
+                  .as("n_ops"),
+                when(col("u_m").isNull, col("t_m"))
+                  .when(col("t_m").isNull, col("u_m"))
+                  .otherwise(greatest(col("t_m"), col("u_m"))).as("m"))
         }
-        .start()
-        .awaitTermination()
-      target.getOrElse(sys.error("cdcMergeUpserts: no microbatch ran"))
-    } finally {
-      TempDirs.dropNow(new java.io.File(ckpt))
-      TempDirs.deleteOnExit(tmp.toFile)
-    }
+        // materialize the new target version before the old one is dropped
+        target = Some(merged.localCheckpoint(true))
+        ()
+      }
+      .start()
+      .awaitTermination()
+    target.getOrElse(sys.error("cdcMergeUpserts: no microbatch ran"))
   }
 }

@@ -1,7 +1,8 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.col
 import graft.core.ArtifactRegistry
+import graft.operators.Dedupe
 
 /** Pins the two contracts the registry exists for: nested builds are
   * legal (the computeIfAbsent recursion hazard), and per-tag build
@@ -9,7 +10,7 @@ import graft.core.ArtifactRegistry
   * triggered, so tags sum to total cost). Also pins memoization under
   * races, eviction, and that a failed build leaves no entry behind.
   */
-class ArtifactRegistrySpec extends AnyFunSuite {
+class ArtifactRegistrySpec extends SparkSpec {
 
   test("nested cached builds are safe, memoized, and self-timed") {
     ArtifactRegistry.resetTimings()
@@ -88,6 +89,20 @@ class ArtifactRegistrySpec extends AnyFunSuite {
       rebuilds += 1; "NEW"
     } == "NEW" && rebuilds == 1)
     ArtifactRegistry.resetTimings()
+  }
+
+  test("application-end eviction drops an operator artifact, so it rebuilds") {
+    import spark.implicits._
+    val shingled = Seq((1L, Seq("a b c", "b c d")), (2L, Seq("x y z")))
+      .toDF("id", "gs")
+    def sig() = Dedupe.minhashSignaturesFromShingles(shingled, col("id"), col("gs"))
+    sig()
+    ArtifactRegistry.evictApplication(spark.sparkContext.applicationId)
+    ArtifactRegistry.resetTimings()
+    sig()
+    try assert(ArtifactRegistry.buildSeconds.contains("minhash_sig"),
+      "an evicted application's minhash_sig must be built again on request")
+    finally ArtifactRegistry.resetTimings()
   }
 
   test("concurrent requests for one key build exactly once") {

@@ -88,4 +88,24 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch,
       s"streamed-batch diff: ${(streamed diff batch).take(3)} / ${(batch diff streamed).take(3)}")
   }
+
+  test("parity runs leave the caller's conf alone and drop their checkpoint") {
+    import graft.streaming.{StreamParity, TempDirs}
+    def scratch(): Set[String] = TempDirs.root.toFile.list()
+      .filter(_.startsWith("graft-streamparity")).toSet
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    val runs = Seq[() => Unit](
+      () => StreamParity.finalWindowCounts(spark, sf() + "/events.parquet").count(),
+      () => StreamParity.cdcMergeUpserts(spark, sf() + "/events.parquet", 2).count())
+    for (run <- runs) {
+      val before = scratch()
+      run()
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == partitions,
+        "the run-to-completion conf must stay on the sibling session")
+      val made = scratch() -- before
+      assert(made.size == 1, s"one scratch dir per run, got $made")
+      assert(!TempDirs.root.resolve(made.head).resolve("ckpt").toFile.exists,
+        "the streaming checkpoint must be dropped when the run returns")
+    }
+  }
 }
