@@ -16,7 +16,7 @@ object BenchOne {
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
     // At local[32] the per-job floor (~0.05-0.1 s each) predicts wall
-    // better than data volume (NOTES round-10 lesson), so "how many jobs
+    // better than data volume, so "how many jobs
     // does this query schedule" is the first diagnostic for a floor-bound
     // query.
     val jobs = new AtomicInteger

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.classic.Dataset
 import org.apache.spark.sql.functions.col
@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions.col
   * `Dataset.localCheckpoint` normally loses the frame's output
   * partitioning: under AQE the adaptive plan's partitioning is unknown at
   * checkpoint-creation time, so the LogicalRDD reports Unknown and every
-  * downstream join/agg re-shuffles the checkpointed blocks — measured in
-  * round 9 (MiningQueries.doubledEdges note) and the reason the graph
-  * family paid one edge-sized exchange per iteration round.
+  * downstream join/agg re-shuffles the checkpointed blocks — for the
+  * graph family, one edge-sized exchange per iteration round
+  * (MiningQueries.doubledEdges note).
   *
   * The fix: take the eager checkpoint with AQE *briefly disabled*. The
   * non-adaptive physical plan ends in the explicit hash repartition, its
@@ -51,13 +51,15 @@ object Materialize {
     * overrides. The shared session's conf is never written. */
   def staticCheckpoint(df: DataFrame, eager: Boolean,
       overrides: (String, String)*): DataFrame = {
-    val spark = castToImpl(df.sparkSession)
-    val sibling = GraftSession.sibling(spark,
+    val sibling = GraftSession.sibling(df.sparkSession,
       ("spark.sql.adaptive.enabled" -> "false") +: overrides: _*)
-    val ck = new Dataset[Row](sibling, df.queryExecution.analyzed, df.encoder)
-      .localCheckpoint(eager)
-    new Dataset[Row](spark, ck.queryExecution.analyzed, ck.encoder)
+    rebind(rebind(df, sibling).localCheckpoint(eager), df.sparkSession)
   }
+
+  /** `df`'s analyzed plan as a frame owned by `spark`: every plan built on
+    * the result (a downstream shuffle, a write) reads `spark`'s conf. */
+  private[graft] def rebind(df: DataFrame, spark: SparkSession): DataFrame =
+    new Dataset[Row](castToImpl(spark), df.queryExecution.analyzed, df.encoder)
 
   /** Hash-repartition `df` on `keys` and eagerly checkpoint it so the
     * result's HashPartitioning(keys, shufflePartitions) is retained. */

@@ -42,8 +42,8 @@ object Tables {
     * fact-table key). For those plans the fan-out exchange is pure waste:
     * the shuffle right after it re-distributes everything anyway, and the
     * pre-shuffle work is a narrow projection a single core finishes in
-    * tens of milliseconds at fixture scale (measured in round 10:
-    * the co-purchase pair join costs 0.7 s from a raw scan vs 1.6 s
+    * tens of milliseconds at fixture scale (measured: the co-purchase
+    * pair join costs 0.7 s from a raw scan vs 1.6 s
     * through the fan-out). Keep [[table]] for consumers with heavy
     * narrow work (hashing, explode, vector math) before the first
     * exchange. At production scale the file has many row groups, the scan

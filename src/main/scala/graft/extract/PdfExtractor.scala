@@ -40,8 +40,8 @@ object PdfExtractor {
     if (printable.isEmpty) Seq.empty else Seq(printable)
   }
 
-  /** CLI OCR engine — the tesseract drop-in seam (round 13, r12 verdict
-    * item 7: make the env-unblock a binary drop, not a round of work).
+  /** CLI OCR engine — the tesseract drop-in seam (enabling OCR is a
+    * binary drop, not a code change).
     * Invokes `binary <payload-file> stdout` exactly the way the
     * reference's extractor shells out to tesseract
     * (resources/convertors/pdf_extractor.py:56-101 runs OCR per page
@@ -68,7 +68,7 @@ object PdfExtractor {
         // blocks on a full pipe, while the MAIN thread only ever blocks on
         // the bounded waitFor: a hung binary is killed (destroyForcibly),
         // never waited on forever — a task slot must not leak into a
-        // zombie child (ADVICE r13)
+        // zombie child
         val buf = new java.io.ByteArrayOutputStream()
         val drain = new Thread(() => {
           try { p.getInputStream.transferTo(buf); () }

@@ -37,7 +37,7 @@ object Dedupe {
 
   /** `n`-gram word shingles of a text column (space-joined). Empty array when
     * the text has fewer than `n` words. Empty tokens are dropped before
-    * shingling (round 13): `trim` strips only spaces, so a tab/newline-
+    * shingling: `trim` strips only spaces, so a tab/newline-
     * prefixed text would otherwise contribute a leading "" token and
     * produce shingles the filtered docShingles tokenization does not —
     * with the filter the two tokenizations are identical by construction,
@@ -107,9 +107,9 @@ object Dedupe {
     * and the d27 band-configuration sweep. */
   def minhashSignatures(df: DataFrame, id: Column, text: Column,
       shingleN: Int = 3, k: Int = 16): DataFrame = {
-    // Round-12: memoized per (application, input plan, params) with an
-    // eager checkpoint — the signature table is the persisted MinHash
-    // artifact (d29's scaladoc already states the production posture:
+    // memoized per (application, input plan, params) with an eager
+    // checkpoint — the signature table is the persisted MinHash artifact
+    // (d29's scaladoc states the production posture:
     // "the history side is the persisted signature table"); d01, d09,
     // d27 and d29 all read ONE materialization instead of each
     // re-running the shingle explode + 16-lane min agg.
@@ -119,7 +119,7 @@ object Dedupe {
   }
 
   /** [[minhashSignatures]] over an ALREADY-shingled (id, shingle-array)
-    * frame — round 14: lets the signature build ride the corpus's ONE
+    * frame — lets the signature build ride the corpus's ONE
     * materialized tokenization (the d16 posture; MiningQueries.docShingles
     * is that artifact) instead of re-scanning and re-shingling the
     * documents. Values are IDENTICAL to the text path by construction:
@@ -395,17 +395,15 @@ object Dedupe {
     */
   def prefixFilterJaccardPairs(df: DataFrame, id: Column, text: Column,
       block: Column, minJaccard: Double): DataFrame = {
-    // Round-10 exchange audit (the judge's d25 item): the old shape paid
-    // (freq exchange on w) + (tok exchange on w for the join) + (groupBy
-    // (id, blk) exchange) + TWO doc-table exchanges in the verify joins.
-    // Now ONE explicit w-clustering feeds both the document-frequency
+    // Exchange budget: ONE explicit w-clustering feeds both the document-frequency
     // aggregate and the frequency join (identical exchange subtree —
     // deduped by ReuseExchange), the canonical-order regroup re-clusters
     // by id BEFORE its aggregate ({id} ⊆ {id, blk} so the agg inserts no
     // exchange), and the doc table materializes through a partitioning-
     // RETAINING checkpoint — so both verify joins read it in place and
     // only the (small) candidate side moves. Net: 3 corpus-token-sized
-    // exchanges instead of 5.
+    // exchanges, where separate freq, tok-join, regroup and two
+    // doc-table exchanges would be 5.
     val tok = df.select(id.as("id"), block.as("blk"),
       explode(array_distinct(words(text))).as("w"))
       .filter(length(col("w")) > 0)
@@ -472,14 +470,13 @@ object Dedupe {
       .select(col("id_a"), col("id_b"), col("inter"), col("uni"), col("jaccard"))
   }
 
-  /** Embedding-cosine near-dup candidate pairs. Round-12 (the r11
-    * verdict's d04 item): the caller's block is COMPOSED with the s02
+  /** Embedding-cosine near-dup candidate pairs. The caller's block is
+    * COMPOSED with the s02
     * multi-table sign-LSH bucketing BY DEFAULT — a pair is a candidate
     * iff it shares the caller block AND collides in at least one of the
     * `nTables` seeded hash tables — so the O(Σ block²) bound holds by
-    * construction instead of depending on caller discipline (nothing in
-    * the old API stopped a caller passing a corpus-sized block; now even
-    * that degrades to the LSH bucket join, the only all-pairs shape that
+    * construction instead of depending on caller discipline (even a
+    * corpus-sized caller block degrades to the LSH bucket join, the only all-pairs shape that
     * survives 100 TB). The caller block still composes semantics (e.g.
     * "same label only"); callers that genuinely need exhaustive
     * within-block pairs should go through the exact s01-style scan

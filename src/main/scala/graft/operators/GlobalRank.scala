@@ -69,7 +69,7 @@ object GlobalRank {
   }
 
   /** Exact global EXCLUSIVE prefix sum over a total order — the running-
-    * total sibling of [[withGlobalRank]], same TeraSort shape (r14, built
+    * total sibling of [[withGlobalRank]], same TeraSort shape (built
     * for the t46 sequence pack): range shuffle on the sort key, one
     * narrow local exclusive-cumsum pass, per-partition TOTALS (≤
     * numPartitions rows) prefix-summed on the driver, global value =

@@ -8,8 +8,7 @@ package graft.operators
   * unavailable and [[bestDetect]] falls back to the engine's own green
   * stopword+script classifier ([[TextAnalysis.languageId]]'s scalar
   * twin); when the jar lands on the classpath the seeded path activates
-  * with zero code change — the OnnxEncoder/CliOcr drop-in discipline
-  * (round 13, r12 verdict item 7).
+  * with zero code change — the OnnxEncoder/CliOcr drop-in discipline.
   *
   * Seed contract mirrored exactly: `DetectorFactory.setSeed(0)` once
   * before any `create()`, profiles loaded from

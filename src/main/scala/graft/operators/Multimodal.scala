@@ -311,11 +311,11 @@ object Multimodal {
       (_, nF, fs, off, _) = g
       stats <- {
         val out = ks.toSeq.map { k => // k is 1-based per the stss box
-          // explicit bounds check (ADVICE r17): a corrupt stco/stsz
+          // explicit bounds check: a corrupt stco/stsz
           // geometry whose span overruns the payload is refused HERE,
           // intentionally — not left to copyOfRange's zero-padding
           // incidentally failing the JPEG decode downstream. Division
-          // form (ADVICE r18): fs and k are unsigned-32-bit reads, so
+          // form: fs and k are unsigned-32-bit reads, so
           // `off + k * fs` can wrap a Long negative and PASS a direct
           // comparison; `k > (L - off) / fs` is overflow-free and, for
           // positive integers, exactly equivalent to k·fs > L − off.

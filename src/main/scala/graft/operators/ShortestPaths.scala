@@ -33,19 +33,20 @@ object ShortestPaths {
     hopsOnDoubled(doubled(edges.select(col("u"), col("v"))), seeds, maxHops)
 
   /** [[hops]] over an ALREADY-doubled, u-clustered edge frame (e.g. the
-    * memoized MiningQueries.doubledEdgesFused artifact) — round 12: lets
+    * memoized MiningQueries.doubledEdgesFused artifact) — lets
     * the BFS share one persisted edge materialization with the rest of
     * the graph family instead of re-doubling per query. */
   def hopsOnDoubled(dir: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
 
-    // Round-10 shape: every per-hop frame is a partitioning-RETAINING
+    // every per-hop frame is a partitioning-RETAINING
     // checkpoint on the vertex key, so hop r+1's expansion join reads
     // BOTH sides in place (frontier clustered on node, dir on u) — the
     // frontier rides a shuffle-hash hint because static planning would
     // otherwise SMJ-sort the graph-sized stream side. One AQE-off job
     // per hop instead of a fan of adaptive stage-jobs (measured: the
-    // hop loop was 27 jobs, dominated by scheduling floor, not data).
+    // adaptive hop loop ran 27 jobs, dominated by scheduling floor, not
+    // data).
     var visited = graft.core.Materialize.partitionedCheckpoint(
       seeds.select(col("node")).distinct().withColumn("hops", lit(0)), "node")
     var frontier = visited
@@ -63,7 +64,7 @@ object ShortestPaths {
       // visited stays UN-checkpointed: it is a union of already-
       // checkpointed frames (seeds + each hop's `next`), so every consumer
       // re-reads cached blocks — a per-hop eager re-materialization of the
-      // whole visited set was pure job floor (round-9 fix)
+      // whole visited set would be pure job floor
       visited = visited.union(next)
       frontier = next
     }
@@ -73,11 +74,10 @@ object ShortestPaths {
   /** Both directions in ONE generate pass (explode of the two
     * orientations), materialized via
     * [[graft.core.Materialize.partitionedCheckpoint]] on the hop-join key
-    * `u` (round 10): the AQE-off eager checkpoint RETAINS the
-    * HashPartitioning, so each hop's equi-join reads the checkpoint
-    * blocks in place with no exchange — the r9 shape lost the
-    * partitioning at the AQE checkpoint boundary and re-shuffled the
-    * graph side every hop. */
+    * `u`: the AQE-off eager checkpoint RETAINS the HashPartitioning, so
+    * each hop's equi-join reads the checkpoint blocks in place with no
+    * exchange — an AQE checkpoint loses the partitioning and would
+    * re-shuffle the graph side every hop. */
   private def doubled(edges: DataFrame): DataFrame = {
     val extra = edges.columns.filterNot(Seq("u", "v").contains)
     graft.core.Materialize.partitionedCheckpoint(
@@ -96,7 +96,7 @@ object ShortestPaths {
     * relaxation can IMPROVE a vertex it already reached (a longer-hop but
     * lighter path), so every round re-relaxes the full distance table.
     *
-    * Round-14 fold (the g09/g11/g08 union-keyed discipline): a round is
+    * The g09/g11/g08 union-keyed discipline: a round is
     * one ZERO-exchange co-partitioned join (distance table clustered on
     * the vertex key by the previous round's agg, edges by the shared
     * checkpoint) + one union-keyed min-agg over relaxation rows ∪
@@ -128,7 +128,7 @@ object ShortestPaths {
       doubled(edges.select(col("u"), col("v"), col("w"))), seeds, rounds)
 
   /** [[weightedDistances]] over an ALREADY-doubled, u-clustered (u, v, w)
-    * frame — round 12, same sharing rationale as [[hopsOnDoubled]]; a
+    * frame — same sharing rationale as [[hopsOnDoubled]]; a
     * narrow weight projection over the shared artifact retains its
     * clustering. */
   def weightedDistancesOnDoubled(dir: DataFrame, seeds: DataFrame,

@@ -43,15 +43,13 @@ object Triangles {
     * and this operator's own lineage checkpoint (the caller's blocks
     * already serve the multi-consumer reads). The contract is the
     * caller's to honor; the default stays safe. */
-  /** Round-12: the degree table and the per-edge closer sets are the
-    * triangle census's derived artifacts — g01 (global stats) and g02
-    * (per-vertex coefficients) both read them, and re-running the
-    * orientation + wedge-intersection join per query was the d05/p03
-    * situation again. Memoized per (application, edges plan,
+  /** The degree table and the per-edge closer sets are the triangle
+    * census's derived artifacts — g01 (global stats) and g02 (per-vertex
+    * coefficients) both read them instead of re-running the orientation
+    * + wedge-intersection join per query. Memoized per (application, edges plan,
     * assumeNormalized) with eager partitioning-retaining checkpoints.
     *
-    * Round-14 rejected redesign (the build-ledger hunt, measured at
-    * sf0.1): deriving the build from the shared doubled
+    * Rejected redesign (measured at sf0.1): deriving the build from the shared doubled
     * artifacts — deg as an exchange-free agg over dbl_u, the dv
     * annotation riding dbl_v's clustering, orientation as a filter over
     * the doubled rows — measured WORSE: triangle_core 3.16 → 4.28 s
@@ -60,8 +58,8 @@ object Triangles {
     * on shuffle volume — the degree explode-shuffle is map-side combined
     * down to VERTEX size and `e` is m rows, while every doubled-frame
     * path must move 2m annotated rows through the orientation re-key.
-    * The residual cost is the wedge-intersection agg itself (the r13
-    * note below), which no edge-frame re-sourcing touches. */
+    * The residual cost is the wedge-intersection agg itself (see the
+    * checkpoint note below), which no edge-frame re-sourcing touches. */
   private def coreShared(edges: DataFrame,
       assumeNormalized: Boolean): (DataFrame, DataFrame) = {
     val key = (edges.sparkSession.sparkContext.applicationId,
@@ -103,8 +101,7 @@ object Triangles {
       .select(when(uFirst, col("u")).otherwise(col("v")).as("src"),
         when(uFirst, col("v")).otherwise(col("u")).as("dst"))
       .repartition(col("src"))
-    // (round-13 re-check after the d15 reuse lesson: an explicit lazy
-    // ckpt here measured NO win — 3.26 vs 3.12 s build, within noise —
+    // (an explicit lazy ckpt here measured NO win — 3.26 vs 3.12 s build, within noise —
     // so the reuse claim above holds for this shape; the build cost is
     // the wedge-intersection agg itself)
     // out-adjacency arrays, sorted so the intersection is a merge

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
   * Why this exists: Spark evaluates HOF lambdas (`zip_with` + `aggregate`)
   * INTERPRETED — a closure dispatch per element, outside whole-stage
   * codegen — measured ~50× slower than the generated loop on 64-dim
-  * embeddings in this engine's minhash work (round 1). Users writing the
+  * embeddings in this engine's minhash work. Users writing the
   * natural declarative formulation
   * `aggregate(zip_with(a, b, (x, y) -> x * y), 0.0d, (s, v) -> s + v)`
   * should not pay that; this rule recognizes the three shapes and swaps in

@@ -8,7 +8,7 @@ import graft.core.Tables._
 import Shared.dec
 import graft.operators.{Multimodal, RangeJoin}
 
-/** Round-4 analytics surface: grouping-sets/cube profiling, interval join,
+/** Analytics surface: grouping-sets/cube profiling, interval join,
   * per-group top-k, pivot, and the multimodal frame-sampling generator —
   * each a declared query with a DuckDB oracle (same design rules as
   * [[CoreQueries]]: deterministic order, exact decimal money math).
@@ -24,11 +24,11 @@ object AnalyticsQueries {
     * subtotal-nulls (first grouping column = most significant bit — the
     * SQL-standard convention DuckDB shares). */
   def q27Cube(s: SparkSession, d: String): DataFrame =
-    // Round-12 measured rejection: pre-aggregating to (rf, ls, orderkey)
+    // Measured rejection: pre-aggregating to (rf, ls, orderkey)
     // before the cube (smaller Expand input) was 1.93-2.28 s vs this
     // shape's 1.56-1.78 min-of-2 at sf0.1 — the extra triple-keyed
     // exchange costs more than the Expand rows it saves (the distinct
-    // triple is ~comparable to lineitem here). Round-13 second rejection:
+    // triple is ~comparable to lineitem here). Second rejection:
     // hierarchical rollup (distinct-triple base checkpoint + the four
     // grouping sets as separate small aggs, no Expand at all) verified
     // identical and measured 1.80-2.01 s at 13 jobs vs this shape's
@@ -509,9 +509,9 @@ object AnalyticsQueries {
     * monitoring/feature pipeline needs before training on "events per
     * day" (missing day ≠ missing row).
     *
-    * r18 (guide §2.4): `daily` feeds the spine aggregate AND the fill
-    * join, `filled` feeds the island window AND the final per-user agg —
-    * un-materialized, the duplicated subtrees re-scanned events 4×. Both
+    * `daily` feeds the spine aggregate AND the fill join, `filled` feeds
+    * the island window AND the final per-user agg — un-materialized, the
+    * duplicated subtrees re-scan events 4×. Both
     * frames are day-granular AGGREGATES (users × active/span days, far
     * smaller than the event stream — the t11-vs-t20 materialization
     * rule), so two lazy checkpoints measured 0.794 → 0.559 s min-of-2,
@@ -674,14 +674,13 @@ object AnalyticsQueries {
     * DuckDB's epoch_us truncate identically; floor(value·60) is one
     * IEEE-identical float step — the d14 discipline).
     *
-    * r18 tried a lazy checkpoint of `iv` here (it feeds the island windows
+    * A lazy checkpoint of `iv` here was tried (it feeds the island windows
     * AND both sweep union branches — un-materialized, the duplicated
     * subtrees scan events 3×): BenchOne same-session 0.958 → 0.778 s /
     * 11 → 9 jobs, but all four same-code full-Bench windows read it as a
-    * WASH (1.10–1.18 s vs the baseline's 1.07), and the r19 in-context
-    * quadruple confirms: 1.705 s WITH the ckpt (w0) vs 1.254/1.890/1.290
-    * without (w1-w3) — wash-to-better. REVERTED (r18 verdict item
-    * 3): `iv` is EVENT-sized — one row per event, not an aggregate — so
+    * WASH (1.10–1.18 s vs 1.07 without), and an in-context quadruple
+    * confirms: 1.705 s WITH the ckpt (w0) vs 1.254/1.890/1.290 without
+    * (w1-w3) — wash-to-better. Not taken: `iv` is EVENT-sized — one row per event, not an aggregate — so
     * the t20/t41 rule applies (no corpus-sized materialization at 100 TB:
     * executor-storage pressure vs three pushed-filter re-scans of a
     * 4-column parquet projection that column pruning makes cheap). */
@@ -831,7 +830,7 @@ object AnalyticsQueries {
       .select(col("l_orderkey"), col("l_partkey")).distinct()
       .localCheckpoint(true) // read 4x: supports, both pair sides, total
     val sup = items.groupBy(col("l_partkey")).agg(count(lit(1)).as("n"))
-    // r13 A/B, REJECTED: basket-agg + in-row HOF pair explode (one fewer
+    // A/B, REJECTED: basket-agg + in-row HOF pair explode (one fewer
     // orderkey exchange on paper) measured 2.1-2.6 s vs this shape's
     // 1.9-2.4 in the same windows — the nested transform/filter lambdas
     // evaluate interpreted per basket element while the self-join stays
@@ -937,8 +936,7 @@ object AnalyticsQueries {
     * sketch-driven bins; this is the exact multi-quantile profile a
     * column-stats pass publishes. Type-1 picks ACTUAL STORED VALUES
     * (never interpolates), so double columns stay bit-exact across
-    * engines — no ULP hazard (the q47 ADVICE lesson baked into the
-    * design). All three quantiles read the same (rn, cnt) windows —
+    * engines — no ULP hazard (the q47 lesson baked into the design). All three quantiles read the same (rn, cnt) windows —
     * adding quantiles costs conditional aggregates, not passes. Same
     * spillable partition-by-group sort argument as q47; skewed single
     * groups compose with GlobalRank (q40). */

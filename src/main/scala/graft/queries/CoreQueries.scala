@@ -65,8 +65,8 @@ object CoreQueries {
 
   /** Q5 — prediction merge-back: left join + coalesce keeps prior tags where
     * no prediction exists (SURVEY J1, assets/processing/assets.py:543-558).
-    * No broadcast hint (round 13): the prediction side is CORPUS-derived
-    * (a filter of the embedding table), so an unconditional broadcast was
+    * No broadcast hint: the prediction side is CORPUS-derived (a filter
+    * of the embedding table), so an unconditional broadcast would be
     * the g08 bench-scale bake-in — AQE sees the runtime size and
     * broadcasts while small, degrading to a shuffle join when a
     * production prediction batch outgrows the threshold. */

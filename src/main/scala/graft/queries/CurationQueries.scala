@@ -8,7 +8,7 @@ import Shared.cosSql
 import graft.operators.Dedupe
 import graft.functions.VectorFunctions.cosineSimilarity
 
-/** Round-8 curation surface: the decision-making queries a pretraining-data
+/** Curation surface: the decision-making queries a pretraining-data
   * team runs AFTER profiling (ProfileQueries) and BEFORE committing a mix —
   * graph-based keyword salience (TextRank), embedding-space label probing
   * (k-NN eval), cross-series lead-lag structure, pipeline-freshness audit,
@@ -156,9 +156,9 @@ object CurationQueries {
         (year(col("l_shipdate")) * 12 + month(col("l_shipdate"))).cast("long").as("t"),
         expr("CAST(floor(l_quantity) AS BIGINT)").as("q"))
       .groupBy(col("t")).agg(sum(col("q")).as("b"))
-    // n/Σa/Σb as ONE whole-frame window over the joint frame (round 13):
-    // the separate stats agg + broadcast cross join re-read the joint
-    // checkpoint and cost two extra jobs; the unpartitioned window is
+    // n/Σa/Σb as ONE whole-frame window over the joint frame: a separate
+    // stats agg + broadcast cross join would re-read the joint checkpoint
+    // and cost two extra jobs; the unpartitioned window is
     // CALENDAR-bounded (monthly rows — q72's rule), never data-bounded,
     // so the SinglePartition exchange holds ≤ a few thousand rows a
     // century at any corpus size
@@ -569,7 +569,7 @@ object CurationQueries {
     * the report rides the dedupe pass it audits; nothing new shuffles
     * at corpus scale. */
   def p03DedupImpact(s: SparkSession, d: String): DataFrame = {
-    // round 12: reads the shared d05 cluster-assignment artifact (pre-
+    // reads the shared d05 cluster-assignment artifact (pre-
     // sort) — the report rides the dedupe pass it audits, literally
     val assigned = LlmQueries.d05Assigned(s, d)
       .select(col("doc_id"), (col("is_canonical") === 1).as("keep"))

@@ -21,7 +21,7 @@ object LlmQueries {
   /** MinHash+LSH near-dup pairs over documents (3-word shingles, k=16
     * signatures, 4 bands — shingle→minhash→band→bucket-join). */
   def d01MinhashLsh(s: SparkSession, d: String): DataFrame =
-    // round 14: signatures from the SHARED artifact (docShingles →
+    // signatures from the SHARED artifact (docShingles →
     // minhashSigShared) — one tokenization + one signature build for the
     // whole d01/d09/d27/d29 family; values byte-identical (min-lanes are
     // duplicate-insensitive, DedupeSpec pins it)
@@ -45,8 +45,8 @@ object LlmQueries {
   def d03NgramJaccard(s: SparkSession, d: String): DataFrame =
     jaccardPairs08(s, d).orderBy(col("id_a"), col("id_b"))
 
-  /** Round-12: the 0.8-Jaccard pair table is ONE persisted artifact —
-    * d16's scaladoc already states the posture ("a dedupe pass at 100 TB
+  /** The 0.8-Jaccard pair table is ONE persisted artifact — d16's
+    * scaladoc states the posture ("a dedupe pass at 100 TB
     * runs both off ONE tokenization"); d03 (the pair report), d05 and d10
     * (both cluster passes) and p03 (the impact report, via d05) all read
     * the same materialization instead of re-running the shingle join.
@@ -193,10 +193,9 @@ object LlmQueries {
       .select(col("doc_id"),
         coalesce(col("component"), col("doc_id")).as("cluster"))
     // cluster_size via ONE cluster-partitioned window count instead of
-    // groupBy + re-join (r15 d05a-ledger lever): same integers, one
-    // exchange on cluster and no join; cluster cardinality bounds the
-    // partition (near-dup clusters are small by construction), so the
-    // window is safe at scale. Measured: see the probe note in NOTES r15.
+    // groupBy + re-join: same integers, one exchange on cluster and no
+    // join; cluster cardinality bounds the partition (near-dup clusters
+    // are small by construction), so the window is safe at scale.
     assigned.withColumn("cluster_size",
       count(lit(1)).over(org.apache.spark.sql.expressions.Window
         .partitionBy(col("cluster"))))
@@ -413,9 +412,9 @@ object LlmQueries {
     * df is NOT broadcast-hinted (vocabulary scales with the corpus; AQE
     * decides) — → per-doc top-k window.
     *
-    * r18 (guide §2.4): the tf frame feeds BOTH the df aggregate and the
-    * score join; without a materialization the duplicated subtree
-    * re-tokenized documents twice (plan showed two full scan+explode+agg
+    * The tf frame feeds BOTH the df aggregate and the score join;
+    * without a materialization the duplicated subtree re-tokenizes
+    * documents twice (the plan shows two full scan+explode+agg
     * branches). A LAZY checkpoint of tf — the (doc, term) AGGREGATE, far
     * smaller than the raw token stream, which is why this wins where
     * t20/t41's token-stream materialization loses — measured 0.905 →
@@ -531,10 +530,11 @@ object LlmQueries {
     * lexicographically) so the query is meaningful at every scale factor;
     * per-doc hit counts are adjacent-occurrence counts.
     *
-    * Round-13 shape (same integers, same oracle): an adjacent-position
-    * pair IS a 2-gram shingle, so the positional posting self-join —
-    * which re-ran the corpus posexplode four times and shuffled two
-    * corpus-sized posting frames per phrase — collapses to ONE
+    * Shape (same integers as the positional definition): an
+    * adjacent-position pair IS a 2-gram shingle, so the positional
+    * posting self-join — which would re-run the corpus posexplode four
+    * times and shuffle two corpus-sized posting frames per phrase —
+    * collapses to ONE
     * [[Dedupe.shingles]] explode pass, checkpointed for its two
     * consumers: the bigram-vocabulary hash agg (map-side combined,
     * TakeOrdered(1) — never a global sort) and the broadcast-probe
@@ -603,7 +603,7 @@ object LlmQueries {
     * hash-aggs (dl, tf); the 3-term postings join probes term-frequency-
     * sized inputs, never the corpus (the t17 shape).
     *
-    * r18 A/B, REJECTED: lazily checkpointing the token stream (3 tokenize
+    * A/B, REJECTED: lazily checkpointing the token stream (3 tokenize
     * passes → 1 + cached reads) measured WORSE — 1.315 vs 1.157 s
     * min-of-2, same BenchOne session at sf0.1 — confirming t41's recorded
     * lesson at three passes: materializing the corpus-sized token stream
@@ -654,7 +654,7 @@ object LlmQueries {
     * cut); the per-doc pass is one explode + distinct + one broadcast-
     * sized membership join — the t13 broadcast-eval-set shape.
     *
-    * r18 A/B, REJECTED: lazily checkpointing the distinct-bigram frame
+    * A/B, REJECTED: lazily checkpointing the distinct-bigram frame
     * (two consumers: top-1000 agg + membership join) measured a wash —
     * 0.876 vs 0.872 s min-of-2, same BenchOne session at sf0.1: the
     * frame is corpus-sized (per-doc distinct bigrams), so materializing

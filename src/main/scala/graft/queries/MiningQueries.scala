@@ -7,7 +7,7 @@ import graft.core.Tables._
 import Shared.{cachedFrame, cosSql}
 import graft.operators.{Dedupe, GlobalRank, Hierarchy, RangeJoin, Sampling, ShortestPaths, Similarity, Triangles}
 
-/** Round-6 mining surface: event-funnel analysis, exact global deciles via
+/** Mining surface: event-funnel analysis, exact global deciles via
   * distributed ranking, triangle counting, benchmark decontamination,
   * deterministic char-diversity quality stats, and centroid-partitioned
   * semantic dedupe. Same design rules as the rest of the catalog —
@@ -27,7 +27,7 @@ object MiningQueries {
     * chain survives hot users at 100 TB. Stage per user = deepest step
     * reached.
     *
-    * r18 A/B, REJECTED: lazily checkpointing the narrow ev projection
+    * A/B, REJECTED: lazily checkpointing the narrow ev projection
     * (the plan re-scans events 7× across the filtered branches) measured
     * a wash — 1.347 vs 1.363 s min-of-2, same BenchOne session at sf0.1
     * (17 → 12 jobs, but the pushed-filter re-scans are page-cache-cheap
@@ -115,7 +115,7 @@ object MiningQueries {
     * hash-checkable cross-engine. Complements the CC family (d05/d10
     * find connectivity; LPA finds DENSITY structure inside one component).
     *
-    * Scale design (round-10 shape): the edge frame is a PARTITIONING-
+    * Scale design: the edge frame is a PARTITIONING-
     * RETAINING checkpoint ([[graft.core.Materialize]]) clustered on the
     * round-join key, so the graph side genuinely never re-shuffles —
     * each round is one small exchange of the vertex-sized label frame
@@ -139,7 +139,7 @@ object MiningQueries {
     * shared [[lpaCtes]] oracle chain keeps the two declared queries
     * provably in sync. */
   private[queries] def lpaAssign(s: SparkSession, d: String): DataFrame =
-    // round 12: the 3-round assignment is the community artifact g06
+    // the 3-round assignment is the community artifact g06
     // (the assignment report) and g10 (the modularity audit) both read —
     // memoized like d05Assigned/p03, the same shared-CTE pairing
     cachedFrame(s, d, "lpa3") {
@@ -149,10 +149,10 @@ object MiningQueries {
 
   private def lpaAssignBuild(s: SparkSession, d: String): DataFrame = {
     // partitioned on v — the per-round join key (e.v = lab.vertex); the
-    // fused builder dedupes and clusters in the same shuffle (round 10)
+    // fused builder dedupes and clusters in the same shuffle
     val e = doubledEdgesFused(s, d, "v")
     val shufN = s.sessionState.conf.numShufflePartitions
-    // ROUND 1, algebraically specialized (round 10): initial labels are
+    // ROUND 1, algebraically specialized: initial labels are
     // the vertex ids themselves, and the edge set is distinct, so every
     // (u, label) count in round 1 is exactly 1 — the argmax by
     // (count DESC, label ASC) degenerates to min(neighbor). One map-side-
@@ -168,28 +168,24 @@ object MiningQueries {
       // ≥ 0, negation is safe — invariant pinned in OpsQueriesSpec). ONE
       // explicit exchange on u feeds BOTH aggs — HashPartitioning(u)
       // satisfies ClusteredDistribution(u, label) as well as (u), so
-      // neither groupBy inserts its own exchange (plan-verified); the old
-      // shape paid two. Rounds are UNCHECKPOINTED (round 10): e is a
-      // partitioning-retaining checkpoint so the graph side never
-      // re-shuffles, each lab(r) has exactly one consumer, and two
-      // unrolled rounds are shallow enough that lineage-cut jobs would
-      // cost more than they save. r19: the lab side rides a shuffle_hash
-      // hint. The old "hint-free beats a forced SHJ" measurement predates
-      // the r12 memoization, when this fixpoint ran inline under AQE
-      // (which broadcast the 4 MB label frame at bench scale); since r12
-      // the build is planned by checkpointRetainingPartitioning's static
-      // (AQE-off) checkpoint, where hint-free STATIC planning picks
-      // SortMergeJoin and re-sorts the edge-sized stream every round
-      // (probe plan: plans/r19/lpa3_build_before.txt, SMJ + Sort(v) over
-      // the edge checkpoint in both rounds). The hinted SHJ reads both
+      // neither groupBy inserts its own exchange (plan-verified). Rounds
+      // are UNCHECKPOINTED: e is a partitioning-retaining checkpoint so the
+      // graph side never re-shuffles, each lab(r) has exactly one
+      // consumer, and two unrolled rounds are shallow enough that
+      // lineage-cut jobs would cost more than they save. The lab side
+      // rides a shuffle_hash hint: the build is planned by
+      // checkpointRetainingPartitioning's static (AQE-off) checkpoint,
+      // where hint-free STATIC planning picks SortMergeJoin and re-sorts
+      // the edge-sized stream every round (SMJ + Sort(v) over the edge
+      // checkpoint in both rounds). The hinted SHJ reads both
       // sides co-partitioned — e is hashpartitioning(v), lab arrives
       // hashpartitioning(u→vertex) from the previous round's agg — with
       // zero exchange and NO sorts; the label frame is vertex-sized,
       // never broadcast (the g04/g11 scale rule). Honest A/B (clean
       // single-build runs, sf0.1): build 2.448 s SMJ vs 2.467 s SHJ — a
       // WASH at this SF (the edge sorts are ~60k rows); kept on the plan
-      // evidence (plans/r19/lpa3_build_{before,after}.txt: 2 SMJ + 2
-      // edge-stream sorts → 2 SHJ, 28 → 25 nodes) because the removed
+      // evidence (2 SMJ + 2 edge-stream sorts → 2 SHJ, 28 → 25 nodes)
+      // because the removed
       // work is O(E log E) per round vs an O(V) per-partition hash build
       // — the trade the g04/g11 hints already ship.
       val l = lab
@@ -283,8 +279,8 @@ object MiningQueries {
   def g03BfsHops(s: SparkSession, d: String): DataFrame = {
     val seeds = part(s, d).filter(col("p_partkey") % 500 === 0)
       .select(col("p_partkey").as("node"))
-    // round 12: the hop joins read the SHARED u-clustered doubled-edge
-    // artifact (same frame as g04/g11/g08) instead of re-doubling
+    // the hop joins read the SHARED u-clustered doubled-edge artifact
+    // (same frame as g04/g11/g08) instead of re-doubling
     ShortestPaths.hopsOnDoubled(doubledEdgesFused(s, d, "u"), seeds, maxHops = 3)
       .orderBy(col("node"))
   }
@@ -300,8 +296,7 @@ object MiningQueries {
     * semantic. Integer dist keeps min() hash-exact; the oracle is the
     * same relaxation unrolled as chained CTEs (d0→d3). */
   def g07WeightedPaths(s: SparkSession, d: String): DataFrame = {
-    // round 12 (the r11 verdict's g07 item): the relaxation rounds share
-    // the ONE u-clustered doubled-edge artifact with g03/g04/g11/g08 —
+    // the relaxation rounds share the ONE u-clustered doubled-edge artifact with g03/g04/g11/g08 —
     // the symmetric weight (1 + (u+v) mod 5) is a narrow projection over
     // it, which retains the clustering, so no per-query re-double
     val dir = doubledEdgesFused(s, d, "u")
@@ -320,7 +315,7 @@ object MiningQueries {
     * Spark and DuckDB, so the full 3-round fixpoint prefix hash-matches —
     * truncation loses < 10⁻¹² per op, identically on both sides.
     *
-    * Shape per round (round-10): ranks ⋈ the partitioning-RETAINING
+    * Shape per round: ranks ⋈ the partitioning-RETAINING
     * doubled-edge checkpoint ⋈ degrees — ALL THREE sides arrive clustered
     * on the src key (edges from [[graft.core.Materialize]], degrees from
     * an agg over them with its own partitioning-retaining checkpoint,
@@ -345,8 +340,8 @@ object MiningQueries {
       e.groupBy(col("u")).agg(count(lit(1)).as("deg")))
     val n = deg.count()
     val p0 = S / n // integral: S div N, identical to the oracle's `//`
-    // r19 (the r18 verdict's item-1 extension of the g05/g07 static-
-    // fixpoint pattern): the whole 3-round loop is planned STATICALLY —
+    // the g05/g07 static-fixpoint pattern: the whole 3-round loop is
+    // planned STATICALLY —
     // the final lazy checkpoint plans it with AQE off, the existing
     // shuffle_hash hints pin the vertex-sized rank/degree sides as SHJ
     // build sides against the u-clustered edge checkpoint (zero join
@@ -355,8 +350,7 @@ object MiningQueries {
     // loop adaptively. Under AQE the same plan ran as a fan of per-stage
     // scheduled jobs; statically the fixpoint executes as ONE job (the g07
     // weightedDistances posture — its in-loop note measured 13 → 4 jobs
-    // for the same shape). Plan-only change: operators and integers are
-    // untouched, hash-verified at sf0.001/0.01/0.1.
+    // for the same shape).
     var p = deg.select(col("u").as("v"), lit(p0).as("p"))
     for (_ <- 1 to 3) {
       val contrib = e
@@ -408,19 +402,17 @@ object MiningQueries {
     val nSeeds = seeds.count()
     val p0 = S / nSeeds
     val tele = (15L * p0) / 100
-    // Round-13 (the r12 verdict's named lever): the teleport full-outer
-    // folds INTO the contribution aggregate — seed rows ride the same
+    // The teleport step folds INTO the contribution aggregate — seed rows ride the same
     // union as the edge-contribution rows with a null contribution and a
     // seed flag, so one groupBy(v) computes Σc AND seed membership and
-    // the per-round join count drops from 3 to 2. Identical integers:
-    // sum over nulls is null → coalesce 0, exactly the old full-outer's
-    // missing-contrib case.
-    // r19 (the r18 verdict's item-1 static-unroll extension, g04's twin):
-    // the lazy static checkpoint of the final (vertex-bounded) rank frame
+    // the per-round join count is 2, not the 3 a separate full-outer
+    // would need. Identical integers: sum over nulls is null →
+    // coalesce 0, exactly a full-outer's missing-contrib case.
+    // As in g04, the lazy static checkpoint of the final (vertex-bounded) rank frame
     // plans the 3 rounds — SHJ-hinted zero-exchange joins + one
     // union-keyed contribution agg each — with AQE off, so they run as
     // ONE statically planned job instead of a fan of adaptive
-    // stage-jobs, and feeds the TakeOrdered tail. Plan-only; hash-verified at sf0.001/0.01/0.1.
+    // stage-jobs, and feeds the TakeOrdered tail.
     var p = seeds.select(col("v"), lit(p0).as("p"))
     for (_ <- 1 to 3) {
       val contribRows = e
@@ -459,25 +451,22 @@ object MiningQueries {
     * id, nothing driver-side; edge frames localCheckpoint per round (the
     * L15/G3 lineage discipline: without it round r re-executes every
     * prior round per downstream branch). */
-  /** r18 (the r17 verdict's item-4 experiment, measured 2.62 → 1.42 s
-    * min-of-2 / 14 → 3 jobs in one BenchOne session at sf0.1): the g07
-    * static-fixpoint pattern applied to the peel — AQE off for the loop,
+  /** The g07 static-fixpoint pattern applied to the peel (measured
+    * 2.62 → 1.42 s min-of-2 / 14 → 3 jobs in one BenchOne session at
+    * sf0.1 against an AQE loop) — AQE off for the loop,
     * shuffle_hash hints, lazy per-round checkpoints, and an ORIENTATION
     * SWAP that halves the edge-sized exchanges per round. The doubled
     * frame is symmetric, so "drop edges with a dead endpoint" can run as
     * two u-side semi-joins with a column swap between them: filter on u
     * (zero-exchange — frame and surv both u-clustered), swap (u,v), then
     * filter on u again (ONE edge exchange that also re-establishes the
-    * u-clustering the next round's degree agg needs). The pre-r18 shape
-    * paid two edge exchanges per round (join on v + re-cluster on u) and
-    * ran 14 AQE jobs. Set equality: e symmetric ⇒
+    * u-clustering the next round's degree agg needs); a join on v plus a
+    * re-cluster on u would pay two. Set equality: e symmetric ⇒
     * {(b,a) : (a,b) ∈ e, a,b alive} is exactly the both-endpoints-alive
     * subset, so each round's frame — and every degree count over it — is
-    * identical to the old shape's (oracle hash unchanged, compare.py).
-    * With the rounds now re-clustering on ONE key per round, the shared
-    * u-clustered fused artifact is the right seed (the r10/r12 fused-vs-
-    * per-query A/B predated the swap; re-measured as part of the 1.42 s
-    * number — the per-execution doubledEdges eager ckpt job is gone). */
+    * the both-endpoints-alive edge set. With the rounds re-clustering on
+    * ONE key per round, the shared u-clustered fused artifact is the
+    * right seed. */
   private[queries] def g05KcoreStatic(s: SparkSession, d: String): DataFrame = {
     val k = 3
     var e = doubledEdgesFused(s, d, "u")
@@ -496,19 +485,16 @@ object MiningQueries {
       .orderBy(col("vertex"))
   }
 
-  /** r18 session-2 re-measurement (the interrupted session's 1.42 s claim
-    * re-checked before shipping): full-Bench IN-CONTEXT min-of-2 at sf0.1
-    * reads static 1.96 s vs the old AQE-loop shape's 2.42 s on the same
-    * host's round-start baseline window (r16 driver: 2.80 s; r17 loaded
-    * driver: 5.70 s) — the static shape stays the winner where it counts.
+  /** Full-Bench IN-CONTEXT min-of-2 at sf0.1 reads the static shape at
+    * 1.96 s vs an AQE-loop shape's 2.42 s on the same host.
     * CAVEAT measured and recorded: in SHORT BenchOne sessions right after
-    * a codegen-heavy UDF query (m09), BOTH shapes read 3-12 s (old shape
+    * a codegen-heavy UDF query (m09), BOTH shapes read 3-12 s (AQE loop
     * 9.5 s, static 12.6 s, same data, same plans, executor-CPU-bound with
     * identical per-stage record counts) — a JIT-compilation-backlog
     * artifact of micro-sessions without the full warm-up pass, NOT a plan
     * property: Bench's full 233-query warm-up drains the compile queue
     * before any timed run, and repeated invocations decay back to
-    * 2.1-2.7 s isolated. Event-log evidence in NOTES (r18): per-stage
+    * 2.1-2.7 s isolated. Event-log evidence in NOTES: per-stage
     * record counts identical across fast/slow runs while executor run
     * time varied 12x (155 vs 12.5 CPU-s on the same stage, gc minor). */
   def g05Kcore(s: SparkSession, d: String): DataFrame =
@@ -519,8 +505,8 @@ object MiningQueries {
     * family reads (d16's posture), memoized per (application, sf dir)
     * with a doc_id-clustered eager checkpoint. Shared by t24 (Bloom-
     * tiered decontamination), t13 (exact decontamination) and d09 (the
-    * sketch-accuracy audit): per-doc array_distinct + explode equals the
-    * old per-consumer explode + global distinct because doc_id is part
+    * sketch-accuracy audit): per-doc array_distinct + explode equals a
+    * per-consumer explode + global distinct because doc_id is part
     * of the pair key. Tokenizer identical to d03's (lower, trim,
     * whitespace split, empty tokens filtered). */
   private[queries] def docShingles(s: SparkSession, d: String): DataFrame =
@@ -535,11 +521,9 @@ object MiningQueries {
             |  ELSE array() END""".stripMargin).as("gs")), "doc_id")
     }
 
-  /** The corpus MinHash signature table, built FROM [[docShingles]] —
-    * round 14: the signature build previously re-scanned and re-shingled
-    * documents (the one remaining duplicate tokenization in the dedupe
-    * family after d16/t24/d09 unified on the shingle artifact); min-lanes
-    * are duplicate-insensitive so the artifact's distinct arrays yield
+  /** The corpus MinHash signature table, built FROM [[docShingles]] so
+    * the dedupe family tokenizes documents once; min-lanes are
+    * duplicate-insensitive so the artifact's distinct arrays yield
     * byte-identical signatures (DedupeSpec pins the equality). Shared by
     * d01, d09, d27 and d29 — the build ledger charges ONE shingle pass +
     * one signature agg for the whole family. */
@@ -573,8 +557,7 @@ object MiningQueries {
     * 100 TB the basket aggregate would NOT coalesce (output is
     * data-sized) and the explode variant becomes the right shape — this
     * is a bench-scale physical choice, not a semantic one. */
-  /** Round-12 (the r11 verdict's graph-floor item): the co-purchase graph
-    * is ONE persisted artifact shared by the whole g-family — the scaladoc
+  /** The co-purchase graph is ONE persisted artifact shared by the whole g-family — the scaladoc
     * above already says "ONE definition so the queries can never silently
     * analyze different graphs"; this makes the MATERIALIZATION one too.
     * Memoized per (SparkContext application, sf dir, shape tag), exactly
@@ -592,11 +575,11 @@ object MiningQueries {
     // tableRaw, not lineitem(): the first operation is the ok-shuffle of
     // the self-join, so Tables.parallelize's round-robin fan-out would be
     // a pure extra pass over the fact table (measured 1.6 -> 0.7 s for
-    // this build at sf0.1, round 10)
+    // this build at sf0.1)
     val li = tableRaw(s, d, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
     val a = li.select(col("ok"), col("pk").as("u"))
-    // SHUFFLE_HASH, not broadcast (round-9, measured 1.52→0.66 s at
+    // SHUFFLE_HASH, not broadcast (measured 1.52→0.66 s at
     // sf0.1): at bench scale the 600 k-row side slips under the
     // auto-broadcast threshold and the driver builds a 600 k-key hash
     // relation SINGLE-THREADED — half the edge-build cost. The hint is
@@ -615,13 +598,13 @@ object MiningQueries {
     *    self-union — the union shape reads the normalized edge set twice
     *    and only ReuseExchange saves it from running the pair-generation
     *    twice; the explode is guaranteed single-pass.
-    *  - materialized via [[graft.core.Materialize.partitionedCheckpoint]]
-    *    (round 10): the eager checkpoint is taken with AQE briefly off, so
-    *    the LogicalRDD RETAINS HashPartitioning(key) and every per-round
+    *  - materialized via [[graft.core.Materialize.partitionedCheckpoint]]:
+    *    the eager checkpoint is taken with AQE briefly off, so the
+    *    LogicalRDD RETAINS HashPartitioning(key) and every per-round
     *    join/agg keyed on it reads the checkpoint blocks in place with NO
-    *    exchange — the r9 shape repartitioned before an AQE checkpoint,
-    *    which only balanced the blocks (partitioning was lost) and each
-    *    round still re-shuffled the graph side. Plan-pinned in
+    *    exchange — a repartition before an AQE checkpoint only balances
+    *    the blocks (partitioning is lost) and each round would re-shuffle
+    *    the graph side. Plan-pinned in
     *    MaterializeSpec: a keyed consumer reads `Scan ExistingRDD` with no
     *    Exchange above it. */
   private[queries] def doubledEdges(und: DataFrame, key: String): DataFrame =
@@ -645,12 +628,11 @@ object MiningQueries {
   private[queries] def doubledEdgesFused(s: SparkSession, d: String,
       key: String): DataFrame = cachedFrame(s, d, s"dbl_$key") {
     if (key != "u")
-      // Round-13: any non-canonical key DERIVES from the u-keyed artifact
-      // — one edge-sized exchange of the already-deduped frame, instead
-      // of re-running the basket self-join + dedupe per key (the dbl_v
-      // build paid the full chain again; the ArtifactRegistry's per-key
-      // locks make this nested build legal). Same edge set, different
-      // clustering.
+      // any non-canonical key DERIVES from the u-keyed artifact — one
+      // edge-sized exchange of the already-deduped frame, instead of
+      // re-running the basket self-join + dedupe per key (the
+      // ArtifactRegistry's per-key locks make this nested build legal).
+      // Same edge set, different clustering.
       graft.core.Materialize.partitionedCheckpoint(
         doubledEdgesFused(s, d, "u"), key)
     else {
@@ -689,28 +671,26 @@ object MiningQueries {
     * of four (measured 0.83 s → ~0.2 s for the corpus probe at sf0.1). */
   def t24BloomDecontaminate(s: SparkSession, d: String): DataFrame = {
     val m = 1 << 20
-    // Round-10: per-doc shingle dedupe moves INSIDE the row —
-    // array_distinct on the shingle array before any explode. A doc's
-    // shingles all live in its own (pre-explode) row, so the old
-    // corpus-wide distinct() was shuffling ~2M (doc, shingle) rows to
-    // dedupe data that never left its row; now the dedupe is narrow, the
-    // checkpoint materializes per-doc ARRAYS with zero exchanges, and
+    // per-doc shingle dedupe happens INSIDE the row — array_distinct on
+    // the shingle array before any explode. A doc's shingles all live in
+    // its own (pre-explode) row, so a corpus-wide distinct() would
+    // shuffle ~2M (doc, shingle) rows to dedupe data that never left its
+    // row; the dedupe is narrow, the checkpoint materializes per-doc ARRAYS with zero exchanges, and
     // n_shingles falls out as size(gs) instead of a count aggregate.
     val docSh = docShingles(s, d)
       // doc_id-clustered partitioning-retaining ckpt: the probe filter and
       // explode are narrow, so the per-doc candidate aggregate and both
       // final joins inherit the clustering and insert no exchange
     val sh = docSh.select(col("doc_id"), explode(col("gs")).as("g"))
-    // ONE eval-side action (round 13): the distinct eval shingle set is
+    // ONE eval-side action: the distinct eval shingle set is
     // bounded BY CONSTRUCTION (benchmarks are thousands of docs), so it
     // collects once; the Bloom bit table is then folded on the DRIVER
     // with the byte-identical md5 lanes (Spark's md5() is the UTF-8
     // digest hex — same w1/w2 words, same Kirsch–Mitzenmacher positions),
     // and the exact-tier join side is rebuilt as a LocalRelation from the
-    // same array. The r12 shape paid an eager checkpoint job PLUS a
-    // second collect action for bits that are a pure function of strings
-    // already in driver memory.
-    // Round-14 (ADVICE): the collect is CAPPED at m — the limit bounds
+    // same array: the bits are a pure function of strings already in
+    // driver memory, so no checkpoint job or second collect is needed.
+    // The collect is CAPPED at m — the limit bounds
     // the transfer structurally (a runaway eval tier can never OOM the
     // driver), and the require states the design contract: past m
     // distinct shingles the m-bit filter saturates and this tiering is
@@ -721,16 +701,15 @@ object MiningQueries {
     require(evalShArr.length <= m,
       s"t24: eval tier exceeds the $m-bit Bloom capacity — use the " +
         "distributed exact tier (t13) for corpus-scaled eval sets")
-    // Round-10 (unchanged contract): the bit table ships back as ONE
+    // the bit table ships back as ONE
     // array-of-longs literal (m/64 = 16 Ki longs = 128 KiB, bounded no
     // matter how big the eval suite grows — the same move Spark's own
     // runtime Bloom-filter join makes). The corpus probe is a NARROW
     // filter — four md5 lane bits against the literal.
-    // Round-14: ONE digest per shingle. The old filter spelled
-    // md5(g) inside every lane term (up to 8 evaluations per row — CSE
-    // does not rescue it: Catalyst splits the conjunction and re-inlines
+    // ONE digest per shingle. Spelling md5(g) inside every lane term
+    // costs up to 8 evaluations per row — CSE does not rescue it: Catalyst splits the conjunction and re-inlines
     // any Project alias back into the pushed-down predicates, so a
-    // w1/w2 projection is NOT a fix). Moving the digest INSIDE the
+    // w1/w2 projection is NOT a fix. Moving the digest INSIDE the
     // explode's transform makes the generator the optimization barrier:
     // filters on generated output cannot push below the Generate, so the
     // hex is computed exactly once per (doc, shingle) and the lanes are
@@ -782,8 +761,8 @@ object MiningQueries {
       .agg(count(lit(1)).as("n_cand"), count(col("hit")).as("n_exact"))
     // narrow: the per-doc array IS the distinct-shingle set (no aggregate),
     // and docSh already covers EVERY document (built from an unfiltered
-    // scan), so it IS the output spine — the old extra documents re-scan +
-    // left join added a third corpus scan for rows shCnt always had
+    // scan), so it IS the output spine — an extra documents re-scan +
+    // left join would add a third corpus scan for rows shCnt always has
     val shCnt = docSh.filter(col("doc_id") % 97 =!= 0)
       .select(col("doc_id"), size(col("gs")).cast("long").as("n_shingles"))
     shCnt
@@ -812,10 +791,10 @@ object MiningQueries {
     * decontamination shape. Tokenizer identical to d03's (lower, trim,
     * whitespace split). */
   def t13Contamination(s: SparkSession, d: String): DataFrame = {
-    // round 12: reads the shared per-doc distinct-shingle artifact
-    // ([[docShingles]] — same tokenizer, same 3-gram window; the per-doc
-    // array_distinct + explode IS the old explode + global distinct,
-    // since doc_id is part of the key)
+    // reads the shared per-doc distinct-shingle artifact ([[docShingles]]
+    // — same tokenizer, same 3-gram window; the per-doc array_distinct +
+    // explode IS explode + global distinct, since doc_id is part of the
+    // key)
     val sh = docShingles(s, d)
       .select(col("doc_id"), explode(col("gs")).as("g"))
     val evalSet = sh.filter(col("doc_id") % 97 === 0).select(col("g")).distinct()
@@ -964,7 +943,7 @@ object MiningQueries {
     * that must never change results (same contract as q35's salting). */
   def q43BucketedJoin(s: SparkSession, d: String): DataFrame = {
     import graft.sources.Sinks
-    // round 12: the bucketed tables are written ONCE per (application,
+    // the bucketed tables are written ONCE per (application,
     // sf dir) — the query's own scaladoc states the contract ("pay the
     // shuffle ONCE at write time, then every subsequent join on the
     // bucket key is co-located"); re-writing them per invocation timed
@@ -976,7 +955,7 @@ object MiningQueries {
     val dirTag = f"${d.hashCode & 0x7fffffff}%x"
     val (liTbl, oTbl) = (s"graft_b_lineitem_$dirTag", s"graft_b_orders_$dirTag")
     cachedFrame(s, d, "q43_buckets") {
-      // Round-14 build trims: (a) raw scans — the write's first op is the
+      // build trims: (a) raw scans — the write's first op is the
       // bucket-aligned repartition (see writeBucketed), so the fixture
       // fan-out would be a wasted pass (the tableRaw contract); (b) the
       // two INDEPENDENT table writes run concurrently — FAIR scheduling
@@ -1015,17 +994,15 @@ object MiningQueries {
     * computed ONLY for candidate pairs (join through the candidate list,
     * never all-pairs), so the sketch itself bounds the audit's cost. */
   def d09SketchAccuracy(s: SparkSession, d: String): DataFrame = {
-    // round 14: candidates from the SHARED signature artifact (built off
-    // docShingles) — the audit's sketch side and exact side now provably
+    // candidates from the SHARED signature artifact (built off
+    // docShingles) — the audit's sketch side and exact side provably
     // read one tokenization
     val cands = Dedupe.lshPairsFromSignatures(minhashSigShared(s, d),
       minAgree = 0.0)
-    // round 12: the shared docShingles artifact; round 13: the (doc, g)
-    // set is identical BY CONSTRUCTION now that Dedupe.shingles filters
-    // empty tokens like docShingles does (r12's equivalence argument held
-    // only on fixtures without tab/newline-prefixed texts — pinned by
-    // DedupeSpec's whitespace-prefix case); sizes are a narrow projection
-    // of the per-doc arrays, no aggregate
+    // the shared docShingles artifact: the (doc, g) set is identical BY
+    // CONSTRUCTION because Dedupe.shingles filters empty tokens like
+    // docShingles does (pinned by DedupeSpec's whitespace-prefix case);
+    // sizes are a narrow projection of the per-doc arrays, no aggregate
     val sh = docShingles(s, d).select(col("doc_id"), explode(col("gs")).as("g"))
     val sizes = docShingles(s, d)
       .select(col("doc_id"), size(col("gs")).cast("long").as("sz"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables._
 import graft.functions.VectorFunctions.cosineSimilarity
 
-/** Round-8 operations/audit surface: the queries a data-platform team runs
+/** Operations/audit surface: the queries a data-platform team runs
   * ABOUT the pipeline rather than inside it — community-quality scoring of
   * a graph clustering, covariance structure of an embedding space, an
   * algebraic table checksum for verifying 100 TB copies, a small-file
@@ -43,8 +43,8 @@ object OpsQueries {
     * sums exactly so the O(n²) null-model never materializes. */
   def g10Modularity(s: SparkSession, d: String): DataFrame = {
     val und = MiningQueries.coPurchaseEdges(s, d).localCheckpoint(false)
-    // round 10: lpaAssign no longer checkpoints its rounds (they run as
-    // one action), so the THREE consumers below need one lazy
+    // lpaAssign does not checkpoint its rounds (they run as one action),
+    // so the THREE consumers below need one lazy
     // materialization here or each would re-execute the whole fixpoint
     val comm = MiningQueries.lpaAssign(s, d).localCheckpoint(false)
     val deg = und.select(col("u").as("vertex"))
@@ -256,8 +256,7 @@ object OpsQueries {
       .orderBy(col("doc_id"), col("sample_no"))
   }
 
-  /** M19 — REAL VIDEO PIXEL DECODE, end to end (the r16 verdict's round-17
-    * item 1: the last in-sandbox partial): every document materializes as
+  /** M19 — REAL VIDEO PIXEL DECODE, end to end: every document materializes as
     * an MJPEG-in-MP4 whose mdat samples are REAL baseline JPEGs
     * ([[graft.functions.JpegDecoder.jpegGrayBlockBytes]], 16×16 grayscale,
     * four 8×8 blocks, zero-padded to one fixed sample size), frames are
@@ -327,7 +326,7 @@ object OpsQueries {
       // instead of null: explode(null) would drop the whole document
       // silently, contrary to the family's refusal-over-silence
       // discipline — a malformed payload must corrupt the hash, not
-      // vanish (ADVICE r17; unreachable for the internal synthesis)
+      // vanish (unreachable for the internal synthesis)
       }.getOrElse(Seq((-1L, -1, -1, -1L, -1, -1, -1L)))
     }
     documents(s, d)
@@ -539,7 +538,7 @@ object OpsQueries {
     * set for d27's band sweep and the pair source for d28's cross-source
     * overlap matrix. */
   private def shingleJaccardTruth(s: SparkSession, d: String): DataFrame = {
-    // round 12: reads the shared per-doc distinct-shingle artifact
+    // reads the shared per-doc distinct-shingle artifact
     // (MiningQueries.docShingles — identical (doc, sh) set, see d09's
     // equivalence note); sizes become a narrow array-size projection
     val tok = graft.queries.MiningQueries.docShingles(s, d)
@@ -558,7 +557,7 @@ object OpsQueries {
 
   def d27LshTuning(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Dedupe
-    // round 14: the shared signature artifact (docShingles-built) — the
+    // the shared signature artifact (docShingles-built) — the
     // tuning sweep and the d01 production config provably score the SAME
     // signatures
     val sig = MiningQueries.minhashSigShared(s, d)
@@ -830,7 +829,7 @@ object OpsQueries {
     "p04_compaction_plan" -> p04CompactionPlan,
     "q80_holt_forecast" -> q80HoltForecast)
 
-  // empty tokens filtered to match Dedupe.shingles (round 13): trim strips
+  // empty tokens filtered to match Dedupe.shingles: trim strips
   // only spaces, so tab/newline-prefixed text would otherwise shingle a
   // leading "" token on one side only
   private val d2xWords =

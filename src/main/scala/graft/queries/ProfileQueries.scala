@@ -8,7 +8,7 @@ import Shared.normSql
 import graft.operators.Dedupe
 import graft.functions.VectorFunctions.cosineSimilarity
 
-/** Round-8 corpus-profiling surface: the descriptive statistics a
+/** Corpus-profiling surface: the descriptive statistics a
   * pretraining-data team runs BEFORE choosing filters — lexical diversity,
   * sentence-shape stats, readability, character-n-gram language profiles,
   * cross-document repeated-span census, graph link prediction, and vector
@@ -185,41 +185,38 @@ object ProfileQueries {
     * Scale: wedges are generated ONLY from the seed set — seed → neighbor
     * → neighbor-of-neighbor is two equi-joins bounded by |seeds|·deg²,
     * never the all-pairs wedge census; per-seed top-10 is a rank window
-    * with map-side WindowGroupLimit. Round-9 shape fixes: the doubled
-    * edge frame is pre-partitioned on u ([[MiningQueries.doubledEdges]])
-    * so the degree agg, the deg-carry join and the seed hop all reuse ONE
-    * exchange; deg(z) rides along the candidate hop BEFORE wedge
-    * generation (the old plan re-shuffled the wedge-sized frame on z for
-    * the RA lookup); and the existing-edge anti-join runs AFTER the
+    * with map-side WindowGroupLimit. The doubled edge frame is
+    * pre-partitioned on u ([[MiningQueries.doubledEdges]]) so the degree
+    * agg, the deg-carry join and the seed hop all reuse ONE exchange;
+    * deg(z) rides along the candidate hop BEFORE wedge generation (so the
+    * wedge-sized frame is never re-shuffled on z for the RA lookup); and
+    * the existing-edge exclusion runs AFTER wedge generation, at the
     * (seed,cand) aggregate — removing whole groups is equivalent to
-    * removing their rows, at aggregate size instead of wedge size, and
-    * the agg output is already partitioned on the anti-join key. */
+    * removing their rows, at aggregate size instead of wedge size. */
   def g08LinkPrediction(s: SparkSession, d: String): DataFrame = {
     val e = MiningQueries.doubledEdgesFused(s, d, "u")
     val deg = e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
     val ez = e.select(col("u").as("z"), col("v").as("cand"))
       .join(deg.select(col("u").as("z"), col("deg")), Seq("z"))
-    // Scale note (round 12, r11 verdict item): |seeds| = |part|/200 grows
-    // linearly with the catalog, so the old unconditional broadcast() hint
-    // was a bench-scale choice baked into code. Dropped: AQE sees the
-    // seed frame's RUNTIME size and broadcasts it while it is small,
-    // and degrades to a shuffle join when a production catalog outgrows
-    // the threshold — the 100 TB posture is now the code's default, not a
-    // comment (measured at sf0.1: AQE broadcasts it; no wall change).
+    // Scale note: |seeds| = |part|/200 grows linearly with the catalog,
+    // so an unconditional broadcast() hint would be a bench-scale choice
+    // baked into code. No hint: AQE sees the seed frame's RUNTIME size
+    // and broadcasts it while it is small, and degrades to a shuffle join
+    // when a production catalog outgrows the threshold (measured at
+    // sf0.1: AQE broadcasts it).
     val seeds = part(s, d).filter(col("p_partkey") % 200 === 0)
       .select(col("p_partkey").as("seed"))
     val hop1 = e.join(seeds, e("u") === seeds("seed"))
       .select(col("seed"), col("v").as("z"))
       .localCheckpoint(false) // wedge join + adjacency rows both read it
     val wedges = hop1.join(ez, Seq("z")).filter(col("cand") =!= col("seed"))
-    // Round-13 (the r12 verdict's named lever): the existing-edge
-    // anti-join folds INTO the wedge aggregate — hop1's rows ARE the
-    // seed-adjacency pairs, so they ride the same union as the wedge
-    // rows with an is_edge flag (g11's teleport-fold shape) and one
-    // groupBy(seed, cand) yields cn, ra AND adjacency; the post-agg
-    // left_anti shuffle join is gone. Identical integers: a kept group
+    // the existing-edge anti-join folds INTO the wedge aggregate — hop1's
+    // rows ARE the seed-adjacency pairs, so they ride the same union as
+    // the wedge rows with an is_edge flag (g11's teleport-fold shape) and
+    // one groupBy(seed, cand) yields cn, ra AND adjacency, with no
+    // post-agg left_anti shuffle join. Identical integers: a kept group
     // contains only wedge rows (any adjacency row flips max(is_edge)
-    // and drops the group, exactly the old anti-join).
+    // and drops the group, exactly an anti-join).
     val nonAdj = wedges
       .select(col("seed"), col("cand"), col("deg"), lit(0).as("is_edge"))
       .unionByName(hop1.select(col("seed"), col("z").as("cand"),
@@ -247,12 +244,11 @@ object ProfileQueries {
     * PREVIOUS iterate — power iteration on the symmetric block matrix
     * [[0,E],[Eᵀ,0]], the parallel formulation of Kleinberg's I/O
     * operations) run UN-normalized in BIGINT, with ONE truncating
-    * normalization of each side to 10⁶ at the end (the round-11
-    * no-per-round-truncation rule, unchanged). Round-13 redefinition
-    * (oracle + spec in lockstep, like round 11's): the alternating
-    * Gauss-Seidel form keyed every half-round by the OTHER side, so the
-    * edge frame re-shuffled 6 times and the lineage was 6 sequential
-    * join+agg stages; the simultaneous form keys EVERY round by the same
+    * normalization of each side to 10⁶ at the end (no per-round
+    * truncation). The alternating Gauss-Seidel form keys every
+    * half-round by the OTHER side, so the edge frame would re-shuffle 6
+    * times over 6 sequential join+agg stages; the simultaneous form
+    * (oracle + spec in lockstep) keys EVERY round by the same
     * (side, vertex) composite over a doubled edge frame, so the edges
     * shuffle ONCE at build and a round is ONE union-keyed join+agg —
     * 3 rounds, half the sequential depth. Both are textbook HITS; the
@@ -264,7 +260,7 @@ object ProfileQueries {
     * authorities at scale 10⁶, ranked by raw integer score.
     *
     * Headroom scope: each round multiplies magnitudes by ~avg-degree;
-    * 3 rounds of degree products (vs the old form's 5/6) sit ~10¹³ at
+    * 3 rounds of degree products (vs the alternating form's 5/6) sit ~10¹³ at
     * sf0.1 — 10⁵× BIGINT headroom. The sums widen to DECIMAL(38,0)
     * (dq10's discipline) when degree³ approaches 2⁶³ — the named widen
     * path; the shape is size-independent.
@@ -304,8 +300,7 @@ object ProfileQueries {
     var sc = ed.groupBy(col("dside"), col("dst"))
       .agg(count(lit(1)).as("s"))
       .select(col("dside").as("sside"), col("dst").as("src"), col("s"))
-    // r19 (the r18 verdict's item-4 g09 attempt, the g04/g07 posture):
-    // the score side rides a shuffle_hash hint — each round's agg output
+    // the g04/g07 posture: the score side rides a shuffle_hash hint — each round's agg output
     // is HashPartitioning(dside,dst), the alias-aware rename makes it
     // (sside,src), so the hinted SHJ reads BOTH sides co-partitioned with
     // ZERO exchange and no sorts (hint-free static planning would SMJ and
@@ -329,15 +324,14 @@ object ProfileQueries {
         col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
       .distinct()
-    // r19 static fixpoint (r18 verdict item 4; the g05/g04/g11 pattern):
-    // the lazy static checkpoint of the vertex-sized score frame plans the
+    // static fixpoint (the g05/g04/g11 pattern): the lazy static checkpoint of the vertex-sized score frame plans the
     // 3 simultaneous rounds (one co-partitioned SHJ + one union-keyed agg
     // each, see simultaneousHits) with AQE off — ONE static job instead of
     // a fan of per-stage adaptive jobs — and feeds both per-side
-    // TakeOrdereds. Plan-only: operators and integers untouched.
+    // TakeOrdereds.
     val fin = graft.core.Materialize.staticCheckpoint(
       simultaneousHits(e, rounds = 3), eager = false)
-    // per-side max folded into TakeOrdered (round 12): score = s·10⁶ div
+    // per-side max folded into TakeOrdered: score = s·10⁶ div
     // max(s) is monotone in s, so the top-20 by raw s already contains
     // the max as its first row; normalization is a 40-row window.
     def top(side: String, kind: String): DataFrame =
@@ -480,25 +474,18 @@ object ProfileQueries {
     * Composes t07's split with d26's shingle primitive; reports, per
     * split pair, how many distinct 8-gram spans cross it.
     *
-    * Scale (r15 redesign — the r14 verdict's top mechanical perf-weak at
-    * 1.54 s / 3.8×): a gram's split incidence is ≤ 3 BITS, so the old
-    * distinct (split, gram) → gram-keyed self-join → two-phase
-    * countDistinct pair aggregate collapses into ONE map-combinable
+    * Scale: a gram's split incidence is ≤ 3 BITS, so a distinct
+    * (split, gram) → gram-keyed self-join → two-phase countDistinct pair
+    * aggregate collapses into ONE map-combinable
     * `bit_or` aggregate on the gram key plus a ≤ 7-row mask rollup. A
     * distinct gram contributes 1 to crossing pair (a,b) iff its mask
-    * holds both bits — exactly the old countDistinct per pair, row-for-
-    * row identical. Exchanges: one data-sized (gram-keyed partial
-    * bit_or) vs the old distinct exchange + join re-cluster + the
-    * countDistinct expansion; the self-join is gone entirely. At 100 TB
-    * this is strictly an aggregation problem, like d26. Measured (r15,
-    * BenchOne min-of-2 at sf0.1): 0.93/1.06 s across two sessions, 8
-    * jobs — from the r14 driver's 1.54 s / 12-job join shape.
-    *
-    * Prior measured rejection (r14, kept for the record): lazy-ckpt'ing
-    * the gram frame before the then-self-join was a WASH at sf0.1
-    * (min-of-2 pairs 4.93/5.01 vs 4.73/5.30, identical rows) — AQE's
-    * runtime exchange reuse already covered the equi-self-join's two
-    * sides. Superseded by removing the join altogether. */
+    * holds both bits — exactly the countDistinct per pair, row-for-row
+    * identical. Exchanges: one data-sized (gram-keyed partial bit_or) vs
+    * the self-join shape's distinct exchange + join re-cluster + the
+    * countDistinct expansion. At 100 TB this is strictly an aggregation
+    * problem, like d26. Measured (BenchOne min-of-2 at sf0.1): 0.93/1.06 s
+    * across two sessions, 8 jobs — vs 1.54 s / 12 jobs for the join
+    * shape. */
   def dq08SplitLeakage(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Sampling
     val masks = documents(s, d)
@@ -509,7 +496,7 @@ object ProfileQueries {
       .groupBy(col("gram")).agg(expr("bit_or(bit)").as("mask"))
       .groupBy(col("mask")).agg(count(lit(1)).as("n"))
     // pair labels ordered a < b lexicographically (test < train < val),
-    // matching the old a.split < b.split join predicate
+    // the a.split < b.split order of the pairwise definition
     masks
       .select(col("n"), explode(expr(
         """filter(array(
@@ -1054,12 +1041,12 @@ object ProfileQueries {
          SELECT seed, CAST(rn AS BIGINT) AS rank, cand AS predicted, cn, ra_bp
          FROM ranked WHERE rn <= 10 ORDER BY seed, rank""",
     "g09_hits" -> {
-      // 3 un-normalized exact-integer SIMULTANEOUS rounds (round-13
-      // redefinition, engine in lockstep): aK from h(K-1) AND hK from
+      // 3 un-normalized exact-integer SIMULTANEOUS rounds (engine in
+      // lockstep): aK from h(K-1) AND hK from
       // a(K-1) — power iteration on the block matrix [[0,E],[E^T,0]];
       // all-ones seeds on both sides make round 1 the per-side degree.
-      // One truncating 10^6 normalization per side at the end (round-11
-      // rule, unchanged). MATERIALIZED hints: each round frame feeds the
+      // One truncating 10^6 normalization per side at the end.
+      // MATERIALIZED hints: each round frame feeds the
       // next join; without them DuckDB re-inlines the whole prefix per
       // reference (measured 38 s -> 0.3 s at sf0.1).
       s"""WITH e AS MATERIALIZED (

@@ -9,7 +9,7 @@ import graft.operators.{Dedupe, GlobalRank}
 import graft.plans.SampledGramHashes
 import graft.plans.VectorExpressions.dotProduct
 
-/** Round-11 data-selection / physical-layout decision surface: the queries
+/** Data-selection / physical-layout decision surface: the queries
   * that decide WHICH data enters a training run and HOW it should be laid
   * out on disk — importance-weighted selection (DSIR), sample-based
   * approximate query answers with measured error, the min-max data-skipping
@@ -64,9 +64,9 @@ object SelectionQueries {
     * no-broadcast rule does not apply: hashing fixes the domain); top-25
     * is TakeOrdered, never a global sort. */
   def t41DsirWeights(s: SparkSession, d: String): DataFrame = {
-    // Round-12: the old shape aggregated (doc, bucket) counts first —
-    // a ~features-sized exchange with weak map-side combine (docs×256
-    // keys) — but neither consumer needs that granularity up front: the
+    // no (doc, bucket) count aggregate up front — that would be a
+    // ~features-sized exchange with weak map-side combine (docs×256
+    // keys), and neither consumer needs that granularity: the
     // bucket model is a 256-row agg straight over the features (strong
     // map-side combine), and the score is Σ_f w(b(f)) = Σ_b c·w(b), so
     // the per-doc agg collapses to one row per doc. Identical integers,
@@ -78,18 +78,17 @@ object SelectionQueries {
           Dedupe.shingles(col("text"), 2))).as("f"))
       .select(col("doc_id"), col("source"), col("lang"),
         (Dedupe.md5Hash32(col("f")) % B).as("b"))
-    // Round-16 (the r15 verdict's own lever, A/B'd): the bucket model is
+    // the bucket model is
     // 256 rows BY CONSTRUCTION, so it comes to the DRIVER and the
-    // weights go back as a 256-entry ARRAY LITERAL — the totals agg, the
-    // 256-row checkpoint, the crossJoin and the broadcast score join
-    // collapse into one bounded collect + a codegen'd element_at
-    // projection inside the score pass. With the join gone, the
-    // features-sized localCheckpoint lost its A/B too: re-running the
-    // tokenize kernel in both passes is CHEAPER than materializing the
-    // feature frame (BenchOne min-of-2 pairs, quiet r16 window, sf0.1 —
-    // old shape 2.57/1.52 s 9 jobs; literal+checkpoint 2.09/1.34 s 6
-    // jobs; literal+recompute 1.35/1.28 s 7 jobs, and the ~0.7 s
-    // first-session ckpt write is gone). The driver replicates ilog16 in
+    // weights go back as a 256-entry ARRAY LITERAL — one bounded collect
+    // + a codegen'd element_at projection inside the score pass instead
+    // of a totals agg, a 256-row checkpoint, a crossJoin and a broadcast
+    // score join. Without the join, re-running the tokenize kernel in
+    // both passes is CHEAPER than materializing the feature frame
+    // (BenchOne min-of-2 pairs, quiet host, sf0.1 — join shape
+    // 2.57/1.52 s 9 jobs; literal+checkpoint 2.09/1.34 s 6 jobs;
+    // literal+recompute 1.35/1.28 s 7 jobs, with no ~0.7 s
+    // first-session ckpt write). The driver replicates ilog16 in
     // the same exact Long arithmetic the SQL spelling uses (floor-log2
     // via numberOfLeadingZeros ≡ length(bin(x))-1; `/` on non-negative
     // Longs ≡ SQL div; x·16 fits BIGINT for x < 2^59, the documented
@@ -187,18 +186,17 @@ object SelectionQueries {
     val clustered = GlobalRank
       .withGlobalRank(base, Seq(col("sz"), col("doc_id")), "rank")
       .withColumn("file", expr("(rank - 1) div 64")).drop("rank")
-    // r18 (guide §2.3 — aggregate before you shuffle): the matched-row
+    // aggregate before you shuffle: the matched-row
     // counts ride the SAME per-file aggregate as the min-max stats, one
     // conditional sum per threshold, instead of replicating the DATA 3×
     // through a grid crossJoin + second (file, threshold) aggregate +
-    // join-back. The threshold grid now replicates only the file-sized
-    // stats frame, `df` has exactly ONE consumer (the clustered layout's
-    // GlobalRank range shuffle previously ran twice), and the per-layout
-    // plan drops from two data passes + join to one pass. Same integers:
-    // Σ_file count(sz ≥ t in file) == the old per-(file,threshold) agg
-    // summed with its null-coalesce. Measured 0.765 → 0.609 s min-of-2 /
-    // 20 → 15 jobs, same BenchOne session at sf0.1; oracle hash unchanged
-    // (compare.py). Plan diff committed in plans/r18/.
+    // join-back. The threshold grid replicates only the file-sized stats
+    // frame, `df` has exactly ONE consumer (so the clustered layout's
+    // GlobalRank range shuffle runs once), and each layout is one data
+    // pass. Same integers: Σ_file count(sz ≥ t in file) == a
+    // per-(file,threshold) agg summed with its null-coalesce. Measured
+    // 0.765 → 0.609 s min-of-2 / 20 → 15 jobs against the grid shape,
+    // same BenchOne session at sf0.1.
     def audit(layout: String, df: DataFrame): DataFrame =
       df.groupBy(col("file"))
         .agg(count(lit(1)).as("cnt"),
@@ -473,13 +471,12 @@ object SelectionQueries {
     * checkpoint needed because round N+1's assignment re-reads only the
     * original quantized frame (materialized once) and k·dim literals,
     * never round N's lineage. */
-  /** Round-12 (the r11 verdict's Lloyd-floor item): the fitted clustering
+  /** The fitted clustering
     * is a BUILD artifact, not per-query work — exactly the s03/LanceDB
     * index lifecycle (train offline once, persist, every downstream pass
     * reads the persisted assignment). s16 (the audit report) and s17 (the
-    * D4 prune) both consume the SAME fit; re-running 3 Lloyd rounds per
-    * query was the honest-but-wasteful stand-in for reading the persisted
-    * artifact. Memoized per (SparkContext application, sf dir) with the
+    * D4 prune) both consume the SAME fit instead of re-running 3 Lloyd
+    * rounds per query. Memoized per (SparkContext application, sf dir) with the
     * final assignment eagerly checkpointed — the in-session equivalent of
     * the parquet the build job would leave next to the vector table. */
   private def kmFit(s: SparkSession, d: String): (DataFrame, Array[(Int, Array[Double])]) =
@@ -881,7 +878,7 @@ object SelectionQueries {
     * hash. margin = c·2/(ax+ay) and the ·1000 floors are then
     * deterministic on identical doubles.
     *
-    * CANDIDATE GATE (round 12 — the declared semantics): pairs are
+    * CANDIDATE GATE (the declared semantics): pairs are
     * generated through the s02 sign-LSH index — an en/de doc pair is a
     * candidate iff it collides in ANY of the 4 hash tables (3 seeded
     * hyperplane signs each, seeds 42..45, Similarity.lshTables — the
@@ -899,7 +896,7 @@ object SelectionQueries {
     * IVF to exploit), so the exact cross join is the only formulation
     * that reproduces itself, and it is quadratic. The spec measures what
     * the gate keeps (pair-cosine equality with the exact frame; top-20
-    * overlap floor) on the fixture. Round-13 config-robustness sweep
+    * overlap floor) on the fixture. Config-robustness sweep
     * (SelectionQueriesSpec "s19 gate robustness", 3 configs × 2 regimes):
     * isotropic fixture 4×3 → frac .42/ret 9/20, 8×3 → .66/17, 8×4 →
     * .42/10; clustered synthetic bitext 4×3 → .65/19, 8×3 → .81/20,

@@ -6,7 +6,7 @@ import graft.core.Tables._
 import Shared.cachedFrame
 import graft.operators.Dedupe
 
-/** Round-7 sketch surface: streaming-friendly approximate aggregates with
+/** Sketch surface: streaming-friendly approximate aggregates with
   * EXACT integer evaluation so the DuckDB oracle hash-matches bit for bit.
   *
   * Both sketches follow the d01/d02 hashing discipline: md5-prefix integer
@@ -285,35 +285,27 @@ object SketchQueries {
     * overlap audit a dedupe pipeline runs before merging sources. */
   def d15HllSetops(s: SparkSession, d: String): DataFrame = {
     val m = 256
-    // Round-10 fusion: ONE key shuffle feeds EVERYTHING. The old shape ran
-    // two full passes over lineitem (a per-row md5 pass into an eagerly
-    // checkpointed register table, then a separate per-key pass for the
-    // exact counts). Now the per-key side-flag aggregate is computed
-    // first, the md5/bucket/rho are derived ONCE PER DISTINCT KEY (rho is
-    // a function of the key — hashing every duplicate row was wasted
-    // work), and both the three register columns (A/B/union as
-    // conditional maxes in a single 256-row agg) and the three exact
-    // counts read that one aggregate (via the round-13 checkpoint below —
-    // the original "AQE stage reuse dedupes the exchange" claim was
-    // FALSE in practice, see the ckpt note). Raw scan: the first op
-    // is the key shuffle, so the fixture fan-out would be a wasted pass.
+    // ONE key shuffle feeds EVERYTHING: the per-key side-flag aggregate
+    // is computed first, the md5/bucket/rho are derived ONCE PER DISTINCT
+    // KEY (rho is a function of the key — hashing every duplicate row
+    // would be wasted work), and both the three register columns (A/B/
+    // union as conditional maxes in a single 256-row agg) and the three
+    // exact counts read that one aggregate. Raw scan: the first op is the
+    // key shuffle, so the fixture fan-out would be a wasted pass.
     // the dedupe shuffle ships the two BIGINT key halves, not the concat
-    // string (round 13) — w is a function of the group key, so building
-    // it after the aggregate is free and the exchange rows shrink
+    // string — w is a function of the group key, so building it after
+    // the aggregate is free and the exchange rows shrink
     val keyed = tableRaw(s, d, "lineitem").select(
       when(col("l_linenumber") % 2 === 1, lit("A")).otherwise(lit("B")).as("side"),
       col("l_partkey"), col("l_suppkey"))
-    // Round-16 (the d15 lever, after quiet-window pairs still read 3.4×):
-    // the r13 lazy checkpoint existed because the register chain AND the
-    // exact-count agg both consumed base — but the exact counts are SUMS
-    // over distinct keys, so they can ride the register aggregate as
-    // per-bucket partial counts (sum(ia)/sum(ib)/count per bucket, then
-    // re-summed in the 1-row agg: Σ_bucket Σ_keys ≡ Σ_keys exactly, all
-    // integer). With the second consumer gone, the checkpoint AND the
-    // crossJoin go too — ONE linear pipeline: scan → dedupe agg →
-    // md5/rho project → 256-row agg → 1-row agg. Measured (BenchOne
-    // min-of-2 pairs, r16, same host as the 1.40/1.43 readings):
-    // 7 → 5 jobs, 1.40 → 0.99/1.13 s; hashes unchanged.
+    // the exact counts are SUMS over distinct keys, so they ride the
+    // register aggregate as per-bucket partial counts (sum(ia)/sum(ib)/
+    // count per bucket, then re-summed in the 1-row agg: Σ_bucket Σ_keys
+    // ≡ Σ_keys exactly, all integer). base has ONE consumer, so it needs
+    // no checkpoint and no crossJoin — ONE linear pipeline: scan → dedupe
+    // agg → md5/rho project → 256-row agg → 1-row agg. Measured (BenchOne
+    // min-of-2 pairs at sf0.1) against a checkpointed two-consumer base:
+    // 7 → 5 jobs, 1.40 → 0.99/1.13 s.
     val base = keyed.groupBy(col("l_partkey"), col("l_suppkey")).agg(
       max(when(col("side") === "A", 1L).otherwise(0L)).as("ia"),
       max(when(col("side") === "B", 1L).otherwise(0L)).as("ib"))
@@ -327,9 +319,9 @@ object SketchQueries {
           .otherwise(lit(33) - length(bin(col("wd")))).as("rho"))
     // one ≤ m-row register table carrying all three registers: side
     // registers as conditional maxes (null = bucket unobserved for that
-    // side, exactly the old per-side register-row absence), union as the
-    // plain max — identical to merging the old per-side tables by max —
-    // plus the exact-count partials (r16) so no second pass exists
+    // side, exactly a per-side register-row absence), union as the
+    // plain max — identical to merging per-side tables by max —
+    // plus the exact-count partials so no second pass exists
     val regs = rhoed.groupBy(col("bucket")).agg(
       max(when(col("ia") === 1, col("rho"))).as("ra"),
       max(when(col("ib") === 1, col("rho"))).as("rb"),
@@ -349,7 +341,7 @@ object SketchQueries {
         sum(expr("shiftleft(CAST(1 AS BIGINT), 32 - ru)")).as("spu"),
         count(lit(1)).as("nbu"),
         // coalesce: on an EMPTY lineitem regs has no rows and these sums
-        // go null — the old direct count over base read 0 there
+        // go null — a direct count over base would read 0 there
         coalesce(sum(col("ca")), lit(0L)).as("exact_a"),
         coalesce(sum(col("cb")), lit(0L)).as("exact_b"),
         coalesce(sum(col("cu")), lit(0L)).as("exact_union"))
@@ -450,11 +442,11 @@ object SketchQueries {
     * Keys: (part, supplier) pairs by ship month (d15's high-cardinality
     * stream, per the d11 raw-regime lesson). Same scaled-BIGINT
     * estimator as d11. */
-  /** Round-12: the month-keyed distinct (month, part#supp) base and its
+  /** The month-keyed distinct (month, part#supp) base and its
     * per-(month, bucket) max-rho REGISTER TABLE are ONE persisted artifact
-    * shared by d19 and d20 — d20's own scaladoc has said since round 10
-    * that it answers "the OTHER dashboard shape" of d19's register table;
-    * now the two dashboards read the same materialization. Both month
+    * shared by d19 and d20 — d20 answers "the OTHER dashboard shape" of
+    * d19's register table, so the two dashboards read the same
+    * materialization. Both month
     * encodings ride along (ym = y·100+m for d19's calendar axis,
     * mi = y·12+m for d20's LINEAR sliding axis — bijective, so the
     * distinct/dedupe keys are equivalent). Memoized per (application,
@@ -491,9 +483,8 @@ object SketchQueries {
     import org.apache.spark.sql.expressions.Window
     val base = monthKeyBase(s, d)
     val regs = monthRegs(s, d).select(col("ym"), col("bucket"), col("r"))
-    // Round-12 fusion (the r11 verdict's HLL-grid-floor item): the dense
-    // months×buckets grid + carry-forward window + per-month agg is
-    // replaced by REGISTER-CHANGE DELTAS — the cumulative estimator's sum
+    // REGISTER-CHANGE DELTAS instead of a dense months×buckets grid +
+    // carry-forward window + per-month agg — the cumulative estimator's sum
     // Σ_b 2^(32−rc(b,M)) only moves when some bucket's running max moves,
     // so each regs row contributes d_sp = 2^(32−r) − 2^(32−prev) (prev =
     // running max of its bucket over earlier months, 0-contribution rows
@@ -558,15 +549,14 @@ object SketchQueries {
     // same register table, read through the LINEAR mi axis
     val li = monthKeyBase(s, d).select(col("mi"), col("w"))
     val regs = monthRegs(s, d).select(col("mi"), col("bucket"), col("r"))
-    // Round-12 fusion (the r11 verdict's HLL-grid-floor item): the dense
-    // month spine + carry-forward window is replaced by EXPLODE-TO-
-    // TARGETS — a register row at month mi serves exactly the windows
+    // EXPLODE-TO-TARGETS instead of a dense month spine + carry-forward
+    // window — a register row at month mi serves exactly the windows
     // ending at mi, mi+1, mi+2, so the bounded window max is a plain
     // (target, bucket) max agg over the 3×-exploded regs frame. The month
     // axis stays a LINEAR index (year·12 + month) and the trailing-3
     // semantics stays CALENDAR-dense by construction: a target month with
-    // no register in its trailing window simply has no rows (the old grid
-    // produced rw = NULL there and filtered it — same output set). Only
+    // no register in its trailing window simply has no rows (a dense grid
+    // would produce rw = NULL there and filter it — same output set). Only
     // targets hanging PAST the last real month need trimming, done with a
     // global max over the ~|months| agg frame ('real' marks offset-0
     // rows). Kills the spine agg + explode + broadcast grid join + window
@@ -716,21 +706,19 @@ object SketchQueries {
     import org.apache.spark.sql.expressions.Window
     val k = 256
     val kmConst = 255L * 1099511627776L // (k−1)·2^40 = 280375465082880
-    // Round-17 fold (the d15 partial-counts discipline, r16 verdict item
-    // 4): the old shape eagerly checkpointed the DATA-sized (grp, w)
-    // projection solely so the exact audit could re-read it, ran a second
-    // distinct for the ALL row, and paid a separate two-phase
-    // count_distinct — three data-sized passes. Both consumers only ever
+    // the d15 partial-counts discipline: eagerly checkpointing the
+    // DATA-sized (grp, w) projection for the exact audit, a second
+    // distinct for the ALL row and a separate two-phase count_distinct
+    // would be three data-sized passes. Both consumers only ever
     // need the DISTINCT (grp, w) groups, and the ALL row needs distinct
     // (w): ONE rollup aggregate computes both group sets in a single
     // Expand + hash-agg scan of orders (grand-total row filtered via
     // grouping()), and the sketch AND the audit ride that distinct-keys-
-    // sized frame. Hashes unchanged: the (grp, h) DISTINCT feeding the
-    // rank window is the same set as before (collision collapse preserved
-    // by the same .distinct()), and exact_distinct = count over distinct
-    // (grp, w) groups ≡ count_distinct(w). Measured same-window A/B at
-    // sf0.1 (BenchOne min-of-2): old 1.57 s / 13 jobs → new 1.06-1.09 s /
-    // 10 jobs; hash-identical (compare.py, r17).
+    // sized frame. The (grp, h) DISTINCT feeding the rank window keeps
+    // the collision collapse (.distinct()), and exact_distinct = count
+    // over distinct (grp, w) groups ≡ count_distinct(w). Measured
+    // same-window A/B at sf0.1 (BenchOne min-of-2): three-pass shape
+    // 1.57 s / 13 jobs → 1.06-1.09 s / 10 jobs.
     val groups = orders(s, d)
       .select(col("o_orderpriority").as("g"), col("o_custkey").cast("string").as("w"))
       .rollup(col("w"), col("g"))
@@ -790,21 +778,19 @@ object SketchQueries {
     import org.apache.spark.sql.expressions.Window
     val k = 256
     val kmConst = 255L * 1099511627776L // (k−1)·2^40
-    // Round-17 fold (the d15 partial-counts discipline, r16 verdict item
-    // 4): the old shape eagerly checkpointed the DATA-sized (side, w)
-    // projection solely so the exact audit could re-read it. Both
+    // the d15 partial-counts discipline: no eager checkpoint of the
+    // DATA-sized (side, w) projection for the exact audit. Both
     // consumers only ever need the distinct keys WITH their side flags —
     // exactly one groupBy(w) max-flag aggregate: the exact audit is its
     // 1-row roll-up, and the per-side hash stream is a filtered explode
     // of the same frame (the per-side DISTINCT that feeds the rank
-    // windows is the same (side, h) set as before — collision collapse
-    // preserved by the same .distinct()). Measured same-window A/B at
-    // sf0.1 (BenchOne min-of-2, two pairs): old 0.95 s / 13 jobs → new
-    // 1.00-1.15 s / 12 jobs — a WALL-CLOCK WASH at this SF (the flags agg
-    // now serializes both branches), kept anyway for the scale shape: the
-    // old form eagerly persisted the DATA-sized projection in the block
-    // manager solely for the audit; the new one shuffles data once into a
-    // lazy distinct-keys-sized frame. Hash-identical (compare.py, r17).
+    // windows keeps the collision collapse (.distinct())). Measured
+    // same-window A/B at sf0.1 (BenchOne min-of-2, two pairs): checkpoint
+    // shape 0.95 s / 13 jobs → 1.00-1.15 s / 12 jobs — a WALL-CLOCK WASH
+    // at this SF (the flags agg serializes both branches), kept for the
+    // scale shape: data shuffles once into a lazy distinct-keys-sized
+    // frame instead of persisting the DATA-sized projection in the block
+    // manager solely for the audit.
     val flags = orders(s, d)
       .filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
       .select(when(col("o_orderpriority") === "1-URGENT", lit("A"))

@@ -112,57 +112,3 @@ object BpeProps extends Properties("BpeTokenizer") {
       a >= 0 && a == BpeTokenizer.countTokens(t)
     }
 }
-
-/** r15: the streaming interchange layer's pure-function invariants —
-  * TFRecord framing and WARC record framing round-trip arbitrary
-  * payloads through the streaming decoders (the example-based specs pin
-  * formats; these pin the codec algebra over the full input space,
-  * including empty payloads and block-boundary sizes). */
-object InterchangeProps extends Properties("Interchange") {
-
-  private val payloadGen: Gen[Array[Byte]] =
-    Gen.chooseNum(0, 3000).flatMap(n => Gen.listOfN(n, Gen.chooseNum(-128, 127))
-      .map(_.map(_.toByte).toArray))
-  private val payloadsGen: Gen[List[Array[Byte]]] =
-    Gen.chooseNum(0, 12).flatMap(n => Gen.listOfN(n, payloadGen))
-
-  property("TFRecord frame -> unframeStream is identity (any sizes, incl. 0)") =
-    forAll(payloadsGen) { ps =>
-      val framed = graft.sources.TfRecord.frame(ps.iterator)
-      val back = graft.sources.TfRecord
-        .unframeStream(new java.io.ByteArrayInputStream(framed)).toList
-      back.size == ps.size &&
-        back.zip(ps).forall { case (a, b) => java.util.Arrays.equals(a, b) }
-    }
-
-  property("TFRecord: flipping any single byte never yields MORE records") =
-    forAll(payloadsGen.suchThat(_.nonEmpty), Gen.chooseNum(0, Int.MaxValue)) { (ps, seed) =>
-      val framed = graft.sources.TfRecord.frame(ps.iterator)
-      val i = seed % framed.length
-      val mutated = framed.clone(); mutated(i) = (mutated(i) ^ 0x5a).toByte
-      graft.sources.TfRecord
-        .unframeStream(new java.io.ByteArrayInputStream(mutated)).size <= ps.size
-    }
-
-  private val uriSafeGen: Gen[String] =
-    Gen.chooseNum(1, 40).flatMap(n => Gen.listOfN(n,
-      Gen.oneOf(Gen.alphaNumChar, Gen.oneOf(':', '/', '.', '-', '_'))).map(_.mkString))
-  private val bodyGen: Gen[Array[Byte]] =
-    Gen.chooseNum(0, 2000).flatMap(n => Gen.listOfN(n, Gen.chooseNum(-128, 127))
-      .map(_.map(_.toByte).toArray))
-
-  property("WARC: synthesized records parse back exactly (uri, body bytes, count)") =
-    forAll(Gen.chooseNum(0, 8).flatMap(n =>
-      Gen.listOfN(n, Gen.zip(uriSafeGen, bodyGen)))) { recs =>
-      val bytes = recs.flatMap { case (uri, body) =>
-        (s"WARC/1.0\r\nWARC-Type: resource\r\nWARC-Target-URI: <$uri>\r\n" +
-          s"Content-Length: ${body.length}\r\n\r\n").getBytes("ISO-8859-1") ++
-          body ++ "\r\n\r\n".getBytes("ISO-8859-1")
-      }.toArray
-      val rows = graft.sources.WarcReader.parse(bytes)
-      rows.size == recs.size &&
-        rows.zip(recs).forall { case (r, (uri, body)) =>
-          r.target_uri == uri && java.util.Arrays.equals(r.body, body)
-        }
-    }
-}

@@ -108,4 +108,36 @@ class StreamingSpec extends SparkSpec {
         "the streaming checkpoint must be dropped when the run returns")
     }
   }
+
+  test("parity results are bound to the caller's session") {
+    import graft.streaming.StreamParity
+    val events = sf() + "/events.parquet"
+    val results = Seq(
+      "finalWindowCounts" -> StreamParity.finalWindowCounts(spark, events),
+      "finalSessions" -> StreamParity.finalSessions(spark, events),
+      "staticJoinWindowCounts" -> StreamParity.staticJoinWindowCounts(spark, events),
+      "streamStreamIntervalJoin" -> StreamParity.streamStreamIntervalJoin(spark, events),
+      "dedupeWithCounts" -> StreamParity.dedupeWithCounts(spark, sf() + "/documents.parquet"),
+      "cdcMergeUpserts" -> StreamParity.cdcMergeUpserts(spark, events, 2))
+    for ((name, df) <- results)
+      assert(df.sparkSession eq spark, s"$name returned a frame owned by another session")
+  }
+
+  test("a shuffle over a parity result uses the caller's partition count") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.col
+    import graft.streaming.StreamParity
+    // 7, not the run-to-completion sibling's 4; a sibling caller keeps
+    // the shared session's conf untouched
+    val caller = graft.core.GraftSession.sibling(spark, "spark.sql.shuffle.partitions" -> "7")
+    val counts = StreamParity.finalWindowCounts(caller, sf() + "/events.parquet")
+      .groupBy(col("event_type")).count()
+    val plan = counts.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val parts = plan.collect { case e: ShuffleExchangeExec => e.outputPartitioning.numPartitions }
+    assert(parts == Seq(7), s"downstream exchange not planned with the caller's conf:\n$plan")
+  }
 }
