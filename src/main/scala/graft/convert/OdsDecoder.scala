@@ -42,7 +42,7 @@ object OdsDecoder {
     * (zip-bomb guard for [[readZip]]'s eager buffering). */
   private val MaxZipBytes = 256L * 1024 * 1024
 
-  private final class Oversized extends RuntimeException("ods decode budget exceeded")
+  private final class Oversized extends RuntimeException("spreadsheet decode budget exceeded")
 
   private final class CellBudget(private var remaining: Long) {
     def charge(n: Long): Unit = {
@@ -51,7 +51,9 @@ object OdsDecoder {
     }
   }
 
-  private def parseXml(bytes: Array[Byte]): Document = {
+  /** Namespace-aware DOM parse of one workbook part. Parts are untrusted
+    * input: no DTDs, no external entities. */
+  private[convert] def parseXml(bytes: Array[Byte]): Document = {
     val f = DocumentBuilderFactory.newInstance()
     f.setNamespaceAware(true)
     f.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
@@ -70,6 +72,8 @@ object OdsDecoder {
       .getOrElse(zipEntries.contains("content.xml") &&
         !zipEntries.contains("xl/workbook.xml"))
 
+  /** Every file entry of a ZIP container (XLSX or ODS), by name; throws
+    * once the entries inflate past [[MaxZipBytes]] in total. */
   def readZip(payload: Array[Byte]): Map[String, Array[Byte]] = {
     val zin = new ZipInputStream(new ByteArrayInputStream(payload))
     val out = mutable.Map.empty[String, Array[Byte]]
@@ -158,8 +162,11 @@ object OdsDecoder {
     * [[XlsxDecoder.decode]]. Empty on anything that doesn't parse or that
     * exceeds the cell/byte budgets. */
   def decode(payload: Array[Byte]): Seq[SpreadsheetConverter.Sheet] =
+    try decodeEntries(readZip(payload)) catch { case _: Exception => Seq.empty }
+
+  /** [[decode]] over the container's entries, already read by [[readZip]]. */
+  def decodeEntries(parts: Map[String, Array[Byte]]): Seq[SpreadsheetConverter.Sheet] =
     try {
-      val parts = readZip(payload)
       val content = parts.get("content.xml").getOrElse(return Seq.empty)
       val doc = parseXml(content)
       val tables = doc.getElementsByTagNameNS(TableNs, "table")

@@ -43,8 +43,8 @@ object SpreadsheetConverter {
     if (XlsxDecoder.looksLikeZip(payload)) {
       return try {
         val entries = OdsDecoder.readZip(payload)
-        if (OdsDecoder.looksLikeOds(entries)) OdsDecoder.decode(payload)
-        else XlsxDecoder.decode(payload)
+        if (OdsDecoder.looksLikeOds(entries)) OdsDecoder.decodeEntries(entries)
+        else XlsxDecoder.decodeEntries(entries)
       } catch { case _: Exception => Seq.empty }
     }
     if (XlsDecoder.looksLikeCfb(payload)) return XlsDecoder.decode(payload)

@@ -1,10 +1,7 @@
 package graft.convert
 
-import java.io.ByteArrayInputStream
-import java.util.zip.ZipInputStream
-import javax.xml.parsers.DocumentBuilderFactory
+import OdsDecoder.parseXml
 import org.w3c.dom.{Document, Element}
-import scala.collection.mutable
 
 /** Pure-JVM XLSX workbook decoder (ZIP + SpreadsheetML XML — no POI).
   *
@@ -28,28 +25,6 @@ object XlsxDecoder {
   def looksLikeZip(payload: Array[Byte]): Boolean =
     payload != null && payload.length > 3 &&
       payload(0) == 'P'.toByte && payload(1) == 'K'.toByte
-
-  private def readZip(payload: Array[Byte]): Map[String, Array[Byte]] = {
-    val zin = new ZipInputStream(new ByteArrayInputStream(payload))
-    val out = mutable.Map.empty[String, Array[Byte]]
-    try {
-      var e = zin.getNextEntry
-      while (e != null) {
-        if (!e.isDirectory) out(e.getName.stripPrefix("/")) = zin.readAllBytes()
-        e = zin.getNextEntry
-      }
-    } finally zin.close()
-    out.toMap
-  }
-
-  private def parseXml(bytes: Array[Byte]): Document = {
-    val f = DocumentBuilderFactory.newInstance()
-    f.setNamespaceAware(true)
-    // workbook parts are untrusted input: no DTDs, no external entities
-    f.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
-    f.setExpandEntityReferences(false)
-    f.newDocumentBuilder().parse(new ByteArrayInputStream(bytes))
-  }
 
   private def elems(parent: Document, local: String): Seq[Element] = {
     val nl = parent.getElementsByTagNameNS("*", local)
@@ -138,10 +113,15 @@ object XlsxDecoder {
 
   /** Decode an xlsx payload into ordered sheets of string cells; header =
     * first row (pandas `header=0`), extra unnamed columns get `unnamed_i`.
-    * Returns empty on anything that doesn't parse as a workbook.
+    * Returns empty when the container has no workbook part; throws on a
+    * malformed part or a container past [[OdsDecoder.readZip]]'s budget.
     */
-  def decode(payload: Array[Byte]): Seq[SpreadsheetConverter.Sheet] = {
-    val parts = readZip(payload)
+  def decode(payload: Array[Byte]): Seq[SpreadsheetConverter.Sheet] =
+    decodeEntries(OdsDecoder.readZip(payload))
+
+  /** [[decode]] over the container's entries, already read by
+    * [[OdsDecoder.readZip]]. */
+  def decodeEntries(parts: Map[String, Array[Byte]]): Seq[SpreadsheetConverter.Sheet] = {
     val wbBytes = parts.get("xl/workbook.xml").getOrElse(return Seq.empty)
     val wb = parseXml(wbBytes)
 

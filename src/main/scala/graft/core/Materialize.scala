@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions.col
   * checkpoint-creation time, so the LogicalRDD reports Unknown and every
   * downstream join/agg re-shuffles the checkpointed blocks — for the
   * graph family, one edge-sized exchange per iteration round
-  * (MiningQueries.doubledEdges note).
+  * (MiningQueries.doubledEdgesFused note).
   *
   * The fix: take the eager checkpoint with AQE *briefly disabled*. The
   * non-adaptive physical plan ends in the explicit hash repartition, its

@@ -1,8 +1,6 @@
 package graft.extract
 
 import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
 
 /** HTML → visible text extraction with the reference's block rules
   * (resources/convertors/html_extractor.py:55-150, pinned by
@@ -136,31 +134,58 @@ object HtmlExtractor {
     out.result()
   }
 
-  private def getText(node: Node): String = node match {
-    case Text(s) => s
-    case e: Elem =>
-      val inner = e.children.map(getText).mkString
-      if (e.tag == "a") {
-        e.attrs.get("href").filter(h => h.nonEmpty && !inner.contains(h))
-          .map(h => s"$inner ($h)").getOrElse(inner)
-      } else if (e.tag == "br") "\n"
-      else inner
+  // The tree walks below use an explicit stack rather than recursion:
+  // the tree is as deep as the input's tag nesting, and a recursive walk
+  // over a few thousand nested tags overflows a default thread stack.
+
+  /** Marks the end of an anchor's subtree: its text starts at `start`. */
+  private final case class CloseLink(href: String, start: Int)
+
+  /** Text of `nodes`: text nodes verbatim, `br` as a newline, anchors
+    * followed by ` (href)` unless the href already appears in their text. */
+  private def getText(nodes: ArrayBuffer[Node]): String = {
+    val sb = new java.lang.StringBuilder
+    val todo = new java.util.ArrayDeque[AnyRef]()
+    nodes.reverseIterator.foreach(todo.push)
+    while (!todo.isEmpty) todo.pop() match {
+      case Text(s) => sb.append(s)
+      case e: Elem if e.tag == "br" => sb.append('\n')
+      case e: Elem =>
+        if (e.tag == "a") e.attrs.get("href").filter(_.nonEmpty)
+          .foreach(h => todo.push(CloseLink(h, sb.length)))
+        e.children.reverseIterator.foreach(todo.push)
+      case CloseLink(h, start) =>
+        if (sb.indexOf(h, start) < 0) sb.append(" (").append(h).append(')')
+    }
+    sb.toString
   }
 
-  private def hasBlockDescendant(e: Elem): Boolean =
-    e.children.exists {
-      case c: Elem => BlockTags(c.tag) || hasBlockDescendant(c)
-      case _ => false
+  /** Innermost block elements (blocks with no block descendant), in
+    * document order: one pre-order pass, then one reverse pass that marks
+    * every element holding a block below it. */
+  private def innermostBlocks(nodes: ArrayBuffer[Node]): Seq[Elem] = {
+    val elems = ArrayBuffer.empty[Elem]
+    val parent = ArrayBuffer.empty[Int]
+    val todo = new java.util.ArrayDeque[(Elem, Int)]()
+    def pushChildren(ns: ArrayBuffer[Node], p: Int): Unit =
+      ns.reverseIterator.foreach {
+        case e: Elem => todo.push((e, p))
+        case _ =>
+      }
+    pushChildren(nodes, -1)
+    while (!todo.isEmpty) {
+      val (e, p) = todo.pop()
+      pushChildren(e.children, elems.length)
+      elems += e
+      parent += p
     }
-
-  /** Innermost block elements in document order. */
-  private def innermostBlocks(nodes: Seq[Node]): Seq[Elem] =
-    nodes.flatMap {
-      case e: Elem =>
-        if (BlockTags(e.tag) && !hasBlockDescendant(e)) Seq(e)
-        else innermostBlocks(e.children.toSeq)
-      case _ => Seq.empty
+    val blockBelow = new Array[Boolean](elems.length)
+    for (i <- elems.indices.reverse if parent(i) >= 0)
+      if (BlockTags(elems(i).tag) || blockBelow(i)) blockBelow(parent(i)) = true
+    elems.indices.collect {
+      case i if BlockTags(elems(i).tag) && !blockBelow(i) => elems(i)
     }
+  }
 
   /** Reference `_normalize_whitespace`: NBSP → space, per-line collapse +
     * trim, blank-line runs collapsed, leading/trailing blanks stripped. */
@@ -181,11 +206,11 @@ object HtmlExtractor {
   def extractText(html: String): String = {
     if (html == null || html.trim.isEmpty) return ""
     val forest = parse(html)
-    val blocks = innermostBlocks(forest.toSeq)
-      .map(e => (e.tag, getText(e)))
+    val blocks = innermostBlocks(forest)
+      .map(e => (e.tag, getText(e.children)))
       .filter(_._2.trim.nonEmpty)
     if (blocks.isEmpty)
-      return normalizeWhitespace(unescapeEntities(forest.map(getText).mkString))
+      return normalizeWhitespace(unescapeEntities(getText(forest)))
     val finalLines = ArrayBuffer.empty[String]
     var prevWasPara = false
     for ((tag, raw) <- blocks) {
@@ -200,9 +225,4 @@ object HtmlExtractor {
     }
     normalizeWhitespace(finalLines.mkString("\n"))
   }
-
-  private val extractUdf = udf((html: String) => extractText(html))
-
-  /** Column form for pipeline use (F6: re-extract when text looks like HTML). */
-  def htmlExtract(c: Column): Column = extractUdf(c)
 }

@@ -1,8 +1,5 @@
 package graft.extract
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-
 /** PDF text extraction with OCR fallback (SURVEY S8;
   * resources/convertors/pdf_extractor.py:15-101).
   *
@@ -15,10 +12,11 @@ import org.apache.spark.sql.functions._
   *
   * The byte-level decoders (PDFBox / tesseract) are NOT available in this
   * container, so [[decodePdfText]] and [[ocrPages]] are clearly-marked
-  * deterministic stubs; the real part — the threshold orchestration and the
-  * Spark plumbing (binaryFile scan → narrow per-row decode, no shuffle) —
-  * is tested. Swap the two stub bodies for PDFBox/tesseract calls in
-  * production; nothing else changes.
+  * deterministic stubs; the real part — the threshold orchestration — is
+  * tested. Pipelines run [[extractWithOcrFallback]] per row through
+  * `refine.FailSoft.withGuarded`, a narrow projection with no shuffle.
+  * Swap the two stub bodies for PDFBox/tesseract calls in production;
+  * nothing else changes.
   */
 object PdfExtractor {
 
@@ -130,11 +128,4 @@ object PdfExtractor {
       if (o.length > text.length) o else text
     } else text
   }
-
-  private val extractUdf = udf((b: Array[Byte]) => extractWithOcrFallback(b))
-
-  /** Attach extracted text to a binary-content DataFrame. Narrow projection:
-    * pipelines with the binaryFile scan, never shuffles. */
-  def withExtractedText(df: DataFrame, contentCol: String): DataFrame =
-    df.withColumn("text", extractUdf(col(contentCol)))
 }

@@ -103,19 +103,23 @@ object BpeTokenizer {
     sb.toString
   }
 
+  /** (pattern, replacement) per merge, in rank order. */
+  private val Rewrites: Seq[(String, String)] = Merges.map { case (l, r) =>
+    (SepS + l + SepS + r + SepS, SepS + l + r + SepS)
+  }
+
+  /** [[delimit]], then each merge as two literal left-to-right passes. */
+  private def merged(text: String): String =
+    Rewrites.foldLeft(delimit(text)) { case (s, (pat, rep)) =>
+      s.replace(pat, rep).replace(pat, rep)
+    }
+
   /** BPE token count of a whitespace-split text; 0 on null/empty. */
   def countTokens(text: String): Int = {
     if (text == null || text.isEmpty) return 0
-    var s = delimit(text)
-    if (s.isEmpty) return 0
-    Merges.foreach { case (l, r) =>
-      val pat = SepS + l + SepS + r + SepS
-      val rep = SepS + l + r + SepS
-      s = s.replace(pat, rep).replace(pat, rep)
-    }
     var n = 0
     var run = false
-    s.foreach { c =>
+    merged(text).foreach { c =>
       if (c == Sep) run = false
       else if (!run) { n += 1; run = true }
     }
@@ -123,16 +127,9 @@ object BpeTokenizer {
   }
 
   /** Tokens of a single word (spec/debug surface for the same kernel). */
-  def tokenizeWord(word: String): Seq[String] = {
-    if (word == null) return Seq.empty
-    var s = delimit(word)
-    Merges.foreach { case (l, r) =>
-      val pat = SepS + l + SepS + r + SepS
-      val rep = SepS + l + r + SepS
-      s = s.replace(pat, rep).replace(pat, rep)
-    }
-    s.split(Sep).filter(_.nonEmpty).toSeq
-  }
+  def tokenizeWord(word: String): Seq[String] =
+    if (word == null) Seq.empty
+    else merged(word).split(Sep).filter(_.nonEmpty).toSeq
 
   val countTokensUdf = udf(countTokens _)
 

@@ -509,41 +509,4 @@ object ImageCodec {
     }
     Some(out.toByteArray.map(_ & 0xFF))
   }
-
-  /** Bilinear resize of packed RGB pixels — the standard sample-weighted
-    * interpolation, edge-clamped, half-pixel-centered (the mapping both
-    * OpenCV and PIL use), deterministic integer rounding. */
-  def resizeRgbBilinear(src: Array[Byte], w: Int, h: Int,
-      newW: Int, newH: Int): Array[Byte] = {
-    require(w > 0 && h > 0 && newW > 0 && newH > 0)
-    val out = new Array[Byte](newW * newH * 3)
-    val xScale = w.toDouble / newW
-    val yScale = h.toDouble / newH
-    var oy = 0
-    while (oy < newH) {
-      val sy = math.min(math.max((oy + 0.5) * yScale - 0.5, 0.0), h - 1.0)
-      val y0 = sy.toInt; val y1 = math.min(y0 + 1, h - 1)
-      val fy = sy - y0
-      var ox = 0
-      while (ox < newW) {
-        val sx = math.min(math.max((ox + 0.5) * xScale - 0.5, 0.0), w - 1.0)
-        val x0 = sx.toInt; val x1 = math.min(x0 + 1, w - 1)
-        val fx = sx - x0
-        var c = 0
-        while (c < 3) {
-          val p00 = src((y0 * w + x0) * 3 + c) & 0xFF
-          val p01 = src((y0 * w + x1) * 3 + c) & 0xFF
-          val p10 = src((y1 * w + x0) * 3 + c) & 0xFF
-          val p11 = src((y1 * w + x1) * 3 + c) & 0xFF
-          val v = (p00 * (1 - fx) * (1 - fy) + p01 * fx * (1 - fy) +
-            p10 * (1 - fx) * fy + p11 * fx * fy)
-          out((oy * newW + ox) * 3 + c) = math.round(v).toInt.min(255).max(0).toByte
-          c += 1
-        }
-        ox += 1
-      }
-      oy += 1
-    }
-    out
-  }
 }

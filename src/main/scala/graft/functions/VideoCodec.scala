@@ -350,29 +350,6 @@ object VideoCodec {
     header
   }
 
-  /** [[mp4BytesWithKeyframes]] with the mdat spliced from equal-length
-    * REAL samples (the [[mp4BytesWithSamples]] trick applied to the
-    * stss-carrying layout): an MJPEG track whose KEYFRAMES a seek pass
-    * can range-read and decode without touching the other samples. Box
-    * math is mp4BytesWithKeyframes': payload at 344 + 4·nk with
-    * nk = 1 + (nFrames−1) div gop. */
-  def mp4BytesWithKeyframeSamples(timescale: Int, duration: Long, gop: Int,
-      samples: Array[Array[Byte]]): Array[Byte] = {
-    require(timescale > 0 && duration >= 0 && gop >= 1 && samples.nonEmpty)
-    val frameSize = samples(0).length
-    require(frameSize >= 1 && samples.forall(_.length == frameSize),
-      "constant-size stsz form requires equal-length samples")
-    val nFrames = samples.length
-    val header = mp4BytesWithKeyframes(timescale, duration, nFrames, frameSize, gop)
-    val payloadOff = header.length - nFrames * frameSize
-    var k = 0
-    while (k < nFrames) {
-      System.arraycopy(samples(k), 0, header, payloadOff + k * frameSize, frameSize)
-      k += 1
-    }
-    header
-  }
-
   /** Sync-sample numbers (1-based, the `stss` box) of the first track that
     * carries one — the keyframe table a seek/thumbnail pass reads. A
     * container with no stss means EVERY sample is sync per ISO 14496-12

@@ -48,16 +48,6 @@ object Multimodal {
     }
   }
 
-  /** Back-compat tuple view of [[decodeMeta]] without the format tag. */
-  def decodeBytes(payload: Array[Byte]): (Int, Int, Int, Int) = {
-    val m = decodeMeta(payload)
-    (m._1, m._2, m._3, m._4)
-  }
-
-  /** STUB frame counter for video-ish payloads — container demuxers are
-    * not available in this environment; deterministic on payload size so
-    * the generator shape is testable. Production body: read the container
-    * index (moov/atom scan), same bytes-in/int-out seam. */
   /** Frame count: REAL for MP4 containers carrying sample tables — the
     * summed `stts` entry counts across tracks
     * ([[graft.functions.VideoCodec.frameCount]]), which is what a demuxer
@@ -193,39 +183,6 @@ object Multimodal {
     }(enc)
   }
 
-  /** Pixel resize — REAL for all four image containers the sniffer
-    * routes: PNG (8-bit RGB; zlib + all five scanline filters), 24-bit
-    * BMP, GIF (full LZW + interlace), and baseline JPEG
-    * ([[graft.functions.JpegDecoder]] — Huffman + IDCT + libjpeg-style
-    * chroma upsampling). Bilinear interpolation (half-pixel-centered,
-    * the OpenCV/PIL mapping), then re-encode: BMP keeps its container,
-    * everything else canonicalizes to PNG (a lossless re-encode of
-    * decoded pixels — what a training-data resize stage does anyway; a
-    * JPEG/GIF ENCODER would add lossy/LZW write paths for no test
-    * power). All JDK-only, every codec ImageIO-cross-checked.
-    * Undecodable payloads (progressive JPEG, exotic color types,
-    * non-images) fall back to the deterministic truncate/pad fake. */
-  def resizeBytes(payload: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    import graft.functions.{ImageCodec, JpegDecoder}
-    if (w > 0 && h > 0) {
-      ImageCodec.bmpDecodeRgb(payload) match {
-        case Some((sw, sh, px)) =>
-          return ImageCodec.bmpEncodeRgb(w, h, ImageCodec.resizeRgbBilinear(px, sw, sh, w, h))
-        case None =>
-      }
-      val decoded = ImageCodec.pngDecodeRgb(payload)
-        .orElse(ImageCodec.gifDecodeRgb(payload))
-        .orElse(JpegDecoder.decodeRgb(payload))
-      decoded match {
-        case Some((sw, sh, px)) =>
-          return ImageCodec.pngEncodeRgb(w, h, ImageCodec.resizeRgbBilinear(px, sw, sh, w, h))
-        case None =>
-      }
-    }
-    val target = math.max(1, (w * h) / 256)
-    java.util.Arrays.copyOf(if (payload == null) Array.emptyByteArray else payload, target)
-  }
-
   /** Difference-hash (dHash) of a decodable image, as FOUR 16-bit
     * segments: decode to RGB (any of the four real pixel codecs),
     * integer grayscale (r+g+b div 3), average-pool to a 9×8 grid with
@@ -268,79 +225,6 @@ object Multimodal {
         Some(segs)
       }
     }
-  }
-
-  /** Batched resize over partitions: rows are processed in fixed-size
-    * batches (the reference's 64/100-row batching contract — a vectorized
-    * decoder amortizes setup per batch, not per row). Shuffle-free. */
-  def withResized(df: DataFrame, payloadCol: String, w: Int, h: Int,
-      batchSize: Int = 64): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("resized", BinaryType))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val idx = df.schema.fieldIndex(payloadCol)
-    df.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        // production: one vectorized call per batch
-        batch.map(r => Row.fromSeq(r.toSeq :+ resizeBytes(r.getAs[Array[Byte]](idx), w, h)))
-      }
-    }(enc)
-  }
-
-  /** KEYFRAME-ONLY pixel decode — the thumbnail/preview pass at the pixel
-    * level: the `stss` seek table ([[graft.functions.VideoCodec
-    * .syncSampleIndices]]) names the frames a decoder can start at, the
-    * stts/stsz/stco geometry prices their byte spans, and ONLY those
-    * spans are sliced and pushed through the real JPEG pixel path —
-    * non-keyframe samples are never read, let alone decoded (the spec
-    * pins this by making every non-keyframe sample INVALID: garbage
-    * bytes that would fail any decode attempt). At 100 TB this is the
-    * difference between ranged-GETting nk frames and nF: a gop-30 corpus
-    * reads ~3 % of its sample bytes for a thumbnail pass.
-    *
-    * Returns one (sampleNo, lumaSum, lumaMin, lumaMax) per keyframe —
-    * None when the container carries no stss (all-sync is the CALLER's
-    * semantic call, m15's rule), no geometry, or a keyframe that fails
-    * pixel decode (a seek table pointing at undecodable bytes is
-    * corruption, reported as refusal, never as partial silence). */
-  def keyframePixelStats(payload: Array[Byte]): Option[Seq[(Long, Long, Int, Int)]] = {
-    import graft.functions.{JpegDecoder, VideoCodec}
-    for {
-      g <- VideoCodec.frameGeometry(payload)
-      ks <- VideoCodec.syncSampleIndices(payload)
-      (_, nF, fs, off, _) = g
-      stats <- {
-        val out = ks.toSeq.map { k => // k is 1-based per the stss box
-          // explicit bounds check: a corrupt stco/stsz
-          // geometry whose span overruns the payload is refused HERE,
-          // intentionally — not left to copyOfRange's zero-padding
-          // incidentally failing the JPEG decode downstream. Division
-          // form: fs and k are unsigned-32-bit reads, so
-          // `off + k * fs` can wrap a Long negative and PASS a direct
-          // comparison; `k > (L - off) / fs` is overflow-free and, for
-          // positive integers, exactly equivalent to k·fs > L − off.
-          if (k < 1 || k > nF || fs <= 0 || off > payload.length ||
-              k > (payload.length - off) / fs) None
-          else {
-            val a = off + (k - 1) * fs
-            val span = java.util.Arrays.copyOfRange(payload, a.toInt, (a + fs).toInt)
-            JpegDecoder.decodeRgb(span).map { case (w, h, px) =>
-              var sum = 0L; var mn = 255; var mx = 0; var i = 0
-              val n = w * h
-              while (i < n) {
-                val v = px(i * 3) & 0xFF
-                sum += v
-                if (v < mn) mn = v
-                if (v > mx) mx = v
-                i += 1
-              }
-              (k, sum, mn, mx)
-            }
-          }
-        }
-        if (out.forall(_.isDefined)) Some(out.map(_.get)) else None
-      }
-    } yield stats
   }
 
   /** Frame sampling for video-ish payloads: every `stride`-th frame index up

@@ -591,40 +591,25 @@ object MiningQueries {
       .select(col("u"), col("v")).distinct()
   }
 
-  /** The doubled (both-directions) edge frame every iterative graph query
-    * joins once per round, built for round reuse:
+  /** The doubled (both-directions) co-purchase edge frame every iterative
+    * graph query joins once per round, built for round reuse:
     *
     *  - ONE generate pass (explode of the two orientations) instead of a
-    *    self-union — the union shape reads the normalized edge set twice
-    *    and only ReuseExchange saves it from running the pair-generation
-    *    twice; the explode is guaranteed single-pass.
-    *  - materialized via [[graft.core.Materialize.partitionedCheckpoint]]:
-    *    the eager checkpoint is taken with AQE briefly off, so the
-    *    LogicalRDD RETAINS HashPartitioning(key) and every per-round
-    *    join/agg keyed on it reads the checkpoint blocks in place with NO
-    *    exchange — a repartition before an AQE checkpoint only balances
-    *    the blocks (partitioning is lost) and each round would re-shuffle
-    *    the graph side. Plan-pinned in
-    *    MaterializeSpec: a keyed consumer reads `Scan ExistingRDD` with no
-    *    Exchange above it. */
-  private[queries] def doubledEdges(und: DataFrame, key: String): DataFrame =
-    graft.core.Materialize.partitionedCheckpoint(
-      und.select(explode(array(
-          struct(col("u").as("a"), col("v").as("b")),
-          struct(col("v").as("a"), col("u").as("b")))).as("s"))
-        .select(col("s.a").as("u"), col("s.b").as("v")),
-      key)
-
-  /** [[coPurchaseEdges]] + [[doubledEdges]] in ONE exchange fewer: the
-    * pair join's output is exploded into both orientations FIRST, then a
-    * single hash repartition on the round-join key doubles as the dedupe
-    * shuffle (`dropDuplicates(u, v)` over HashPartitioning(key) — key ⊆
-    * {u, v} so the dedupe aggregate inserts no second exchange). Identical
-    * edge set to doubledEdges(coPurchaseEdges(..)): (u,v)-dedupe of the
-    * doubled multi-set == doubling of the (u<v)-distinct set, because
-    * doubling preserves multiplicity per orientation. Saves the separate
-    * distinct exchange of the undirected half (~0.2 s at sf0.1; one full
-    * edge shuffle at any scale). */
+    *    self-union — the union shape reads the edge set twice and only
+    *    ReuseExchange saves it from running the pair generation twice.
+    *  - the pair join's output is doubled FIRST, then a single hash
+    *    repartition on the round-join key doubles as the dedupe shuffle
+    *    (`dropDuplicates(u, v)` over HashPartitioning(key) — key ⊆ {u, v}
+    *    so the dedupe aggregate inserts no second exchange). Same edge set
+    *    as doubling the (u<v)-distinct [[coPurchaseEdges]]: doubling
+    *    preserves multiplicity per orientation. Saves the separate
+    *    distinct exchange of the undirected half (~0.2 s at sf0.1; one
+    *    full edge shuffle at any scale).
+    *  - materialized via [[graft.core.Materialize.dedupedPartitionedCheckpoint]]:
+    *    the eager checkpoint RETAINS HashPartitioning(key), so every
+    *    per-round join/agg keyed on it reads the checkpoint blocks in
+    *    place with NO exchange. Plan-pinned in MaterializeSpec: a keyed
+    *    consumer reads `Scan ExistingRDD` with no Exchange above it. */
   private[queries] def doubledEdgesFused(s: SparkSession, d: String,
       key: String): DataFrame = cachedFrame(s, d, s"dbl_$key") {
     if (key != "u")

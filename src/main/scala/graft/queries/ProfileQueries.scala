@@ -186,7 +186,7 @@ object ProfileQueries {
     * → neighbor-of-neighbor is two equi-joins bounded by |seeds|·deg²,
     * never the all-pairs wedge census; per-seed top-10 is a rank window
     * with map-side WindowGroupLimit. The doubled edge frame is
-    * pre-partitioned on u ([[MiningQueries.doubledEdges]]) so the degree
+    * pre-partitioned on u ([[MiningQueries.doubledEdgesFused]]) so the degree
     * agg, the deg-carry join and the seed hop all reuse ONE exchange;
     * deg(z) rides along the candidate hop BEFORE wedge generation (so the
     * wedge-sized frame is never re-shuffled on z for the RA lookup); and

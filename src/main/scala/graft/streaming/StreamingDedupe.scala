@@ -1,44 +1,26 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming deduplication — the reference's dedupe (SURVEY A1) carried into
   * the incremental world (§7.5).
   *
-  * Two tiers, Spark-first:
-  *  - [[exactOnce]]: Spark's built-in streaming `dropDuplicates` on the
-  *    content hash — state-store-backed exactly-once emission of first
-  *    occurrences. Use this when "drop repeats" is the whole requirement.
-  *  - [[withDuplicateCounts]]: custom state via `flatMapGroupsWithState`
-  *    (the KeyValueGroupedDataset custom-state surface) when the pipeline
-  *    additionally needs per-key bookkeeping the built-in can't express —
-  *    here the reference's status accounting (dedupe.py emits kept +
-  *    duplicate counts): emits each first occurrence immediately and tracks
-  *    how many duplicates each hash has absorbed.
+  * When "drop repeats" is the whole requirement, Spark's built-in
+  * streaming `dropDuplicates` (or `dropDuplicatesWithinWatermark`, for
+  * bounded state) on the content hash is the whole job.
+  * [[withDuplicateCounts]] is custom state via `flatMapGroupsWithState`
+  * (the KeyValueGroupedDataset custom-state surface) for the per-key
+  * bookkeeping the built-in can't express — here the reference's status
+  * accounting (dedupe.py emits kept + duplicate counts): it emits each
+  * first occurrence immediately and tracks how many duplicates each hash
+  * has absorbed.
   *
   * State is partitioned by the hash — the same shuffle key as the batch
   * dedupe, so scale behavior is identical (hash-partitioned state store,
   * no skew beyond the data's own duplicate skew).
   */
 object StreamingDedupe {
-
-  /** Built-in tier: first occurrence per hash survives, state bounded by
-    * the optional watermark the caller sets upstream. */
-  def exactOnce(df: DataFrame, hashCol: String): DataFrame =
-    df.dropDuplicates(hashCol)
-
-  /** Watermark-bounded tier: duplicates are dropped only within the
-    * watermark horizon and each key's state is EVICTED once the watermark
-    * passes it — the variant that runs indefinitely at 100 TB/day
-    * ([[exactOnce]]'s state grows with distinct keys forever). A repeat
-    * arriving after the horizon re-emits: bounded state trades away global
-    * uniqueness, which the downstream batch dedupe (q07) reconciles — the
-    * standard stream-dedupe + batch-compaction split. Caller must set the
-    * watermark on `df` first. */
-  def withinWatermark(df: DataFrame, hashCol: String): DataFrame =
-    df.dropDuplicatesWithinWatermark(hashCol)
 
   final case class DedupeState(dupCount: Long)
   final case class DedupeEvent(hash: String, id: Long, firstSeen: Boolean,

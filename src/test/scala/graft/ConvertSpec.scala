@@ -189,6 +189,23 @@ class ConvertSpec extends SparkSpec {
 
   // ------------------------------------------------------------------- ODS
 
+  test("xlsx: an entry inflating past the zip budget fails with the ods budget error") {
+    import java.util.zip.{ZipEntry, ZipOutputStream}
+    // 257 MiB of zeros deflates to about 0.3 MiB; the budget is 256 MiB
+    val baos = new java.io.ByteArrayOutputStream()
+    val z = new ZipOutputStream(baos)
+    z.putNextEntry(new ZipEntry("xl/workbook.xml"))
+    val mib = new Array[Byte](1 << 20)
+    (0 until 257).foreach(_ => z.write(mib))
+    z.closeEntry(); z.close()
+    val bomb = baos.toByteArray
+    val xlsx = intercept[RuntimeException](graft.convert.XlsxDecoder.decode(bomb))
+    val ods = intercept[RuntimeException](graft.convert.OdsDecoder.readZip(bomb))
+    assert(xlsx.getClass == ods.getClass && xlsx.getMessage == ods.getMessage)
+    assert(xlsx.getMessage.contains("budget exceeded"))
+    assert(SpreadsheetConverter.decodeWorkbook(bomb) == Seq.empty)
+  }
+
   // Minimal real ODS built with the JDK zip writer: mimetype + content.xml,
   // three tables with string/float/time/date cells, column-repeat padding —
   // the same golden shape as the xlsx fixture, through the OpenDocument path.

@@ -67,4 +67,14 @@ class HtmlExtractorSpec extends SparkSpec {
     val out = extractText("<div><h2>Head</h2><ul><li>a</li><li>b</li></ul><p>tail</p></div>")
     assert(out == "Head\n- a\n- b\ntail")
   }
+
+  test("100,000 nested inline tags extract on a default-stack thread") {
+    val depth = 100000
+    val html = "<span>" * depth + "<p>hello world</p>" + "</span>" * depth
+    @volatile var out: Either[Throwable, String] = Left(new IllegalStateException("not run"))
+    // a fresh thread has the JVM's default stack size, like a Spark task thread
+    val t = new Thread(() => out = try Right(extractText(html)) catch { case e: Throwable => Left(e) })
+    t.start(); t.join()
+    assert(out == Right("hello world"), out.left.map(_.getClass.getName))
+  }
 }

@@ -117,61 +117,6 @@ class MjpegVideoSpec extends SparkSpec {
     }
   }
 
-  test("keyframe-only decode reads EXACTLY the stss-named frames — non-keyframes may be garbage") {
-    import graft.operators.Multimodal
-    // gop=3 over 8 frames -> keyframes at samples 1,4,7. Every NON-key
-    // sample is deliberately INVALID (0xEE fill, not a JPEG): any
-    // implementation that touches a non-keyframe span fails loudly, so a
-    // green pass proves only the planned spans were decoded.
-    val gop = 3
-    val nF = 8
-    val keyVals = Map(1 -> Array(10, 20, 30, 40), 4 -> Array(200, 5, 125, 250),
-      7 -> Array(0, 255, 128, 17))
-    val frames = Array.tabulate(nF) { i =>
-      val sampleNo = i + 1
-      keyVals.get(sampleNo) match {
-        case Some(v) => JpegDecoder.jpegGrayBlockBytes(2, 2, v, padTo = 192)
-        case None => Array.fill[Byte](192)(0xEE.toByte)
-      }
-    }
-    val mp4 = VideoCodec.mp4BytesWithKeyframeSamples(20, nF.toLong, gop, frames)
-    // geometry + stss both readable from the spliced container
-    assert(VideoCodec.syncSampleIndices(mp4).map(_.toSeq).contains(Seq(1L, 4L, 7L)))
-    val Some(stats) = Multimodal.keyframePixelStats(mp4)
-    assert(stats.map(_._1) == Seq(1L, 4L, 7L), "exactly the stss-named samples")
-    for ((k, sum, mn, mx) <- stats) {
-      val v = keyVals(k.toInt)
-      assert(sum == 64L * v.sum && mn == v.min && mx == v.max, s"keyframe $k stats")
-    }
-    // refusals: no stss (mp4BytesWithSamples layout) -> None, the m15
-    // all-sync-is-the-caller's-call rule; corrupted KEYFRAME -> None
-    val noStss = VideoCodec.mp4BytesWithSamples(20, 3L,
-      Array.fill(3)(JpegDecoder.jpegGrayBlockBytes(1, 1, Array(9), padTo = 96)))
-    assert(Multimodal.keyframePixelStats(noStss).isEmpty)
-    val corrupted = mp4.clone()
-    val Some((_, _, fs, off, _)) = VideoCodec.frameGeometry(mp4)
-    corrupted((off + 3 * fs + 20).toInt) = 0x00 // sample 4 (a KEYFRAME), inside SOF0
-    // either the decode fails (None) or the byte landed somewhere
-    // non-fatal — but it must never throw, and an all-keyframes-decoded
-    // result must still carry exactly the stss set
-    Multimodal.keyframePixelStats(corrupted).foreach(s => assert(s.map(_._1) == Seq(1L, 4L, 7L)))
-    // overrunning span refusal is INTENTIONAL (ADVICE r17): truncate the
-    // payload so the last keyframe's planned span exceeds the buffer —
-    // refused by the explicit bounds check, never by zero-padded bytes
-    // happening to fail the JPEG decode
-    val truncated = java.util.Arrays.copyOfRange(mp4, 0, (off + 6 * fs + fs / 2).toInt)
-    assert(Multimodal.keyframePixelStats(truncated).isEmpty,
-      "keyframe span past the payload end must refuse explicitly")
-    // ...and truncate HARDER (ADVICE r18): at off + 5*fs the keyframe-7
-    // span START (off + 6*fs) itself exceeds the buffer — before the
-    // explicit check, copyOfRange threw ArrayIndexOutOfBoundsException on
-    // this path (the softer truncation above zero-pads and fails the
-    // decode on either code path), so None HERE pins the check itself
-    val truncatedHard = java.util.Arrays.copyOfRange(mp4, 0, (off + 5 * fs).toInt)
-    assert(Multimodal.keyframePixelStats(truncatedHard).isEmpty,
-      "span START past the payload end must refuse, not throw")
-  }
-
   test("m19 query agrees with the synthesis arithmetic, independently computed") {
     val rows = graft.queries.OpsQueries.m19MjpegPixels(spark, sf())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3),

@@ -28,11 +28,6 @@ class MultimodalSpec extends SparkSpec {
     assert(!plan.contains("Exchange"), s"decode should not shuffle:\n$plan")
   }
 
-  test("decodeBytes stub is deterministic and null-safe") {
-    assert(Multimodal.decodeBytes(null) == ((0, 0, 0, 0)))
-    assert(Multimodal.decodeBytes("abcd".getBytes) == Multimodal.decodeBytes("abcd".getBytes))
-  }
-
   test("ImageCodec.parse recovers dimensions from images written by the JDK's own encoders") {
     import graft.functions.ImageCodec
     import java.awt.image.BufferedImage
@@ -90,15 +85,6 @@ class MultimodalSpec extends SparkSpec {
     // image payloads get REAL dimensions
     assert(Multimodal.decodeMeta(graft.functions.ImageCodec.pngBytes(320, 200, 10)) ==
       ((67, 320, 200, 1, "png")))
-  }
-
-  test("withResized: batched partition map, stable output size, no shuffle") {
-    import spark.implicits._
-    val df = (1 to 10).map(i => (i.toLong, Array.fill(100)(i.toByte))).toDF("id", "payload")
-    val out = Multimodal.withResized(df, "payload", 64, 64, batchSize = 4)
-    val rows = out.collect()
-    assert(rows.forall(_.getAs[Array[Byte]]("resized").length == 16))
-    assert(!out.queryExecution.executedPlan.toString.contains("Exchange"))
   }
 
   test("routeMedia dispatches every container family and defaults to raw") {
@@ -164,28 +150,6 @@ class MultimodalSpec extends SparkSpec {
       "decode of JDK-encoded png diverged — scanline filter math wrong")
   }
 
-  test("real resize: bilinear PNG path downsamples correctly") {
-    import graft.functions.ImageCodec
-    // solid-color image resizes to the same solid color at any size
-    val solid = Array.tabulate(16 * 16 * 3)(i => (i % 3 match {
-      case 0 => 200; case 1 => 100; case _ => 50
-    }).toByte)
-    val out = Multimodal.resizeBytes(ImageCodec.pngEncodeRgb(16, 16, solid), 4, 4)
-    val Some((rw, rh, rpx)) = ImageCodec.pngDecodeRgb(out)
-    assert((rw, rh) == ((4, 4)))
-    assert(rpx.grouped(3).forall(p =>
-      (p(0) & 0xFF) == 200 && (p(1) & 0xFF) == 100 && (p(2) & 0xFF) == 50))
-    // 2x2 checkerboard downsampled to 1x1 = the average of the corners
-    val quad = Array[Byte](
-      0, 0, 0, 100.toByte, 100.toByte, 100.toByte,
-      (200 & 0xFF).toByte, (200 & 0xFF).toByte, (200 & 0xFF).toByte, 40, 40, 40)
-    val one = Multimodal.resizeBytes(ImageCodec.pngEncodeRgb(2, 2, quad), 1, 1)
-    val Some((_, _, opx)) = ImageCodec.pngDecodeRgb(one)
-    assert((opx(0) & 0xFF) == 85, s"expected (0+100+200+40)/4=85, got ${opx(0) & 0xFF}")
-    // non-PNG payloads keep the documented deterministic fallback
-    assert(Multimodal.resizeBytes(Array[Byte](1, 2, 3), 64, 64).length == 16)
-  }
-
   test("bmp pixel codec round-trips and agrees with JDK ImageIO both ways") {
     import graft.functions.ImageCodec
     val (w, h) = (7, 5)
@@ -240,44 +204,40 @@ class MultimodalSpec extends SparkSpec {
     assert(ImageCodec.gifDecodeRgb(null).isEmpty)
   }
 
-  test("resize routes bmp and gif through the real pixel path") {
+  test("bmp and gif decoders read solid images pixel-exact") {
     import graft.functions.ImageCodec
     val solid = Array.tabulate(8 * 8 * 3)(i => (i % 3 match {
       case 0 => 10; case 1 => 150; case _ => 250
     }).toByte)
-    // BMP in -> BMP out, same solid color
-    val bout = Multimodal.resizeBytes(ImageCodec.bmpEncodeRgb(8, 8, solid), 3, 3)
-    val Some((bw, bh, bpx)) = ImageCodec.bmpDecodeRgb(bout)
-    assert((bw, bh) == ((3, 3)))
+    val Some((bw, bh, bpx)) = ImageCodec.bmpDecodeRgb(ImageCodec.bmpEncodeRgb(8, 8, solid))
+    assert((bw, bh) == ((8, 8)))
     assert(bpx.grouped(3).forall(p =>
       (p(0) & 0xFF) == 10 && (p(1) & 0xFF) == 150 && (p(2) & 0xFF) == 250))
-    // GIF in -> PNG out (canonicalized)
+    // an ImageIO-written GIF (independent LZW encoder)
     val jdkImg = new java.awt.image.BufferedImage(8, 8,
       java.awt.image.BufferedImage.TYPE_INT_RGB)
     for (y <- 0 until 8; x <- 0 until 8) jdkImg.setRGB(x, y, 0x336699)
     val bos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(jdkImg, "gif", bos)
-    val gout = Multimodal.resizeBytes(bos.toByteArray, 2, 2)
-    val Some((gw2, gh2, gpx2)) = ImageCodec.pngDecodeRgb(gout)
-    assert((gw2, gh2) == ((2, 2)))
-    assert(gpx2.grouped(3).forall(p =>
+    val Some((gw, gh, gpx)) = ImageCodec.gifDecodeRgb(bos.toByteArray)
+    assert((gw, gh) == ((8, 8)))
+    assert(gpx.grouped(3).forall(p =>
       (p(0) & 0xFF) == 0x33 && (p(1) & 0xFF) == 0x66 && (p(2) & 0xFF) == 0x99))
   }
 
-  test("resize routes baseline jpeg through the real pixel path") {
-    import graft.functions.ImageCodec
+  test("baseline jpeg decoder reads an ImageIO-written flat field") {
+    import graft.functions.JpegDecoder
     val img = new java.awt.image.BufferedImage(16, 16,
       java.awt.image.BufferedImage.TYPE_INT_RGB)
     for (y <- 0 until 16; x <- 0 until 16) img.setRGB(x, y, 0x884422)
     val bos = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(img, "jpeg", bos))
-    val out = Multimodal.resizeBytes(bos.toByteArray, 4, 4)
-    val Some((w, h, px)) = ImageCodec.pngDecodeRgb(out) // canonicalized to PNG
-    assert((w, h) == ((4, 4)))
+    val Some((w, h, px)) = JpegDecoder.decodeRgb(bos.toByteArray)
+    assert((w, h) == ((16, 16)))
     // JPEG is lossy: the flat field survives within quantization slack
     assert(px.grouped(3).forall(p =>
       math.abs((p(0) & 0xFF) - 0x88) <= 6 && math.abs((p(1) & 0xFF) - 0x44) <= 6 &&
-        math.abs((p(2) & 0xFF) - 0x22) <= 6), "jpeg resize drifted")
+        math.abs((p(2) & 0xFF) - 0x22) <= 6), "jpeg decode drifted")
   }
 
   test("explodeSampledFrames: one row per sampled frame, stride respected") {

@@ -97,14 +97,4 @@ class PdfExtractorSpec extends SparkSpec {
     assert(PdfExtractor.extractWithOcrFallback(long, ocr.recognize _)
       == "W" * 250)
   }
-
-  test("withExtractedText is a narrow transformation over binary content") {
-    import spark.implicits._
-    val df = Seq((1L, ("Z" * 250).getBytes("UTF-8"))).toDF("id", "content")
-    val out = PdfExtractor.withExtractedText(df, "content")
-    assert(out.columns.toSeq == Seq("id", "content", "text"))
-    assert(out.collect()(0).getAs[String]("text") == "Z" * 250)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"pdf decode should not shuffle:\n$plan")
-  }
 }

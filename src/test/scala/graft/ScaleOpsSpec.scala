@@ -6,21 +6,6 @@ import org.apache.spark.sql.functions._
 
 class ScaleOpsSpec extends SparkSpec {
 
-  test("ORC round-trip preserves content and keeps predicate pushdown") {
-    val docs = spark.read.parquet(sf() + "/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graftorc").toString + "/t"
-    Sinks.writeOrc(docs, dir)
-    val back = Sinks.readOrc(spark, dir)
-    assert(back.schema == docs.schema, "ORC must round-trip the schema")
-    assert(back.exceptAll(docs).isEmpty && docs.exceptAll(back).isEmpty,
-      "ORC round-trip must preserve every row")
-    val filtered = back.filter(col("lang") === "en").select(col("doc_id"))
-    val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("lang"),
-      s"ORC scan lost predicate pushdown:\n${plan.take(2000)}")
-    assert(!plan.contains("text"), "ORC scan reads pruned-away columns")
-  }
-
   test("schema evolution: mergeSchema unions generations; old files read null; pushdown survives") {
     // A 100 TB table is written over months by evolving jobs: gen-1 files
     // lack columns gen-2 added. The lakehouse contract is (a) one read
@@ -51,56 +36,6 @@ class ScaleOpsSpec extends SparkSpec {
     assert(merged.agg(count(col("score"))).head().getLong(0) == 2L)
   }
 
-  test("JSONL round-trip with explicit schema preserves content") {
-    val docs = spark.read.parquet(sf() + "/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graftjsonl").toString + "/t"
-    Sinks.writeJsonl(docs, dir)
-    val back = Sinks.readJsonl(spark, dir, docs.schema)
-    // JSON omits null fields per line; the schema read restores them
-    assert(back.schema == docs.schema)
-    assert(back.exceptAll(docs).isEmpty && docs.exceptAll(back).isEmpty,
-      "JSONL round-trip must preserve every row")
-  }
-
-  test("CSV export round-trips the classic corruption hazards") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graftcsv").toString + "/t"
-    val tricky = Seq(
-      (1L, "plain", 10.5),
-      (2L, "comma, inside", -1.0),
-      (3L, "quote \" inside", 0.0),
-      (4L, "newline\ninside", 2.25),
-      (5L, "", 3.0),               // empty string ≠ null
-      (6L, null.asInstanceOf[String], 4.0),
-      (7L, "  leading and trailing  ", 5.0),
-      (8L, "unicode é ☃ 日本", 6.0))
-      .toDF("id", "s", "v")
-    Sinks.writeCsv(tricky, dir)
-    val back = Sinks.readCsv(spark, dir, tricky.schema)
-    // CSV reads are always nullable — compare names and types
-    assert(back.schema.map(f => (f.name, f.dataType)) ==
-      tricky.schema.map(f => (f.name, f.dataType)))
-    assert(back.exceptAll(tricky).isEmpty && tricky.exceptAll(back).isEmpty,
-      "CSV must round-trip commas, quotes, newlines, empty-vs-null, whitespace, unicode")
-    // and the documents table survives whole
-    val docs = spark.read.parquet(sf() + "/documents.parquet")
-    val dir2 = java.nio.file.Files.createTempDirectory("graftcsv2").toString + "/t"
-    Sinks.writeCsv(docs, dir2)
-    val docsBack = Sinks.readCsv(spark, dir2, docs.schema)
-    assert(docsBack.exceptAll(docs).isEmpty && docs.exceptAll(docsBack).isEmpty)
-  }
-
-  test("partitioned write: partition pruning reaches the scan") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graftpart").toString + "/t"
-    val df = Seq((1, "a", 10), (2, "b", 20), (3, "a", 30)).toDF("id", "part", "v")
-    Sinks.writePartitioned(df, dir, Seq("part"))
-    val back = spark.read.parquet(dir).filter(col("part") === "a")
-    assert(back.count() == 2)
-    val scan = back.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters"), scan)
-  }
-
   test("runtime bloom-filter join pruning injects might_contain on the probe side") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graftbloom").toString
@@ -129,45 +64,6 @@ class ScaleOpsSpec extends SparkSpec {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
-  }
-
-  test("compact: many small files → few target-sized files, content identical") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graftcompact").toString
-    val tbl = s"$dir/events_lake"
-    // simulate a streaming-append victim: 64 tiny files
-    (1 to 6400).map(i => (i.toLong, s"payload-$i")).toDF("id", "v")
-      .repartition(64).write.mode("overwrite").parquet(tbl)
-    val beforeSum = spark.read.parquet(tbl).agg(sum($"id")).head.getLong(0)
-    val onDisk = new java.io.File(tbl).listFiles
-      .filter(f => f.getName.endsWith(".parquet")).map(_.length).sum
-    val (nBefore, nAfter) =
-      graft.sources.Sinks.compact(spark, tbl, targetBytes = onDisk / 4 + 1)
-    assert(nBefore == 64, s"expected 64 small files, saw $nBefore")
-    assert(nAfter <= 5, s"compaction left $nAfter files") // ceil(bytes/target)=4-ish
-    val after = spark.read.parquet(tbl)
-    assert(after.count() == 6400)
-    assert(after.agg(sum($"id")).head.getLong(0) == beforeSum)
-  }
-
-  test("compact: recovers a table stranded at .compact-old by a crash") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graftcompactcrash").toString
-    val tbl = s"$dir/lake"
-    (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-      .repartition(8).write.mode("overwrite").parquet(tbl)
-    val beforeSum = spark.read.parquet(tbl).agg(sum($"id")).head.getLong(0)
-    // simulate a crash between compact's two renames: table displaced to
-    // .compact-old, nothing published at `tbl`
-    val old = new java.io.File(s"$dir/lake.compact-old")
-    assert(new java.io.File(tbl).renameTo(old))
-    assert(!new java.io.File(tbl).exists())
-    val (_, nAfter) = graft.sources.Sinks.compact(spark, tbl)
-    assert(nAfter >= 1)
-    val after = spark.read.parquet(tbl)
-    assert(after.count() == 100)
-    assert(after.agg(sum($"id")).head.getLong(0) == beforeSum)
-    assert(!old.exists(), ".compact-old should be cleaned up after recovery")
   }
 
   test("AQE splits a skewed join partition at runtime (automatic q35)") {
@@ -257,6 +153,17 @@ class ScaleOpsSpec extends SparkSpec {
     assert(back.count() == 200)
     val shards = back.select("shard").distinct().count()
     assert(shards > 50, s"expected many distinct shards, got $shards")
+  }
+
+  test("sharded write: a shard filter prunes directories at the scan") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graftpart").toString + "/t"
+    Sinks.writeSharded(Seq(("ab01", 1), ("ab02", 2), ("cd03", 3)).toDF("identifier", "v"),
+      dir, "identifier")
+    val back = spark.read.parquet(dir).filter(col("shard") === "ab")
+    assert(back.count() == 2)
+    val scan = back.queryExecution.executedPlan.toString
+    assert(scan.contains("PartitionFilters"), scan)
   }
 
   test("salted join equals plain join and spreads the hot key") {

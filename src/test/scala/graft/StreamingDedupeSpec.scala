@@ -6,25 +6,6 @@ import org.apache.spark.sql.streaming.OutputMode
 
 class StreamingDedupeSpec extends SparkSpec {
 
-  test("built-in exactOnce keeps first occurrence across micro-batches") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[(String, Long)]
-    val q = StreamingDedupe.exactOnce(in.toDF().toDF("h", "id"), "h")
-      .writeStream.format("memory").queryName("dedupe_once")
-      .outputMode(OutputMode.Append).start()
-    try {
-      in.addData(("a", 1L), ("b", 2L), ("a", 3L))
-      q.processAllAvailable()
-      in.addData(("a", 4L), ("c", 5L))
-      q.processAllAvailable()
-      val rows = spark.table("dedupe_once").collect()
-        .map(r => (r.getString(0), r.getLong(1))).sortBy(_._2)
-      assert(rows.map(_._1).toSeq == Seq("a", "b", "c"))
-      assert(rows.length == 3) // "a" emitted exactly once across batches
-    } finally q.stop()
-  }
-
   test("flatMapGroupsWithState tracks per-hash duplicate counts across batches") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
@@ -42,33 +23,6 @@ class StreamingDedupeSpec extends SparkSpec {
       assert(rows.map(e => (e.hash, e.firstSeen, e.dupsSoFar)).toSeq == Seq(
         ("a", true, 0L), ("a", false, 1L), ("b", true, 0L),
         ("a", false, 2L))) // state carried across micro-batches
-    } finally q.stop()
-  }
-
-  test("withinWatermark dedupes inside the horizon and EVICTS state past it") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[(String, Long, Long)] // (hash, id, eventSec)
-    val df = in.toDF().toDF("h", "id", "sec")
-      .withColumn("event_time", timestamp_seconds(col("sec")))
-      .withWatermark("event_time", "10 seconds")
-    val q = StreamingDedupe.withinWatermark(df, "h")
-      .writeStream.format("memory").queryName("dedupe_wm")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // batch 1: duplicate within the horizon -> dropped
-      in.addData(("a", 1L, 100L), ("a", 2L, 105L), ("b", 3L, 100L))
-      q.processAllAvailable()
-      // batch 2 advances the watermark far past "a"'s state (1000-10 >> 105)
-      in.addData(("c", 4L, 1000L))
-      q.processAllAvailable()
-      // batch 3: "a" returns AFTER eviction -> re-emitted (bounded-state contract)
-      in.addData(("a", 5L, 1010L))
-      q.processAllAvailable()
-      val ids = spark.table("dedupe_wm").collect().map(_.getLong(1)).sorted.toSeq
-      assert(ids == Seq(1L, 3L, 4L, 5L),
-        s"expected dup id=2 dropped and id=5 re-emitted after eviction, got $ids")
     } finally q.stop()
   }
 }

@@ -32,38 +32,6 @@ class StreamingSpec extends SparkSpec {
     assert(rows.columns.contains("identifier") && rows.columns.contains("token_count"))
   }
 
-  test("event-time window agg: append emits only watermark-final windows") {
-    import spark.implicits._
-    import graft.streaming.EventWindowCounts
-    val base = Files.createTempDirectory("graftwin")
-    val landing = base.resolve("landing").toString
-    val out = base.resolve("out").toString
-    val ckpt = base.resolve("ckpt").toString
-    def ev(id: Long, sec: Long, typ: String, v: Double) =
-      (id, sec * 1000L * 1000 * 1000, typ, v) // ts as raw nanos
-
-    // run 1: two events inside [0,60) and one at 70s. Watermark only
-    // advances at batch end, so NOTHING is final yet -> no append output.
-    Seq(ev(1, 10, "click", 1.0), ev(2, 20, "click", 2.0), ev(3, 70, "view", 5.0))
-      .toDF("event_id", "ts", "event_type", "value")
-      .write.mode("overwrite").parquet(landing)
-    val schema = spark.read.parquet(landing).schema
-    EventWindowCounts.run(spark, landing, schema, out, ckpt).awaitTermination()
-    assert(spark.read.parquet(out).count() == 0,
-      "no window may emit before the watermark passes it")
-
-    // run 2: a much later event pushes the watermark past the early
-    // windows -> they finalize and emit exactly once.
-    Seq(ev(4, 600, "view", 1.0)).toDF("event_id", "ts", "event_type", "value")
-      .write.mode("append").parquet(landing)
-    EventWindowCounts.run(spark, landing, schema, out, ckpt).awaitTermination()
-    val rows = spark.read.parquet(out)
-      .select("window_start", "event_type", "cnt", "total_value").collect()
-      .map(r => (r.getTimestamp(0).toInstant.getEpochSecond,
-        r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(rows == Set((0L, "click", 2L, 3.0), (60L, "view", 1L, 5.0)), rows)
-  }
-
   test("stream/batch parity: AvailableNow windows == batch agg before the watermark") {
     import org.apache.spark.sql.functions._
     import graft.streaming.StreamParity
