@@ -1,6 +1,6 @@
 package graft.convert
 
-import OdsDecoder.parseXml
+import OdsDecoder.{parseXml, textOf}
 import org.w3c.dom.{Document, Element}
 
 /** Pure-JVM XLSX workbook decoder (ZIP + SpreadsheetML XML — no POI).
@@ -133,7 +133,7 @@ object XlsxDecoder {
 
     val shared: IndexedSeq[String] = parts.get("xl/sharedStrings.xml").map { b =>
       elems(parseXml(b), "si").map(si =>
-        childElems(si, "t").map(_.getTextContent).mkString).toIndexedSeq
+        childElems(si, "t").map(textOf).mkString).toIndexedSeq
     }.getOrElse(IndexedSeq.empty)
 
     val styles = parseStyles(parts.get("xl/styles.xml"))
@@ -174,12 +174,12 @@ object XlsxDecoder {
   private def decodeCell(c: Element, shared: IndexedSeq[String],
       styles: IndexedSeq[CellStyle]): Option[String] = {
     val t = c.getAttribute("t")
-    def v: Option[String] = childElems(c, "v").headOption.map(_.getTextContent)
+    def v: Option[String] = childElems(c, "v").headOption.map(textOf)
     t match {
       case "s" => v.flatMap(i => shared.lift(i.trim.toInt))
       case "inlineStr" =>
         childElems(c, "is").headOption.map(is => childElems(is, "t")
-          .map(_.getTextContent).mkString)
+          .map(textOf).mkString)
       case "b" => v.map(x => if (x.trim == "1") "TRUE" else "FALSE")
       case "str" | "e" => v
       case _ => // number (or date/time, decided by the cell style)

@@ -1,6 +1,12 @@
 package graft.functions
 
+import java.awt.color.ColorSpace
+import java.awt.image.{BufferedImage, IndexColorModel}
+import java.io.ByteArrayInputStream
 import java.util.zip.CRC32
+import javax.imageio.ImageIO
+import javax.imageio.stream.MemoryCacheImageInputStream
+import scala.util.Using
 
 /** Pure-JVM image container parsing — REAL header decode, zero external
   * deps: PNG (IHDR chunk), JPEG (SOFn marker scan), GIF (logical screen
@@ -14,14 +20,15 @@ import java.util.zip.CRC32
   * difference between an I/O-bound scan and a CPU-bound one — so `parse`
   * deliberately reads headers only and never decompresses pixel data.
   *
-  * Full pixel decode (when a build needs it) drops into the same seam via
-  * `javax.imageio.ImageIO` — the spec proves `parse` agrees with ImageIO's
-  * own encoders on all four formats.
+  * Full pixel decode is [[decodeRgb]], backed by the JDK's own
+  * `javax.imageio` readers for all four formats (m09, m11, m19). `parse`
+  * stays hand-written because it is on the catalog's metadata path, where
+  * building an ImageIO reader would cost more than the header walk.
   *
   * The `*Bytes` builders emit minimal VALID streams (real signatures, real
   * chunk layout, real CRCs for PNG) — the fixture-synthesis side used by
   * m01 to exercise the parser against byte streams the oracle can size
-  * exactly.
+  * exactly. `pngEncodeRgb` and `bmpEncodeRgb` write real pixel data.
   */
 object ImageCodec {
 
@@ -180,13 +187,11 @@ object ImageCodec {
       le32b(40) ++ le32b(w) ++ le32b(h) ++ le16b(1) ++ le16b(24) ++
       Array.fill(24)(0.toByte)
 
-  // ----------------------------------------------- real PNG pixel codec
+  // ------------------------------------------------ pixel fixture encoders
   //
-  // Full decode/encode for the 8-bit-RGB non-interlaced PNG subset — the
-  // shape every synthetic-fixture and most real-world ML-corpus PNGs take.
-  // Everything is JDK-only (zlib via java.util.zip); the spec cross-checks
-  // both directions against javax.imageio, so the scanline filter math is
-  // proven against an independent implementation, not itself.
+  // Real decodable PNG and BMP streams from packed RGB — the fixture side
+  // of m09/m11, whose oracles recompute pixel statistics from the same
+  // synthesis arithmetic. The specs read both back through ImageIO.
 
   /** Encode packed RGB pixels (3 bytes/px, row-major) as a REAL decodable
     * PNG: filter-0 scanlines, one deflated IDAT, correct CRCs. */
@@ -216,126 +221,8 @@ object ImageCodec {
       be32b(0) ++ iendType ++ crcOf(iendType)
   }
 
-  /** Decode an 8-bit-RGB non-interlaced PNG to packed RGB pixels. Walks
-    * the chunk stream (multiple IDATs concatenate), inflates, and undoes
-    * all five scanline filters (None/Sub/Up/Average/Paeth). Returns None
-    * for other color types/depths/interlacing or malformed data — never
-    * throws. */
-  def pngDecodeRgb(bytes: Array[Byte]): Option[(Int, Int, Array[Byte])] = try {
-    if (bytes == null || bytes.length < 45 ||
-      !PngSig.indices.forall(i => bytes(i) == PngSig(i))) return None
-    var p = 8
-    var w = 0; var h = 0; var ok = false
-    val idat = new java.io.ByteArrayOutputStream()
-    var end = false
-    while (!end && p + 8 <= bytes.length) {
-      val len = be32(bytes, p)
-      val typ = new String(bytes, p + 4, 4, "US-ASCII")
-      if (len < 0 || p + 12 + len > bytes.length) return None
-      typ match {
-        case "IHDR" =>
-          w = be32(bytes, p + 8); h = be32(bytes, p + 12)
-          val bitDepth = u8(bytes, p + 16); val colorType = u8(bytes, p + 17)
-          val interlace = u8(bytes, p + 20)
-          // pixel cap: header-declared dims drive the allocation below, so
-          // a malformed header could demand gigabytes (OutOfMemoryError is
-          // an Error — the catch-all would NOT contain it). 64 MPix covers
-          // any sane corpus image; bigger payloads route to a production
-          // decoder, not this subset codec.
-          ok = bitDepth == 8 && colorType == 2 && interlace == 0 &&
-            w > 0 && h > 0 && w.toLong * h <= 64L * 1024 * 1024
-          if (!ok) return None
-        case "IDAT" => idat.write(bytes, p + 8, len)
-        case "IEND" => end = true
-        case _ =>
-      }
-      p += 12 + len
-    }
-    if (!ok || idat.size() == 0) return None
-    val inflater = new java.util.zip.Inflater()
-    inflater.setInput(idat.toByteArray)
-    val stride = w * 3
-    val raw = new Array[Byte](h * (1 + stride))
-    var got = 0
-    while (got < raw.length && !inflater.finished()) {
-      val n = inflater.inflate(raw, got, raw.length - got)
-      if (n == 0 && inflater.needsInput()) return None // truncated stream
-      got += n
-    }
-    inflater.end()
-    if (got < raw.length) return None
-    val px = new Array[Byte](h * stride)
-    @inline def paeth(a: Int, b: Int, c: Int): Int = {
-      val pp = a + b - c
-      val pa = math.abs(pp - a); val pb = math.abs(pp - b); val pc = math.abs(pp - c)
-      if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-    }
-    var y = 0
-    while (y < h) {
-      val filter = raw(y * (1 + stride)) & 0xFF
-      val rowIn = y * (1 + stride) + 1
-      val rowOut = y * stride
-      var x = 0
-      while (x < stride) {
-        val cur = raw(rowIn + x) & 0xFF
-        val left = if (x >= 3) px(rowOut + x - 3) & 0xFF else 0
-        val up = if (y > 0) px(rowOut - stride + x) & 0xFF else 0
-        val upLeft = if (y > 0 && x >= 3) px(rowOut - stride + x - 3) & 0xFF else 0
-        val v = filter match {
-          case 0 => cur
-          case 1 => cur + left
-          case 2 => cur + up
-          case 3 => cur + (left + up) / 2
-          case 4 => cur + paeth(left, up, upLeft)
-          case _ => return None
-        }
-        px(rowOut + x) = (v & 0xFF).toByte
-        x += 1
-      }
-      y += 1
-    }
-    Some((w, h, px))
-  } catch { case _: Exception => None }
-
-  /** Decode an uncompressed 24-bit BMP (BITMAPINFOHEADER, the shape
-    * [[bmpBytes]] and most real-world tool exports use) to packed RGB.
-    * Handles bottom-up AND top-down row order, 4-byte row padding, and
-    * BGR→RGB channel order. Returns None for other depths/compressions —
-    * never throws. */
-  def bmpDecodeRgb(bytes: Array[Byte]): Option[(Int, Int, Array[Byte])] = try {
-    if (bytes == null || bytes.length < 54 || bytes(0) != 'B' || bytes(1) != 'M') return None
-    val dataOff = le32(bytes, 10)
-    val dib = le32(bytes, 14)
-    if (dib < 40) return None
-    val w = le32(bytes, 18)
-    val hRaw = le32(bytes, 22)
-    val h = math.abs(hRaw)
-    val topDown = hRaw < 0
-    val planes = le16(bytes, 26); val bpp = le16(bytes, 28)
-    val compression = le32(bytes, 30)
-    if (planes != 1 || bpp != 24 || compression != 0 ||
-      w <= 0 || h <= 0 || w.toLong * h > 64L * 1024 * 1024) return None
-    val rowSize = (w * 3 + 3) & ~3 // each row padded to a 4-byte boundary
-    if (dataOff.toLong + rowSize.toLong * h > bytes.length) return None
-    val out = new Array[Byte](w * h * 3)
-    var y = 0
-    while (y < h) {
-      val srcRow = dataOff + (if (topDown) y else h - 1 - y) * rowSize
-      var x = 0
-      while (x < w) {
-        val o = (y * w + x) * 3
-        out(o) = bytes(srcRow + x * 3 + 2)     // R (stored BGR)
-        out(o + 1) = bytes(srcRow + x * 3 + 1) // G
-        out(o + 2) = bytes(srcRow + x * 3)     // B
-        x += 1
-      }
-      y += 1
-    }
-    Some((w, h, out))
-  } catch { case _: Exception => None }
-
-  /** Encode packed RGB pixels as an uncompressed 24-bit bottom-up BMP —
-    * the exact inverse of [[bmpDecodeRgb]] (and readable by ImageIO). */
+  /** Encode packed RGB pixels as an uncompressed 24-bit bottom-up BMP
+    * (readable by ImageIO, and so by [[decodeRgb]]). */
   def bmpEncodeRgb(w: Int, h: Int, rgb: Array[Byte]): Array[Byte] = {
     require(rgb.length == w * h * 3, s"need ${w * h * 3} bytes, got ${rgb.length}")
     val rowSize = (w * 3 + 3) & ~3
@@ -361,152 +248,61 @@ object ImageCodec {
     out
   }
 
-  /** Decode a GIF's FIRST image frame to packed RGB: LZW decompression
-    * (variable-width codes, clear/EOI semantics), global or local color
-    * table, interlace de-weaving (the 8/8-8/4-4/2-2/1 four-pass row
-    * order — ImageIO's own writer emits interlaced frames), frame offset
-    * composited onto the logical screen. Missing color tables return
-    * None — never throws. */
-  def gifDecodeRgb(bytes: Array[Byte]): Option[(Int, Int, Array[Byte])] = try {
-    if (bytes == null || bytes.length < 14) return None
-    val magic = new String(bytes, 0, 6, "US-ASCII")
-    if (magic != "GIF87a" && magic != "GIF89a") return None
-    val sw = le16(bytes, 6); val sh = le16(bytes, 8)
-    if (sw <= 0 || sh <= 0 || sw.toLong * sh > 64L * 1024 * 1024) return None
-    val packed = u8(bytes, 10)
-    val hasGct = (packed & 0x80) != 0
-    val gctSize = 2 << (packed & 7)
-    var p = 13
-    val gct = if (hasGct) { val t = bytes.slice(p, p + gctSize * 3); p += gctSize * 3; t }
-      else Array.emptyByteArray
-    val bg = u8(bytes, 11)
-    // screen initialized to the background color (or black without a GCT)
-    val out = new Array[Byte](sw * sh * 3)
-    if (hasGct && bg < gctSize) {
-      var i = 0
-      while (i < sw * sh) {
-        out(i * 3) = gct(bg * 3); out(i * 3 + 1) = gct(bg * 3 + 1)
-        out(i * 3 + 2) = gct(bg * 3 + 2); i += 1
-      }
-    }
-    while (p < bytes.length) {
-      u8(bytes, p) match {
-        case 0x3B => return None // trailer before any image frame
-        case 0x21 => // extension: label + sub-blocks
-          p += 2
-          while (p < bytes.length && u8(bytes, p) != 0) p += 1 + u8(bytes, p)
-          p += 1
-        case 0x2C => // image descriptor
-          val fx = le16(bytes, p + 1); val fy = le16(bytes, p + 3)
-          val fw = le16(bytes, p + 5); val fh = le16(bytes, p + 7)
-          val fPacked = u8(bytes, p + 9)
-          p += 10
-          val interlaced = (fPacked & 0x40) != 0
-          val lct = if ((fPacked & 0x80) != 0) {
-            val n = 2 << (fPacked & 7)
-            val t = bytes.slice(p, p + n * 3); p += n * 3; t
-          } else gct
-          if (lct.isEmpty) return None
-          val minCode = u8(bytes, p); p += 1
-          // concatenate the LZW sub-blocks
-          val data = new java.io.ByteArrayOutputStream()
-          while (p < bytes.length && u8(bytes, p) != 0) {
-            val n = u8(bytes, p)
-            data.write(bytes, p + 1, n); p += 1 + n
-          }
-          p += 1
-          val indices = gifLzwDecode(data.toByteArray, minCode, fw * fh)
-            .getOrElse(return None)
-          // interlaced frames store rows in four passes (start/step
-          // 0/8, 4/8, 2/4, 1/2) — build the decoded-row → display-row map
-          val rowOrder: Array[Int] =
-            if (!interlaced) Array.tabulate(fh)(identity)
-            else {
-              val order = new Array[Int](fh)
-              var r = 0
-              for ((start, step) <- Seq((0, 8), (4, 8), (2, 4), (1, 2));
-                   y <- start until fh by step) { order(r) = y; r += 1 }
-              order
-            }
-          // composite the frame onto the screen
-          var i = 0
-          while (i < indices.length && i < fw * fh) {
-            val px = indices(i)
-            val x = fx + i % fw; val y = fy + rowOrder(i / fw)
-            if (x < sw && y < sh && px * 3 + 2 < lct.length) {
-              val o = (y * sw + x) * 3
-              out(o) = lct(px * 3); out(o + 1) = lct(px * 3 + 1); out(o + 2) = lct(px * 3 + 2)
-            }
-            i += 1
-          }
-          return Some((sw, sh, out)) // first frame only
-        case _ => return None
-      }
-    }
-    None
-  } catch { case _: Exception => None }
+  // --------------------------------------------------------- pixel decode
 
-  /** GIF LZW: variable-width codes starting at minCode+1 bits, dictionary
-    * grows to 12 bits, CLEAR resets, EOI terminates. Little-endian bit
-    * packing within the concatenated sub-block bytes. */
-  private def gifLzwDecode(data: Array[Byte], minCode: Int, maxPixels: Int): Option[Array[Int]] = {
-    if (minCode < 2 || minCode > 8) return None
-    val clear = 1 << minCode
-    val eoi = clear + 1
-    var codeSize = minCode + 1
-    var dictSize = eoi + 1
-    // dictionary as (prefixCode, appendedByte); roots are single colors
-    val prefix = new Array[Int](4096)
-    val append = new Array[Int](4096)
-    val out = new java.io.ByteArrayOutputStream()
-    def emit(code: Int, buf: Array[Int]): Int = { // writes code's string, returns first byte
-      var n = 0; var c = code
-      while (c >= clear) { buf(n) = append(c); n += 1; c = prefix(c) } // composed codes
-      buf(n) = c; n += 1
-      var i = n - 1
-      while (i >= 0) { out.write(buf(i)); i -= 1 }
-      buf(n - 1)
+  /** Largest image [[decodeRgb]] allocates pixels for. Header-declared
+    * dims drive the allocation, so a malformed header could demand
+    * gigabytes, and `OutOfMemoryError` is an `Error` the catch-all would
+    * not contain. 64 MPix covers any sane corpus image. */
+  private val MaxPixels = 64L * 1024 * 1024
+
+  /** Decode a PNG, JPEG, GIF or BMP payload to (width, height, packed
+    * RGB — 3 bytes/px, row-major) with the JDK's `javax.imageio` reader
+    * for the format [[parse]] finds (its format names are ImageIO's). A
+    * GIF gives its first frame at the frame's own size, not composited
+    * onto the logical screen. The reader reads from memory (no temp-file
+    * cache) and is disposed after every call, since the JPEG reader holds
+    * native memory. The pixel cap is checked on the reader's header dims
+    * before any pixels are allocated. Returns None for null,
+    * unrecognized, oversized or malformed input — never throws. */
+  def decodeRgb(bytes: Array[Byte]): Option[(Int, Int, Array[Byte])] =
+    parse(bytes).flatMap { meta =>
+      val reader = ImageIO.getImageReadersByFormatName(meta.format).next()
+      try Using.resource(new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))) { in =>
+        reader.setInput(in, true, true)
+        val w = reader.getWidth(0); val h = reader.getHeight(0)
+        if (w <= 0 || h <= 0 || w.toLong * h > MaxPixels) None
+        else Some((w, h, packRgb(reader.read(0))))
+      } catch { case _: Exception => None }
+      finally reader.dispose()
     }
-    val buf = new Array[Int](4096)
-    var bitPos = 0
-    def next(): Int = {
-      if ((bitPos + codeSize + 7) / 8 > data.length) return -1
-      var v = 0; var i = 0
-      while (i < codeSize) {
-        val bit = bitPos + i
-        if ((u8(data, bit / 8) & (1 << (bit % 8))) != 0) v |= 1 << i
+
+  /** Packed RGB of a decoded image. Gray images give their raw samples,
+    * scaled to 8 bits: `getRGB` would apply the linear-gray to sRGB
+    * transfer curve, so a gray JPEG's level 64 would read as 137.
+    * Palette and color images go through `getRGB`. */
+  private def packRgb(img: BufferedImage): Array[Byte] = {
+    val w = img.getWidth; val h = img.getHeight
+    val out = new Array[Byte](w * h * 3)
+    val cm = img.getColorModel
+    if (!cm.isInstanceOf[IndexColorModel] && cm.getColorSpace.getType == ColorSpace.TYPE_GRAY) {
+      val max = (1 << cm.getComponentSize(0)) - 1
+      val gray = img.getRaster.getSamples(0, 0, w, h, 0, null: Array[Int])
+      var i = 0
+      while (i < gray.length) {
+        val g = (gray(i) * 255 / max).toByte
+        out(i * 3) = g; out(i * 3 + 1) = g; out(i * 3 + 2) = g
         i += 1
       }
-      bitPos += codeSize
-      v
-    }
-    var prev = -1
-    var guard = 0
-    while (out.size() < maxPixels && guard < maxPixels * 2 + 16) {
-      guard += 1
-      val code = next()
-      if (code < 0 || code == eoi) return Some(out.toByteArray.map(_ & 0xFF))
-      if (code == clear) {
-        codeSize = minCode + 1; dictSize = eoi + 1; prev = -1
-      } else if (prev < 0) {
-        if (code >= dictSize) return None
-        emit(code, buf)
-        prev = code
-      } else {
-        val first =
-          if (code < dictSize) emit(code, buf)
-          else { // KwKwK case: code == dictSize
-            if (code != dictSize) return None
-            val f = emit(prev, buf); out.write(f); f
-          }
-        if (dictSize < 4096) {
-          prefix(dictSize) = prev; append(dictSize) = first
-          dictSize += 1
-          if (dictSize == (1 << codeSize) && codeSize < 12) codeSize += 1
-        }
-        prev = code
+    } else {
+      val argb = img.getRGB(0, 0, w, h, null, 0, w)
+      var i = 0
+      while (i < argb.length) {
+        val p = argb(i)
+        out(i * 3) = (p >> 16).toByte; out(i * 3 + 1) = (p >> 8).toByte; out(i * 3 + 2) = p.toByte
+        i += 1
       }
     }
-    Some(out.toByteArray.map(_ & 0xFF))
+    out
   }
 }

@@ -1,23 +1,10 @@
 package graft.functions
 
-import scala.collection.mutable
-
-/** Pure-JVM BASELINE JPEG decoder (ITU-T T.81 sequential DCT, Huffman) —
-  * completes the real-pixel family next to [[ImageCodec]]'s PNG/BMP/GIF
-  * codecs: DQT/DHT/SOF0/DRI/SOS segment parse, bit-stuffed Huffman
-  * entropy decode with restart markers, dequantize, zigzag, separable
-  * 2-D IDCT, chroma upsampling for 4:4:4 / 4:2:2 / 4:2:0, JFIF
-  * YCbCr→RGB. Returns packed RGB like the sibling codecs.
-  *
-  * Scope (documented): baseline sequential only — progressive (SOF2),
-  * arithmetic coding, 12-bit precision and lossless modes return None
-  * (real-world ML corpora are overwhelmingly baseline or decodable as
-  * such). Decode is per-payload and driver-free; the corpus path
-  * parallelizes across files exactly like the other codecs. IDCT is the
-  * standard float separable form — pixel values match other decoders
-  * within ±2 (IDCT rounding is implementation-defined; the spec pins
-  * agreement with the JDK's reader under that tolerance, plus exact
-  * agreement on synthetic single-DC images).
+/** JPEG header reading and fixture synthesis, with no pixel decode:
+  * [[quantTable0]] walks the marker segments for m14's quality estimate,
+  * and [[jpegGrayBlockBytes]] writes the exactly invertible baseline
+  * JPEGs behind m19. Pixels are decoded by the JDK's own reader, through
+  * [[ImageCodec.decodeRgb]].
   */
 object JpegDecoder {
 
@@ -26,10 +13,10 @@ object JpegDecoder {
 
   /** Read quantization table 0 from a JPEG's DQT segment(s) WITHOUT
     * decoding any entropy data — the header-only walk behind the
-    * m14 quality estimate (a thumbnail of the full [[decodeRgb]] marker
-    * loop: segments are length-prefixed, so the walk touches ~100 bytes
-    * of a multi-MB file; at 100 TB this is the plan-don't-decode
-    * discipline of m12/m15/m17 applied to JPEG). Returns the 64 entries
+    * m14 quality estimate (segments are length-prefixed, so the walk
+    * touches ~100 bytes of a multi-MB file; at 100 TB this is the
+    * plan-don't-decode discipline of m12/m15/m17 applied to JPEG).
+    * Returns the 64 entries
     * in TRANSMISSION (zigzag) order — the sum-based quality estimator is
     * order-invariant, and keeping raw order makes the synth round-trip a
     * byte identity. 16-bit (Pq=1) tables are supported; a missing table
@@ -73,444 +60,8 @@ object JpegDecoder {
     None
   } catch { case _: ArrayIndexOutOfBoundsException => None }
 
-  private val ZigZag: Array[Int] = Array(
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
-
-  /** Canonical Huffman table: decode by walking code lengths. */
-  private final class Huff(bits: Array[Int], vals: Array[Int]) {
-    // mincode/maxcode/valptr per length (T.81 F.2.2.3)
-    val minCode = new Array[Int](17)
-    val maxCode = new Array[Int](17)
-    val valPtr = new Array[Int](17)
-    locally {
-      var code = 0
-      var k = 0
-      var l = 1
-      while (l <= 16) {
-        valPtr(l) = k
-        minCode(l) = code
-        code += bits(l - 1)
-        k += bits(l - 1)
-        maxCode(l) = if (bits(l - 1) > 0) code - 1 else -1
-        code <<= 1
-        l += 1
-      }
-    }
-    def value(idx: Int): Int = vals(idx)
-  }
-
-  /** Bit reader over the entropy-coded segment: 0xFF00 unstuffing; stops
-    * at any other marker (restart handling is the caller's). */
-  private final class BitReader(b: Array[Byte], var pos: Int) {
-    private var acc = 0
-    private var nbits = 0
-    var hitMarker = false
-
-    def align(): Unit = { acc = 0; nbits = 0 }
-
-    private def fill(): Boolean = {
-      if (pos >= b.length) return false
-      val v = u8(b, pos)
-      if (v == 0xFF) {
-        if (pos + 1 >= b.length) return false
-        val nxt = u8(b, pos + 1)
-        if (nxt == 0x00) { pos += 2; acc = (acc << 8) | 0xFF; nbits += 8; true }
-        else { hitMarker = true; false } // a real marker: leave pos at 0xFF
-      } else { pos += 1; acc = (acc << 8) | v; nbits += 8; true }
-    }
-
-    def bit(): Int = {
-      if (nbits == 0 && !fill()) return -1
-      nbits -= 1
-      (acc >> nbits) & 1
-    }
-
-    def bitsValue(n: Int): Int = {
-      var v = 0
-      var k = 0
-      while (k < n) {
-        val bt = bit()
-        if (bt < 0) return -1
-        v = (v << 1) | bt
-        k += 1
-      }
-      v
-    }
-
-    def decodeHuff(h: Huff): Int = {
-      var code = 0
-      var l = 1
-      while (l <= 16) {
-        val bt = bit()
-        if (bt < 0) return -1
-        code = (code << 1) | bt
-        if (h.maxCode(l) >= 0 && code <= h.maxCode(l))
-          return h.value(h.valPtr(l) + code - h.minCode(l))
-        l += 1
-      }
-      -1
-    }
-  }
-
-  /** T.81 F.12 EXTEND: map a magnitude-coded value to its signed value. */
-  @inline private def extend(v: Int, t: Int): Int =
-    if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
-
-  private final case class Component(id: Int, h: Int, v: Int, tq: Int) {
-    var dcTable = 0
-    var acTable = 0
-  }
-
-  /** Decode a baseline JPEG to (width, height, packed RGB). Returns None
-    * for progressive/arithmetic/malformed input — never throws. */
-  def decodeRgb(bytes: Array[Byte]): Option[(Int, Int, Array[Byte])] = try {
-    if (bytes == null || bytes.length < 4 ||
-      u8(bytes, 0) != 0xFF || u8(bytes, 1) != 0xD8) return None
-    val qt = Array.fill(4)(new Array[Int](64))
-    val dcTables = new Array[Huff](4)
-    val acTables = new Array[Huff](4)
-    var comps: Array[Component] = null
-    var w = 0; var h = 0
-    var restartInterval = 0
-    var p = 2
-    var sosAt = -1
-    while (sosAt < 0 && p + 3 < bytes.length) {
-      if (u8(bytes, p) != 0xFF) return None
-      var q = p
-      while (q + 1 < bytes.length && u8(bytes, q + 1) == 0xFF) q += 1
-      val m = u8(bytes, q + 1)
-      if (m == 0xD9) return None // EOI before SOS
-      val len = be16(bytes, q + 2)
-      if (len < 2 || q + 2 + len > bytes.length) return None
-      val seg = q + 4
-      val segEnd = q + 2 + len
-      m match {
-        case 0xDB => // DQT: one or more tables
-          var i = seg
-          while (i < segEnd) {
-            val pq = u8(bytes, i) >> 4
-            val tq = u8(bytes, i) & 15
-            if (tq > 3) return None
-            var k = 0
-            i += 1
-            while (k < 64) {
-              qt(tq)(ZigZag(k)) = if (pq == 0) u8(bytes, i) else be16(bytes, i)
-              i += (if (pq == 0) 1 else 2)
-              k += 1
-            }
-          }
-        case 0xC4 => // DHT
-          var i = seg
-          while (i < segEnd) {
-            val tc = u8(bytes, i) >> 4
-            val th = u8(bytes, i) & 15
-            if (tc > 1 || th > 3) return None
-            val bits = (0 until 16).map(j => u8(bytes, i + 1 + j)).toArray
-            val n = bits.sum
-            if (i + 17 + n > segEnd) return None
-            val vals = (0 until n).map(j => u8(bytes, i + 17 + j)).toArray
-            val t = new Huff(bits, vals)
-            if (tc == 0) dcTables(th) = t else acTables(th) = t
-            i += 17 + n
-          }
-        case 0xC0 => // SOF0 baseline
-          if (u8(bytes, seg) != 8) return None // precision
-          h = be16(bytes, seg + 1); w = be16(bytes, seg + 3)
-          val nc = u8(bytes, seg + 5)
-          if (w <= 0 || h <= 0 || (nc != 1 && nc != 3) ||
-            w.toLong * h > 64L * 1024 * 1024) return None
-          comps = (0 until nc).map { c =>
-            val o = seg + 6 + c * 3
-            Component(u8(bytes, o), u8(bytes, o + 1) >> 4, u8(bytes, o + 1) & 15,
-              u8(bytes, o + 2))
-          }.toArray
-          if (comps.exists(c => c.h < 1 || c.h > 4 || c.v < 1 || c.v > 4 || c.tq > 3))
-            return None
-        case 0xC1 => return None // extended sequential: out of scope
-        case 0xC2 | 0xC3 | 0xC5 | 0xC6 | 0xC7 | 0xC9 | 0xCA | 0xCB | 0xCD | 0xCE | 0xCF =>
-          return None // progressive / arithmetic / lossless
-        case 0xDD => restartInterval = be16(bytes, seg)
-        case 0xDA => // SOS
-          if (comps == null) return None
-          val ns = u8(bytes, seg)
-          if (ns != comps.length) return None
-          var i = seg + 1
-          var c = 0
-          while (c < ns) {
-            val cid = u8(bytes, i)
-            val comp = comps.find(_.id == cid).getOrElse(return None)
-            comp.dcTable = u8(bytes, i + 1) >> 4
-            comp.acTable = u8(bytes, i + 1) & 15
-            i += 2
-            c += 1
-          }
-          sosAt = segEnd // the SOS length already covers Ss/Se/AhAl
-        case _ => // APPn, COM, others: skip
-      }
-      p = segEnd
-    }
-    if (sosAt < 0 || comps == null) return None
-
-    // T.81 A.2: a SINGLE-component scan is non-interleaved — the MCU is
-    // one 8×8 block in raster order and sampling factors play no role in
-    // MCU formation. Normalize them away so the generic loop below
-    // produces the raster layout.
-    if (comps.length == 1) {
-      val c0 = comps(0)
-      val n = c0.copy(h = 1, v = 1) // copy() resets the scan-table vars
-      n.dcTable = c0.dcTable; n.acTable = c0.acTable
-      comps = Array(n)
-    }
-
-    val hMax = comps.map(_.h).max
-    val vMax = comps.map(_.v).max
-    val mcuW = 8 * hMax
-    val mcuH = 8 * vMax
-    val mcusX = (w + mcuW - 1) / mcuW
-    val mcusY = (h + mcuH - 1) / mcuH
-
-    // per-component pixel planes at the component's own resolution
-    val planeW = comps.map(c => mcusX * 8 * c.h)
-    val planeH = comps.map(c => mcusY * 8 * c.v)
-    val planes = comps.indices.map(ci => new Array[Byte](planeW(ci) * planeH(ci))).toArray
-
-    val reader = new BitReader(bytes, sosAt)
-    val dcPred = new Array[Int](comps.length)
-    val block = new Array[Int](64)
-    val tmp = new Array[Double](64)
-
-    def decodeBlock(ci: Int, bx: Int, by: Int): Boolean = {
-      val comp = comps(ci)
-      val dcT = dcTables(comp.dcTable); val acT = acTables(comp.acTable)
-      if (dcT == null || acT == null) return false
-      java.util.Arrays.fill(block, 0)
-      val t = reader.decodeHuff(dcT)
-      if (t < 0) return false
-      val diffBits = if (t == 0) 0 else reader.bitsValue(t)
-      if (diffBits < 0) return false
-      dcPred(ci) += extend(diffBits, t)
-      block(0) = dcPred(ci) * qt(comp.tq)(0)
-      var k = 1
-      while (k < 64) {
-        val rs = reader.decodeHuff(acT)
-        if (rs < 0) return false
-        val r = rs >> 4; val s = rs & 15
-        if (s == 0) {
-          if (r == 15) k += 16 // ZRL
-          else k = 64 // EOB
-        } else {
-          k += r
-          if (k > 63) return false
-          val vb = reader.bitsValue(s)
-          if (vb < 0) return false
-          block(ZigZag(k)) = extend(vb, s) * qt(comp.tq)(ZigZag(k))
-          k += 1
-        }
-      }
-      // separable IDCT: rows then columns (T.81 A.3.3 float form)
-      var i = 0
-      while (i < 8) {
-        var x = 0
-        while (x < 8) {
-          var acc = 0.0
-          var u = 0
-          while (u < 8) {
-            val cu = if (u == 0) 0.70710678118654752 else 1.0
-            acc += cu * block(i * 8 + u) * math.cos((2 * x + 1) * u * math.Pi / 16)
-            u += 1
-          }
-          tmp(i * 8 + x) = acc / 2.0
-          x += 1
-        }
-        i += 1
-      }
-      val px = planes(ci)
-      val pw = planeW(ci)
-      var x = 0
-      while (x < 8) {
-        var y = 0
-        while (y < 8) {
-          var acc = 0.0
-          var v = 0
-          while (v < 8) {
-            val cv = if (v == 0) 0.70710678118654752 else 1.0
-            acc += cv * tmp(v * 8 + x) * math.cos((2 * y + 1) * v * math.Pi / 16)
-            v += 1
-          }
-          val s = math.round(acc / 2.0 + 128.0).toInt
-          val yy = by + y; val xx = bx + x
-          if (yy < planeH(ci) && xx < pw)
-            px(yy * pw + xx) = (if (s < 0) 0 else if (s > 255) 255 else s).toByte
-          y += 1
-        }
-        x += 1
-      }
-      true
-    }
-
-    var mcu = 0
-    val totalMcus = mcusX * mcusY
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-          // expect an RSTn marker: re-align, consume, reset predictors
-          reader.align()
-          var pp = reader.pos
-          while (pp + 1 < bytes.length && u8(bytes, pp) != 0xFF) pp += 1
-          if (pp + 1 >= bytes.length) return None
-          val rm = u8(bytes, pp + 1)
-          if (rm < 0xD0 || rm > 0xD7) return None
-          reader.pos = pp + 2
-          reader.hitMarker = false
-          java.util.Arrays.fill(dcPred, 0)
-        }
-        var ci = 0
-        while (ci < comps.length) {
-          val comp = comps(ci)
-          var by = 0
-          while (by < comp.v) {
-            var bx = 0
-            while (bx < comp.h) {
-              if (!decodeBlock(ci, (mx * comp.h + bx) * 8, (my * comp.v + by) * 8))
-                return None
-              bx += 1
-            }
-            by += 1
-          }
-          ci += 1
-        }
-        mcu += 1
-        mx += 1
-      }
-      my += 1
-    }
-    if (mcu != totalMcus) return None
-
-    // upsample every component to full resolution. 2× ratios use
-    // libjpeg's "fancy" triangle filter (3:1 weights with the 8/7 and
-    // 2/1 rounding split) — the JDK's reader is libjpeg-derived, so
-    // matching the filter is what makes the ImageIO cross-check tight;
-    // other ratios fall back to nearest.
-    def upsampled(ci: Int): Array[Byte] = {
-      val rx = hMax / comps(ci).h
-      val ry = vMax / comps(ci).v
-      val pw = planeW(ci); val ph = planeH(ci)
-      val src = planes(ci)
-      if (rx == 1 && ry == 1) return src
-      val srcW = math.min(pw, (w + rx - 1) / rx)
-      val srcH = math.min(ph, (h + ry - 1) / ry)
-      @inline def s(x: Int, y: Int): Int = {
-        val cx = if (x < 0) 0 else if (x >= srcW) srcW - 1 else x
-        val cy = if (y < 0) 0 else if (y >= srcH) srcH - 1 else y
-        src(cy * pw + cx) & 0xFF
-      }
-      val outP = new Array[Byte](w * h)
-      if (rx == 2 && ry == 2) {
-        var oy = 0
-        while (oy < h) {
-          val iy = oy >> 1
-          val ny = if ((oy & 1) == 0) iy - 1 else iy + 1 // nearer neighbor row
-          var ox = 0
-          while (ox < w) {
-            val ix = ox >> 1
-            val nx = if ((ox & 1) == 0) ix - 1 else ix + 1
-            val thisSum = 3 * s(ix, iy) + s(ix, ny)
-            val nearSum = 3 * s(nx, iy) + s(nx, ny)
-            val r = if ((ox & 1) == 0) 8 else 7
-            outP(oy * w + ox) = (((3 * thisSum + nearSum + r) >> 4) min 255).toByte
-            ox += 1
-          }
-          oy += 1
-        }
-      } else if (rx == 2 && ry == 1) {
-        var oy = 0
-        while (oy < h) {
-          var ox = 0
-          while (ox < w) {
-            val ix = ox >> 1
-            val nx = if ((ox & 1) == 0) ix - 1 else ix + 1
-            val r = if ((ox & 1) == 0) 1 else 2
-            outP(oy * w + ox) = (((3 * s(ix, oy) + s(nx, oy) + r) >> 2) min 255).toByte
-            ox += 1
-          }
-          oy += 1
-        }
-      } else if (rx == 1 && ry == 2) {
-        var oy = 0
-        while (oy < h) {
-          val iy = oy >> 1
-          val ny = if ((oy & 1) == 0) iy - 1 else iy + 1
-          var ox = 0
-          while (ox < w) {
-            val r = if ((oy & 1) == 0) 1 else 2
-            outP(oy * w + ox) = (((3 * s(ox, iy) + s(ox, ny) + r) >> 2) min 255).toByte
-            ox += 1
-          }
-          oy += 1
-        }
-      } else {
-        var oy = 0
-        while (oy < h) {
-          var ox = 0
-          while (ox < w) {
-            outP(oy * w + ox) = s(ox / rx, oy / ry).toByte
-            ox += 1
-          }
-          oy += 1
-        }
-      }
-      outP
-    }
-
-    // compose: YCbCr→RGB (JFIF), or grayscale replicate
-    val out = new Array[Byte](w * h * 3)
-    if (comps.length == 1) {
-      val pw = planeW(0)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val g = planes(0)(y * pw + x)
-          val o = (y * w + x) * 3
-          out(o) = g; out(o + 1) = g; out(o + 2) = g
-          x += 1
-        }
-        y += 1
-      }
-    } else {
-      val up = comps.indices.map(upsampled).toArray
-      val upStride = comps.indices.map(ci =>
-        if (hMax / comps(ci).h == 1 && vMax / comps(ci).v == 1) planeW(ci) else w).toArray
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          @inline def sample(ci: Int): Int = up(ci)(y * upStride(ci) + x) & 0xFF
-          val yy = sample(0).toDouble
-          val cb = sample(1) - 128.0
-          val cr = sample(2) - 128.0
-          val r = math.round(yy + 1.402 * cr).toInt
-          val g = math.round(yy - 0.344136 * cb - 0.714136 * cr).toInt
-          val b = math.round(yy + 1.772 * cb).toInt
-          val o = (y * w + x) * 3
-          out(o) = (if (r < 0) 0 else if (r > 255) 255 else r).toByte
-          out(o + 1) = (if (g < 0) 0 else if (g > 255) 255 else g).toByte
-          out(o + 2) = (if (b < 0) 0 else if (b > 255) 255 else b).toByte
-          x += 1
-        }
-        y += 1
-      }
-    }
-    Some((w, h, out))
-  } catch { case _: Exception => None }
-
   /** Minimal baseline JPEG ENCODER for block-constant GRAYSCALE images —
-    * the fixture-synthesis sibling of [[decodeRgb]] (the
+    * the fixture-synthesis side of m19 (the
     * [[graft.functions.VideoCodec.mp4Bytes]] discipline applied to JPEG):
     * one 8×8 block per entry of `blockVals` in raster order, each block a
     * solid gray value in [0, 255].
@@ -520,17 +71,16 @@ object JpegDecoder {
     * AC coefficients are zero (flat blocks), and quant table 0 carries
     * q(0) = 8, so the quantized DC is exactly v − 128 (no rounding:
     * raw DC = 8·(v − 128)), the dequantized DC is 8·(v − 128), and a flat
-    * block's IDCT reconstruction is round(DC/8 + 128) = v exactly — the
-    * float separable IDCT in [[decodeRgb]] lands within ~1e-13 of the
-    * integer, far from any rounding boundary (the scaladoc's "exact
-    * agreement on synthetic single-DC images", now proven by
-    * MjpegVideoSpec for every gray level).
+    * block's IDCT reconstruction is round(DC/8 + 128) = v exactly. The
+    * JDK's integer IDCT takes its DC-only shortcut on such a block and
+    * lands on v too; MjpegVideoSpec pins it for every gray level through
+    * [[ImageCodec.decodeRgb]].
     *
     * Huffman tables are minimal-canonical rather than Annex K: DC table
     * 0 holds categories 0–8 (diffs span ±255) all at code length 4 — a
     * canonical table where category t's code IS t — and AC table 0 holds
     * the single symbol 0x00 (EOB) at length 1. ~13 bits per block, and
-    * the tables exercise [[decodeRgb]]'s real DHT/canonical-walk path.
+    * a conforming decoder must read the DHT segment to decode it.
     *
     * `padTo` zero-pads AFTER the EOI marker to a fixed byte length —
     * what lets an MJPEG-in-MP4 track use the constant-sample-size `stsz`

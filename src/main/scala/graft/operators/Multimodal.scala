@@ -184,7 +184,7 @@ object Multimodal {
   }
 
   /** Difference-hash (dHash) of a decodable image, as FOUR 16-bit
-    * segments: decode to RGB (any of the four real pixel codecs),
+    * segments: decode to RGB ([[ImageCodec.decodeRgb]]: PNG, JPEG, GIF or BMP),
     * integer grayscale (r+g+b div 3), average-pool to a 9×8 grid with
     * integer-boundary blocks (x ∈ [i·w/9, (i+1)·w/9), same for rows —
     * exact for dims divisible by the grid, deterministic truncation
@@ -197,12 +197,7 @@ object Multimodal {
     * (d02's pigeonhole: hamming ≤ 3 over 4 segments guarantees one
     * equal segment). All-integer, so hashes are cross-engine exact. */
   def dHashSegments(payload: Array[Byte]): Option[Array[Int]] = {
-    import graft.functions.{ImageCodec, JpegDecoder}
-    val decoded = ImageCodec.pngDecodeRgb(payload)
-      .orElse(ImageCodec.bmpDecodeRgb(payload))
-      .orElse(ImageCodec.gifDecodeRgb(payload))
-      .orElse(JpegDecoder.decodeRgb(payload))
-    decoded.flatMap { case (w, h, px) =>
+    ImageCodec.decodeRgb(payload).flatMap { case (w, h, px) =>
       if (w < 9 || h < 8) None
       else {
         def gray(x: Int, y: Int): Int = {

@@ -268,9 +268,12 @@ object CurationQueries {
     * materializes as a real container (PNG for even doc_ids — inflate +
     * unfilter on decode — uncompressed 24-bit BMP for odd, exercising TWO
     * independent codec paths in one query), and the engine decodes actual
-    * bytes to compute per-image channel means and a 4-bucket luminance
-    * histogram (ITU-R BT.601 integer weights 299/587/114, the standard
-    * grayscale the dHash path also uses). This is the exposure/color
+    * bytes with the JDK's PNG and BMP readers
+    * ([[graft.functions.ImageCodec.decodeRgb]]; the magic-byte sniff
+    * here only labels the format) to compute per-image channel means and
+    * a 4-bucket luminance histogram (ITU-R BT.601 integer weights
+    * 299/587/114, the standard grayscale the dHash path also uses).
+    * This is the exposure/color
     * screen a vision-data pipeline runs before training (all-black /
     * blown-out / single-hue detection). The oracle recomputes every value
     * from the SYNTHESIS arithmetic — it never sees a PNG or BMP — so the
@@ -301,10 +304,10 @@ object CurationQueries {
     val stats = udf { (payload: Array[Byte]) =>
       val dec =
         if (payload != null && payload.length > 8 && (payload(0) & 0xFF) == 0x89)
-          ImageCodec.pngDecodeRgb(payload).map(("png", _))
+          ImageCodec.decodeRgb(payload).map(("png", _))
         else if (payload != null && payload.length > 2 &&
           payload(0) == 'B'.toByte && payload(1) == 'M'.toByte)
-          ImageCodec.bmpDecodeRgb(payload).map(("bmp", _))
+          ImageCodec.decodeRgb(payload).map(("bmp", _))
         else None
       dec.map { case (fmt, (w, h, rgb)) =>
         var sr = 0L; var sg = 0L; var sb = 0L

@@ -264,12 +264,12 @@ object OpsQueries {
     * ([[graft.functions.VideoCodec.frameGeometry]]), each planned span is
     * range-read out of the payload — byte-exact, nothing outside the plan
     * is touched, the posture a 100 TB store needs for ranged GETs — and
-    * decoded through the REAL [[graft.functions.JpegDecoder.decodeRgb]]
-    * pixel path (DQT/DHT/SOF0/SOS parse, canonical Huffman, dequantize,
-    * float IDCT). Per frame: luminance sum / min / max over all 256
-    * decoded pixels plus the presentation time from the tick math. This
-    * composes the two already-proven decoders (m07/m15's container walk,
-    * m11/m14's JPEG path) into the image/audio/VIDEO pixel triple.
+    * decoded through [[graft.functions.ImageCodec.decodeRgb]], the JDK's
+    * baseline JPEG reader (DQT/DHT/SOF0/SOS parse, canonical Huffman,
+    * dequantize, integer IDCT). Per frame: luminance sum / min / max
+    * over all 256 decoded pixels plus the presentation time from the
+    * tick math. This composes m07/m15's container walk with the JPEG
+    * pixel path into the image/audio/VIDEO pixel triple.
     * Reference behavior class: decode-before-stat over batched opaque
     * media payloads (`assets/rag/process_text_chunks.py:62-68` is the
     * reference's batch-decode shape; it ships no video decoder — this
@@ -291,7 +291,7 @@ object OpsQueries {
     * parallelism, the mapPartitions posture of the whole multimodal
     * family. */
   def m19MjpegPixels(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.{JpegDecoder, VideoCodec}
+    import graft.functions.{ImageCodec, JpegDecoder, VideoCodec}
     val mk = udf { (docId: Long) =>
       val nf = (2 + docId % 5).toInt
       val ts = (10 + docId % 20).toInt
@@ -307,7 +307,7 @@ object OpsQueries {
         (0L until nF).map { k =>
           val a = (off + k * fs).toInt // the plan's span; only it is read
           val frame = java.util.Arrays.copyOfRange(payload, a, a + fs.toInt)
-          JpegDecoder.decodeRgb(frame) match {
+          ImageCodec.decodeRgb(frame) match {
             case Some((w, h, px)) =>
               var sum = 0L; var mn = 255; var mx = 0; var i = 0
               val n = w * h

@@ -1,15 +1,14 @@
 package graft
 
-import graft.functions.JpegDecoder
+import graft.functions.{ImageCodec, JpegDecoder}
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
-/** Baseline JPEG decode, proven against the JDK's own encoder/decoder:
-  * ImageIO WRITES a real baseline JPEG (its writer picks quant/Huffman
-  * tables, subsampling and restart behavior), we decode it, ImageIO
-  * decodes it too, and the two pixel fields must agree within a small
-  * tolerance (IDCT rounding is implementation-defined; T.81 itself only
-  * requires closeness to the reference FDCT/IDCT). */
+/** JPEG through [[ImageCodec.decodeRgb]], on JPEGs the JDK's own writer
+  * produces (its writer picks quant/Huffman tables, subsampling and
+  * restart behavior): the packed RGB must match `ImageIO.read` pixel for
+  * pixel in color, and the raw samples in grayscale. Also the header-only
+  * [[JpegDecoder.quantTable0]] walk behind m14. */
 class JpegDecoderSpec extends SparkSpec {
 
   private def writeJpeg(img: BufferedImage, quality: Float): Array[Byte] = {
@@ -37,7 +36,7 @@ class JpegDecoderSpec extends SparkSpec {
   }
 
   private def maxDiffVsImageIO(jpeg: Array[Byte]): Int = {
-    val Some((w, h, px)) = JpegDecoder.decodeRgb(jpeg)
+    val Some((w, h, px)) = ImageCodec.decodeRgb(jpeg)
     val ref = javax.imageio.ImageIO.read(new ByteArrayInputStream(jpeg))
     assert(ref.getWidth == w && ref.getHeight == h)
     var worst = 0
@@ -58,7 +57,7 @@ class JpegDecoderSpec extends SparkSpec {
          q <- Seq(0.95f, 0.7f)) {
       val jpeg = writeJpeg(gradient(w, h), q)
       val d = maxDiffVsImageIO(jpeg)
-      assert(d <= 2, s"${w}x$h q=$q: max channel diff $d vs ImageIO")
+      assert(d == 0, s"${w}x$h q=$q: max channel diff $d vs ImageIO")
     }
   }
 
@@ -68,28 +67,29 @@ class JpegDecoderSpec extends SparkSpec {
     for (y <- 0 until h; x <- 0 until w)
       img.getRaster.setSample(x, y, 0, 40 + x * 5 + y * 3)
     val jpeg = writeJpeg(img, 0.9f)
-    val Some((dw, dh, px)) = JpegDecoder.decodeRgb(jpeg)
+    val Some((dw, dh, px)) = ImageCodec.decodeRgb(jpeg)
     assert((dw, dh) == ((w, h)))
-    // compare RAW samples (getRGB would re-apply the gray→sRGB transfer
-    // curve, which is a color-management step, not part of JPEG decode)
+    // RAW samples, exactly: getRGB would apply the gray→sRGB transfer
+    // curve, a color-management step that is not part of JPEG decode
     val ref = javax.imageio.ImageIO.read(new ByteArrayInputStream(jpeg)).getRaster
-    var worst = 0
-    for (y <- 0 until h; x <- 0 until w)
-      worst = math.max(worst, math.abs(ref.getSample(x, y, 0) - (px((y * w + x) * 3) & 0xFF)))
-    assert(worst <= 2, s"grayscale: max sample diff $worst vs ImageIO raster")
+    for (y <- 0 until h; x <- 0 until w) {
+      val o = (y * w + x) * 3
+      assert((px(o) & 0xFF) == ref.getSample(x, y, 0) && px(o) == px(o + 1) && px(o) == px(o + 2),
+        s"grayscale pixel ($x,$y) vs ImageIO raster")
+    }
   }
 
   test("solid-color image decodes near-exactly (single-DC blocks)") {
     val img = new BufferedImage(24, 24, BufferedImage.TYPE_INT_RGB)
     for (y <- 0 until 24; x <- 0 until 24) img.setRGB(x, y, 0x6C9A3F)
     val jpeg = writeJpeg(img, 0.95f)
-    val Some((_, _, px)) = JpegDecoder.decodeRgb(jpeg)
+    val Some((_, _, px)) = ImageCodec.decodeRgb(jpeg)
     // lossy, but a flat field is DC-only: stays within quantization slack
     assert(math.abs((px(0) & 0xFF) - 0x6C) <= 4 &&
       math.abs((px(1) & 0xFF) - 0x9A) <= 4 && math.abs((px(2) & 0xFF) - 0x3F) <= 4)
   }
 
-  test("progressive, garbage and truncated inputs return None, never throw") {
+  test("progressive decodes; garbage and truncated inputs return None, never throw") {
     // ImageIO can emit progressive when asked
     val writer = javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
     val params = writer.getDefaultWriteParam
@@ -99,18 +99,21 @@ class JpegDecoderSpec extends SparkSpec {
     writer.setOutput(ios)
     writer.write(null, new javax.imageio.IIOImage(gradient(16, 16), null, null), params)
     writer.dispose(); ios.close()
-    assert(JpegDecoder.decodeRgb(bos.toByteArray).isEmpty, "progressive must be refused")
+    val progressive = bos.toByteArray
+    assert(ImageCodec.decodeRgb(progressive).map(d => (d._1, d._2)).contains((16, 16)))
+    assert(maxDiffVsImageIO(progressive) == 0)
 
-    assert(JpegDecoder.decodeRgb(null).isEmpty)
-    assert(JpegDecoder.decodeRgb(Array[Byte](1, 2, 3)).isEmpty)
+    assert(ImageCodec.decodeRgb(null).isEmpty)
+    assert(ImageCodec.decodeRgb(Array[Byte](1, 2, 3)).isEmpty)
     val ok = writeJpeg(gradient(16, 16), 0.9f)
-    for (cut <- Seq(4, 20, ok.length / 2, ok.length - 2))
-      JpegDecoder.decodeRgb(ok.take(cut)) // any result, no throw
+    assert(ImageCodec.decodeRgb(ok.take(20)).isEmpty, "a header cut before the frame is refused")
+    for (cut <- Seq(4, ok.length / 2, ok.length - 2))
+      ImageCodec.decodeRgb(ok.take(cut)) // any result, no throw
     val rnd = new scala.util.Random(3)
     for (_ <- 0 until 100) {
       val m = ok.clone()
       for (_ <- 0 to rnd.nextInt(6)) m(rnd.nextInt(m.length)) = rnd.nextInt(256).toByte
-      JpegDecoder.decodeRgb(m) // fuzz: no throw
+      ImageCodec.decodeRgb(m) // fuzz: no throw
     }
   }
 

@@ -121,22 +121,12 @@ class MultimodalSpec extends SparkSpec {
     val (w, h) = (13, 9)
     val rgb = Array.tabulate(w * h * 3)(i => ((i * 37 + 11) & 0xFF).toByte)
     val png = ImageCodec.pngEncodeRgb(w, h, rgb)
-    // 1) our decode of our encode is the identity
-    val Some((dw, dh, dpx)) = ImageCodec.pngDecodeRgb(png)
+    // 1) ImageIO's reader decodes our PNG to the same pixels (the stream
+    // is genuinely valid, not self-consistently wrong)
+    val Some((dw, dh, dpx)) = ImageCodec.decodeRgb(png)
     assert((dw, dh) == ((w, h)) && dpx.sameElements(rgb))
-    // 2) ImageIO decodes our PNG to the same pixels (proves the stream is
-    // genuinely valid, not self-consistently wrong)
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(png))
-    assert(img.getWidth == w && img.getHeight == h)
-    for (y <- 0 until h; x <- 0 until w) {
-      val p = img.getRGB(x, y)
-      val o = (y * w + x) * 3
-      assert(((p >> 16) & 0xFF) == (rgb(o) & 0xFF) &&
-        ((p >> 8) & 0xFF) == (rgb(o + 1) & 0xFF) && (p & 0xFF) == (rgb(o + 2) & 0xFF),
-        s"pixel ($x,$y) mismatch vs ImageIO")
-    }
-    // 3) we decode an ImageIO-WRITTEN png (independent encoder, real
-    // filters chosen by the JDK) back to identical pixels
+    // 2) an ImageIO-WRITTEN png (real filters chosen by the JDK) decodes
+    // back to identical pixels
     val jdkImg = new java.awt.image.BufferedImage(w, h,
       java.awt.image.BufferedImage.TYPE_INT_RGB)
     for (y <- 0 until h; x <- 0 until w) {
@@ -145,9 +135,8 @@ class MultimodalSpec extends SparkSpec {
     }
     val bos = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(jdkImg, "png", bos))
-    val Some((jw, jh, jpx)) = ImageCodec.pngDecodeRgb(bos.toByteArray)
-    assert((jw, jh) == ((w, h)) && jpx.sameElements(rgb),
-      "decode of JDK-encoded png diverged — scanline filter math wrong")
+    val Some((jw, jh, jpx)) = ImageCodec.decodeRgb(bos.toByteArray)
+    assert((jw, jh) == ((w, h)) && jpx.sameElements(rgb), "decode of JDK-encoded png diverged")
   }
 
   test("bmp pixel codec round-trips and agrees with JDK ImageIO both ways") {
@@ -155,17 +144,10 @@ class MultimodalSpec extends SparkSpec {
     val (w, h) = (7, 5)
     val rgb = Array.tabulate(w * h * 3)(i => ((i * 53 + 19) & 0xFF).toByte)
     val bmp = ImageCodec.bmpEncodeRgb(w, h, rgb)
-    val Some((dw, dh, dpx)) = ImageCodec.bmpDecodeRgb(bmp)
+    // ImageIO's reader reads our BMP pixel-exact
+    val Some((dw, dh, dpx)) = ImageCodec.decodeRgb(bmp)
     assert((dw, dh) == ((w, h)) && dpx.sameElements(rgb))
-    // ImageIO reads our BMP pixel-exact
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bmp))
-    assert(img.getWidth == w && img.getHeight == h)
-    for (y <- 0 until h; x <- 0 until w) {
-      val p = img.getRGB(x, y); val o = (y * w + x) * 3
-      assert(((p >> 16) & 0xFF) == (rgb(o) & 0xFF) &&
-        ((p >> 8) & 0xFF) == (rgb(o + 1) & 0xFF) && (p & 0xFF) == (rgb(o + 2) & 0xFF))
-    }
-    // we read an ImageIO-WRITTEN BMP pixel-exact (independent encoder)
+    // and an ImageIO-WRITTEN BMP reads back pixel-exact
     val jdkImg = new java.awt.image.BufferedImage(w, h,
       java.awt.image.BufferedImage.TYPE_INT_RGB)
     for (y <- 0 until h; x <- 0 until w) {
@@ -174,7 +156,7 @@ class MultimodalSpec extends SparkSpec {
     }
     val bos = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(jdkImg, "bmp", bos))
-    val Some((jw, jh, jpx)) = ImageCodec.bmpDecodeRgb(bos.toByteArray)
+    val Some((jw, jh, jpx)) = ImageCodec.decodeRgb(bos.toByteArray)
     assert((jw, jh) == ((w, h)) && jpx.sameElements(rgb),
       "decode of JDK-encoded bmp diverged")
   }
@@ -191,7 +173,7 @@ class MultimodalSpec extends SparkSpec {
       jdkImg.setRGB(x, y, palette((x + y * 3) % palette.length))
     val bos = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(jdkImg, "gif", bos))
-    val Some((gw, gh, gpx)) = ImageCodec.gifDecodeRgb(bos.toByteArray)
+    val Some((gw, gh, gpx)) = ImageCodec.decodeRgb(bos.toByteArray)
     assert((gw, gh) == ((w, h)))
     for (y <- 0 until h; x <- 0 until w) {
       val want = palette((x + y * 3) % palette.length)
@@ -200,8 +182,8 @@ class MultimodalSpec extends SparkSpec {
       assert(got == want, f"gif pixel ($x,$y): got $got%06x want $want%06x")
     }
     // malformed gifs return None, never throw
-    assert(ImageCodec.gifDecodeRgb("GIF89a".getBytes("US-ASCII")).isEmpty)
-    assert(ImageCodec.gifDecodeRgb(null).isEmpty)
+    assert(ImageCodec.decodeRgb("GIF89a".getBytes("US-ASCII")).isEmpty)
+    assert(ImageCodec.decodeRgb(null).isEmpty)
   }
 
   test("bmp and gif decoders read solid images pixel-exact") {
@@ -209,7 +191,7 @@ class MultimodalSpec extends SparkSpec {
     val solid = Array.tabulate(8 * 8 * 3)(i => (i % 3 match {
       case 0 => 10; case 1 => 150; case _ => 250
     }).toByte)
-    val Some((bw, bh, bpx)) = ImageCodec.bmpDecodeRgb(ImageCodec.bmpEncodeRgb(8, 8, solid))
+    val Some((bw, bh, bpx)) = ImageCodec.decodeRgb(ImageCodec.bmpEncodeRgb(8, 8, solid))
     assert((bw, bh) == ((8, 8)))
     assert(bpx.grouped(3).forall(p =>
       (p(0) & 0xFF) == 10 && (p(1) & 0xFF) == 150 && (p(2) & 0xFF) == 250))
@@ -219,25 +201,63 @@ class MultimodalSpec extends SparkSpec {
     for (y <- 0 until 8; x <- 0 until 8) jdkImg.setRGB(x, y, 0x336699)
     val bos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(jdkImg, "gif", bos)
-    val Some((gw, gh, gpx)) = ImageCodec.gifDecodeRgb(bos.toByteArray)
+    val Some((gw, gh, gpx)) = ImageCodec.decodeRgb(bos.toByteArray)
     assert((gw, gh) == ((8, 8)))
     assert(gpx.grouped(3).forall(p =>
       (p(0) & 0xFF) == 0x33 && (p(1) & 0xFF) == 0x66 && (p(2) & 0xFF) == 0x99))
   }
 
   test("baseline jpeg decoder reads an ImageIO-written flat field") {
-    import graft.functions.JpegDecoder
+    import graft.functions.ImageCodec
     val img = new java.awt.image.BufferedImage(16, 16,
       java.awt.image.BufferedImage.TYPE_INT_RGB)
     for (y <- 0 until 16; x <- 0 until 16) img.setRGB(x, y, 0x884422)
     val bos = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(img, "jpeg", bos))
-    val Some((w, h, px)) = JpegDecoder.decodeRgb(bos.toByteArray)
+    val Some((w, h, px)) = ImageCodec.decodeRgb(bos.toByteArray)
     assert((w, h) == ((16, 16)))
     // JPEG is lossy: the flat field survives within quantization slack
     assert(px.grouped(3).forall(p =>
       math.abs((p(0) & 0xFF) - 0x88) <= 6 && math.abs((p(1) & 0xFF) - 0x44) <= 6 &&
         math.abs((p(2) & 0xFF) - 0x22) <= 6), "jpeg decode drifted")
+  }
+
+  test("png, bmp and jpeg headers declaring more than 64 MPix return None") {
+    import graft.functions.{ImageCodec, JpegDecoder}
+    import java.nio.{ByteBuffer, ByteOrder}
+    val side = 8193 // 8193² = 67,125,249 px, just past the 64 MPix cap
+    val be = ByteBuffer.allocate(4)
+    def be32(v: Int): Array[Byte] = { be.clear(); be.putInt(v).array.clone }
+    def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
+      val td = typ.getBytes("US-ASCII") ++ data
+      val crc = new java.util.zip.CRC32; crc.update(td)
+      be32(data.length) ++ td ++ be32(crc.getValue.toInt)
+    }
+    // each stream below decodes without the cap: a valid PNG of all-zero
+    // rows (about 0.2 MB deflated), an RLE8 BMP whose first code ends the
+    // bitmap, and a DC-only JPEG whose frame header claims the larger size
+    val idat = new java.io.ByteArrayOutputStream()
+    val z = new java.util.zip.DeflaterOutputStream(idat)
+    val row = new Array[Byte](1 + side * 3)
+    (0 until side).foreach(_ => z.write(row))
+    z.close()
+    val png = Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte) ++
+      chunk("IHDR", be32(side) ++ be32(side) ++ Array[Byte](8, 2, 0, 0, 0)) ++
+      chunk("IDAT", idat.toByteArray) ++ chunk("IEND", Array.emptyByteArray)
+    val le = ByteBuffer.allocate(62).order(ByteOrder.LITTLE_ENDIAN)
+    le.put('B'.toByte).put('M'.toByte).putInt(64).putInt(0).putInt(62)
+      .putInt(40).putInt(side).putInt(side).putShort(1).putShort(8).putInt(1)
+      .putInt(2).putInt(2835).putInt(2835).putInt(2).putInt(0)
+      .putInt(0x000000).putInt(0xFFFFFF) // two-entry palette
+    val bmp = le.array ++ Array[Byte](0, 1) // RLE8 end-of-bitmap
+    val jpeg = JpegDecoder.jpegGrayBlockBytes(1, 1, Array(77))
+    val sof = jpeg.indices.find(i => (jpeg(i) & 0xFF) == 0xFF && (jpeg(i + 1) & 0xFF) == 0xC0).get
+    jpeg(sof + 5) = (side >> 8).toByte; jpeg(sof + 6) = side.toByte
+    jpeg(sof + 7) = (side >> 8).toByte; jpeg(sof + 8) = side.toByte
+    for ((fmt, bytes) <- Seq("png" -> png, "bmp" -> bmp, "jpeg" -> jpeg)) {
+      assert(ImageCodec.parse(bytes).contains(ImageCodec.ImageMeta(fmt, side, side)), fmt)
+      assert(ImageCodec.decodeRgb(bytes).isEmpty, s"$fmt past the pixel cap must be refused")
+    }
   }
 
   test("explodeSampledFrames: one row per sampled frame, stride respected") {
