@@ -7,7 +7,9 @@ import org.apache.spark.sql.SparkSession
   * prints one JSON line. Each query executes to a noop sink so the full
   * plan runs (a bare count() would let Catalyst prune the very expressions
   * being measured). One warm-up pass primes the JVM/codegen caches so the
-  * numbers measure the engine, not JIT warm-up.
+  * numbers measure the engine, not JIT warm-up; `codegen_compiles` in the
+  * detail artifact counts the classes each pass compiled, so a timed pass
+  * that recompiles shows there.
   *
   * Two totals are reported: `queries`/`isolated_sec` are sequential
   * per-query min-of-2 timings, while the headline `value` is the SUITE
@@ -47,6 +49,11 @@ object Bench {
   private[graft] def stealPct(before: (Long, Long), after: (Long, Long)): Double =
     if (before._1 < 0 || after._1 < 0 || after._2 <= before._2) -1.0
     else 100.0 * (after._1 - before._1) / (after._2 - before._2)
+
+  /** Classes Spark's code generator has compiled in this JVM so far: one
+    * per codegen cache miss. */
+  private[graft] def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** One pass's session: the [[GraftSession]] defaults plus FAIR
     * scheduling, shuffle compression and the spill dir. [[BenchOne]] times
@@ -107,6 +114,7 @@ object Bench {
     // so the first whole-stage compile's janino warm-up lands here.
     // Nothing query- or artifact-shaped is computed.
     val tPrime0 = System.nanoTime()
+    val compiles0 = codegenCompiles
     Option(new java.io.File(sfDir).listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
       .foreach { f =>
@@ -148,6 +156,7 @@ object Bench {
     val artifactBuilds = ArtifactRegistry.buildSeconds
     val buildTotal = artifactBuilds.values.sum
     ArtifactRegistry.resetTimings()
+    val compilesPrimed = codegenCompiles
 
     // Min-of-2 per query with a GC breather: a single pass is hostage to
     // GC pauses from whatever ran before.
@@ -166,6 +175,7 @@ object Bench {
       name -> sec
     }
     val total = results.map(_._2).filter(_ >= 0).sum
+    val compilesIsolated = codegenCompiles
 
     // ---- DuckDB-oracle denominator -------------------------------------
     // ORACLE_TIMES.json (tools/time_oracle.py): min-of-2 DuckDB seconds per
@@ -227,6 +237,10 @@ object Bench {
     spark = buildSession(cpus, compress = true, tmpfs = false)
     val configConcurrent = liveConfJson(spark)
     val passes = Seq(suiteWallOnce(), suiteWallOnce())
+    val compilesFields =
+      s""""codegen_compiles":{"prime":${compilesPrimed - compiles0},""" +
+        s""""isolated":${compilesIsolated - compilesPrimed},""" +
+        s""""concurrent":${codegenCompiles - compilesIsolated}}"""
     val clean = passes.filter(_._2 == 0).map(_._1)
     // -1 sentinel (like the isolated pass) when no pass completed cleanly
     val wall = if (clean.nonEmpty) clean.min else -1.0
@@ -266,7 +280,7 @@ object Bench {
     val configFields =
       s""""config_isolated":$configIsolated,"config_concurrent":$configConcurrent"""
     val detailJson =
-      s"""{"wall":$wall,"threads":$Threads,"cpus":$cpus,"failed":$failedMax,"isolated_sec":$total,"steal_pct":${fmt3(stealPctRun)},$ratioFields,$buildFields,$configFields,"sf":"$sfDir","queries":$detail}"""
+      s"""{"wall":$wall,"threads":$Threads,"cpus":$cpus,"failed":$failedMax,"isolated_sec":$total,"steal_pct":${fmt3(stealPctRun)},$ratioFields,$buildFields,$compilesFields,$configFields,"sf":"$sfDir","queries":$detail}"""
     println(s"BENCH_DETAIL $detailJson")
     val detailFile = detailPath(cpus)
     try java.nio.file.Files.writeString(

@@ -5,7 +5,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 
 /** Targeted per-query timing for local iteration: [[Bench]]'s isolated-pass
   * session and noop-sink discipline, but only the named queries, printed
-  * as one line each with the jobs and stages one run schedules. Usage:
+  * as one line each with the jobs and stages one run schedules and the
+  * classes the warm-up run and the two timed runs compiled. Usage:
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.BenchOne q01_scan_project ..."
   * The driver never invokes this; BENCH_r{N}.json comes from [[Bench]]. */
 object BenchOne {
@@ -27,8 +28,10 @@ object BenchOne {
         stages.incrementAndGet()
     })
     args.foreach { name =>
+      val c0 = Bench.codegenCompiles
       run(name) // warm-up
       val j0 = jobs.get; val s0 = stages.get
+      val c1 = Bench.codegenCompiles
       val times = (1 to 2).map { _ =>
         System.gc()
         val t0 = System.nanoTime()
@@ -38,7 +41,8 @@ object BenchOne {
       Thread.sleep(200) // listener events are delivered asynchronously
       println(f"BENCHONE $name%-28s min2=${times.min}%.3f  " +
         f"runs=${times.map(t => f"$t%.3f").mkString(",")}  " +
-        f"jobs=${(jobs.get - j0) / 2}  stages=${(stages.get - s0) / 2}")
+        f"jobs=${(jobs.get - j0) / 2}  stages=${(stages.get - s0) / 2}  " +
+        f"compiles=${c1 - c0}/${Bench.codegenCompiles - c1}")
     }
     spark.stop()
   }

@@ -75,7 +75,7 @@ object FeedCrawler {
       val k = e.getChildNodes
       (0 until k.getLength).map(k.item).collect { case el: org.w3c.dom.Element => el }
     }
-    def text(e: org.w3c.dom.Element): String = e.getTextContent.trim
+    def text(e: org.w3c.dom.Element): String = graft.core.Dom.textOf(e).trim
 
     val root = doc.getDocumentElement
     val next = children(root).filter(local(_) == "link")

@@ -3,7 +3,8 @@ package graft.convert
 import java.io.ByteArrayInputStream
 import java.util.zip.ZipInputStream
 import javax.xml.parsers.DocumentBuilderFactory
-import org.w3c.dom.{Document, Element, Node, Text}
+import graft.core.Dom.textOf
+import org.w3c.dom.{Document, Element}
 import scala.collection.mutable
 
 /** Pure-JVM ODS (OpenDocument Spreadsheet) decoder — ZIP + `content.xml`,
@@ -59,26 +60,6 @@ object OdsDecoder {
     f.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
     f.setExpandEntityReferences(false)
     f.newDocumentBuilder().parse(new ByteArrayInputStream(bytes))
-  }
-
-  /** The text of every Text/CDATA node under `n` in document order — an
-    * element's `getTextContent` — walked by a loop over child, sibling
-    * and parent links. Xerces' `getTextContent` recurses once per nesting
-    * level, so a deeply nested cell would overflow the task thread's
-    * stack, and `StackOverflowError` is an `Error` no fail-soft catch
-    * contains. */
-  private[convert] def textOf(n: Node): String = {
-    val sb = new java.lang.StringBuilder
-    var cur = n.getFirstChild
-    while (cur != null) {
-      cur match { case t: Text => sb.append(t.getData); case _ => }
-      if (cur.getFirstChild != null) cur = cur.getFirstChild
-      else {
-        while (cur != n && cur.getNextSibling == null) cur = cur.getParentNode
-        cur = if (cur == n) null else cur.getNextSibling
-      }
-    }
-    sb.toString
   }
 
   private val TableNs = "urn:oasis:names:tc:opendocument:xmlns:table:1.0"

@@ -1,6 +1,7 @@
 package graft.convert
 
-import OdsDecoder.{parseXml, textOf}
+import OdsDecoder.parseXml
+import graft.core.Dom.textOf
 import org.w3c.dom.{Document, Element}
 
 /** Pure-JVM XLSX workbook decoder (ZIP + SpreadsheetML XML — no POI).

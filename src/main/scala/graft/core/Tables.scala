@@ -87,7 +87,8 @@ object Tables {
   * Defaults: `local[cpus]` with shuffle partitions sized to `cpus`
   * (`SPARK_GRAFT_CPUS`, else 32), AQE on (runtime coalesce + skew-join),
   * Spark's default broadcast threshold so dimension tables broadcast, UTC,
-  * and [[graft.plans.GraftExtensions]] always registered. Callers add
+  * [[graft.plans.GraftExtensions]] always registered, and a codegen cache
+  * of [[CodegenCacheEntries]] classes. Callers add
   * mode-specific settings on the returned builder. Static (non-adaptive)
   * planning is per frame through [[Materialize.staticCheckpoint]], never a
   * session setting.
@@ -111,6 +112,12 @@ object GraftSession {
     sib
   }
 
+  /** `spark.sql.codegen.cache.maxEntries` (static; Spark's default is 100).
+    * One full-catalog pass needs about 4,050 keys of this 4-segment LRU, so
+    * at 100 a warm pass recompiles what its set-up pass compiled. The cache
+    * is JVM-global and sized from the first session's conf. */
+  val CodegenCacheEntries = 5000
+
   def builder(appName: String = "graft",
       cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt): SparkSession.Builder =
     SparkSession.builder()
@@ -126,4 +133,5 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 }

@@ -3,6 +3,7 @@ package graft.extract
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Dom.{descendants, textOf}
 import org.w3c.dom.{Document, Element, Node}
 
 /** Hansard `scrapedxml` → conversation records (SURVEY S11) — the
@@ -36,25 +37,10 @@ object ConversationParser {
   private def attr(e: Element, names: String*): Option[String] =
     names.iterator.map(e.getAttribute).find(_.nonEmpty)
 
-  private def descendants(n: Node): Iterator[Element] = {
-    val kids = n.getChildNodes
-    (0 until kids.getLength).iterator.map(kids.item).flatMap {
-      case e: Element => Iterator.single(e) ++ descendants(e)
-      case other => descendants(other)
-    }
-  }
-
-  private def itertext(n: Node): String = n.getNodeType match {
-    case Node.TEXT_NODE | Node.CDATA_SECTION_NODE => n.getNodeValue
-    case _ =>
-      val kids = n.getChildNodes
-      (0 until kids.getLength).map(i => itertext(kids.item(i))).mkString
-  }
-
   /** `\n\n`-joined trimmed non-empty `<p>` texts of an element. */
   private def paraText(e: Element): String =
     descendants(e).filter(localName(_) == "p")
-      .map(p => itertext(p).trim).filter(_.nonEmpty).mkString("\n\n")
+      .map(p => textOf(p).trim).filter(_.nonEmpty).mkString("\n\n")
 
   def parseXml(xml: String): Option[Document] =
     try {

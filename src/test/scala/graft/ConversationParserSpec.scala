@@ -51,6 +51,14 @@ class ConversationParserSpec extends SparkSpec {
     assert(convs(0).speakers == Seq("Dan", "Minister"))
   }
 
+  test("debates: a <p> nesting 100,000 elements parses on a default-stack thread") {
+    val xml =
+      s"""<publicwhip><speech id="q1" type="start question" speakername="Ann">
+         |<p>${nested("i", "deep")}</p></speech></publicwhip>""".stripMargin
+    val out = onDefaultStack(ConversationParser.parse(xml, qa = false).map(_.text))
+    assert(out == Right(Seq("Ann:deep")), out.left.map(_.getClass.getName))
+  }
+
   test("unparseable xml yields no conversations") {
     assert(ConversationParser.parse("<<< not xml", qa = false).isEmpty)
   }

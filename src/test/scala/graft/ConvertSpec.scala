@@ -187,17 +187,6 @@ class ConvertSpec extends SparkSpec {
       == Seq("2021-03-01T12:00:00+00:00", "2021-03-02T06:00:00+00:00"))
   }
 
-  // runs `f` on a fresh thread, which has the JVM's default stack size like
-  // a Spark task thread; an Error thrown there comes back as Left
-  private def onDefaultStack[T](f: => T): Either[Throwable, T] = {
-    @volatile var out: Either[Throwable, T] = Left(new IllegalStateException("not run"))
-    val t = new Thread(() => out = try Right(f) catch { case e: Throwable => Left(e) })
-    t.start(); t.join()
-    out
-  }
-
-  private val NestDepth = 100000
-
   test("xlsx: a shared string nesting 100,000 elements decodes on a default-stack thread") {
     import java.util.zip.{ZipEntry, ZipOutputStream}
     val baos = new java.io.ByteArrayOutputStream()
@@ -209,7 +198,7 @@ class ConvertSpec extends SparkSpec {
     put("xl/workbook.xml",
       s"""<workbook xmlns="$mainNs"><sheets><sheet name="S" sheetId="1"/></sheets></workbook>""")
     put("xl/sharedStrings.xml",
-      s"""<sst xmlns="$mainNs"><si><t>${"<r>" * NestDepth}deep${"</r>" * NestDepth}</t></si></sst>""")
+      s"""<sst xmlns="$mainNs"><si><t>${nested("r", "deep")}</t></si></sst>""")
     put("xl/worksheets/sheet1.xml",
       s"""<worksheet xmlns="$mainNs"><sheetData>
          |<row r="1"><c r="A1" t="s"><v>0</v></c></row>
@@ -418,8 +407,8 @@ class ConvertSpec extends SparkSpec {
   test("ods: a text:p nesting 100,000 spans decodes on a default-stack thread") {
     val bytes = odsWithContent(
       s"""<table:table table:name="t"><table:table-row>
-         |<table:table-cell office:value-type="string"><text:p>${
-        "<text:span>" * NestDepth}deep${"</text:span>" * NestDepth}</text:p></table:table-cell>
+         |<table:table-cell office:value-type="string"><text:p>${nested("text:span", "deep")
+        }</text:p></table:table-cell>
          |</table:table-row></table:table>""".stripMargin)
     val out = onDefaultStack(graft.convert.OdsDecoder.decode(bytes).map(_.header))
     assert(out == Right(Seq(Seq("deep"))), out.left.map(_.getClass.getName))

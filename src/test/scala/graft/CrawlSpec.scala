@@ -62,6 +62,14 @@ class CrawlSpec extends SparkSpec {
     assert(entries.head.contentLink == "https://feed.test/content1")
   }
 
+  test("feed page: an entry <title> nesting 100,000 elements parses on a default-stack thread") {
+    val xml = s"""<feed xmlns="http://www.w3.org/2005/Atom">
+                 |<entry><id>e1</id><title>${nested("b", "Deep")}</title></entry>
+                 |</feed>""".stripMargin
+    val out = onDefaultStack(FeedCrawler.parsePage(xml)._1.map(_.title))
+    assert(out == Right(Seq("Deep")), out.left.map(_.getClass.getName))
+  }
+
   test("unparseable feed page ends the chain instead of failing") {
     val t = new Transport {
       def get(url: String): Response = Response(200, Map.empty, "garbage<".getBytes, url)

@@ -1,10 +1,32 @@
 package graft
 
 import graft.core.GraftSession
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.functions.{col, sum, udf}
 
 /** [[GraftSession.sibling]] plans with the caller's conf plus overrides
-  * and never writes the caller's conf. */
+  * and never writes the caller's conf; the builder's codegen cache holds
+  * a warm pass's classes. */
 class GraftSessionSpec extends SparkSpec {
+
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  test("a warm query compiles nothing after 300 other classes were compiled") {
+    val upper = udf((s: String) => s.toUpperCase)
+    def joinAggUdf(): Unit = {
+      val facts = spark.range(2000).selectExpr("id % 7 AS k", "id AS v")
+      val dim = spark.range(7).selectExpr("id AS k", "concat('n', cast(id AS string)) AS name")
+      facts.join(dim, "k").groupBy(upper(col("name")).as("n")).agg(sum("v")).collect()
+    }
+    joinAggUdf()
+    val before = compiles
+    // an inlined literal makes each projection a new class body
+    (1 to 300).foreach(i => spark.range(4).selectExpr(s"id * ${1000 + i}").collect())
+    assert(compiles - before >= 300, "each projection compiles a new class")
+    val warm = compiles
+    joinAggUdf()
+    assert(compiles - warm == 0, "the rerun finds every class in the codegen cache")
+  }
 
   test("sibling copies the caller's runtime conf, applies overrides, leaves the caller alone") {
     val key = "spark.sql.files.maxRecordsPerFile"
