@@ -1,21 +1,20 @@
 package graft
 
 import graft.core.{ArtifactRegistry, GraftSession}
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every declared query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query executes to a noop sink so the full
   * plan runs (a bare count() would let Catalyst prune the very expressions
   * being measured). One warm-up pass primes the JVM/codegen caches so the
   * numbers measure the engine, not JIT warm-up; `codegen_compiles` in the
-  * detail artifact counts the classes each pass compiled, so a timed pass
-  * that recompiles shows there.
+  * detail artifact counts the classes each pass compiled.
   *
-  * Two totals are reported: `queries`/`isolated_sec` are sequential
-  * per-query min-of-2 timings, while the headline `value` is the SUITE
-  * WALL-CLOCK with the queries scheduled concurrently on one session (FAIR
-  * scheduler). One-at-a-time execution leaves most cores idle between
-  * jobs; concurrent scheduling is how this engine is deployed.
+  * Two totals are reported on one session: `queries`/`isolated_sec` are
+  * sequential per-query min-of-2 timings, while the headline `value` is
+  * the SUITE WALL-CLOCK with the queries run concurrently (FAIR scheduler),
+  * which is how this engine is deployed: one at a time leaves cores idle.
   */
 object Bench {
 
@@ -43,9 +42,8 @@ object Bench {
 
   /** Percentage of all CPU time the host stole from this VM between two
     * [[stealStat]] samples; -1 on sentinel inputs or an empty interval.
-    * It is the run's context field: nonzero steal means the shared host
-    * could not back every vCPU, which inflates wall-clock with no code
-    * change. */
+    * Nonzero steal means the shared host could not back every vCPU, which
+    * inflates wall-clock with no code change. */
   private[graft] def stealPct(before: (Long, Long), after: (Long, Long)): Double =
     if (before._1 < 0 || after._1 < 0 || after._2 <= before._2) -1.0
     else 100.0 * (after._1 - before._1) / (after._2 - before._2)
@@ -55,28 +53,15 @@ object Bench {
   private[graft] def codegenCompiles: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
-  /** One pass's session: the [[GraftSession]] defaults plus FAIR
-    * scheduling, shuffle compression and the spill dir. [[BenchOne]] times
-    * its queries in the isolated-pass session (`compress = false, tmpfs =
-    * true`). */
-  private[graft] def buildSession(cpus: Int, compress: Boolean, tmpfs: Boolean): SparkSession = {
-    // Per-mode shuffle config, both directions measured (full-suite A/B):
-    //   isolated pass — compression OFF + tmpfs spill: in local mode every
-    //     shuffle read is a local page-cache read, so per-block LZ4 framing
-    //     is pure CPU on the job-floor critical path (262.2 -> 228.2 s);
-    //   concurrent pass — compression ON + disk spill: six queries'
-    //     uncompressed shuffles at once saturate memory bandwidth and the
-    //     wall regresses under the isolated config (99.4 s vs 134.3 s).
-    // This is a single-node harness choice; a network-bound cluster keeps
-    // compression on and local.dir on real disks.
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-      if (tmpfs && new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-bench"
-      else System.getProperty("java.io.tmpdir"))
+  /** The one session every pass, and [[BenchOne]], runs on: the
+    * [[GraftSession]] defaults plus FAIR scheduling and no shuffle compression. */
+  private[graft] def buildSession(cpus: Int): SparkSession = {
     val sess = GraftSession.builder("graft-bench", cpus)
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.shuffle.compress", compress.toString)
-      .config("spark.shuffle.spill.compress", compress.toString)
-      .config("spark.local.dir", localDir)
+      // A local shuffle never crosses a network, so LZ4 framing is pure CPU
+      // on the critical path (4 vCPUs, sf0.01: isolated pass median 107 -> 97 s).
+      .config("spark.shuffle.compress", "false")
+      .config("spark.shuffle.spill.compress", "false")
       .getOrCreate()
     sess.sparkContext.setLogLevel("WARN")
     sess
@@ -85,70 +70,51 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    var spark = buildSession(cpus, compress = false, tmpfs = true)
+    val spark = buildSession(cpus)
 
-    // Recorded from the LIVE session conf, not re-derived defaults, so the
-    // audit field cannot disagree with the session it describes. A missing
-    // key falls back to the JSON literal null: the numeric/boolean values
-    // interpolate unquoted.
-    def liveConfJson(sess: SparkSession): String = {
-      def g(k: String) = sess.conf.getOption(k).getOrElse("null")
-      s"""{"master":"${sess.sparkContext.master}",""" +
+    // From the live session, so it cannot disagree with the session it describes.
+    val config = {
+      def g(k: String) = spark.conf.getOption(k).getOrElse("null")
+      s"""{"master":"${spark.sparkContext.master}",""" +
         s""""shuffle_partitions":${g("spark.sql.shuffle.partitions")},""" +
         s""""shuffle_compress":${g("spark.shuffle.compress")},""" +
-        s""""local_dir":"${sess.sparkContext.getConf.get("spark.local.dir", "unset")}",""" +
         s""""aqe":${g("spark.sql.adaptive.enabled")}}"""
     }
-    val configIsolated = liveConfJson(spark)
 
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+    def run(fn: (SparkSession, String) => DataFrame): Unit = noop(fn(spark, sfDir))
 
     // ---- priming (published as prime_sec) ------------------------------
-    // Every number that enters a ratio is measured WARM on both engines
-    // (tools/time_oracle.py runs an untimed warm-up pass before its
-    // min-of-2). Without priming, whichever artifact build ran first in the
-    // fresh JVM absorbed the page-cache fill, parquet-footer reads and
-    // write-path class loading. Priming is one noop scan per base table,
-    // one 64-row parquet round-trip, and one 1k-row generate→shuffle→agg
-    // so the first whole-stage compile's janino warm-up lands here.
-    // Nothing query- or artifact-shaped is computed.
+    // Every ratio input is measured WARM on both engines (tools/time_oracle.py
+    // also warms up before its min-of-2). Unprimed, the first artifact build
+    // absorbed the page-cache fill, footer reads, write-path class loading and
+    // janino's warm-up. Priming: a noop scan per base table, a 64-row parquet
+    // round-trip and a 1k-row generate→shuffle→agg; nothing query-shaped.
     val tPrime0 = System.nanoTime()
     val compiles0 = codegenCompiles
     Option(new java.io.File(sfDir).listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .foreach { f =>
-        try spark.read.parquet(f.getAbsolutePath)
-          .write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-      }
+      .foreach(f => try noop(spark.read.parquet(f.getAbsolutePath)) catch { case _: Throwable => () })
     try {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-prime")
+      val tmp = Files.createTempDirectory("graft-prime")
       spark.range(64).selectExpr("id", "cast(id as string) AS s")
         .repartition(2).write.mode("overwrite").parquet(tmp.toString)
-      spark.read.parquet(tmp.toString).write.format("noop").mode("overwrite").save()
+      noop(spark.read.parquet(tmp.toString))
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => try java.nio.file.Files.delete(p) catch { case _: Throwable => () })
-      spark.range(1000)
+      Files.walk(tmp).iterator().asScala.toSeq.reverse
+        .foreach(p => try Files.delete(p) catch { case _: Throwable => () })
+      noop(spark.range(1000)
         .selectExpr("explode(split(repeat(concat('w', cast(id % 7 as string), ' '), 3), ' ')) AS w")
-        .filter("length(w) > 0").groupBy("w").count()
-        .write.format("noop").mode("overwrite").save()
+        .filter("length(w) > 0").groupBy("w").count())
     } catch { case _: Throwable => () }
     val primeSec = (System.nanoTime() - tPrime0) / 1e9
     val stealStart = stealStat()
 
     // Warm-up: every memoized artifact is built here, before the clock
-    // starts, so the per-query isolated numbers are MARGINAL costs. The
-    // build side is the ArtifactRegistry ledger, published as
-    // artifact:<tag> items and charged by the with-builds ratio.
+    // starts, so the isolated numbers are MARGINAL costs; the with-builds
+    // ratio charges the ArtifactRegistry ledger. Sorted order pins which
+    // query triggers which build, whatever the map-hash order.
     ArtifactRegistry.resetTimings()
-    // Builds run lazily inside this loop; without the timed passes'
-    // System.gc() discipline a prior query's major collection lands in
-    // whichever build runs next (see ArtifactRegistry.gcBeforeBuild).
-    ArtifactRegistry.gcBeforeBuild = true
-    // Sorted order pins which query triggers which build, so per-tag
-    // ledger numbers do not depend on map-hash order.
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
       try run(fn) catch { case _: Throwable => () }
     }
@@ -160,7 +126,7 @@ object Bench {
 
     // Min-of-2 per query with a GC breather: a single pass is hostage to
     // GC pauses from whatever ran before.
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timeOnce(fn: (SparkSession, String) => DataFrame): Double = {
       System.gc()
       val t0 = System.nanoTime()
       val ok = try { run(fn); true } catch { case _: Throwable => false }
@@ -179,20 +145,15 @@ object Bench {
 
     // ---- DuckDB-oracle denominator -------------------------------------
     // ORACLE_TIMES.json (tools/time_oracle.py): min-of-2 DuckDB seconds per
-    // query at the same SF. ratio_aggregate covers every query timed on
-    // both engines; ratio_heavy_subset the queries where the oracle does
-    // >= 0.5 s of work (plan quality, not scheduling floor). Flat-JSON
-    // regex parse: no JSON library on the engine classpath.
-    val oracleTimes: Map[String, Double] =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("ORACLE_TIMES.json")))
-        val re = """"([A-Za-z0-9_]+)":\s*(-?[0-9.]+)""".r
-        re.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble)
-          .filter { case (k, v) => !k.startsWith("_") && v >= 0 }
-          .toMap
-      } catch { case _: Throwable => Map.empty }
+    // query at the same SF. ratio_aggregate covers every query timed on both
+    // engines; ratio_heavy_subset those where the oracle does >= 0.5 s (plan
+    // quality, not scheduling floor). Regex parse: no JSON library here.
+    val oracleTimes: Map[String, Double] = try {
+      """"([A-Za-z0-9_]+)":\s*(-?[0-9.]+)""".r
+        .findAllMatchIn(Files.readString(Paths.get("ORACLE_TIMES.json")))
+        .map(m => m.group(1) -> m.group(2).toDouble)
+        .filter { case (k, v) => !k.startsWith("_") && v >= 0 }.toMap
+    } catch { case _: Throwable => Map.empty }
     val sparkByName = results.toMap
     val both = oracleTimes.keys.filter(k => sparkByName.getOrElse(k, -1.0) >= 0).toSeq
     def ratio(keys: Seq[String], builds: Double = 0.0): Double = {
@@ -202,9 +163,8 @@ object Bench {
     val ratioAgg = ratio(both)
     val heavy = both.filter(oracleTimes(_) >= 0.5)
     val ratioHeavy = ratio(heavy)
-    // (Σ isolated + Σ first builds) / Σ oracle: DuckDB recomputes per
-    // query, so this is the apples-to-apples aggregate and the 2× contract
-    // holds on it too.
+    // (Σ isolated + Σ first builds) / Σ oracle: DuckDB recomputes per query,
+    // so this is the apples-to-apples aggregate; the 2× contract holds on it.
     val ratioAggWithBuilds = ratio(both, buildTotal)
     val oracleSumBoth = both.map(oracleTimes).sum
 
@@ -220,27 +180,16 @@ object Bench {
       System.gc()
       val pool = java.util.concurrent.Executors.newFixedThreadPool(Threads)
       val t0 = System.nanoTime()
-      val futures = lptOrder.map(SparkEntry.queries).map { fn =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = run(fn)
-        })
-      }
+      val futures = lptOrder.map(SparkEntry.queries).map(fn =>
+        pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = run(fn) }))
       var failed = 0
       futures.foreach(f => try f.get() catch { case _: Throwable => failed += 1 })
       pool.shutdown()
       ((System.nanoTime() - t0) / 1e9, failed)
     }
-    // A stop-the-world gc under 6 live queries would distort the wall.
-    ArtifactRegistry.gcBeforeBuild = false
-    // Swap to the concurrent-mode session; codegen caches are JVM-wide.
-    try spark.stop() catch { case _: Throwable => () }
-    spark = buildSession(cpus, compress = true, tmpfs = false)
-    val configConcurrent = liveConfJson(spark)
     val passes = Seq(suiteWallOnce(), suiteWallOnce())
-    val compilesFields =
-      s""""codegen_compiles":{"prime":${compilesPrimed - compiles0},""" +
-        s""""isolated":${compilesIsolated - compilesPrimed},""" +
-        s""""concurrent":${codegenCompiles - compilesIsolated}}"""
+    val compilesFields = s""""codegen_compiles":{"prime":${compilesPrimed - compiles0},""" +
+      s""""isolated":${compilesIsolated - compilesPrimed},"concurrent":${codegenCompiles - compilesIsolated}}"""
     val clean = passes.filter(_._2 == 0).map(_._1)
     // -1 sentinel (like the isolated pass) when no pass completed cleanly
     val wall = if (clean.nonEmpty) clean.min else -1.0
@@ -249,21 +198,13 @@ object Bench {
 
     // ---- output --------------------------------------------------------
     // A consumer may keep only the last ~2000 chars of stdout, and sbt
-    // prints a trailer after us. So full precision goes on a prefixed
-    // detail line and a sidecar file, and THE json line is compact: 2
-    // decimals, trailing zeros trimmed, and a hard length cap that drops
-    // the fastest queries first ("omitted":n).
-    def fmt(v: Double): String = {
-      if (v < 0) "-1"
-      else {
-        val s = f"$v%.2f"
-        val t = s.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse
-        if (t.isEmpty) "0" else t
-      }
-    }
+    // prints a trailer after us. So full precision goes on a prefixed detail
+    // line and a sidecar file; THE json line has 2 decimals, no trailing
+    // zeros, and a length cap that drops the fastest queries ("omitted":n).
+    def fmt(v: Double): String = if (v < 0) "-1"
+      else new java.math.BigDecimal(f"$v%.2f").stripTrailingZeros.toPlainString
     def fmt3(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
-    val detail = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    val detail = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val ratioFields =
       s""""ratio_aggregate":${fmt3(ratioAgg)},"ratio_heavy_subset":${fmt3(ratioHeavy)},""" +
         s""""oracle_n":${both.size},"oracle_heavy_n":${heavy.size},""" +
@@ -271,20 +212,16 @@ object Bench {
         s""""oracle_heavy_sec":${fmt3(heavy.map(oracleTimes).sum)},""" +
         s""""spark_heavy_sec":${fmt3(heavy.map(sparkByName).sum)}"""
     val buildsJson = artifactBuilds.toSeq.sortBy(-_._2)
-      .map { case (t, v) => "\"artifact:" + t + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
+      .map { case (t, v) => "\"artifact:" + t + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
     val buildFields =
       s""""artifact_builds":$buildsJson,"build_total_sec":${fmt3(buildTotal)},""" +
         s""""prime_sec":${fmt3(primeSec)},""" +
         s""""ratio_aggregate_with_builds":${fmt3(ratioAggWithBuilds)}"""
-    val configFields =
-      s""""config_isolated":$configIsolated,"config_concurrent":$configConcurrent"""
     val detailJson =
-      s"""{"wall":$wall,"threads":$Threads,"cpus":$cpus,"failed":$failedMax,"isolated_sec":$total,"steal_pct":${fmt3(stealPctRun)},$ratioFields,$buildFields,$compilesFields,$configFields,"sf":"$sfDir","queries":$detail}"""
+      s"""{"wall":$wall,"threads":$Threads,"cpus":$cpus,"failed":$failedMax,"isolated_sec":$total,"steal_pct":${fmt3(stealPctRun)},$ratioFields,$buildFields,$compilesFields,"config":$config,"sf":"$sfDir","queries":$detail}"""
     println(s"BENCH_DETAIL $detailJson")
     val detailFile = detailPath(cpus)
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(detailFile), detailJson + "\n")
+    try Files.writeString(Paths.get(detailFile), detailJson + "\n")
     catch { case _: Throwable => () } // bench result must survive a bad cwd
 
     val maxLine = 1800 // 2000-char tail - sbt trailer - safety margin

@@ -3,8 +3,8 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 
-/** Targeted per-query timing for local iteration: [[Bench]]'s isolated-pass
-  * session and noop-sink discipline, but only the named queries, printed
+/** Targeted per-query timing for local iteration: [[Bench]]'s session
+  * and noop-sink discipline, but only the named queries, printed
   * as one line each with the jobs and stages one run schedules and the
   * classes the warm-up run and the two timed runs compiled. Usage:
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.BenchOne q01_scan_project ..."
@@ -13,7 +13,7 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = Bench.buildSession(cpus, compress = false, tmpfs = true)
+    val spark = Bench.buildSession(cpus)
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
     // At local[32] the per-job floor (~0.05-0.1 s each) predicts wall

@@ -47,18 +47,6 @@ object ArtifactRegistry {
   // store key, not here: Bench resets timings at session start, so the
   // snapshot it reads is exactly the builds its own session paid for)
   private val buildSelf = new ConcurrentHashMap[String, java.lang.Double]()
-  // Measurement hygiene, opt-in ([[graft.Bench]] isolated pass only): a
-  // build's recorded wall must measure the BUILD, not the previous
-  // queries' garbage. Bench System.gc()s before every timed query, but
-  // builds trigger lazily inside the (untimed) warm-up loop — without
-  // the same discipline a major collection from 30 prior warm-up queries
-  // lands inside whichever build runs next (measured: triangle_core read
-  // 10.6 s inside a bench warm-up vs 3.3 s in a clean probe of the same
-  // code, same host window). Off by default: production callers and the
-  // bench's CONCURRENT pass (where a stop-the-world gc under 6 running
-  // queries would distort the very wall being measured) want no gc
-  // side effects from a cache.
-  @volatile var gcBeforeBuild: Boolean = false
   // per-thread stack of child-time accumulators for nested builds
   private val childTime = new ThreadLocal[java.util.ArrayDeque[Array[Double]]] {
     override def initialValue() = new java.util.ArrayDeque[Array[Double]]()
@@ -90,8 +78,6 @@ object ArtifactRegistry {
           again.asInstanceOf[V]
         } else {
           autoRegisterEviction()
-          // outside the timed window, and only for a genuine build
-          if (gcBeforeBuild) System.gc()
           val stack = childTime.get()
           stack.push(Array(0.0))
           val t0 = System.nanoTime()

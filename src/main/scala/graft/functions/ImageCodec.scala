@@ -264,18 +264,54 @@ object ImageCodec {
     * cache) and is disposed after every call, since the JPEG reader holds
     * native memory. The pixel cap is checked on the reader's header dims
     * before any pixels are allocated. Returns None for null,
-    * unrecognized, oversized or malformed input — never throws. */
+    * unrecognized, oversized or malformed input — never throws.
+    *
+    * The JDK's GIF reader places the rows of interlaced frames 2 or 3 rows
+    * tall wrongly, so an interlaced GIF is read with its interlace flag
+    * cleared, in stored row order, and its rows are re-ordered here. */
   def decodeRgb(bytes: Array[Byte]): Option[(Int, Int, Array[Byte])] =
     parse(bytes).flatMap { meta =>
+      val interlaceAt = if (meta.format == "gif") gifInterlaceFlag(bytes) else -1
+      val input =
+        if (interlaceAt < 0) bytes else bytes.updated(interlaceAt, (bytes(interlaceAt) & ~0x40).toByte)
       val reader = ImageIO.getImageReadersByFormatName(meta.format).next()
-      try Using.resource(new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))) { in =>
+      try Using.resource(new MemoryCacheImageInputStream(new ByteArrayInputStream(input))) { in =>
         reader.setInput(in, true, true)
         val w = reader.getWidth(0); val h = reader.getHeight(0)
         if (w <= 0 || h <= 0 || w.toLong * h > MaxPixels) None
-        else Some((w, h, packRgb(reader.read(0))))
+        else {
+          val rgb = packRgb(reader.read(0))
+          Some((w, h, if (interlaceAt < 0) rgb else gifDeinterlace(w, h, rgb)))
+        }
       } catch { case _: Exception => None }
       finally reader.dispose()
     }
+
+  /** Offset of the flags byte of a GIF's first image descriptor when that
+    * frame is interlaced, else -1. Skips the global color table and every
+    * extension block (label, then data sub-blocks up to a zero length). */
+  private def gifInterlaceFlag(b: Array[Byte]): Int = {
+    val packed = u8(b, 10)
+    var i = 13 + (if ((packed & 0x80) != 0) 3 << ((packed & 7) + 1) else 0)
+    while (i < b.length && u8(b, i) == 0x21) {
+      i += 2
+      while (i < b.length && u8(b, i) != 0) i += u8(b, i) + 1
+      i += 1
+    }
+    val flags = i + 9
+    if (flags < b.length && u8(b, i) == 0x2C && (u8(b, flags) & 0x40) != 0) flags else -1
+  }
+
+  /** Interlaced GIF rows are stored as rows 0, 8, 16…, then 4, 12…, then
+    * 2, 6…, then the odd rows: move each stored row to its display row. */
+  private def gifDeinterlace(w: Int, h: Int, stored: Array[Byte]): Array[Byte] = {
+    val display = Seq((0, 8), (4, 8), (2, 4), (1, 2)).flatMap { case (s, step) => s until h by step }
+    val out = new Array[Byte](stored.length)
+    display.zipWithIndex.foreach { case (row, k) =>
+      System.arraycopy(stored, k * w * 3, out, row * w * 3, w * 3)
+    }
+    out
+  }
 
   /** Packed RGB of a decoded image. Gray images give their raw samples,
     * scaled to 8 bits: `getRGB` would apply the linear-gray to sRGB

@@ -144,12 +144,4 @@ class ArtifactRegistrySpec extends SparkSpec {
       ArtifactRegistry.resetTimings()
     }
   }
-
-  test("gc-before-build hygiene is OFF unless a bench opts in") {
-    // production callers (and Bench's concurrent pass) must get no gc
-    // side effects from a cache read or build — the flag exists solely
-    // so the ISOLATED bench pass can time builds under the same
-    // System.gc() discipline as its timed queries
-    assert(!ArtifactRegistry.gcBeforeBuild)
-  }
 }

@@ -26,6 +26,12 @@ class GraftSessionSpec extends SparkSpec {
     val warm = compiles
     joinAggUdf()
     assert(compiles - warm == 0, "the rerun finds every class in the codegen cache")
+    // Bench's concurrent pass submits queries to a fixed pool on the same
+    // session: a rerun from a pool thread finds the same classes
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = joinAggUdf() }).get()
+    finally pool.shutdown()
+    assert(compiles - warm == 0, "the pool-thread rerun compiles nothing")
   }
 
   test("sibling copies the caller's runtime conf, applies overrides, leaves the caller alone") {

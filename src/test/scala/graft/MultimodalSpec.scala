@@ -186,6 +186,36 @@ class MultimodalSpec extends SparkSpec {
     assert(ImageCodec.decodeRgb(null).isEmpty)
   }
 
+  test("interlaced gifs decode their rows in display order, 2 and 3 rows tall too") {
+    import graft.functions.ImageCodec
+    import java.awt.image.{BufferedImage, IndexColorModel}
+    // one palette entry per pixel, so a row in the wrong place reads wrong
+    val palette = Array.tabulate(256)(i => (i << 16) | ((255 - i) << 8) | ((i * 37) & 0xFF))
+    val icm = new IndexColorModel(8, 256, palette.map(c => (c >> 16).toByte),
+      palette.map(c => (c >> 8).toByte), palette.map(_.toByte))
+    for ((w, h) <- Seq((2, 2), (3, 3), (5, 17))) {
+      val img = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_INDEXED, icm)
+      for (y <- 0 until h; x <- 0 until w) img.getRaster.setSample(x, y, 0, y * w + x)
+      val bos = new java.io.ByteArrayOutputStream()
+      assert(javax.imageio.ImageIO.write(img, "gif", bos))
+      val gif = bos.toByteArray
+      val reader = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
+      reader.setInput(javax.imageio.ImageIO.createImageInputStream(new java.io.ByteArrayInputStream(gif)))
+      val descriptor = reader.getImageMetadata(0).getAsTree("javax_imageio_gif_image_1.0")
+        .asInstanceOf[org.w3c.dom.Element].getElementsByTagName("ImageDescriptor").item(0)
+        .asInstanceOf[org.w3c.dom.Element]
+      reader.dispose()
+      assert(descriptor.getAttribute("interlaceFlag") == "TRUE", s"the ${w}x$h fixture is interlaced")
+      val Some((gw, gh, px)) = ImageCodec.decodeRgb(gif)
+      assert((gw, gh) == ((w, h)))
+      for (y <- 0 until h; x <- 0 until w) {
+        val o = (y * w + x) * 3
+        val got = ((px(o) & 0xFF) << 16) | ((px(o + 1) & 0xFF) << 8) | (px(o + 2) & 0xFF)
+        assert(got == palette(y * w + x), f"${w}x$h pixel ($x,$y): got $got%06x")
+      }
+    }
+  }
+
   test("bmp and gif decoders read solid images pixel-exact") {
     import graft.functions.ImageCodec
     val solid = Array.tabulate(8 * 8 * 3)(i => (i % 3 match {
