@@ -15,13 +15,6 @@ import graft.refine.CsvTypeInference
   *  - a per-file decode timeout guard (60 s SIGALRM in the reference) —
   *    here a bounded-time contract on the decoder call;
   *  - typing via the shared inference pass.
-  *
-  * The workbook decoder (Apache POI / SODS) is NOT in this container, so
-  * [[decodeWorkbook]] is a clearly-marked stub with the production
-  * signature: bytes → ordered (sheetName, header, rows). Everything
-  * around it — sanitization, per-sheet frames, inference — is real and
-  * tested. The corpus-level path parallelizes decode across executors via
-  * `binaryFile` + flatMap; one sheet's rows never shuffle.
   */
 object SpreadsheetConverter {
 
@@ -36,8 +29,7 @@ object SpreadsheetConverter {
     * value-types, repeat expansion, same rendering contract), and legacy
     * binary XLS via [[XlsDecoder]] (CFB container + BIFF8 records, same
     * styles contract through the shared classifier). Payloads that are
-    * none of the three fall back to a clearly-marked deterministic fake
-    * that keeps the plumbing tests stable. */
+    * none of the three have no sheets. */
   def decodeWorkbook(payload: Array[Byte]): Seq[Sheet] = {
     if (payload == null || payload.isEmpty) return Seq.empty
     if (XlsxDecoder.looksLikeZip(payload)) {
@@ -47,12 +39,8 @@ object SpreadsheetConverter {
         else XlsxDecoder.decodeEntries(entries)
       } catch { case _: Exception => Seq.empty }
     }
-    if (XlsDecoder.looksLikeCfb(payload)) return XlsDecoder.decode(payload)
-    // STUB fallback for unrecognized containers: derives a single sheet
-    // from the bytes so corpus plumbing stays exercised on junk inputs.
-    val n = payload.length
-    Seq(Sheet(s"sheet_$n", Seq("col_a", "col_b"),
-      (0 until math.min(3, n)).map(i => Seq(i.toString, (payload(i) & 0xFF).toString))))
+    if (XlsDecoder.looksLikeCfb(payload)) XlsDecoder.decode(payload)
+    else Seq.empty
   }
 
   /** Sheet-name sanitization (spreadsheet_to_parquet.py:46-61). */

@@ -10,33 +10,21 @@ package graft.extract
   *    longer (pdf_extractor.py:56-101);
   *  - extraction failure → empty text, row survives (fail-soft).
   *
-  * The byte-level decoders (PDFBox / tesseract) are NOT available in this
-  * container, so [[decodePdfText]] and [[ocrPages]] are clearly-marked
-  * deterministic stubs; the real part — the threshold orchestration — is
-  * tested. Pipelines run [[extractWithOcrFallback]] per row through
+  * Pipelines run [[extractWithOcrFallback]] per row through
   * `refine.FailSoft.withGuarded`, a narrow projection with no shuffle.
-  * Swap the two stub bodies for PDFBox/tesseract calls in production;
-  * nothing else changes.
   */
 object PdfExtractor {
 
   val OcrThreshold = 200
 
-  /** PDF text decoder. Real %PDF payloads go through [[PdfTextParser]] — a
+  /** PDF text decoder. %PDF payloads go through [[PdfTextParser]] — a
     * pure-JVM content-stream reader (FlateDecode inflate + Tj/TJ/quote text
     * operators) that covers the text-first PDFs the reference's extractor
     * sees; image-only pages yield no text and flow to the OCR fallback
-    * below, exactly as in the reference. Non-PDF bytes keep the marked
-    * deterministic fake (printable ASCII) so plumbing tests are stable
-    * without fixture files. */
-  def decodePdfText(payload: Array[Byte]): Seq[String] = {
-    if (payload == null || payload.isEmpty) return Seq.empty
-    if (PdfTextParser.looksLikePdf(payload))
-      return try PdfTextParser.pageTexts(payload) catch { case _: Exception => Seq.empty }
-    val printable = payload.iterator.filter(b => b >= 32 && b < 127)
-      .map(_.toChar).mkString
-    if (printable.isEmpty) Seq.empty else Seq(printable)
-  }
+    * below, exactly as in the reference. Any other payload has no pages. */
+  def decodePdfText(payload: Array[Byte]): Seq[String] =
+    if (!PdfTextParser.looksLikePdf(payload)) Seq.empty
+    else try PdfTextParser.pageTexts(payload) catch { case _: Exception => Seq.empty }
 
   /** CLI OCR engine — the tesseract drop-in seam (enabling OCR is a
     * binary drop, not a code change).
@@ -97,22 +85,15 @@ object PdfExtractor {
   }
 
   /** The active OCR engine: SPARK_GRAFT_TESSERACT (path to a tesseract-
-    * compatible binary) activates [[CliOcr]]; otherwise the deterministic
-    * stub (hex digest prefix as "recognized" text) keeps the plumbing
-    * tests stable. Resolved once per JVM — executors re-resolve from the
-    * same env, so the choice is cluster-consistent. */
+    * compatible binary) activates [[CliOcr]]; with no binary configured,
+    * OCR adds nothing. Resolved once per JVM — executors re-resolve from
+    * the same env, so the choice is cluster-consistent. */
   private lazy val defaultOcr: Array[Byte] => String =
     sys.env.get("SPARK_GRAFT_TESSERACT") match {
       case Some(bin) if new java.io.File(bin).canExecute =>
         new CliOcr(bin).recognize _
-      case _ => stubOcr _
+      case _ => _ => ""
     }
-
-  /** STUB OCR — deterministic fake used when no binary is configured. */
-  def stubOcr(payload: Array[Byte]): String = {
-    if (payload == null || payload.isEmpty) return ""
-    s"[ocr:${java.util.UUID.nameUUIDFromBytes(payload).toString.take(8)}]"
-  }
 
   def ocrPages(payload: Array[Byte]): String = defaultOcr(payload)
 

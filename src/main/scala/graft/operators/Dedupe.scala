@@ -360,7 +360,7 @@ object Dedupe {
 
   /** Embedding-cosine near-dup pairs within a blocking key (e.g. an LSH
     * bucket or cluster label). Cosine via the deterministic sequential fold
-    * in [[graft.functions.VectorFunctions]].
+    * of [[graft.plans.CosineSimilarityExpr]].
     *
     * Scale guard: the self-join is O(B²) PER BLOCK — the caller's blocking
     * key bounds the cost, so blocks must stay small (LSH buckets / IVF
@@ -485,7 +485,7 @@ object Dedupe {
   def embeddingNearDupPairs(df: DataFrame, id: Column, vec: Column,
       block: Column, minCosine: Double, dim: Int = 64,
       nPlanes: Int = 3, nTables: Int = 4): DataFrame = {
-    import graft.functions.VectorFunctions.cosineSimilarity
+    import graft.plans.VectorExpressions.cosineSim
     val base = df.select(id.as("id"), vec.as("v"), block.as("blk"))
       .select(col("id"), col("v"), col("blk"),
         explode(graft.operators.Similarity.lshTables(col("v"), dim, nPlanes,
@@ -498,7 +498,7 @@ object Dedupe {
       col("blk"), col("tbl"), col("bucket"))
     a.join(b, Seq("blk", "tbl", "bucket"))
       .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine", cosineSimilarity(col("v_a"), col("v_b")))
+      .withColumn("cosine", cosineSim(col("v_a"), col("v_b")))
       .filter(col("cosine") >= minCosine)
       .select(col("id_a"), col("id_b"), col("cosine"))
       .distinct() // a pair may collide in several tables (s02's rule)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions._
+import graft.plans.VectorExpressions._
 
 /** Vector similarity search.
   *
@@ -25,7 +25,7 @@ object Similarity {
   def topKByL2(corpus: DataFrame, id: Column, vec: Column,
       query: DataFrame, k: Int): DataFrame =
     corpus.crossJoin(broadcast(query))
-      .select(id.as("id"), l2Distance(vec, col("qv")).as("dist"))
+      .select(id.as("id"), l2Dist(vec, col("qv")).as("dist"))
       .orderBy(col("dist"), col("id"))
       .limit(k)
 
@@ -35,7 +35,7 @@ object Similarity {
   def topKByCosine(corpus: DataFrame, id: Column, vec: Column,
       query: DataFrame, k: Int): DataFrame =
     corpus.crossJoin(broadcast(query))
-      .select(id.as("id"), cosineSimilarity(vec, col("qv")).as("score"))
+      .select(id.as("id"), cosineSim(vec, col("qv")).as("score"))
       .orderBy(col("score").desc, col("id"))
       .limit(k)
 
@@ -46,7 +46,7 @@ object Similarity {
   def batchTopKByCosine(corpus: DataFrame, id: Column, vec: Column,
       queries: DataFrame, k: Int): DataFrame = {
     val scored = corpus.crossJoin(broadcast(queries))
-      .select(col("qid"), id.as("id"), cosineSimilarity(vec, col("qv")).as("score"))
+      .select(col("qid"), id.as("id"), cosineSim(vec, col("qv")).as("score"))
       .filter(col("qid") =!= col("id"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("score").desc, col("id"))
@@ -85,16 +85,14 @@ object Similarity {
 
   /** The engine's canonical sequential-fold dot against one plane pulled
     * from a planes literal — the native [[graft.plans.DotProductExpr]]
-    * kernel, whose eval is the SAME left-to-right double fold from 0.0 as
-    * VectorFunctions.dot (bit-identical — its scaladoc and specs pin it),
-    * so bucket/fingerprint bits agree with the unrolled formulation and
-    * the oracle. Native beats the HOF formulation specifically INSIDE the
+    * kernel, a left-to-right double fold from 0.0, so bucket/fingerprint
+    * bits agree with the unrolled formulation and the oracle. Native beats
+    * a `zip_with` + `aggregate` spelling specifically INSIDE the
     * transform/aggregate loops used here: lambda-HOF expressions are
     * interpreted per element (2 lambda calls per dim per plane), the
     * kernel is one compiled tight loop per plane (measured: the s06
     * bucket+fingerprint projection dominated its runtime). */
-  private def planeDot(vec: Column, plane: Column): Column =
-    graft.plans.VectorExpressions.dotProduct(vec, plane)
+  private def planeDot(vec: Column, plane: Column): Column = dotProduct(vec, plane)
 
   // ------------------------------------------------------------------- IVF
   //
@@ -140,7 +138,7 @@ object Similarity {
     // tie-break, evaluated per row with no join at all
     val scored = cents.map { case (p, cv) =>
       val cvec = array(cv.toIndexedSeq.map(x => lit(x)): _*)
-      struct(cosineSimilarity(vec, cvec).as("cscore"), lit(-p).as("np"))
+      struct(cosineSim(vec, cvec).as("cscore"), lit(-p).as("np"))
     }
     val best = if (scored.length == 1) scored.head else greatest(scored: _*)
     corpus.select(id.as("id"), vec.as("v"), (-best.getField("np")).as("part"))
@@ -182,14 +180,14 @@ object Similarity {
     val wProbe = Window.partitionBy(col("qid")).orderBy(col("cscore").desc, col("part"))
     val probes = queries.crossJoin(broadcast(centroids))
       .select(col("qid"), col("qv"), col("part"),
-        cosineSimilarity(col("qv"), col("cvec")).as("cscore"))
+        cosineSim(col("qv"), col("cvec")).as("cscore"))
       .withColumn("prank", row_number().over(wProbe))
       .filter(col("prank") <= nProbe)
       .select(col("qid"), col("qv"), col("part"))
     val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("id"))
     assigned.join(broadcast(probes), Seq("part"))
       .filter(col("qid") =!= col("id"))
-      .select(col("qid"), col("id"), cosineSimilarity(col("v"), col("qv")).as("score"))
+      .select(col("qid"), col("id"), cosineSim(col("v"), col("qv")).as("score"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
   }
@@ -250,11 +248,11 @@ object Similarity {
     c.crossJoin(broadcast(q))
       .filter(col("qid") =!= col("id"))
       .select(col("qid"), col("id"), col("v"), col("qv"),
-        cosineSimilarity(col("dec"), col("qdec")).as("qscore"))
+        cosineSim(col("dec"), col("qdec")).as("qscore"))
       .withColumn("crank", row_number().over(wCand))
       .filter(col("crank") <= candidateK)
       .select(col("qid"), col("id"),
-        cosineSimilarity(col("v"), col("qv")).as("score"))
+        cosineSim(col("v"), col("qv")).as("score"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
   }
@@ -290,7 +288,7 @@ object Similarity {
       .orderBy(col("score").desc, col("id"))
     bucketed.join(broadcast(qb), Seq("tbl", "bucket"))
       .filter(col("qid") =!= col("id"))
-      .select(col("qid"), col("id"), cosineSimilarity(col("v"), col("qv")).as("score"))
+      .select(col("qid"), col("id"), cosineSim(col("v"), col("qv")).as("score"))
       .distinct() // a pair may collide in several tables
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -458,7 +456,7 @@ object Similarity {
         .join(broadcast(c), Seq("cid"))
         .join(broadcast(qs), Seq("qid"))
         .select(col("qid"), col("cid"),
-          cosineSimilarity(col("v"), col("qv")).as("score"))
+          cosineSim(col("v"), col("qv")).as("score"))
     // One hop, FUSED: out-edges of the
     // beam union the already-scored set, ONE (qid, cid) aggregate dedupes
     // both the multi-edge expansions and the revisits (null score = not
@@ -483,7 +481,7 @@ object Similarity {
       base.select(col("id").as("cid"), col("v"))
         .join(broadcast(mergedSet.join(broadcast(qs), Seq("qid"))), Seq("cid"))
         .select(col("qid"), col("cid"),
-          coalesce(col("s0"), cosineSimilarity(col("v"), col("qv"))).as("score"))
+          coalesce(col("s0"), cosineSim(col("v"), col("qv"))).as("score"))
     }
     // each hop frame is referenced twice (merge + next expansion): without
     // the localCheckpoint the lineage re-executes every earlier hop 2^hops
@@ -552,7 +550,7 @@ object Similarity {
       // partial-aggregable struct-max (min dist, then min cid), not a
       // window; the winning centroid subvector rides along for the decode
       val codes = sub.join(broadcast(cb), Seq("j"))
-        .withColumn("dist", l2Distance(col("vs"), col("cs")))
+        .withColumn("dist", l2Dist(col("vs"), col("cs")))
         .groupBy(col("id"), col("j"))
         .agg(max(struct((-col("dist")).as("nd"), (-col("cid")).as("nc"), col("cs"))).as("mx"))
         .select(col("id"), col("j"), col("mx.cs").as("cs"))
@@ -578,12 +576,12 @@ object Similarity {
     decoded.crossJoin(broadcast(queries.select(col("qid"), col("qv"))))
       .filter(col("qid") =!= col("id"))
       .select(col("qid"), col("id"), col("qv"),
-        cosineSimilarity(col("dv"), col("qv")).as("qscore"))
+        cosineSim(col("dv"), col("qv")).as("qscore"))
       .withColumn("crank", row_number().over(wCand))
       .filter(col("crank") <= candidateK)
       .join(base, Seq("id"))
       .select(col("qid"), col("id"),
-        cosineSimilarity(col("v"), col("qv")).as("score"))
+        cosineSim(col("v"), col("qv")).as("score"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
   }
@@ -620,7 +618,7 @@ object Similarity {
     val wProbe = Window.partitionBy(col("qid")).orderBy(col("cscore").desc, col("part"))
     val probes = queries.crossJoin(broadcast(centroids))
       .select(col("qid"), col("qv"), col("part"),
-        cosineSimilarity(col("qv"), col("cvec")).as("cscore"))
+        cosineSim(col("qv"), col("cvec")).as("cscore"))
       .withColumn("prank", row_number().over(wProbe))
       .filter(col("prank") <= nProbe)
       .select(col("qid"), col("qv"), col("part"))
@@ -631,12 +629,12 @@ object Similarity {
       .join(broadcast(probes), Seq("part"))
       .filter(col("qid") =!= col("id"))
       .select(col("qid"), col("id"), col("qv"),
-        cosineSimilarity(col("dv"), col("qv")).as("qscore"))
+        cosineSim(col("dv"), col("qv")).as("qscore"))
       .withColumn("crank", row_number().over(wCand))
       .filter(col("crank") <= candidateK)
       .join(base, Seq("id"))
       .select(col("qid"), col("id"),
-        cosineSimilarity(col("v"), col("qv")).as("score"))
+        cosineSim(col("v"), col("qv")).as("score"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
   }
@@ -664,7 +662,7 @@ object Similarity {
     import spark.implicits._
     val pool = corpus.crossJoin(broadcast(query))
       .select(id.as("id"), vec.as("v"),
-        cosineSimilarity(vec, col("qv")).as("rel"))
+        cosineSim(vec, col("qv")).as("rel"))
       .filter(col("rel").isNotNull)
       .orderBy(col("rel").desc, col("id"))
       .limit(poolSize)
@@ -673,7 +671,7 @@ object Similarity {
     val b = pool.select(col("id").as("ib"), col("v").as("vb"))
     val sims = a.join(broadcast(b), col("ia") =!= col("ib"))
       .select(col("ia"), col("ib"),
-        cosineSimilarity(col("va"), col("vb")).as("sim"))
+        cosineSim(col("va"), col("vb")).as("sim"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val cands = pool.select(col("id"), col("rel")).collect()

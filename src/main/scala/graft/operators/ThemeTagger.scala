@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions._
+import graft.plans.VectorExpressions._
 
 /** Threshold + top-k multilabel assignment against a small label-vector set.
   *
@@ -35,7 +35,7 @@ object ThemeTagger {
     val scored = docs.crossJoin(broadcast(themes))
       .select(docId.as("id"),
         label.as("label"),
-        cosineSimilarity(docVec, themeVec).as("score"))
+        cosineSim(docVec, themeVec).as("score"))
       .filter(col("score") > threshold)
     val w = Window.partitionBy(col("id"))
       .orderBy(col("score").desc, col("label"))

@@ -1,47 +1,15 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point (SURVEY §7.4 custom-surface tier):
-  * registers the native vector kernels as SQL functions so
-  * `spark.sql("SELECT cosine_sim(a, b) ...")` works alongside the Column
-  * API. Activate with
+  * plans banded interval joins as [[RangeJoinPlan]] and executes them
+  * with the sort-merge interval exec. Activate with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[CosineSimilarityExpr].getName, null, name, usage,
-      "", "", "", "", "", "", "built-in")
-
-  private def binary(name: String, mk: (Expression, Expression) => Expression)
-      (children: Seq[Expression]): Expression = {
-    if (children.size != 2)
-      throw new IllegalArgumentException(
-        s"$name requires exactly 2 arguments, got ${children.size}")
-    mk(children(0), children(1))
-  }
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // HOF vector arithmetic → fused codegen kernels (see VectorHofRewrite)
-    ext.injectOptimizerRule(VectorHofRewrite)
-    // banded interval join → custom logical node + sort-merge interval exec
     ext.injectOptimizerRule(_ => RangeJoinRewrite)
     ext.injectPlannerStrategy(_ => RangeJoinStrategy)
-    ext.injectFunction((FunctionIdentifier("dot_product"),
-      info("dot_product", "dot_product(a, b) - dot product of two float/double arrays"),
-      binary("dot_product", DotProductExpr(_, _)) _))
-    ext.injectFunction((FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float/double arrays"),
-      binary("cosine_sim", CosineSimilarityExpr(_, _)) _))
-    ext.injectFunction((FunctionIdentifier("l2_dist"),
-      info("l2_dist", "l2_dist(a, b) - euclidean distance of two float/double arrays"),
-      binary("l2_dist", L2DistanceExpr(_, _)) _))
-    ext.injectFunction((FunctionIdentifier("explode_chunks"),
-      info("explode_chunks",
-        "explode_chunks(text[, size[, overlap]]) - recursive text chunks as (chunk_index, chunk) rows"),
-      (children: Seq[Expression]) => ChunkGeneratorExpr(children)))
   }
 }

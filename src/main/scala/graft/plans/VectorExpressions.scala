@@ -7,21 +7,24 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expressions for the vector kernels (SURVEY §7.4's
-  * "custom Expression with doGenCode" tier; reference semantics:
-  * resources/embedding/rag_search.py:29-35, eu_theme_classifier.py:31).
+/** Native Catalyst expressions for the vector kernels over
+  * `ArrayType(FloatType | DoubleType)` embedding columns (SURVEY §7.4's
+  * "custom Expression with doGenCode" tier). They mirror the reference's
+  * FAISS L2 and sentence-transformers cosine semantics
+  * (resources/embedding/rag_search.py:29-35, eu_theme_classifier.py:31).
   *
   * Why custom: Spark's higher-order functions (`zip_with` + `aggregate`)
   * are evaluated INTERPRETED — a lambda dispatch per element — and sit
   * outside whole-stage codegen. These expressions generate a tight primitive
   * loop instead, keeping the whole pipeline in generated code.
   *
-  * Parity contract (the DuckDB oracle hash-compares doubles bit-for-bit):
-  * the loop accumulates in element order with a 0.0 initial value — the
-  * exact double-addition sequence of the previous fold formulation — and
-  * L2 keeps `Math.pow(d, 2.0)` (not `d*d`) to preserve the Column version's
-  * bit pattern. Mismatched lengths yield null, matching `zip_with`'s
-  * null-padding → null-sum behavior.
+  * Numerical determinism: every reduction is a sequential left fold in
+  * element order from a 0.0 accumulator, with all arithmetic promoted to
+  * Double. A fixed order makes results bit-reproducible across runs and
+  * engines — the DuckDB oracle hash-compares doubles bit-for-bit, and a
+  * retried task writes identical bytes. L2 keeps `Math.pow(d, 2.0)` (not
+  * `d*d`) for the same bit pattern as the oracle's `pow`. Mismatched lengths
+  * and null elements yield null.
   */
 abstract class VectorBinaryDoubleExpr extends BinaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = {
@@ -50,11 +53,9 @@ abstract class VectorBinaryDoubleExpr extends BinaryExpression {
 
 /** cosine(a, b) = dot / (||a|| * ||b||), one pass.
   *
-  * Zero-norm (or empty) inputs yield NULL, not NaN: the HOF spelling this
-  * kernel replaces divides with Spark's `Divide`, which returns NULL on a
-  * zero divisor even for doubles (non-ANSI), so [[VectorHofRewrite]] must
-  * preserve that — and NULL is the saner answer anyway (cosine is
-  * undefined for the zero vector). */
+  * Zero-norm (or empty) inputs yield NULL, not NaN, as Spark's non-ANSI
+  * `Divide` does on a zero divisor: cosine is undefined for the zero
+  * vector. */
 case class CosineSimilarityExpr(left: Expression, right: Expression)
     extends VectorBinaryDoubleExpr {
 
@@ -67,12 +68,12 @@ case class CosineSimilarityExpr(left: Expression, right: Expression)
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0; val n = x.numElements()
     while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null // HOF null-poisoning parity
+      if (x.isNullAt(i) || y.isNullAt(i)) return null // null element → null
       val xv = get(x, i, fx); val yv = get(y, i, fy)
       dot += xv * yv; na += xv * xv; nb += yv * yv
       i += 1
     }
-    if (na == 0.0 || nb == 0.0) return null // Divide-by-zero → NULL parity
+    if (na == 0.0 || nb == 0.0) return null // zero norm → NULL
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
@@ -120,7 +121,7 @@ case class L2DistanceExpr(left: Expression, right: Expression)
     var sum = 0.0
     var i = 0; val n = x.numElements()
     while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null // HOF null-poisoning parity
+      if (x.isNullAt(i) || y.isNullAt(i)) return null // null element → null
       val d = get(x, i, fx) - get(y, i, fy)
       sum += math.pow(d, 2.0)
       i += 1
@@ -153,12 +154,9 @@ case class L2DistanceExpr(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** dot(a, b) = sum a_i*b_i, one pass. Null on length mismatch OR any null
-  * element — the exact semantics of the HOF formulation
-  * (`aggregate(zip_with(a,b,(x,y)->x*y), 0.0, +)`: zip_with null-pads
-  * unequal lengths and null elements poison the sum), so
-  * [[VectorHofRewrite]] can substitute this expression for that pattern
-  * without changing any result. */
+/** dot(a, b) = sum a_i*b_i, one pass. Null on length mismatch or any null
+  * element, as `aggregate(zip_with(a, b, (x, y) -> x*y), 0.0, +)` gives:
+  * zip_with null-pads unequal lengths and a null element poisons the sum. */
 case class DotProductExpr(left: Expression, right: Expression)
     extends VectorBinaryDoubleExpr {
 

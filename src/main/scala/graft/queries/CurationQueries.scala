@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables._
 import Shared.cosSql
 import graft.operators.Dedupe
-import graft.functions.VectorFunctions.cosineSimilarity
+import graft.plans.VectorExpressions.cosineSim
 
 /** Curation surface: the decision-making queries a pretraining-data
   * team runs AFTER profiling (ProfileQueries) and BEFORE committing a mix —
@@ -110,7 +110,7 @@ object CurationQueries {
         col("label").as("truth"))
     val scored = emb.filter(!heldout).crossJoin(broadcast(qs))
       .select(col("qid"), col("truth"), col("label"), col("vec_id").as("id"),
-        cosineSimilarity(col("embedding"), col("qv")).as("score"))
+        cosineSim(col("embedding"), col("qv")).as("score"))
     val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("id"))
     scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
       .groupBy(col("qid"), col("truth"), col("label"))
@@ -364,7 +364,7 @@ object CurationQueries {
     val wProbe = Window.partitionBy(col("qid")).orderBy(col("cscore").desc, col("part"))
     val pranks = qs.crossJoin(broadcast(cent))
       .select(col("qid"), col("qv"), col("part"),
-        cosineSimilarity(col("qv"), col("cvec")).as("cscore"))
+        cosineSim(col("qv"), col("cvec")).as("cscore"))
       .withColumn("prank", row_number().over(wProbe))
     val probes = pranks.crossJoin(broadcast(nps))
       .filter(col("prank") <= col("np"))
@@ -372,7 +372,7 @@ object CurationQueries {
     val cand = assigned.join(broadcast(probes), Seq("part"))
       .filter(col("qid") =!= col("id"))
       .select(col("np"), col("qid"), col("id"),
-        cosineSimilarity(col("v"), col("qv")).as("score"))
+        cosineSim(col("v"), col("qv")).as("score"))
       .localCheckpoint(false) // two consumers: cost agg + top-5 rank
     val nCand = cand.groupBy(col("np")).agg(count(lit(1)).as("n_candidates"))
     val wk = Window.partitionBy(col("np"), col("qid")).orderBy(col("score").desc, col("id"))
@@ -915,16 +915,12 @@ object CurationQueries {
           ORDER BY p DESC, v LIMIT 50"""
     },
     "s11_knn_label_eval" -> {
-      val dot = "list_reduce(list_transform(list_zip(t.embedding, q.qv), " +
-        "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (x, y) -> x + y)"
-      def norm(v: String) =
-        s"sqrt(list_reduce(list_transform($v, e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE)), (x, y) -> x + y))"
       s"""WITH q AS (
             SELECT vec_id AS qid, embedding AS qv, label AS truth
             FROM embeddings WHERE vec_id % 100 < 2
           ), scored AS (
             SELECT q.qid, q.truth, t.label, t.vec_id AS id,
-                   $dot / (${norm("t.embedding")} * ${norm("q.qv")}) AS score
+                   ${cosSql("t.embedding", "q.qv")} AS score
             FROM embeddings t CROSS JOIN q
             WHERE NOT t.vec_id % 100 < 2
           ), top AS (

@@ -841,19 +841,19 @@ object MiningQueries {
     * PlanShapeSpec can pin its physical shape (the checkpoint below
     * truncates the visible plan to a LogicalRDD scan). */
   private[graft] def d08Assignment(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.VectorFunctions.cosineSimilarity
+    import graft.plans.VectorExpressions.cosineSim
     val emb = embeddings(s, d).select(col("vec_id").as("id"), col("embedding").as("v"))
     val cents = emb.filter(col("id") < 8).select(col("id").as("cid"), col("v").as("cv"))
     emb.crossJoin(broadcast(cents))
       .select(col("id"), col("v"), col("cid"),
-        cosineSimilarity(col("v"), col("cv")).as("cos"))
+        cosineSim(col("v"), col("cv")).as("cos"))
       .groupBy(col("id"), col("v"))
       .agg(max(struct(col("cos"), (-col("cid")).as("nc"))).as("m"))
       .select(col("id"), col("v"), (-col("m.nc")).as("cluster"))
   }
 
   def d08SemDedup(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.VectorFunctions.cosineSimilarity
+    import graft.plans.VectorExpressions.cosineSim
     val asg = d08Assignment(s, d)
       // three consumers (both sides of the intra-cluster pair join + the
       // final label join) — checkpoint or the assignment cross join runs 3×
@@ -862,7 +862,7 @@ object MiningQueries {
     val b = asg.select(col("cluster"), col("id").as("id_b"), col("v").as("vb"))
     val dups = a.join(b, Seq("cluster"))
       .filter(col("id_a") < col("id_b"))
-      .filter(cosineSimilarity(col("va"), col("vb")) >= 0.25)
+      .filter(cosineSim(col("va"), col("vb")) >= 0.25)
       .select(col("id_b").as("id")).distinct()
     asg.select(col("id"), col("cluster"))
       .join(dups.withColumn("dupflag", lit(1)), Seq("id"), "left")

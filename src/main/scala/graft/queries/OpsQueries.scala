@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables._
-import graft.functions.VectorFunctions.cosineSimilarity
+import graft.plans.VectorExpressions.cosineSim
 
 /** Operations/audit surface: the queries a data-platform team runs
   * ABOUT the pipeline rather than inside it — community-quality scoring of
@@ -498,7 +498,7 @@ object OpsQueries {
       .filter(col("qid") =!= col("vec_id"))
       .crossJoin(broadcast(dims))
       .select(col("dims"), col("qid"), col("vec_id").as("id"),
-        cosineSimilarity(expr("slice(embedding, 1, CAST(dims AS INT))"),
+        cosineSim(expr("slice(embedding, 1, CAST(dims AS INT))"),
           expr("slice(qv, 1, CAST(dims AS INT))")).as("score"))
     val wk = Window.partitionBy(col("dims"), col("qid"))
       .orderBy(col("score").desc, col("id"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables._
 import Shared.normSql
 import graft.operators.Dedupe
-import graft.functions.VectorFunctions.cosineSimilarity
+import graft.plans.VectorExpressions.cosineSim
 
 /** Corpus-profiling surface: the descriptive statistics a
   * pretraining-data team runs BEFORE choosing filters — lexical diversity,
@@ -367,7 +367,7 @@ object ProfileQueries {
     embeddings(s, d)
       .join(broadcast(qs), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("id"),
-        cosineSimilarity(col("embedding"), col("qv")).as("score"))
+        cosineSim(col("embedding"), col("qv")).as("score"))
       .filter(col("score") >= 0.25)
       .orderBy(col("qid"), col("score").desc, col("id"))
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables._
 import graft.operators.{Chunker, Elbow, Similarity, ThemeTagger}
+import Shared.cosSql
 
 /** SURVEY §2.9 vector/RAG declared queries: Q8, Q13, Q14, Q15, Q21.
   *
@@ -165,12 +166,8 @@ object VectorQueries {
     "q21_chunk_fixed" -> q21ChunkFixed,
     "q21_chunk_recursive" -> q21ChunkRecursive)
 
-  /** DuckDB expressions for the shared vector kernels (sequential fold —
-    * matches Spark's `aggregate` evaluation order exactly). */
-  private val dotAB =
-    "list_reduce(list_transform(list_zip(a.embedding, q.qv), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (x, y) -> x + y)"
-  private def norm(v: String) =
-    s"sqrt(list_reduce(list_transform($v, e -> CAST(e AS DOUBLE) * CAST(e AS DOUBLE)), (x, y) -> x + y))"
+  /** DuckDB L2 distance, a sequential fold in element order like
+    * [[graft.plans.L2DistanceExpr]]. */
   private val l2AB =
     "sqrt(list_reduce(list_transform(list_zip(a.embedding, q.qv), p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) ** 2), (x, y) -> x + y))"
 
@@ -216,7 +213,7 @@ object VectorQueries {
             FROM r) x
           WHERE final_rank <= 5 ORDER BY final_rank""",
     "q13_topk_cosine" ->
-      s"""SELECT a.vec_id, $dotAB / (${norm("a.embedding")} * ${norm("q.qv")}) AS score
+      s"""SELECT a.vec_id, ${cosSql("a.embedding", "q.qv")} AS score
           FROM embeddings a
           CROSS JOIN (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0) q
           ORDER BY score DESC, a.vec_id LIMIT 5""",
@@ -258,7 +255,7 @@ object VectorQueries {
               FROM embeddings) t WHERE rn = 1
           ), scored AS (
             SELECT a.vec_id, q.theme,
-                   $dotAB / (${norm("a.embedding")} * ${norm("q.qv")}) AS score
+                   ${cosSql("a.embedding", "q.qv")} AS score
             FROM embeddings a CROSS JOIN reps q
           ), ranked AS (
             SELECT vec_id, theme, score,

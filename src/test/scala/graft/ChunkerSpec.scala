@@ -72,6 +72,18 @@ class ChunkerSpec extends SparkSpec {
     rows.foreach(r => assert(r.getAs[String]("chunk").length <= 100))
   }
 
+  test("explodeChunks defaults to 800/100 like recursiveSplit; null text yields no rows") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val text = ("lorem ipsum dolor sit amet " * 80).trim
+    val df = Seq((1L, text), (2L, null.asInstanceOf[String])).toDF("doc_id", "text")
+    val rows = Chunker.explodeChunks(df, col("text")).orderBy("chunk_index").collect()
+    val chunks = rows.map(_.getAs[String]("chunk")).toSeq
+    assert(chunks == Chunker.recursiveSplit(text, chunkSize = 800, overlap = 100))
+    assert(chunks.size > 1 && chunks.forall(_.length <= 800))
+    assert(rows.forall(_.getAs[Long]("doc_id") == 1L))
+  }
+
   test("fixedStrideChunkArray: count arithmetic matches formula") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

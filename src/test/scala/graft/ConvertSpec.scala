@@ -95,13 +95,14 @@ class ConvertSpec extends SparkSpec {
     assert(SpreadsheetConverter.dedupeHeaders(Seq("x", "y")) == Seq("x", "y"))
   }
 
-  test("spreadsheet: stub decode produces per-sheet typed frames") {
-    val out = SpreadsheetConverter.convert(spark, Array[Byte](10, 20, 30))
-    assert(out.size == 1)
-    val (name, df) = out.head
-    assert(name == "sheet_3")
-    assert(df.columns.toSeq == Seq("col_a", "col_b"))
-    assert(df.count() == 3)
+  test("spreadsheet: xlsx decodes to per-sheet typed frames; unrecognised bytes to none") {
+    val out = SpreadsheetConverter.convert(spark, fixtureXlsx())
+    assert(out.map(_._1) == Seq("employees_2024", "shift_times", "audit_log"))
+    assert(out.map(_._2.count()) == Seq(2L, 2L, 2L))
+    // neither ZIP nor CFB: no sheets, so the payload is never read as a document
+    val junk = Array[Byte](10, 20, 30)
+    assert(SpreadsheetConverter.decodeWorkbook(junk).isEmpty)
+    assert(SpreadsheetConverter.convert(spark, junk).isEmpty)
   }
 
   // Minimal real xlsx built with the JDK zip writer: 3 sheets, shared +

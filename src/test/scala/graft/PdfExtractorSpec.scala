@@ -37,30 +37,44 @@ class PdfExtractorSpec extends SparkSpec {
     assert(t == "A)B\nline2\n")
   }
 
+  /** One-page uncompressed PDF whose text layer is `text`. */
+  private def textPdf(text: String): Array[Byte] = {
+    val content = s"BT 72 720 Td ($text) Tj ET"
+    (s"%PDF-1.4\n1 0 obj << /Length ${content.length} >>\nstream\n$content\n" +
+      "endstream\nendobj\n%%EOF\n").getBytes("ISO-8859-1")
+  }
+
   test("image-only pdf (no BT) yields no text and flows to OCR fallback") {
     val pdf = ("%PDF-1.4\n1 0 obj << /Subtype /Image /Length 4 >>\n" +
       "stream\nabcd\nendstream\nendobj\n%%EOF").getBytes("ISO-8859-1")
     assert(PdfExtractor.decodePdfText(pdf).isEmpty)
-    assert(PdfExtractor.extractWithOcrFallback(pdf).startsWith("[ocr:"))
+    assert(PdfExtractor.extractWithOcrFallback(pdf, _ => "scanned page") == "scanned page")
   }
 
   test("long extracted text skips OCR") {
-    val payload = ("A" * 300).getBytes("UTF-8")
-    val out = PdfExtractor.extractWithOcrFallback(payload)
+    var ocrCalls = 0
+    val out = PdfExtractor.extractWithOcrFallback(textPdf("A" * 300),
+      _ => { ocrCalls += 1; "B" * 400 })
     assert(out == "A" * 300)
-    assert(!out.startsWith("[ocr:"))
+    assert(ocrCalls == 0)
   }
 
   test("short extracted text triggers OCR fallback when OCR yields more") {
-    // stub "extraction" yields 3 printable chars < threshold; ocr stub yields more
-    val payload = Array[Byte]('a', 'b', 'c', 0, 1, 2)
-    val out = PdfExtractor.extractWithOcrFallback(payload)
-    assert(out.startsWith("[ocr:"))
+    val pdf = textPdf("abc")
+    assert(PdfExtractor.extractWithOcrFallback(pdf, _ => "recognized text") == "recognized text")
+    // OCR only replaces the text layer when it recognizes more
+    assert(PdfExtractor.extractWithOcrFallback(pdf, _ => "ab") == "abc")
   }
 
   test("empty payload gives empty text") {
     assert(PdfExtractor.extractWithOcrFallback(Array.empty) == "")
     assert(PdfExtractor.extractWithOcrFallback(null) == "")
+    // non-pdf bytes have no pages, and with no OCR binary configured the
+    // default OCR adds nothing
+    val junk = Array[Byte]('a', 'b', 'c', 0, 1, 2)
+    assert(PdfExtractor.decodePdfText(junk).isEmpty)
+    assert(PdfExtractor.decodePdfText(("A" * 300).getBytes("UTF-8")).isEmpty)
+    assert(PdfExtractor.extractWithOcrFallback(junk) == "")
   }
 
   test("CliOcr golden contract against a fake tesseract binary") {
@@ -93,8 +107,7 @@ class PdfExtractorSpec extends SparkSpec {
       "binary image bytes".getBytes("UTF-8"), ocr.recognize _)
     assert(out == "RECOGNIZED page text from image-only scan")
     // ...but a long extracted text still skips OCR entirely
-    val long = ("W" * 250).getBytes("UTF-8")
-    assert(PdfExtractor.extractWithOcrFallback(long, ocr.recognize _)
+    assert(PdfExtractor.extractWithOcrFallback(textPdf("W" * 250), ocr.recognize _)
       == "W" * 250)
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Elbow, Similarity}
-import graft.functions.VectorFunctions
+import graft.plans.VectorExpressions
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -10,10 +10,10 @@ class SimilaritySpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((Seq(1.0f, 2.0f, 2.0f), Seq(2.0f, 0.0f, 1.0f))).toDF("a", "b")
     val r = df.select(
-      VectorFunctions.dot(col("a"), col("b")),
-      VectorFunctions.norm(col("a")),
-      VectorFunctions.l2Distance(col("a"), col("b")),
-      VectorFunctions.cosineSimilarity(col("a"), col("a"))).collect()(0)
+      VectorExpressions.dotProduct(col("a"), col("b")),
+      sqrt(VectorExpressions.dotProduct(col("a"), col("a"))),
+      VectorExpressions.l2Dist(col("a"), col("b")),
+      VectorExpressions.cosineSim(col("a"), col("a"))).collect()(0)
     assert(r.getDouble(0) == 4.0)
     assert(r.getDouble(1) == 3.0)
     assert(math.abs(r.getDouble(2) - math.sqrt(1 + 4 + 1)) < 1e-12)
@@ -141,7 +141,7 @@ class SimilaritySpec extends SparkSpec {
     val probed = Similarity.seededCentroids(emb, col("vec_id"), col("embedding"), 8)
     val probeRows = qs.crossJoin(broadcast(probed))
       .select(col("qid"), col("part"),
-        graft.functions.VectorFunctions.cosineSimilarity(col("qv"), col("cvec")).as("c"))
+        VectorExpressions.cosineSim(col("qv"), col("cvec")).as("c"))
       .collect().groupBy(_.getLong(0)).map { case (q, rows) =>
         q -> rows.sortBy(r => (-r.getDouble(2), r.getInt(1))).take(3).map(_.getInt(1)).toSet
       }

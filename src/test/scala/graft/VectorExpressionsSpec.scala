@@ -1,7 +1,7 @@
 package graft
 
-import graft.functions.VectorFunctions
 import graft.plans.VectorExpressions
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 
 class VectorExpressionsSpec extends SparkSpec {
@@ -34,27 +34,22 @@ class VectorExpressionsSpec extends SparkSpec {
   test("null and mismatched-length inputs yield null") {
     import spark.implicits._
     val df = Seq(
-      (Seq(1.0f, 2.0f), Seq(1.0f)),
-      (null.asInstanceOf[Seq[Float]], Seq(1.0f))).toDF("a", "b")
-    val out = df.select(VectorExpressions.cosineSim(col("a"), col("b"))).collect()
-    assert(out.forall(_.isNullAt(0)))
-  }
-
-  test("SQL registration via GraftExtensions") {
-    val r = spark.sql(
-      "SELECT cosine_sim(array(1.0F, 0.0F), array(1.0F, 0.0F)) c, " +
-        "l2_dist(array(0.0D, 0.0D), array(3.0D, 4.0D)) l").collect()(0)
-    assert(math.abs(r.getDouble(0) - 1.0) < 1e-15)
-    assert(r.getDouble(1) == 5.0)
-  }
-
-  test("VectorFunctions kernels now route through the codegen expressions") {
-    import spark.implicits._
-    val df = Seq((Seq(1.0f, 2.0f, 2.0f), Seq(2.0f, 0.0f, 1.0f))).toDF("a", "b")
-    val r = df.select(
-      VectorFunctions.cosineSimilarity(col("a"), col("a")),
-      VectorFunctions.l2Distance(col("a"), col("b"))).collect()(0)
-    assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
-    assert(math.abs(r.getDouble(1) - math.sqrt(6.0)) < 1e-12)
+      (Seq(1.0f, 2.0f), Seq(1.0f)),                 // length mismatch
+      (null.asInstanceOf[Seq[Float]], Seq(1.0f)),   // null vector
+      (Seq(0.0f, 0.0f, 0.0f), Seq(1.0f, 2.0f, 3.0f)), // zero-norm left
+      (Seq.empty[Float], Seq.empty[Float])          // empty vectors
+    ).toDF("a", "b")
+    val local = df.select(VectorExpressions.cosineSim(col("a"), col("b"))).collect()
+    assert(local.length == 4 && local.forall(_.isNullAt(0)))
+    // parquet-backed, so the projection runs the generated code rather
+    // than a constant-folded interpreted eval: NULL, never NaN
+    val dir = java.nio.file.Files.createTempDirectory("vexpr-null").toString + "/t"
+    df.write.parquet(dir)
+    val scanned = spark.read.parquet(dir)
+    val plan = scanned.select(VectorExpressions.cosineSim(col("a"), col("b")))
+    assert(plan.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec]))
+    val out = plan.collect()
+    assert(out.length == 4)
+    out.foreach(r => assert(r.isNullAt(0), s"expected NULL, got ${r.get(0)}"))
   }
 }
