@@ -45,7 +45,10 @@ object Bench {
     * [[stealStat]] samples; -1 on sentinel inputs or an empty interval.
     * It is the run's context field: nonzero steal means the shared host
     * could not back every vCPU, which inflates wall-clock with no code
-    * change. */
+    * change. A low reading does not show a quiet host: two runs with one
+    * conf (sf0.01, local[4], 4-vCPU VM) read `isolated_sec` 89.3 and
+    * 103.3 s at steal 2.6% and 1.8%. Only interleaved pairs of runs
+    * separate host drift from a code change. */
   private[graft] def stealPct(before: (Long, Long), after: (Long, Long)): Double =
     if (before._1 < 0 || after._1 < 0 || after._2 <= before._2) -1.0
     else 100.0 * (after._1 - before._1) / (after._2 - before._2)

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.plans.RangeJoinPlan
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DateType, NumericType, StringType, TimestampType}
 
 /** Interval ("range") join: for each left row, aggregate the right rows of
   * the same key whose time lies in `[left.time - lookback, left.time)` —
@@ -10,24 +13,23 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: a naive formulation (`l JOIN r ON l.k = r.k AND r.t
   * BETWEEN l.t - W AND l.t`) gives Catalyst only the key equi-condition; a
-  * hot key degenerates to an all-pairs comparison within the key. The
-  * engine plans this shape as a CUSTOM PHYSICAL OPERATOR instead:
-  * [[graft.plans.RangeJoinRewrite]] recognizes the authored join condition
-  * and swaps in [[graft.plans.RangeJoinExec]] — a sort-merge interval join
-  * (both sides hash-clustered on the key, sorted by (key, time), one
-  * streaming pass with a sliding window buffer). One shuffle per side on
-  * the key alone; memory bounded by a key's WINDOW population; the
-  * aggregation that follows reuses the key partitioning with no further
-  * exchange — survives 100 TB. If the rewrite is not installed the same
-  * condition still executes as a plain left-outer join with identical
-  * results (the exec is a physical-only optimization, pinned by spec).
+  * hot key degenerates to an all-pairs comparison within the key. This
+  * operator builds the logical node [[graft.plans.RangeJoinPlan]] itself,
+  * which [[graft.plans.RangeJoinStrategy]] plans as
+  * [[graft.plans.RangeJoinExec]] — a sort-merge interval join (both sides
+  * hash-clustered on the key, sorted by (key, time), one streaming pass
+  * with a sliding window buffer). One shuffle per side on the key alone;
+  * memory bounded by a key's WINDOW population; the aggregation that
+  * follows reuses the key partitioning with no further exchange — survives
+  * 100 TB. A band join written by hand stays a plain join (pinned by spec).
   */
 object RangeJoin {
 
   /** @param left         probe rows (must carry a unique id column —
     *                     identical full rows would merge in the group-by)
     * @param right        reference rows
-    * @param key          equi-join key column name (both sides)
+    * @param key          equi-join key column name (both sides, same type:
+    *                     numeric, string, date or timestamp)
     * @param time         integral time column name (both sides, same unit)
     * @param lookback     window width in `time` units, > 0
     * @param rightPayload right columns the aggregates read; exposed to
@@ -42,16 +44,22 @@ object RangeJoin {
       aggs: Seq[Column]): DataFrame = {
     require(lookback > 0, s"lookback must be positive, got $lookback")
     val leftCols = left.columns.toSeq
-    val probes = left.withColumn("__lt", col(time).cast("long"))
+    val probes = left.withColumn("__lt", col(time).cast("long")).queryExecution.analyzed
     val r = right.select(
       col(key).as("__rk") +: col(time).cast("long").as("__rt") +:
-        rightPayload.map(c => col(c).as(s"r_$c")): _*)
-    // EXACTLY the shape RangeJoinRewrite recognizes: key equality + the
-    // two band inequalities on 64-bit times, left-outer.
-    val joined = probes.join(r,
-      probes(key) === r("__rk") &&
-        r("__rt") >= probes("__lt") - lit(lookback) && r("__rt") < probes("__lt"),
-      "left_outer")
-    joined.groupBy(leftCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+        rightPayload.map(c => col(c).as(s"r_$c")): _*).queryExecution.analyzed
+    val lKey = probes.output.find(a => SQLConf.get.resolver(a.name, key))
+      .getOrElse(throw new IllegalArgumentException(s"left has no key column `$key`"))
+    val rKey = r.output.head
+    // RangeJoinExec orders keys through the JVM values' Comparable
+    require(lKey.dataType == rKey.dataType && (lKey.dataType match {
+      case _: NumericType | StringType | DateType | TimestampType => true
+      case _ => false
+    }), s"range-join key `$key` must have one numeric, string, date or " +
+      s"timestamp type on both sides, got ${lKey.dataType.sql} and ${rKey.dataType.sql}")
+    val lTime = probes.output.find(_.name == "__lt").get
+    GraftSqlBridge.ofRows(left.sparkSession,
+        RangeJoinPlan(probes, r, lKey, rKey, lTime, r.output(1), lookback))
+      .groupBy(leftCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 }

@@ -8,9 +8,8 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native HyperLogLog aggregate — the custom-AGGREGATE tier of the
-  * Catalyst surface (scalar Expression, Generator, optimizer Rule,
-  * Strategy+Exec and SQL-function registration are the other tiers,
-  * all exercised elsewhere in `graft.plans`).
+  * Catalyst surface (scalar Expression and Strategy+Exec are the other
+  * tiers, both exercised elsewhere in `graft.plans`).
   *
   * Same deterministic sketch as the d11 QUERY formulation (md5 word 1 →
   * bucket, word 2 → rank, m = 256, scaled-BIGINT harmonic estimate, raw

@@ -3,19 +3,17 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.LeftOuter
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.SQLMetrics
-import org.apache.spark.sql.types.{DataType, DateType, LongType, NumericType, StringType, TimestampType}
 
 /** Whole-operator Catalyst extension for the banded interval join
-  * ([[graft.operators.RangeJoin]]): logical node + optimizer rule +
-  * planner strategy + physical exec — the (c)-tier custom-operator path
-  * from SURVEY §7.4, registered via [[GraftExtensions]], which every
-  * [[graft.core.GraftSession]] session carries.
+  * ([[graft.operators.RangeJoin]]): logical node + planner strategy +
+  * physical exec — the (c)-tier custom-operator path from SURVEY §7.4.
+  * `RangeJoin.aggregateWithin` builds the node; the strategy is registered
+  * via [[GraftExtensions]], which every [[graft.core.GraftSession]]
+  * session carries.
   *
   * WHY a physical operator where a DataFrame formulation exists: the
   * banded-equi-join formulation pays a 2× probe explode plus a shuffle on
@@ -39,57 +37,6 @@ case class RangeJoinPlan(left: LogicalPlan, right: LogicalPlan,
     copy(left = newLeft, right = newRight)
 }
 
-/** Recognizes the authored band-join shape — a LEFT OUTER join whose
-  * condition is EXACTLY `lk = rk AND rt >= lt - W AND rt < lt` (any
-  * conjunct order, either equality orientation) with integral 64-bit
-  * times — and swaps in [[RangeJoinPlan]]. The shape IS the semantics, so
-  * a false positive is impossible: any join matching it has precisely the
-  * interval-join meaning the exec implements. Joins with extra conjuncts
-  * or other types are left untouched. */
-object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
-
-  private def comparableKey(dt: DataType): Boolean = dt match {
-    case _: NumericType | StringType | DateType | TimestampType => true
-    case _ => false
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(l, r, LeftOuter, Some(cond), _) =>
-      val conjs = splitConjunctivePredicates(cond)
-      if (conjs.size == 3) tryMatch(l, r, conjs).getOrElse(j) else j
-  }
-
-  private def tryMatch(l: LogicalPlan, r: LogicalPlan,
-      conjs: Seq[Expression]): Option[RangeJoinPlan] = {
-    def ofLeft(e: Expression) =
-      e.references.nonEmpty && e.references.subsetOf(l.outputSet)
-    def ofRight(e: Expression) =
-      e.references.nonEmpty && e.references.subsetOf(r.outputSet)
-    var key: Option[(Expression, Expression)] = None
-    var upper: Option[(Expression, Expression)] = None // rt <  lt
-    var lower: Option[(Expression, Expression, Long)] = None // rt >= lt - W
-    conjs.foreach {
-      case EqualTo(a, b) if ofLeft(a) && ofRight(b) => key = Some((a, b))
-      case EqualTo(a, b) if ofRight(a) && ofLeft(b) => key = Some((b, a))
-      case LessThan(rt, lt) if ofRight(rt) && ofLeft(lt) => upper = Some((lt, rt))
-      case GreaterThan(lt, rt) if ofLeft(lt) && ofRight(rt) => upper = Some((lt, rt))
-      case GreaterThanOrEqual(rt, Subtract(lt, Literal(w: Long, LongType), _))
-          if ofRight(rt) && ofLeft(lt) && w > 0 => lower = Some((lt, rt, w))
-      case LessThanOrEqual(Subtract(lt, Literal(w: Long, LongType), _), rt)
-          if ofLeft(lt) && ofRight(rt) && w > 0 => lower = Some((lt, rt, w))
-      case _ =>
-    }
-    for {
-      (lk, rk) <- key
-      (lt1, rt1) <- upper
-      (lt2, rt2, w) <- lower
-      if lt1.semanticEquals(lt2) && rt1.semanticEquals(rt2) &&
-        lt1.dataType == LongType && rt1.dataType == LongType &&
-        lk.dataType == rk.dataType && comparableKey(lk.dataType)
-    } yield RangeJoinPlan(l, r, lk, rk, lt1, rt1, w)
-  }
-}
-
 /** Plans [[RangeJoinPlan]] as [[RangeJoinExec]]. */
 object RangeJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -103,8 +50,8 @@ object RangeJoinStrategy extends SparkStrategy {
   * sorted by (key, time); a single forward pass buffers right rows per key
   * inside the sliding `[lt - lookback, lt)` window. LEFT OUTER semantics:
   * a left row with no window match (or a null key/time) emits once with
-  * null right fields — matching the fallback join exactly, so results are
-  * bit-identical whether or not this exec is installed.
+  * null right fields — the rows a plain left-outer join on
+  * `lk = rk AND rt >= lt - W AND rt < lt` returns (pinned by spec).
   *
   * Scale: memory = one key's window population (rows are dropped from the
   * buffer head as the left time advances — never the whole key group);
@@ -156,7 +103,7 @@ case class RangeJoinExec(
       var pendingKey: Any = null
       var pendingTime: Long = 0L
       // atomic-type JVM representations (Long/Integer/Double/UTF8String/...)
-      // are all Comparable — gated by the rewrite's comparableKey check
+      // are all Comparable — aggregateWithin admits only such key types
       def cmpKeys(a: Any, b: Any): Int = a.asInstanceOf[Comparable[Any]].compareTo(b)
 
       lIter.flatMap { l =>

@@ -84,18 +84,17 @@ class RangeJoinSpec extends SparkSpec {
     val rights = (1 to 300).map(_ =>
       (rnd.nextInt(4).toLong, rnd.nextInt(500).toLong, rnd.nextInt(100).toDouble))
     val w = 40L
-    // a redundant 4th conjunct keeps RangeJoinRewrite from firing (it
-    // requires the exact 3-predicate shape), forcing the plain join plan
+    // the same band condition written by hand: only aggregateWithin builds
+    // the interval node, so this plans as a plain left-outer join
     val probes = lefts.toDF("id", "k", "t").withColumn("__lt", col("t").cast("long"))
     val rr = rights.toDF("k", "t", "v").select(col("k").as("__rk"),
       col("t").cast("long").as("__rt"), col("v").as("r_v"))
     val joined = probes.join(rr,
       probes("k") === rr("__rk") &&
-        rr("__rt") >= probes("__lt") - lit(w) && rr("__rt") < probes("__lt") &&
-        rr("__rt") < probes("__lt") + lit(1L),
+        rr("__rt") >= probes("__lt") - lit(w) && rr("__rt") < probes("__lt"),
       "left_outer")
     assert(!joined.queryExecution.executedPlan.toString.contains("RangeJoin "),
-      "fallback control was unexpectedly rewritten — test is vacuous")
+      "hand-written band join planned the interval exec — test is vacuous")
     val fallback = joined.groupBy(col("id"))
       .agg(count(col("r_v")).as("n"), max(col("r_v")).as("mx"))
       .as[(Long, Long, Option[Double])]
@@ -112,5 +111,46 @@ class RangeJoinSpec extends SparkSpec {
         Seq(count(col("r_v")).as("n")))
       .select("id", "n").as[(Long, Long)].collect().toMap
     assert(out == Map(1L -> 1L, 2L -> 0L, 3L -> 0L))
+  }
+
+  test("both sides from one scan: view → click stage equals brute force") {
+    val rnd = new scala.util.Random(11)
+    val rows = (1L to 300L).map(id => (id, rnd.nextInt(6).toLong,
+      if (rnd.nextBoolean()) "view" else "click", rnd.nextInt(2000).toLong))
+    val dir = java.nio.file.Files.createTempDirectory("rangejoin-ev").resolve("ev").toString
+    rows.toDF("event_id", "user_id", "event_type", "t").write.parquet(dir)
+    val ev = spark.read.parquet(dir)
+    val views = ev.filter(col("event_type") === "view").select(col("user_id"), col("t"))
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("event_id"), col("user_id"), col("t"))
+    val w = 150L
+    val df = RangeJoin.aggregateWithin(clicks, views, "user_id", "t", w, Seq("t"),
+      Seq(count(col("r_t")).as("n"), max(col("r_t")).as("mx")))
+    assert(df.queryExecution.executedPlan.toString.contains("RangeJoin "),
+      "custom exec not planned over shared lineage")
+    val got = df.select("event_id", "n", "mx").as[(Long, Long, Option[Long])]
+      .collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    val vs = rows.filter(_._3 == "view")
+    val expected = rows.filter(_._3 == "click").map { case (id, u, _, t) =>
+      val in = vs.filter { case (_, vu, _, vt) => vu == u && vt >= t - w && vt < t }.map(_._4)
+      id -> ((in.size.toLong, in.maxOption))
+    }.toMap
+    assert(got == expected)
+  }
+
+  test("aggregateWithin refuses mismatched and non-comparable key types") {
+    val aggs = Seq(count(col("r_v")).as("n"))
+    val mismatched = intercept[IllegalArgumentException] {
+      RangeJoin.aggregateWithin(Seq((1L, 1L, 100L)).toDF("id", "k", "t"),
+        Seq(("1", 95L, 1.0)).toDF("k", "t", "v"), "k", "t", 10L, Seq("v"), aggs)
+    }
+    assert(mismatched.getMessage.contains("`k`") &&
+      mismatched.getMessage.contains("STRING"), mismatched.getMessage)
+    val binary = intercept[IllegalArgumentException] {
+      RangeJoin.aggregateWithin(Seq((1L, Array[Byte](1), 100L)).toDF("id", "b", "t"),
+        Seq((Array[Byte](1), 95L, 1.0)).toDF("b", "t", "v"), "b", "t", 10L, Seq("v"), aggs)
+    }
+    assert(binary.getMessage.contains("`b`") &&
+      binary.getMessage.contains("BINARY"), binary.getMessage)
   }
 }
