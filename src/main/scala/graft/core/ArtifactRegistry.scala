@@ -2,7 +2,10 @@ package graft.core
 
 import java.util.concurrent.ConcurrentHashMap
 
-/** Session-scoped memoization of build artifacts (persisted signature
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
+import org.apache.spark.sql.SparkSession
+
+/** Application-scoped memoization of build artifacts (persisted signature
   * tables, fitted clusterings, graph edge materializations, PQ codes …)
   * with per-tag build-time accounting.
   *
@@ -32,37 +35,56 @@ import java.util.concurrent.ConcurrentHashMap
   *    `artifact:<tag>` items, `build_total_sec`, and
   *    `ratio_aggregate_with_builds` in BENCH_DETAIL.
   *
-  * Lifetime: entries are keyed by applicationId (callers include it in
-  * `key`), and the first build in a session installs a listener that
-  * EVICTS every entry (and its lock) mentioning that applicationId when
-  * the application ends, so a long-lived multi-session service can reuse
-  * this as-is.
+  * Lifetime: entries live in one map per application
+  * (`spark.sparkContext.applicationId`); creating that map registers a
+  * listener on the same SparkContext that drops the whole map when the
+  * application ends, so a long-lived multi-session service can reuse
+  * this as-is. `key` names the artifact within its application.
   */
 object ArtifactRegistry {
 
-  private val store = new ConcurrentHashMap[Any, AnyRef]()
-  private val locks = new ConcurrentHashMap[Any, AnyRef]()
-  private val evictionRegistered = ConcurrentHashMap.newKeySet[String]()
-  // tag -> accumulated self-seconds across builds (appId lives in the
-  // store key, not here: Bench resets timings at session start, so the
-  // snapshot it reads is exactly the builds its own session paid for)
+  /** One application's artifacts and their per-key build locks. */
+  private final class Scope {
+    val store = new ConcurrentHashMap[Any, AnyRef]()
+    val locks = new ConcurrentHashMap[Any, AnyRef]()
+  }
+
+  private val scopes = new ConcurrentHashMap[String, Scope]()
+  // tag -> accumulated self-seconds across builds (Bench resets timings
+  // at session start, so the snapshot it reads is exactly the builds its
+  // own session paid for)
   private val buildSelf = new ConcurrentHashMap[String, java.lang.Double]()
   // per-thread stack of child-time accumulators for nested builds
   private val childTime = new ThreadLocal[java.util.ArrayDeque[Array[Double]]] {
     override def initialValue() = new java.util.ArrayDeque[Array[Double]]()
   }
 
-  /** Memoized `build` under `key`; `tag` names the artifact in the bench
-    * accounting (stable across runs — no appId/dir in the tag). */
-  def cached[V <: AnyRef](key: Any, tag: String)(build: => V): V = {
+  /** `spark`'s application scope; the first request creates it and
+    * registers its eviction on that application's SparkContext. */
+  private def scope(spark: SparkSession): Scope = {
+    val sc = spark.sparkContext
+    scopes.computeIfAbsent(sc.applicationId, appId => {
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+          evictApplication(appId)
+      })
+      new Scope
+    })
+  }
+
+  /** Memoized `build` under `key` within `spark`'s application; `tag`
+    * names the artifact in the bench accounting (stable across runs — no
+    * appId/dir in the tag). */
+  def cached[V <: AnyRef](spark: SparkSession, key: Any, tag: String)(build: => V): V = {
+    val app = scope(spark)
     val k = (tag, key)
-    val hit = store.get(k)
+    val hit = app.store.get(k)
     if (hit != null) hit.asInstanceOf[V]
     else {
-      val lock = locks.computeIfAbsent(k, _ => new Object)
+      val lock = app.locks.computeIfAbsent(k, _ => new Object)
       val w0 = System.nanoTime()
       lock.synchronized {
-        val again = store.get(k)
+        val again = app.store.get(k)
         if (again != null) {
           // Lost the build race: another thread materialized this
           // artifact while we blocked on its lock. The builder's thread
@@ -77,7 +99,6 @@ object ArtifactRegistry {
           if (parent != null) parent(0) += (System.nanoTime() - w0) / 1e9
           again.asInstanceOf[V]
         } else {
-          autoRegisterEviction()
           val stack = childTime.get()
           stack.push(Array(0.0))
           val t0 = System.nanoTime()
@@ -91,48 +112,15 @@ object ArtifactRegistry {
               val parent = stack.peek()
               if (parent != null) parent(0) += elapsed
             }
-          store.put(k, v)
+          app.store.put(k, v)
           v
         }
       }
     }
   }
 
-  /** Install (once per application) a listener that drops this
-    * application's entries when it ends. Registered lazily from the
-    * first build on a thread with an active session — call sites need no
-    * wiring, and a registry used without any Spark session (unit tests
-    * of the cache itself) simply skips it. */
-  private def autoRegisterEviction(): Unit =
-    org.apache.spark.sql.SparkSession.getActiveSession.foreach { s =>
-      val appId = s.sparkContext.applicationId
-      if (evictionRegistered.add(appId)) {
-        s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            evictApplication(appId)
-            evictionRegistered.remove(appId)
-            ()
-          }
-        })
-      }
-    }
-
-  /** Drop every artifact AND its lock whose key mentions `appId`
-    * anywhere in its (possibly nested) tuple structure — the convention
-    * every call site follows is to embed the applicationId in `key`, so
-    * this is exact, and an entry whose key does NOT name an application
-    * (none exist today) is deliberately left alone. */
-  private[graft] def evictApplication(appId: String): Unit = {
-    def mentions(x: Any): Boolean = x match {
-      case s: String => s == appId
-      case p: Product => p.productIterator.exists(mentions)
-      case _ => false
-    }
-    val dead = new java.util.ArrayList[Any]()
-    store.keySet.forEach { k => if (mentions(k)) { dead.add(k); () } }
-    dead.forEach { k => store.remove(k); locks.remove(k); () }
-  }
+  /** Drop every artifact and lock of application `appId`. */
+  private[graft] def evictApplication(appId: String): Unit = { scopes.remove(appId); () }
 
   /** Per-tag build self-seconds accumulated since the last
     * [[resetTimings]] (artifacts themselves stay cached). */

@@ -12,25 +12,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
 
-  /** Fan a single-row-group fixture file out across the cores.
+  /** Fan a fixture file out across the cores.
     *
-    * The driver-generated test parquet has ONE row group per table, so the
-    * scan is a single InputPartition no matter what maxPartitionBytes says —
-    * and everything up to the first exchange (explode, hash, decimal agg,
-    * broadcast probe) would run on one core. One cheap round-robin exchange
-    * right after the scan restores parallelism. Production data at 100 TB
-    * has thousands of row groups and never takes this branch (the threshold
-    * checks the scan's actual partition count, not the fixture layout).
-    * Small dimension files stay as-is so they remain obvious broadcast
-    * candidates.
+    * The driver-generated test parquet has ONE row group per table, and a
+    * row group is read by exactly one scan split however many splits
+    * maxPartitionBytes cuts the file into (sf0.1's 10.8 MB lineitem scans
+    * as 3 splits at local[4], and only one of them holds rows). Everything
+    * up to the first exchange (explode, hash, decimal agg, broadcast probe)
+    * would run on one core; one cheap round-robin exchange right after the
+    * scan restores parallelism. The decision is made from the file size
+    * alone: small dimension files stay as-is so they remain obvious
+    * broadcast candidates.
     */
-  private def parallelize(spark: SparkSession, df: DataFrame, bytes: Long): DataFrame = {
-    val target = spark.sparkContext.defaultParallelism
-    if (bytes > 512 * 1024 && df.rdd.getNumPartitions < math.max(2, target / 4))
-      df.repartition(target)
+  private def parallelize(spark: SparkSession, df: DataFrame, bytes: Long): DataFrame =
+    if (bytes > 512 * 1024) df.repartition(spark.sparkContext.defaultParallelism)
     else df
-  }
 
+  /** One fixture table, fanned out by [[parallelize]]. `Tables` reads
+    * only the single-row-group fixtures; a multi-row-group input is read
+    * with `spark.read.parquet` directly and parallelizes natively. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val df = spark.read.parquet(path)
@@ -46,8 +46,8 @@ object Tables {
     * pair join costs 0.7 s from a raw scan vs 1.6 s
     * through the fan-out). Keep [[table]] for consumers with heavy
     * narrow work (hashing, explode, vector math) before the first
-    * exchange. At production scale the file has many row groups, the scan
-    * parallelizes natively, and the two accessors behave identically. */
+    * exchange. Like [[table]], this reads only the single-row-group
+    * fixtures. */
   def tableRaw(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 

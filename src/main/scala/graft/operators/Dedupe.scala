@@ -130,10 +130,9 @@ object Dedupe {
     * shingles (the dominant md5/lane work also shrinks with the dedup). */
   def minhashSignaturesFromShingles(shingled: DataFrame, id: Column,
       gs: Column, k: Int = 16): DataFrame = {
-    val key = (shingled.sparkSession.sparkContext.applicationId,
-      shingled.queryExecution.analyzed.semanticHash(),
+    val key = (shingled.queryExecution.analyzed.canonicalized,
       id.toString, gs.toString, k)
-    graft.core.ArtifactRegistry.cached(key, "minhash_sig") {
+    graft.core.ArtifactRegistry.cached(shingled.sparkSession, key, "minhash_sig") {
       val fam = hashFamily(k)
       val exploded = shingled
         .select(id.as("id"), explode(gs).as("sh"))

@@ -334,16 +334,15 @@ object Similarity {
     * visited is approximate). */
   /** BUILD: the deterministic k-NN graph index + the corpus bucket table
     * — the persisted HNSW-family artifact (a graph index is built at
-    * add() time and only WALKED per query). Memoized per (application,
-    * corpus plan, params) with eager checkpoints, the
+    * add() time and only WALKED per query). Memoized per (corpus plan,
+    * params) with eager checkpoints, the
     * kmFit/pqDecodedCorpus lifecycle. Returns (edges(src, dst),
     * buckets(tbl, bucket, id)). */
   def graphAnnIndex(corpus: DataFrame, id: Column, vec: Column,
       dim: Int, nPlanes: Int, nTables: Int, m: Int): (DataFrame, DataFrame) = {
-    val key = (corpus.sparkSession.sparkContext.applicationId,
-      corpus.queryExecution.analyzed.semanticHash(),
+    val key = (corpus.queryExecution.analyzed.canonicalized,
       id.toString, vec.toString, dim, nPlanes, nTables, m)
-    graft.core.ArtifactRegistry.cached(key, "graph_ann_index")(
+    graft.core.ArtifactRegistry.cached(corpus.sparkSession, key, "graph_ann_index")(
       buildGraphAnnIndex(corpus, id, vec, dim, nPlanes, nTables, m))
   }
 
@@ -525,18 +524,17 @@ object Similarity {
   /** BUILD: PQ-encode + decode the corpus against the codebook — the
     * persisted FAISS `codes` artifact (an IndexPQ/IndexIVFPQ stores the
     * codes once at add() time; queries only ADC-scan them). Memoized per
-    * (application, corpus plan, codebook plan, m) with an eager
+    * (corpus plan, codebook plan, m) with an eager
     * checkpoint — the kmFit/doubledEdgesFused lifecycle — so s05 and s08
     * (which share the same codebook and corpus) read ONE encode instead
     * of each re-running the subspace argmin per query. */
   def pqDecodedCorpus(corpus: DataFrame, id: Column, vec: Column,
       codebook: DataFrame, m: Int): DataFrame = {
     val key = (
-      corpus.sparkSession.sparkContext.applicationId,
-      corpus.queryExecution.analyzed.semanticHash(),
-      codebook.queryExecution.analyzed.semanticHash(),
+      corpus.queryExecution.analyzed.canonicalized,
+      codebook.queryExecution.analyzed.canonicalized,
       id.toString, vec.toString, m)
-    graft.core.ArtifactRegistry.cached(key, "pq_codes") {
+    graft.core.ArtifactRegistry.cached(corpus.sparkSession, key, "pq_codes") {
       val base = corpus.select(id.as("id"), vec.as("v"))
       val cb = codebook
         .withColumn("j", explode(expr(s"sequence(0, ${m - 1})")))

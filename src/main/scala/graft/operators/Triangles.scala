@@ -62,9 +62,8 @@ object Triangles {
     * checkpoint note below), which no edge-frame re-sourcing touches. */
   private def coreShared(edges: DataFrame,
       assumeNormalized: Boolean): (DataFrame, DataFrame) = {
-    val key = (edges.sparkSession.sparkContext.applicationId,
-      edges.queryExecution.analyzed.semanticHash(), assumeNormalized)
-    graft.core.ArtifactRegistry.cached(key, "triangle_core") {
+    val key = (edges.queryExecution.analyzed.canonicalized, assumeNormalized)
+    graft.core.ArtifactRegistry.cached(edges.sparkSession, key, "triangle_core") {
       val (_, deg, closers) = core(edges, assumeNormalized)
       (graft.core.Materialize.checkpointRetainingPartitioning(deg),
         graft.core.Materialize.checkpointRetainingPartitioning(closers))

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables._
-import Shared.{cachedFrame, normSql, cosSql}
+import graft.core.ArtifactRegistry
+import Shared.{normSql, cosSql}
 import graft.operators.{ConnectedComponents, Dedupe, GlobalRank, Multimodal, Similarity, TextAnalysis}
 
 /** Training-data-pipeline operators beyond the reference's own surface
@@ -55,7 +56,7 @@ object LlmQueries {
     * it: its point is that a different algorithm (prefix filtering)
     * reaches the identical pair set. */
   private[queries] def jaccardPairs08(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "jp08") {
+    ArtifactRegistry.cached(s, d, "jp08") {
       graft.core.Materialize.checkpointRetainingPartitioning(
         Dedupe.ngramJaccardPairs(documents(s, d), col("doc_id"), col("text"),
           col("source"), minJaccard = 0.8))
@@ -64,7 +65,7 @@ object LlmQueries {
   /** The d05 cluster assignment (pre-sort) as a shared artifact — p03's
     * impact report composes exactly this frame. */
   private[queries] def d05Assigned(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "d05a") {
+    ArtifactRegistry.cached(s, d, "d05a") {
       graft.core.Materialize.checkpointRetainingPartitioning(
         dupClustersAssigned(ConnectedComponents.run(_))(s, d))
     }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.core.Tables._
-import Shared.{cachedFrame, cosSql}
+import graft.core.ArtifactRegistry
+import Shared.cosSql
 import graft.operators.{Dedupe, GlobalRank, Hierarchy, RangeJoin, Sampling, ShortestPaths, Similarity, Triangles}
 
 /** Mining surface: event-funnel analysis, exact global deciles via
@@ -142,7 +143,7 @@ object MiningQueries {
     // the 3-round assignment is the community artifact g06
     // (the assignment report) and g10 (the modularity audit) both read —
     // memoized like d05Assigned/p03, the same shared-CTE pairing
-    cachedFrame(s, d, "lpa3") {
+    ArtifactRegistry.cached(s, d, "lpa3") {
       graft.core.Materialize.checkpointRetainingPartitioning(
         lpaAssignBuild(s, d))
     }
@@ -510,7 +511,7 @@ object MiningQueries {
     * of the pair key. Tokenizer identical to d03's (lower, trim,
     * whitespace split, empty tokens filtered). */
   private[queries] def docShingles(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "docsh3") {
+    ArtifactRegistry.cached(s, d, "docsh3") {
       graft.core.Materialize.partitionedCheckpoint(
         documents(s, d).select(col("doc_id"),
           expr("""filter(split(trim(lower(text)), '\\s+'), w -> length(w) > 0)""").as("ws"))
@@ -566,7 +567,7 @@ object MiningQueries {
     * every asset) and each analysis query reads it, instead of each query
     * re-running the fact-table self-join + distinct. */
   private[queries] def coPurchaseEdges(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "und") {
+    ArtifactRegistry.cached(s, d, "und") {
       graft.core.Materialize.checkpointRetainingPartitioning(
         coPurchaseEdgesBuild(s, d))
     }
@@ -611,7 +612,7 @@ object MiningQueries {
     *    place with NO exchange. Plan-pinned in MaterializeSpec: a keyed
     *    consumer reads `Scan ExistingRDD` with no Exchange above it. */
   private[queries] def doubledEdgesFused(s: SparkSession, d: String,
-      key: String): DataFrame = cachedFrame(s, d, s"dbl_$key") {
+      key: String): DataFrame = ArtifactRegistry.cached(s, d, s"dbl_$key") {
     if (key != "u")
       // any non-canonical key DERIVES from the u-keyed artifact — one
       // edge-sized exchange of the already-deduped frame, instead of
@@ -939,7 +940,7 @@ object MiningQueries {
     // entry still vouches for them, silently joining the wrong data
     val dirTag = f"${d.hashCode & 0x7fffffff}%x"
     val (liTbl, oTbl) = (s"graft_b_lineitem_$dirTag", s"graft_b_orders_$dirTag")
-    cachedFrame(s, d, "q43_buckets") {
+    ArtifactRegistry.cached(s, d, "q43_buckets") {
       // build trims: (a) raw scans — the write's first op is the
       // bucket-aligned repartition (see writeBucketed), so the fixture
       // fan-out would be a wasted pass (the tableRaw contract); (b) the

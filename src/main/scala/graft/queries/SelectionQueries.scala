@@ -476,12 +476,11 @@ object SelectionQueries {
     * index lifecycle (train offline once, persist, every downstream pass
     * reads the persisted assignment). s16 (the audit report) and s17 (the
     * D4 prune) both consume the SAME fit instead of re-running 3 Lloyd
-    * rounds per query. Memoized per (SparkContext application, sf dir) with the
+    * rounds per query. Memoized per sf dir with the
     * final assignment eagerly checkpointed — the in-session equivalent of
     * the parquet the build job would leave next to the vector table. */
   private def kmFit(s: SparkSession, d: String): (DataFrame, Array[(Int, Array[Double])]) =
-    graft.core.ArtifactRegistry.cached(
-      (s.sparkContext.applicationId, d), "km_fit") {
+    graft.core.ArtifactRegistry.cached(s, d, "km_fit") {
       val vq = kmQuantized(s, d).localCheckpoint(false) // init + R rounds + final all read it
       var cents: Array[(Int, Array[Double])] =
         vq.orderBy(col("vec_id")).limit(KmK).collect().zipWithIndex.map { case (r, i) =>

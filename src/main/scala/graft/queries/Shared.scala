@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.types.DecimalType
 
 /** Helpers more than one query family uses. */
@@ -11,14 +11,6 @@ private[queries] object Shared {
     * precision 18 — no BigDecimal per row; measured 2x on q11) while
     * decimal addition stays exact and associative for oracle parity. */
   def dec(c: Column): Column = c.cast(DecimalType(9, 2))
-
-  /** A frame memoized per (application, sf dir) under `tag` — the
-    * ArtifactRegistry lifecycle: built on first request, evicted when the
-    * application ends. */
-  def cachedFrame(s: SparkSession, d: String, tag: String)(
-      build: => DataFrame): DataFrame =
-    graft.core.ArtifactRegistry.cached(
-      (s.sparkContext.applicationId, d), tag)(build)
 
   /** DuckDB L2 norm of list expression `v`, folded in element order over
     * doubles so the oracle adds the exact doubles Spark's kernel adds. */

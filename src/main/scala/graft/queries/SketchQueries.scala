@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables._
-import Shared.cachedFrame
+import graft.core.ArtifactRegistry
 import graft.operators.Dedupe
 
 /** Sketch surface: streaming-friendly approximate aggregates with
@@ -454,7 +454,7 @@ object SketchQueries {
     * neither a max-rho register nor a min-month, so the dedupe is free
     * semantics and md5 runs once per distinct pair. */
   private def monthKeyBase(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "mkbase") {
+    ArtifactRegistry.cached(s, d, "mkbase") {
       graft.core.Materialize.dedupedPartitionedCheckpoint(
         tableRaw(s, d, "lineitem").select(
           (year(col("l_shipdate")) * 100 + month(col("l_shipdate"))).cast("long").as("ym"),
@@ -465,7 +465,7 @@ object SketchQueries {
     }
 
   private def monthRegs(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "mkregs") {
+    ArtifactRegistry.cached(s, d, "mkregs") {
       val m = 256
       graft.core.Materialize.checkpointRetainingPartitioning(
         monthKeyBase(s, d)

@@ -8,7 +8,8 @@ import graft.operators.Dedupe
   * legal (the computeIfAbsent recursion hazard), and per-tag build
   * accounting is SELF time (a parent's number excludes the child build it
   * triggered, so tags sum to total cost). Also pins memoization under
-  * races, eviction, and that a failed build leaves no entry behind.
+  * races, application-scoped eviction, that a failed build leaves no
+  * entry behind, and that equal plans share one artifact.
   */
 class ArtifactRegistrySpec extends SparkSpec {
 
@@ -17,11 +18,11 @@ class ArtifactRegistrySpec extends SparkSpec {
     var innerBuilds = 0
     var outerBuilds = 0
     def inner: String =
-      ArtifactRegistry.cached(("ars", "dep"), "spec_inner") {
+      ArtifactRegistry.cached(spark, ("ars", "dep"), "spec_inner") {
         innerBuilds += 1; Thread.sleep(200); "I"
       }
     val outer =
-      ArtifactRegistry.cached(("ars", "top"), "spec_outer") {
+      ArtifactRegistry.cached(spark, ("ars", "top"), "spec_outer") {
         outerBuilds += 1
         val i = inner // nested build of a DIFFERENT artifact mid-build
         Thread.sleep(20)
@@ -30,7 +31,7 @@ class ArtifactRegistrySpec extends SparkSpec {
     assert(outer == "IO")
     // memoized: re-requesting either returns the cached value, no rebuild
     assert(inner == "I")
-    assert(ArtifactRegistry.cached(("ars", "top"), "spec_outer")("X") == "IO")
+    assert(ArtifactRegistry.cached(spark, ("ars", "top"), "spec_outer")("X") == "IO")
     assert(innerBuilds == 1 && outerBuilds == 1)
     val t = ArtifactRegistry.buildSeconds
     assert(t("spec_inner") >= 0.15, s"inner self time: $t")
@@ -39,7 +40,7 @@ class ArtifactRegistrySpec extends SparkSpec {
     ArtifactRegistry.resetTimings()
     assert(!ArtifactRegistry.buildSeconds.contains("spec_inner"))
     // values survive a timing reset (artifacts stay cached)
-    assert(ArtifactRegistry.cached(("ars", "dep"), "spec_inner")("Y") == "I")
+    assert(ArtifactRegistry.cached(spark, ("ars", "dep"), "spec_inner")("Y") == "I")
   }
 
   test("lost build race credits blocked wall to the parent, not the tag twice") {
@@ -51,7 +52,7 @@ class ArtifactRegistrySpec extends SparkSpec {
     // own tag (the r13 double-count)
     val a = pool.submit(new java.util.concurrent.Callable[String] {
       def call(): String =
-        ArtifactRegistry.cached(("ars", "shared"), "spec_shared") {
+        ArtifactRegistry.cached(spark, ("ars", "shared"), "spec_shared") {
           gate.countDown(); Thread.sleep(300); "S"
         }
     })
@@ -59,8 +60,8 @@ class ArtifactRegistrySpec extends SparkSpec {
     Thread.sleep(30) // A is now mid-build
     val b = pool.submit(new java.util.concurrent.Callable[String] {
       def call(): String =
-        ArtifactRegistry.cached(("ars", "parent"), "spec_parent") {
-          ArtifactRegistry.cached(("ars", "shared"), "spec_shared")("X") + "P"
+        ArtifactRegistry.cached(spark, ("ars", "parent"), "spec_parent") {
+          ArtifactRegistry.cached(spark, ("ars", "shared"), "spec_shared")("X") + "P"
         }
     })
     assert(a.get() == "S" && b.get() == "SP")
@@ -74,20 +75,16 @@ class ArtifactRegistrySpec extends SparkSpec {
   }
 
   test("application-end eviction drops exactly that application's keys") {
-    def build(app: String, name: String): String =
-      ArtifactRegistry.cached((app, name), "spec_evict") { s"$app/$name" }
-    var rebuilds = 0
-    assert(build("appA", "x") == "appA/x")
-    assert(build("appA", "y") == "appA/y")
-    assert(build("appB", "x") == "appB/x")
-    ArtifactRegistry.evictApplication("appA")
-    // appB untouched (cached), appA keys rebuild
-    assert(ArtifactRegistry.cached(("appB", "x"), "spec_evict") {
-      rebuilds += 1; "NEW"
-    } == "appB/x" && rebuilds == 0)
-    assert(ArtifactRegistry.cached(("appA", "x"), "spec_evict") {
-      rebuilds += 1; "NEW"
-    } == "NEW" && rebuilds == 1)
+    var builds = 0
+    def v: String = ArtifactRegistry.cached(spark, ("ars", "evict"), "spec_evict") {
+      builds += 1; s"v$builds"
+    }
+    assert(v == "v1")
+    // another application's end leaves this one's entries cached
+    ArtifactRegistry.evictApplication(spark.sparkContext.applicationId + "-other")
+    assert(v == "v1" && builds == 1)
+    ArtifactRegistry.evictApplication(spark.sparkContext.applicationId)
+    assert(v == "v2" && builds == 2)
     ArtifactRegistry.resetTimings()
   }
 
@@ -111,7 +108,7 @@ class ArtifactRegistrySpec extends SparkSpec {
     val tasks = (1 to 16).map { _ =>
       pool.submit(new java.util.concurrent.Callable[String] {
         def call(): String =
-          ArtifactRegistry.cached(("ars", "race"), "spec_race") {
+          ArtifactRegistry.cached(spark, ("ars", "race"), "spec_race") {
             n.incrementAndGet(); Thread.sleep(50); "R"
           }
       })
@@ -125,7 +122,7 @@ class ArtifactRegistrySpec extends SparkSpec {
   test("a throwing build caches nothing; the next request builds, returns and charges") {
     ArtifactRegistry.resetTimings()
     var builds = 0
-    def v: String = ArtifactRegistry.cached(("arsThrow", "x"), "spec_throw") {
+    def v: String = ArtifactRegistry.cached(spark, ("arsThrow", "x"), "spec_throw") {
       builds += 1
       if (builds == 1) throw new RuntimeException("cold failure")
       Thread.sleep(80); "OK"
@@ -139,9 +136,30 @@ class ArtifactRegistrySpec extends SparkSpec {
         s"the successful build is charged to its tag: ${ArtifactRegistry.buildSeconds}")
       // and now it is memoized
       assert(v == "OK" && builds == 2)
-    } finally {
-      ArtifactRegistry.evictApplication("arsThrow")
+    } finally ArtifactRegistry.resetTimings()
+  }
+
+  test("frames built separately over one parquet read share an artifact; a filtered one does not") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("arsshare").resolve("t").toString
+    Seq((1L, Seq("a b c", "b c d")), (2L, Seq("x y z")), (3L, Seq("a b c")))
+      .toDF("id", "gs").write.parquet(dir)
+    def shingled = spark.read.parquet(dir)
+    def sig(df: org.apache.spark.sql.DataFrame) =
+      Dedupe.minhashSignaturesFromShingles(df, col("id"), col("gs"))
+    try {
+      val first = sig(shingled)
       ArtifactRegistry.resetTimings()
-    }
+      // a second read of the same file is a different plan instance with
+      // fresh expression ids, yet the same artifact
+      assert(sig(shingled) eq first)
+      assert(!ArtifactRegistry.buildSeconds.contains("minhash_sig"),
+        s"an equal plan must not build again: ${ArtifactRegistry.buildSeconds}")
+      val filtered = sig(shingled.filter(col("id") < 3))
+      assert(filtered ne first)
+      assert(ArtifactRegistry.buildSeconds.contains("minhash_sig"),
+        "a filtered frame is a different plan and builds its own signatures")
+      assert(filtered.count() == 2 && first.count() == 3)
+    } finally ArtifactRegistry.resetTimings()
   }
 }

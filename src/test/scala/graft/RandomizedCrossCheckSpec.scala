@@ -494,7 +494,7 @@ class RandomizedCrossCheckSpec extends SparkSpec {
     def bump(tag: String): Unit =
       builds.merge(tag, Int.box(1), (x, y) => Int.box(x + y))
     def chain(level: Int): String =
-      ArtifactRegistry.cached(("xc-chain", level), s"xc_l$level") {
+      ArtifactRegistry.cached(spark, ("xc-chain", level), s"xc_l$level") {
         bump(s"l$level")
         Thread.sleep(20)
         if (level == 0) "base" else chain(level - 1) + s"+l$level"

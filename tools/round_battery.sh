@@ -7,7 +7,7 @@
 #   tools/round_battery.sh --no-bench # correctness-only (~40 min on 4 vCPUs)
 #
 # Steps (each fails the script):
-#   1. sbt compile + full ScalaTest suite
+#   1. sbt compile + full ScalaTest suite, in ROADMAP's tier-1 environment
 #   2. full Verify at sf0.01 AND sf0.1 + DuckDB compare at each (the
 #      compare tool's "ALL MATCH" line over the whole declared catalog —
 #      no hardcoded count here; the catalog grows)
@@ -31,7 +31,15 @@ SF01=${SF01:-/root/testdata/sf0.1}
 OUT=${OUT:-/tmp/round_battery_verify}
 
 echo "=== 1/6 compile + full test suite ==="
-sbt -batch "compile; test"
+# the tier-1 environment (ROADMAP): all cores, half of MemTotal clamped to
+# 2-8g as the forked test JVM's heap (build.sbt defaults it to 24g), and
+# one spill dir; only this step sees it, so Bench keeps its 32-core default
+(
+  export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)"
+  export SPARK_DRIVER_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)"
+  export SPARK_LOCAL_DIRS=/tmp/spark-local
+  sbt -batch "compile; test"
+)
 
 for SF in "$SF001" "$SF01"; do
   echo "=== 2/6 Verify @ $(basename "$SF") + DuckDB compare ==="
