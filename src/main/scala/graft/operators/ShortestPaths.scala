@@ -79,7 +79,7 @@ object ShortestPaths {
     * exchange — an AQE checkpoint loses the partitioning and would
     * re-shuffle the graph side every hop. */
   private def doubled(edges: DataFrame): DataFrame = {
-    val extra = edges.columns.filterNot(Seq("u", "v").contains)
+    val extra = edges.columns.toIndexedSeq.filterNot(Seq("u", "v").contains)
     graft.core.Materialize.partitionedCheckpoint(
       edges.select(explode(array(
           struct((col("u").as("a") +: col("v").as("b") +: extra.map(col)): _*),

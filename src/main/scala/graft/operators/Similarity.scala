@@ -140,14 +140,14 @@ object Similarity {
       val cvec = array(cv.toIndexedSeq.map(x => lit(x)): _*)
       struct(cosineSim(vec, cvec).as("cscore"), lit(-p).as("np"))
     }
-    val best = if (scored.length == 1) scored.head else greatest(scored: _*)
+    val best = if (scored.length == 1) scored.head else greatest(scored.toIndexedSeq: _*)
     corpus.select(id.as("id"), vec.as("v"), (-best.getField("np")).as("part"))
   }
 
   /** Offline IVF index build: seeded KMeans over the corpus, then cosine
     * assignment. Returns (centroids(part, cvec), assigned(id, v, part));
-    * persist both (e.g. [[graft.sources.Sinks.writeVectorTable]] for the
-    * assignment, plain parquet for the centroids) and search with
+    * persist both as plain parquet (e.g. the assignment through
+    * [[graft.sources.Sinks.writeVectorTable]]) and search with
     * [[searchIvf]] — training never runs at query time.
     */
   def buildIvfIndex(corpus: DataFrame, id: Column, vec: Column,

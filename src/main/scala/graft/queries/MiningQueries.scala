@@ -934,11 +934,10 @@ object MiningQueries {
     // shuffle ONCE at write time, then every subsequent join on the
     // bucket key is co-located"); re-writing them per invocation timed
     // the build, not the co-located join the layout buys
-    // table names embed the sf-dir hash: the memo key is (application,
-    // dir) but the catalog is session-global — fixed names would let a
-    // second sf dir overwrite the tables while the first dir's cache
-    // entry still vouches for them, silently joining the wrong data
-    val dirTag = f"${d.hashCode & 0x7fffffff}%x"
+    // the catalog is session-global but the memo is per dir: name the
+    // tables by the exact dir, or another dir's build overwrites them
+    val dirTag = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val (liTbl, oTbl) = (s"graft_b_lineitem_$dirTag", s"graft_b_orders_$dirTag")
     ArtifactRegistry.cached(s, d, "q43_buckets") {
       // build trims: (a) raw scans — the write's first op is the
@@ -951,10 +950,10 @@ object MiningQueries {
       def writeLi(): Unit = Sinks.writeBucketed(
         tableRaw(s, d, "lineitem")
           .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag")),
-        liTbl, "l_orderkey", nBuckets = 8, sortCol = Some("l_orderkey"))
+        liTbl, "l_orderkey", nBuckets = 8)
       def writeO(): Unit = Sinks.writeBucketed(
         tableRaw(s, d, "orders").select(col("o_orderkey"), col("o_orderpriority")),
-        oTbl, "o_orderkey", nBuckets = 8, sortCol = Some("o_orderkey"))
+        oTbl, "o_orderkey", nBuckets = 8)
       var oErr: Throwable = null
       val t = new Thread(() => try writeO() catch { case e: Throwable => oErr = e })
       t.start()

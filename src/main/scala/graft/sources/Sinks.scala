@@ -1,56 +1,58 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 
-/** Parquet sink helpers (SURVEY S2/S18/S19) with the layouts that matter at
-  * 100 TB:
+/** Parquet sink helpers (SURVEY S2/S18/S19):
   *
   *  - [[writeBucketed]]: pre-shuffled bucket layout — two tables bucketed by
   *    the same key join WITHOUT a shuffle (SortMergeJoin with no Exchange),
-  *    the co-located-join strategy for repeated large joins.
-  *  - [[writeVectorTable]]: the FAISS/LanceDB-sink analog — (id, vector)
-  *    parquet bucketed by id and sorted by id within each bucket; exact
-  *    search is a scan (W3/W4), ANN is the LSH path (s02). Index params
-  *    from the reference (create_lancedb_index.py:138-148) become table
-  *    properties in the file layout (bucket count ≙ num_partitions).
+  *    the co-located-join strategy for repeated large joins (q43).
+  *  - [[writeVectorTable]]: the FAISS/LanceDB-sink analog — a plain parquet
+  *    table of (id, vector [, payload...]) rows, sorted by id within each
+  *    file; exact search is a scan (W3/W4), ANN is the LSH path (s02). The
+  *    reference's `num_partitions=256` (create_lancedb_index.py:138-148) is
+  *    the IVF centroid count of its index, not a file layout: here it is
+  *    `nPartitions` of [[graft.operators.Similarity.buildIvfIndex]].
   */
 object Sinks {
 
-  /** Bucketed write goes through the table catalog (bucket metadata lives
-    * there); `name` lands in the session's warehouse dir.
-    *
-    * The in-memory catalog forgets tables across JVMs but their warehouse
+  /** Bucketed table: `nBuckets` buckets on `byCol`, each bucket one file
+    * sorted by `byCol`. Bucket metadata lives in the table catalog; `name`
+    * lands in the session's warehouse dir. */
+  def writeBucketed(df: DataFrame, name: String, byCol: String,
+      nBuckets: Int): Unit = {
+    // Each bucket lives in one task, written as one sorted file: rows go to
+    // task (bucket id mod k), k = min(buckets, cores). This uses
+    // repartitionById, not repartition(k, col): the planner drops that as
+    // redundant over input already hashed k ways, scattering the buckets.
+    val bucketId = pmod(hash(col(byCol)), lit(nBuckets))
+    val spark = df.sparkSession
+    val aligned = df.repartitionById(
+      math.min(nBuckets, spark.sparkContext.defaultParallelism), bucketId)
+    replaceTable(spark, aligned.write.bucketBy(nBuckets, byCol).sortBy(byCol), name)
+  }
+
+  /** Vector table: a plain parquet table `name`, one file per partition of
+    * `df` (AQE coalesces shuffle partitions by bytes). Ids ascend within each
+    * file, so parquet's min/max statistics prune id lookups. */
+  def writeVectorTable(df: DataFrame, name: String, idCol: String): Unit =
+    replaceTable(df.sparkSession, df.sortWithinPartitions(idCol).write, name)
+
+  /** The in-memory catalog forgets tables across JVMs but their warehouse
     * directories persist, and `saveAsTable` refuses to reuse an orphaned
     * location (LOCATION_ALREADY_EXISTS) — so drop the table AND clear any
     * stale location before writing. */
-  def writeBucketed(df: DataFrame, name: String, byCol: String,
-      nBuckets: Int, sortCol: Option[String] = None): Unit = {
-    val spark = df.sparkSession
+  private def replaceTable(spark: SparkSession, w: DataFrameWriter[Row],
+      name: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS `$name`")
     val warehouse = spark.conf.get("spark.sql.warehouse.dir")
     val dir = new java.io.File(
       if (warehouse.startsWith("file:")) new java.net.URI(warehouse).getPath
       else warehouse, name)
     if (dir.exists()) graft.core.Fs.rmTree(dir)
-    // Each bucket lives in one task, written as one file sorted by sortCol:
-    // rows go to task (bucket id mod k), k = min(buckets, cores). This uses
-    // repartitionById, not repartition(k, col): the planner drops that as
-    // redundant over input already hashed k ways, scattering the buckets.
-    val bucketId = pmod(hash(col(byCol)), lit(nBuckets))
-    val aligned = df.repartitionById(
-      math.min(nBuckets, spark.sparkContext.defaultParallelism), bucketId)
-    val w = aligned.write.mode(SaveMode.Overwrite).format("parquet")
-      .bucketBy(nBuckets, byCol)
-    sortCol.fold(w)(c => w.sortBy(c)).saveAsTable(name)
+    w.mode(SaveMode.Overwrite).format("parquet").saveAsTable(name)
   }
-
-  /** Vector table sink: (id, vector [, payload...]) parquet bucketed by id
-    * so downstream id-lookups and self-joins co-locate. 256 buckets mirrors
-    * the reference's IVF num_partitions=256. */
-  def writeVectorTable(df: DataFrame, name: String, idCol: String,
-      nBuckets: Int = 256): Unit =
-    writeBucketed(df, name, idCol, nBuckets, sortCol = Some(idCol))
 
   /** 256-way id-prefix sharded layout (SURVEY S20-adjacent: the reference's
     * HF structured-upload sharding, assets/processing/assets.py:354-361 —

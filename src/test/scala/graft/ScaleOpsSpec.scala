@@ -113,8 +113,8 @@ class ScaleOpsSpec extends SparkSpec {
     import spark.implicits._
     val a = (1 to 1000).map(i => (i.toLong, s"a$i")).toDF("k", "va")
     val b = (1 to 1000).map(i => (i.toLong, s"b$i")).toDF("k", "vb")
-    Sinks.writeBucketed(a, "graft_bucket_a", "k", 8, Some("k"))
-    Sinks.writeBucketed(b, "graft_bucket_b", "k", 8, Some("k"))
+    Sinks.writeBucketed(a, "graft_bucket_a", "k", 8)
+    Sinks.writeBucketed(b, "graft_bucket_b", "k", 8)
     // one file per bucket: 8 part files carrying the 8 bucket suffixes
     for (t <- Seq("graft_bucket_a", "graft_bucket_b")) {
       val files = spark.table(t).inputFiles.toSeq

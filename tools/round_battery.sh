@@ -13,7 +13,7 @@
 #      no hardcoded count here; the catalog grows)
 #   3. tools/check_anchors.py (SURVEY file:line anchors)
 #   4. perfbench pipeline workload, seed 1: raw files through every stage
-#      to the bucketed vector table (Sinks.writeVectorTable) end to end;
+#      to the parquet vector table (Sinks.writeVectorTable) end to end;
 #      fails unless the result line has correct == true and failed == 0
 #   5. [unless --no-bench] full Bench at sf0.1 -> BENCH_DETAIL.json;
 #      fails unless the result line reports failed == 0
